@@ -3,8 +3,13 @@ package graft.engine
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoDir, InsertIntoStatement}
+import org.apache.spark.sql.execution.command.ExplainCommand
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.functions.{array, array_join, coalesce, col, concat, explode, expr, filter, lit, max, max_by, min, min_by, monotonically_increasing_id, not, struct, when}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+import SqlText.{bindPlaceholders, countPlaceholders, splitTopLevel, topLevelIndexOfWord}
 
 /** MySQL-surface SQL session: every command of the reference's
   * `execute_impl` dispatcher (/root/reference/src/execute_impl/mod.rs:1)
@@ -30,10 +35,16 @@ class GraftSession(val spark: SparkSession, warehouse: String,
   val catalog = new Catalog(spark, warehouse)
   val variables = new Variables(Some(java.nio.file.Paths.get(
     warehouse, "performance_schema", "global_variables.tsv")))
-  private var currentSchema: String = "mysql"
+  @volatile private var currentSchema: String = "mysql"
+  /** The current schema (USE / COM_INIT_DB), as PROCESSLIST shows it. */
+  def database: String = currentSchema
   spark.catalog.setCurrentDatabase("mysql")
-  if (secureFilePriv.nonEmpty)
+  if (secureFilePriv.nonEmpty) {
     variables.set("secure_file_priv", secureFilePriv)
+    // the same sandbox covers SQL on files (`select * from csv.`/path``):
+    // Spark would read such a path without passing checkFileAccess
+    spark.conf.set("spark.sql.runSQLOnFiles", "false")
+  }
 
   /** LOAD DATA INFILE / SELECT INTO OUTFILE path gate — MySQL's
     * secure_file_priv. Empty (the embedded-library default) means
@@ -80,89 +91,67 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     * return a single-row `affected_rows` frame (the reference's FinalCount,
     * /root/reference/src/core/output.rs:1).
     */
-  def sql(statement: String): DataFrame = {
-    val stmt = statement.trim.stripSuffix(";").trim
-    val lower = stmt.toLowerCase
+  def sql(statement: String): DataFrame = sql(Statement.classify(statement))
+
+  /** Dispatch on the statement's kind (Statement.classify). Each handler
+    * parses its arguments from the comment-free text and answers 1064 for
+    * a shape it does not accept; only `Query` text reaches Spark's
+    * parser, through the write guard in `relational`.
+    */
+  def sql(st: Statement): DataFrame = {
+    import Verb._
+    val stmt = st.text
     // MySQL diagnostics area: any statement except SHOW WARNINGS/ERRORS
     // resets it (the read itself must not clear)
-    if (!lower.startsWith("show warnings") && !lower.startsWith("show errors"))
-      pendingWarnings.clear()
+    if (st.verb != ShowWarnings && st.verb != ShowErrors) pendingWarnings.clear()
     // read-committed across connections: pick up any other session's
     // commits before resolving this statement (no-op when none landed)
     catalog.freshenStale()
-
-    if (lower.startsWith("create schema") || lower.startsWith("create database")) createSchema(stmt)
-    else if (lower.startsWith("drop schema") || lower.startsWith("drop database")) dropSchema(stmt)
-    else if (lower.startsWith("create table")) createTable(stmt)
-    else if (lower.startsWith("create view") ||
-             lower.startsWith("create or replace view")) createView(stmt)
-    else if (lower.startsWith("drop view")) dropView(stmt)
-    else if (lower.startsWith("drop table")) dropTable(stmt)
-    else if (lower.startsWith("alter table")) alterTable(stmt)
-    else if (lower.startsWith("insert")) dirty(insert(stmt))
-    else if (lower.startsWith("replace")) dirty(insert(stmt))
-    else if (lower.startsWith("load data")) dirty(loadData(stmt))
-    else if (lower.startsWith("update")) dirty(update(stmt))
-    else if (lower.startsWith("delete")) dirty(delete(stmt))
-    else if (lower.startsWith("use ")) use(stmt)
-    // autocommit engine: ROLLBACK answers OK but cannot undo anything —
-    // if writes landed since the last transaction verb, surface MySQL's
-    // nontransactional-table warning 1196 instead of silently lying
-    else if (lower == "rollback" || lower.startsWith("rollback ")) {
-      if (txDirty) pendingWarnings += (("Warning", 1196,
-        "Some non-transactional changed tables couldn't be rolled back"))
-      txDirty = false
-      count(0)
+    st.verb match {
+      case CreateSchema  => createSchema(stmt)
+      case DropSchema    => dropSchema(stmt)
+      case CreateTable   => createTable(stmt)
+      case CreateView    => createView(stmt)
+      case DropView      => dropView(stmt)
+      case DropTable     => dropTable(stmt)
+      case AlterTable    => alterTable(stmt)
+      case RenameTable   => renameTable(stmt)
+      case Insert        => dirty(insert(stmt))
+      case LoadData | LoadDataLocal => dirty(loadData(stmt))
+      case Update        => dirty(update(stmt))
+      case Delete        => dirty(delete(stmt))
+      case Truncate      => dirty(truncate(stmt))
+      case Optimize      => optimizeTable(stmt)
+      case Analyze       => analyzeTable(stmt)
+      case Use           => use(stmt)
+      case SetVariable   => setVariable(stmt)
+      case Prepare       => prepare(stmt)
+      case Execute       => executePrepared(stmt)
+      case Deallocate    => deallocate(stmt)
+      // autocommit engine: ROLLBACK answers OK but cannot undo anything —
+      // if writes landed since the last transaction verb, surface MySQL's
+      // nontransactional-table warning 1196 instead of silently lying
+      case Rollback =>
+        if (txDirty) pendingWarnings += (("Warning", 1196,
+          "Some non-transactional changed tables couldn't be rolled back"))
+        txDirty = false
+        count(0)
+      // client-compat no-ops: graft autocommits every statement through
+      // the commit protocol, so transaction verbs and table locks are
+      // accepted and do nothing (the connector/mysqldump handshake
+      // chatter — MySQL answers OK to all of these on MyISAM too)
+      case Transaction   => txDirty = false; count(0)
+      case Noop          => count(0)
+      case Query         => query(stmt)
+      case ExplainAnalyze => explainAnalyze(stmt)
+      case Kill | ShowProcessList => throw new SqlError(1235, "42000",
+        s"'$stmt' acts on server connections; send it over the wire server")
+      case Unknown       => throw SqlError.syntax(stmt)
+      case _             => show(st)
     }
-    // client-compat no-ops: graft autocommits every statement through
-    // the commit protocol, so transaction verbs and table locks are
-    // accepted and do nothing (the connector/mysqldump handshake
-    // chatter — MySQL answers OK to all of these on MyISAM too)
-    else if (lower == "begin" || lower.startsWith("begin ") ||
-             lower.startsWith("start transaction") ||
-             lower == "commit" || lower.startsWith("commit ") ||
-             lower.startsWith("lock tables") || lower == "unlock tables" ||
-             lower.startsWith("set names") ||
-             lower.startsWith("set character set") ||
-             lower.startsWith("set charset") ||
-             lower.startsWith("set session transaction") ||
-             lower.startsWith("set transaction")) {
-      if (lower.startsWith("begin") || lower.startsWith("start transaction") ||
-          lower.startsWith("commit")) txDirty = false
-      count(0)
-    }
-    else if (lower.startsWith("show warnings")) {
-      // connectors emit SHOW WARNINGS LIMIT [offset,] count — honor it
-      val lim =
-        "(?i)^show\\s+warnings(?:\\s+limit\\s+(\\d+)(?:\\s*,\\s*(\\d+))?)?\\s*$".r
-      val rows = stmt match {
-        case lim(null, _)     => pendingWarnings.toSeq
-        case lim(n, null)     => pendingWarnings.toSeq.take(n.toInt)
-        case lim(off, cnt)    => pendingWarnings.toSeq.slice(
-          off.toInt, off.toInt + cnt.toInt)
-        case _ => throw new SqlError(1064, "42000",
-          s"You have an error in your SQL syntax near '$stmt'")
-      }
-      frame(Seq("Level", "Code", "Message"),
-        rows.map { case (l, c, m) => Seq(l, c.toString, m) })
-    }
-    else if (lower == "show errors")
-      frame(Seq("Level", "Code", "Message"), Seq.empty)
-    else if (lower.startsWith("set ")) setVariable(stmt)
-    else if (lower.startsWith("show ")) show(stmt)
-    else if (lower.startsWith("prepare ")) prepare(stmt)
-    else if (lower.startsWith("execute ")) executePrepared(stmt)
-    else if (lower.startsWith("deallocate ")) deallocate(stmt)
-    else if (lower.startsWith("describe ") || lower.startsWith("desc "))
-      show(s"show columns from ${stmt.split("\\s+", 2)(1)}")
-    else if (lower.startsWith("truncate")) dirty(truncate(stmt))
-    else if (lower.startsWith("rename table")) renameTable(stmt)
-    else if (lower.startsWith("optimize")) optimizeTable(stmt)
-    else if (lower.startsWith("analyze table")) analyzeTable(stmt)
-    else query(stmt)
   }
 
-  private val AnalyzeR = "(?is)analyze\\s+table\\s+([`\\w.]+).*".r
+  private val AnalyzeR = "(?is)analyze\\s+table\\s+([`\\w.]+)(.*)".r
 
   /** ANALYZE TABLE passes through to Spark (CBO/broadcast statistics)
     * and then backfills the E9 data-skipping sidecar for any current-
@@ -170,27 +159,21 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     * landed files get file pruning from the same statement that has
     * always refreshed stats.
     */
-  private def analyzeTable(stmt: String): DataFrame = {
-    // MySQL's bare `ANALYZE TABLE t` — Spark's parser wants the COMPUTE
-    // STATISTICS clause; supply it for the bare (reference-syntax) form.
-    // "Bare" = nothing after the table name (a substring test would
-    // misfire on a table NAMED compute_something)
-    val bare = "(?is)analyze\\s+table\\s+[`\\w.]+\\s*;?\\s*".r.matches(stmt)
-    val sparkStmt =
-      if (bare) stmt.trim.stripSuffix(";") + " COMPUTE STATISTICS"
-      else stmt
-    val out = query(sparkStmt)
-    stmt match {
-      case AnalyzeR(name) =>
-        try {
-          val (db, t) = qualify(clean(name))
-          catalog.backfillStats(db, t)
-          catalog.refreshNdv(db, t) // arms CBO range estimation (ndv)
-        }
-        catch { case scala.util.control.NonFatal(_) => () } // temp views etc.
-      case _ => ()
-    }
-    out
+  private def analyzeTable(stmt: String): DataFrame = stmt match {
+    case AnalyzeR(name, tail) =>
+      // MySQL's bare `ANALYZE TABLE t` — Spark's parser wants the COMPUTE
+      // STATISTICS clause; supply it for the bare (reference-syntax) form.
+      // "Bare" = nothing after the table name (a substring test would
+      // misfire on a table NAMED compute_something)
+      val out = spark.sql(if (tail.trim.isEmpty) s"$stmt COMPUTE STATISTICS" else stmt)
+      try {
+        val (db, t) = qualify(clean(name))
+        catalog.backfillStats(db, t)
+        catalog.refreshNdv(db, t) // arms CBO range estimation (ndv)
+      }
+      catch { case scala.util.control.NonFatal(_) => () } // temp views etc.
+      out
+    case _ => throw SqlError.syntax(stmt)
   }
 
   /** Mark the session write-dirty AFTER a DML statement succeeds (a
@@ -227,6 +210,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
         else "Table does not support optimize, doing nothing"
       frame(Seq("Table", "Op", "Msg_type", "Msg_text"),
         Seq(Seq(s"$db.$t", "optimize", "status", msg)))
+    case _ => throw SqlError.syntax(stmt)
   }
 
   private val TruncateR = "(?is)truncate\\s+(?:table\\s+)?([`\\w.]+)".r
@@ -237,6 +221,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       val n = df.count()
       catalog.rewrite(db, t, df.limit(0))
       count(n)
+    case _ => throw SqlError.syntax(stmt)
   }
 
   private val RenameR =
@@ -245,6 +230,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     case RenameR(from, to) =>
       val (db1, t1) = qualify(from); val (db2, t2) = qualify(to)
       catalog.rename(db1, t1, db2, t2); count(0)
+    case _ => throw SqlError.syntax(stmt)
   }
 
   // ---- prepared statements (com_stmt_prepare.rs) -------------------------
@@ -258,6 +244,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       preparedStmts(name.toLowerCase) = sqlText
       // reference counts the ? parameter markers at prepare time
       count(countPlaceholders(sqlText))
+    case _ => throw SqlError.syntax(stmt)
   }
 
   private val ExecuteR = "(?is)execute\\s+(\\w+)(?:\\s+using\\s+(.+))?".r
@@ -276,22 +263,21 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       require(args.length == countPlaceholders(template),
         s"Incorrect arguments to EXECUTE: expected ${countPlaceholders(template)}, got ${args.length}")
       sql(bindPlaceholders(template, args))
+    case _ => throw SqlError.syntax(stmt)
   }
 
   private val DeallocateR = "(?is)deallocate\\s+prepare\\s+(\\w+)".r
   private def deallocate(stmt: String): DataFrame = stmt match {
     case DeallocateR(name) =>
       preparedStmts.remove(name.toLowerCase); count(0)
+    case _ => throw SqlError.syntax(stmt)
   }
-
-  private def countPlaceholders(s: String): Int = SqlText.countPlaceholders(s)
-  private def bindPlaceholders(s: String, args: Seq[String]): String =
-    SqlText.bindPlaceholders(s, args)
 
   /** COM_FIELD_LIST parity (com_field_list.rs): the table's column
     * definitions, same shape as SHOW COLUMNS.
     */
-  def fieldList(table: String): DataFrame = show(s"show columns from $table")
+  def fieldList(table: String): DataFrame =
+    show(Statement(Verb.ShowColumns, s"show columns from $table"))
 
   /** Continuous ingestion: append a stream into a catalog table's storage
     * (checkpointed parquet sink writing straight into the table's data
@@ -425,7 +411,6 @@ class GraftSession(val spark: SparkSession, warehouse: String,
   def refreshIndex(indexTable: String, corpusTable: String,
                    train: DataFrame => (DataFrame => DataFrame),
                    maxPasses: Int = 8): Long = {
-    import org.apache.spark.sql.graft.Bridge
     val (dbI, tI) = qualify(indexTable)
     val (dbC, tC) = qualify(corpusTable)
     val mI = catalog.meta(dbI, tI)
@@ -605,7 +590,6 @@ class GraftSession(val spark: SparkSession, warehouse: String,
                             corpusTable: String, idCol: String = "doc_id",
                             textCol: String = "text", shingleK: Int = 5,
                             dfCap: Int = 32): (Long, Long) = {
-    import org.apache.spark.sql.graft.Bridge
     val (dbD, tD) = qualify(dfTable)
     val (dbP, tP) = qualify(postingTable)
     val (dbC, tC) = qualify(corpusTable)
@@ -982,7 +966,6 @@ class GraftSession(val spark: SparkSession, warehouse: String,
   def auditFingerprintIndex(fpTable: String, corpusTable: String,
                             textCol: String = "text",
                             minTokens: Int = 15): Long = {
-    import org.apache.spark.sql.graft.Bridge
     val (db, t) = qualify(fpTable)
     val (dbC, tC) = qualify(corpusTable)
     val m = catalog.meta(db, t)
@@ -1022,6 +1005,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
   private def createSchema(stmt: String): DataFrame = stmt match {
     case CreateSchemaR(ine, name) =>
       catalog.createSchema(clean(name), ifNotExists = ine != null); count(1)
+    case _ => throw SqlError.syntax(stmt)
   }
 
   private val DropSchemaR =
@@ -1029,6 +1013,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
   private def dropSchema(stmt: String): DataFrame = stmt match {
     case DropSchemaR(ie, name) =>
       catalog.dropSchema(clean(name), ifExists = ie != null); count(1)
+    case _ => throw SqlError.syntax(stmt)
   }
 
   private def use(stmt: String): DataFrame = {
@@ -1164,7 +1149,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
           val mysqlType = rest.split("\\s+")(0)
           // attribute sniffs over the MASKED tail: the words inside a
           // quoted COMMENT/DEFAULT are data, not column attributes
-          val restMasked = GraftSession.maskNonSyntax(rest).toLowerCase
+          val restMasked = SqlText.maskNonSyntax(rest).toLowerCase
           // independent sniffs: `a int primary key unique` catalogs BOTH
           // (MySQL keeps the pk AND a unique key named after the column)
           if (restMasked.contains("primary key")) { pk = pk :+ cname; pkDecls += 1 }
@@ -1217,6 +1202,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
           partitionCols = partCols, uniques = uniques),
         ifNotExists = ine != null)
       count(1)
+    case _ => throw SqlError.syntax(head)
   }
 
   /** Parse the tail of a UNIQUE constraint declaration — everything after
@@ -1277,7 +1263,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       val (db, v) = qualify(name)
       catalog.createView(db, v, select.trim, orReplace = orRep != null)
       count(0)
-    case _ => sys.error(s"Unsupported CREATE VIEW syntax: $stmt")
+    case _ => throw SqlError.syntax(stmt)
   }
 
   private val DropViewR =
@@ -1287,7 +1273,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       val (db, v) = qualify(name)
       catalog.dropView(db, v, ifExists = ie != null)
       count(0)
-    case _ => sys.error(s"Unsupported DROP VIEW syntax: $stmt")
+    case _ => throw SqlError.syntax(stmt)
   }
 
   private val DropTableR = "(?is)drop\\s+table\\s+(if\\s+exists\\s+)?([`\\w.]+)".r
@@ -1295,6 +1281,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     case DropTableR(ie, name) =>
       val (db, t) = qualify(name)
       catalog.dropTable(db, t, ifExists = ie != null); count(1)
+    case _ => throw SqlError.syntax(stmt)
   }
 
   private val AddColR =
@@ -1383,7 +1370,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       // index. The new column is all-NULL, so the constraint holds
       // vacuously at birth: cataloged, no data check.
       val wantUnique = "(?i)\\bunique\\b".r
-        .findFirstIn(GraftSession.maskNonSyntax(attrs)).isDefined
+        .findFirstIn(SqlText.maskNonSyntax(attrs)).isDefined
       val ddl = sparkDdl(ctype)
       // an existing column name is MySQL's 1060 — Spark's withColumn
       // would otherwise silently REPLACE the column (nulling its data)
@@ -1459,11 +1446,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
             .filter(_.cols.nonEmpty)))
       }
       count(0)
-    case other =>
-      // an unsupported ALTER form is a SQL syntax error, never an
-      // internal MatchError escaping to the caller
-      throw new SqlError(1064, "42000",
-        s"Unsupported ALTER TABLE syntax near '${other.take(80)}'")
+    case _ => throw SqlError.syntax(stmt)
   }
 
   // ---- DML (insert.rs / update.rs / delete.rs) ---------------------------
@@ -1496,7 +1479,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       val m = catalog.meta(db, t)
       val src =
         if (source.toLowerCase.startsWith("values"))
-          spark.sql(s"SELECT * FROM ${source}")
+          relational(s"SELECT * FROM ${source}")
         else query(source)
       val targetCols: Seq[catalog.Col] =
         if (colsOpt == null) m.cols
@@ -1516,6 +1499,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       // report a different count than it wrote)
       writeRows(db, t, m, aligned,
         if (replace) "replace" else if (ignore) "ignore" else "strict")
+    case _ => throw SqlError.syntax(stmt)
   }
 
   /** Land a batch of aligned rows under the table's key semantics:
@@ -1783,6 +1767,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       }: _*)
       val mode = if (modeOpt == null) "strict" else modeOpt.toLowerCase
       writeRows(db, t, m, aligned, mode)
+    case _ => throw SqlError.syntax(stmt)
   }
 
   /** LOAD DATA LOCAL INFILE with the file content delivered by the wire
@@ -2004,10 +1989,10 @@ class GraftSession(val spark: SparkSession, warehouse: String,
         if (wherePos < 0) (rest, null)
         else (rest.substring(0, wherePos), rest.substring(wherePos + 5))
       val cond = if (whereOpt == null) lit(true) else expr(whereOpt)
-      val assignments = splitTopLevel(sets, ',').map { a =>
-        val Array(c, e) = a.split("=", 2)
-        clean(c.trim) -> e.trim
-      }
+      val assignments = splitTopLevel(sets, ',').map(_.split("=", 2) match {
+        case Array(c, e) => clean(c.trim) -> e.trim
+        case _ => throw SqlError.syntax(stmt)
+      })
       if (m.mergeOnRead) updateMergeOnRead(db, t, m, cond, assignments)
       else catalog.withDmlLock(db, t) {
         // the DML lock (reentrant — rewrite() re-takes it) spans the
@@ -2042,6 +2027,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
         catalog.rewrite(db, t, updated)
         count(affected)
       }
+    case _ => throw SqlError.syntax(stmt)
   }
 
   /** Merge-on-read UPDATE: tombstone the matched rows' OLD pks, append
@@ -2115,16 +2101,8 @@ class GraftSession(val spark: SparkSession, warehouse: String,
         autoCompact(db, t)
       }
       count(affected)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(stage)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator.asScala.foreach(java.nio.file.Files.deleteIfExists(_))
+    } finally deleteDirTree(stage)
     }
-    }
-
-  private def topLevelIndexOfWord(s: String, word: String): Int =
-    SqlText.topLevelIndexOfWord(s, word)
 
   private val DeleteR =
     "(?is)delete\\s+from\\s+([`\\w.]+)(?:\\s+where\\s+(.+))?".r
@@ -2163,6 +2141,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
         catalog.rewrite(db, t, df.filter(not(expr(whereOpt))))
         count(affected)
       }
+    case _ => throw SqlError.syntax(stmt)
   }
 
   // ---- variables (set_variable.rs / variable/system.rs + user_defined.rs)
@@ -2215,6 +2194,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       }
       variables.set(n, unquote(value.trim), global = global)
       count(0)
+    case _ => throw SqlError.syntax(stmt)
   }
 
   /** Quote-aware `@name` → value substitution (single @, not @@). */
@@ -2243,172 +2223,164 @@ class GraftSession(val spark: SparkSession, warehouse: String,
 
   // ---- SHOW surface (show_*.rs) ------------------------------------------
 
-  private def show(stmt: String): DataFrame = {
-    val lower = stmt.toLowerCase
-    val likeR = "(?is).*\\blike\\s+'([^']*)'.*".r
-    val like: Option[String] = stmt match {
-      case likeR(p) => Some(p)
-      case _        => None
-    }
+  /** The table a SHOW … FROM|FOR <t>, SHOW CREATE TABLE|VIEW <t> or
+    * DESCRIBE <t> names.
+    */
+  private val ShowTableR =
+    "(?is)(?:.*?\\s(?:from|for|table|view)|desc(?:ribe)?)\\s+([`\\w.]+).*".r
+
+  private def show(st: Statement): DataFrame = {
+    import Verb._
+    val stmt = st.text
+    val like = "(?i)\\blike\\s+'([^']*)'".r.findFirstMatchIn(stmt).map(_.group(1))
     def likeFilter(s: String): Boolean = like.forall { p =>
       Pattern.compile("(?i)^" + Pattern.quote(p).replace("%", "\\E.*\\Q")
         .replace("_", "\\E.\\Q") + "$").matcher(s).matches()
     }
+    lazy val (db, t) = stmt match {
+      case ShowTableR(name) => qualify(name)
+      case _ => throw SqlError.syntax(stmt)
+    }
 
-    if (lower.startsWith("show databases"))
-      frame(Seq("Database"), catalog.listSchemas().filter(likeFilter).map(Seq(_)))
-    else if (lower.startsWith("show full tables"))
-      // MySQL's SHOW FULL TABLES distinguishes views via Table_type
-      frame(Seq(s"Tables_in_$currentSchema", "Table_type"),
-        (catalog.listTables(currentSchema).map(_ -> "BASE TABLE") ++
-          catalog.listViews(currentSchema).map(_ -> "VIEW"))
-          .filter(x => likeFilter(x._1)).sortBy(_._1)
-          .map { case (n, ty) => Seq(n, ty) })
-    else if (lower.startsWith("show tables"))
-      // views list alongside tables, as in MySQL
-      frame(Seq(s"Tables_in_$currentSchema"),
-        (catalog.listTables(currentSchema) ++ catalog.listViews(currentSchema))
-          .sorted.filter(likeFilter).map(Seq(_)))
-    else if (lower.startsWith("show full columns") || lower.startsWith("show columns")) {
-      val nameR = "(?is)show\\s+(?:full\\s+)?columns\\s+from\\s+([`\\w.]+).*".r
-      val n = stmt match { case nameR(x) => x }
-      val (db, t) = qualify(n)
-      val m = catalog.meta(db, t)
-      frame(Seq("Field", "Type", "Null", "Key", "Default", "Extra"),
-        m.cols.map(c => Seq(c.name, c.mysqlType.toLowerCase,
-          if (m.pk.contains(c.name)) "NO" else "YES",
-          if (m.pk.contains(c.name)) "PRI" else "", "NULL", "")))
-    } else if (lower.startsWith("show commits")) {
-      // commit-log discoverability for VERSION AS OF: one row per commit
-      // with whether that generation is still retained (addressable)
-      val nameR = "(?is)show\\s+commits\\s+(?:for|from)\\s+([`\\w.]+).*".r
-      val n = stmt match {
-        case nameR(x) => x
-        case _ => throw new SqlError(1064, "42000",
-          "SHOW COMMITS requires a table: SHOW COMMITS FOR <table>")
-      }
-      val (db, t) = qualify(n)
-      val versionsDir = java.nio.file.Paths.get(
-        catalog.dataPath(db, t)).getParent.resolve("versions")
-      frame(Seq("version", "action", "retained", "committed_at"),
-        catalog.commitLog(db, t).map { case (v, action, at) =>
-          Seq(s"v$v", action,
-            if (java.nio.file.Files.isDirectory(versionsDir.resolve(s"v$v")))
-              "YES" else "reaped",
-            at.map(_.toString).orNull)
-        })
-    } else if (lower.startsWith("show create view")) {
-      val n = clean(stmt.substring("show create view".length).trim)
-      val (db, v) = qualify(n)
-      frame(Seq("View", "Create View", "character_set_client",
-        "collation_connection"),
-        Seq(Seq(v, s"CREATE VIEW `$v` AS ${catalog.viewSql(db, v)}",
-          "utf8mb4", "utf8mb4_0900_ai_ci")))
-    } else if (lower.startsWith("show create table")) {
-      val n = clean(stmt.substring("show create table".length).trim)
-      val (db, t) = qualify(n)
-      if (catalog.viewExists(db, t))
-        // MySQL answers SHOW CREATE TABLE on a view with the view shape
-        return frame(Seq("View", "Create View", "character_set_client",
+    st.verb match {
+      case ShowDatabases =>
+        frame(Seq("Database"), catalog.listSchemas().filter(likeFilter).map(Seq(_)))
+      case ShowFullTables =>
+        // MySQL's SHOW FULL TABLES distinguishes views via Table_type
+        frame(Seq(s"Tables_in_$currentSchema", "Table_type"),
+          (catalog.listTables(currentSchema).map(_ -> "BASE TABLE") ++
+            catalog.listViews(currentSchema).map(_ -> "VIEW"))
+            .filter(x => likeFilter(x._1)).sortBy(_._1)
+            .map { case (n, ty) => Seq(n, ty) })
+      case ShowTables =>
+        // views list alongside tables, as in MySQL
+        frame(Seq(s"Tables_in_$currentSchema"),
+          (catalog.listTables(currentSchema) ++ catalog.listViews(currentSchema))
+            .sorted.filter(likeFilter).map(Seq(_)))
+      case ShowColumns =>
+        val m = catalog.meta(db, t)
+        frame(Seq("Field", "Type", "Null", "Key", "Default", "Extra"),
+          m.cols.map(c => Seq(c.name, c.mysqlType.toLowerCase,
+            if (m.pk.contains(c.name)) "NO" else "YES",
+            if (m.pk.contains(c.name)) "PRI" else "", "NULL", "")))
+      case ShowCommits =>
+        // commit-log discoverability for VERSION AS OF: one row per commit
+        // with whether that generation is still retained (addressable)
+        val versionsDir = java.nio.file.Paths.get(
+          catalog.dataPath(db, t)).getParent.resolve("versions")
+        frame(Seq("version", "action", "retained", "committed_at"),
+          catalog.commitLog(db, t).map { case (v, action, at) =>
+            Seq(s"v$v", action,
+              if (java.nio.file.Files.isDirectory(versionsDir.resolve(s"v$v")))
+                "YES" else "reaped",
+              at.map(_.toString).orNull)
+          })
+      // MySQL answers SHOW CREATE TABLE on a view with the view shape
+      case ShowCreateView | ShowCreateTable
+          if st.verb == ShowCreateView || catalog.viewExists(db, t) =>
+        frame(Seq("View", "Create View", "character_set_client",
           "collation_connection"),
           Seq(Seq(t, s"CREATE VIEW `$t` AS ${catalog.viewSql(db, t)}",
             "utf8mb4", "utf8mb4_0900_ai_ci")))
-      val m = catalog.meta(db, t)
-      val colDefs = m.cols.map(c => s"  `${c.name}` ${c.mysqlType.toLowerCase}")
-      val pkDef = if (m.pk.nonEmpty)
-        Seq(s"  PRIMARY KEY (${m.pk.map(k => s"`$k`").mkString(", ")})") else Nil
-      val uqDefs = m.uniques.map(u =>
-        s"  UNIQUE KEY `${u.name}` (${u.cols.map(c => s"`$c`").mkString(", ")})")
-      val ddl = s"CREATE TABLE `$t` (\n" +
-        (colDefs ++ pkDef ++ uqDefs).mkString(",\n") +
-        s"\n) ENGINE=${m.engine.toUpperCase}"
-      frame(Seq("Table", "Create Table"), Seq(Seq(t, ddl)))
-    } else if (lower.startsWith("show variables") || lower.startsWith("show global variables") ||
-               lower.startsWith("show session variables"))
-      frame(Seq("Variable_name", "Value"),
-        variables.all.filter(v => likeFilter(v._1)).map(v => Seq(v._1, v._2)))
-    else if (lower.startsWith("show engines"))
-      // reference lists MEMORY/CSV/Rocksdb (show_engines.rs:44); graft's
-      // engines are its storage modes on Spark.
-      frame(Seq("Engine", "Support", "Comment", "Transactions", "XA", "Savepoints"),
-        Seq(
-          Seq("PARQUET", "DEFAULT", "Columnar parquet storage, min-max pruned, distributed scan", "NO", "NO", "NO"),
-          Seq("SLED", "YES", "Key-value semantics: PK-sorted parquet with row-group point-lookup pruning", "NO", "NO", "NO"),
-          Seq("CSV", "YES", "CSV storage engine", "NO", "NO", "NO"),
-          Seq("MEMORY", "YES", "In-memory columnar cache over durable files, useful for hot dimension tables", "NO", "NO", "NO")))
-    else if (lower.startsWith("show index") || lower.startsWith("show keys")) {
-      val nameR = "(?is)show\\s+(?:index|keys)\\s+from\\s+([`\\w.]+).*".r
-      val n = stmt match { case nameR(x) => x }
-      val (db, t) = qualify(n)
-      val m = catalog.meta(db, t)
-      frame(Seq("Table", "Non_unique", "Key_name", "Seq_in_index",
-        "Column_name", "Index_type"),
-        m.pk.zipWithIndex.map { case (c, i) =>
-          Seq(t, "0", "PRIMARY", (i + 1).toString, c, "BTREE")
-        } ++ m.uniques.flatMap(u => u.cols.zipWithIndex.map { case (c, i) =>
-          Seq(t, "0", u.name, (i + 1).toString, c, "BTREE")
-        }))
+      case ShowCreateTable =>
+        val m = catalog.meta(db, t)
+        val colDefs = m.cols.map(c => s"  `${c.name}` ${c.mysqlType.toLowerCase}")
+        val pkDef = if (m.pk.nonEmpty)
+          Seq(s"  PRIMARY KEY (${m.pk.map(k => s"`$k`").mkString(", ")})") else Nil
+        val uqDefs = m.uniques.map(u =>
+          s"  UNIQUE KEY `${u.name}` (${u.cols.map(c => s"`$c`").mkString(", ")})")
+        val ddl = s"CREATE TABLE `$t` (\n" +
+          (colDefs ++ pkDef ++ uqDefs).mkString(",\n") +
+          s"\n) ENGINE=${m.engine.toUpperCase}"
+        frame(Seq("Table", "Create Table"), Seq(Seq(t, ddl)))
+      case ShowVariables =>
+        frame(Seq("Variable_name", "Value"),
+          variables.all.filter(v => likeFilter(v._1)).map(v => Seq(v._1, v._2)))
+      case ShowEngines =>
+        // reference lists MEMORY/CSV/Rocksdb (show_engines.rs:44); graft's
+        // engines are its storage modes on Spark.
+        frame(Seq("Engine", "Support", "Comment", "Transactions", "XA", "Savepoints"),
+          Seq(
+            Seq("PARQUET", "DEFAULT", "Columnar parquet storage, min-max pruned, distributed scan", "NO", "NO", "NO"),
+            Seq("SLED", "YES", "Key-value semantics: PK-sorted parquet with row-group point-lookup pruning", "NO", "NO", "NO"),
+            Seq("CSV", "YES", "CSV storage engine", "NO", "NO", "NO"),
+            Seq("MEMORY", "YES", "In-memory columnar cache over durable files, useful for hot dimension tables", "NO", "NO", "NO")))
+      case ShowIndex =>
+        val m = catalog.meta(db, t)
+        frame(Seq("Table", "Non_unique", "Key_name", "Seq_in_index",
+          "Column_name", "Index_type"),
+          m.pk.zipWithIndex.map { case (c, i) =>
+            Seq(t, "0", "PRIMARY", (i + 1).toString, c, "BTREE")
+          } ++ m.uniques.flatMap(u => u.cols.zipWithIndex.map { case (c, i) =>
+            Seq(t, "0", u.name, (i + 1).toString, c, "BTREE")
+          }))
+      case ShowCharset =>
+        frame(Seq("Charset", "Description", "Default collation", "Maxlen"),
+          Seq(Seq("utf8mb4", "UTF-8 Unicode", "utf8mb4_0900_ai_ci", "4"),
+              Seq("binary", "Binary pseudo charset", "binary", "1")))
+      case ShowCollation =>
+        frame(Seq("Collation", "Charset", "Id", "Default", "Compiled", "Sortlen"),
+          Seq(Seq("utf8mb4_0900_ai_ci", "utf8mb4", "255", "Yes", "Yes", "0"),
+              Seq("utf8mb4_general_ci", "utf8mb4", "45", "", "Yes", "1"),
+              Seq("binary", "binary", "63", "Yes", "Yes", "1")))
+      case ShowGrants =>
+        // derived from the seeded mysql.user privilege table (initial.rs
+        // parity) — declaratively, so privilege edits via plain DML show up
+        val privNames = Seq("Select" -> "Select_priv", "Insert" -> "Insert_priv",
+          "Update" -> "Update_priv", "Delete" -> "Delete_priv",
+          "Create" -> "Create_priv", "Drop" -> "Drop_priv")
+        val allY = (privNames.map(_._2) :+ "Super_priv")
+          .map(c => col(c) === "Y").reduce(_ && _)
+        val privList = array_join(filter(
+          array(privNames.map { case (n, c) => when(col(c) === "Y", lit(n)) }: _*),
+          x => x.isNotNull), ", ")
+        catalog.read("mysql", "user")
+          .orderBy(col("User"), col("Host"))
+          .select(concat(
+            lit("GRANT "),
+            when(allY, lit("ALL PRIVILEGES")).otherwise(privList),
+            lit(" ON *.* TO '"), col("User"), lit("'@'"), col("Host"), lit("'"),
+            when(col("Grant_priv") === "Y", lit(" WITH GRANT OPTION"))
+              .otherwise(lit(""))).as("Grants for root@%"))
+      case ShowPrivileges =>
+        frame(Seq("Privilege", "Context", "Comment"),
+          Seq(Seq("Alter", "Tables", "To alter the table"),
+              Seq("Create", "Databases,Tables,Indexes", "To create new databases and tables"),
+              Seq("Delete", "Tables", "To delete existing rows"),
+              Seq("Drop", "Databases,Tables", "To drop databases, tables, and views"),
+              Seq("Insert", "Tables", "To insert data into tables"),
+              Seq("Select", "Tables", "To retrieve rows from table"),
+              Seq("Update", "Tables", "To update existing rows")))
+      case ShowTableStatus =>
+        // row counts come from parquet footers (Catalog.rowCount) — zero
+        // Spark jobs for the common case, not O(#tables) count() scans
+        frame(Seq("Name", "Engine", "Version", "Row_format", "Rows", "Comment"),
+          catalog.listTables(currentSchema).filter(likeFilter).map { t =>
+            Seq(t, catalog.meta(currentSchema, t).engine.toUpperCase, "10",
+              "Dynamic", catalog.rowCount(currentSchema, t).toString, "")
+          })
+      case ShowWarnings =>
+        // connectors emit SHOW WARNINGS LIMIT [offset,] count — honor it
+        val lim =
+          "(?i)^show\\s+warnings(?:\\s+limit\\s+(\\d+)(?:\\s*,\\s*(\\d+))?)?\\s*$".r
+        val rows = stmt match {
+          case lim(null, _)     => pendingWarnings.toSeq
+          case lim(n, null)     => pendingWarnings.toSeq.take(n.toInt)
+          case lim(off, cnt)    => pendingWarnings.toSeq.slice(
+            off.toInt, off.toInt + cnt.toInt)
+          case _ => throw SqlError.syntax(stmt)
+        }
+        frame(Seq("Level", "Code", "Message"),
+          rows.map { case (l, c, m) => Seq(l, c.toString, m) })
+      case ShowErrors => frame(Seq("Level", "Code", "Message"), Seq.empty)
+      case _ => throw SqlError.syntax(stmt)
     }
-    else if (lower.startsWith("show charset") || lower.startsWith("show character set"))
-      frame(Seq("Charset", "Description", "Default collation", "Maxlen"),
-        Seq(Seq("utf8mb4", "UTF-8 Unicode", "utf8mb4_0900_ai_ci", "4"),
-            Seq("binary", "Binary pseudo charset", "binary", "1")))
-    else if (lower.startsWith("show collation"))
-      frame(Seq("Collation", "Charset", "Id", "Default", "Compiled", "Sortlen"),
-        Seq(Seq("utf8mb4_0900_ai_ci", "utf8mb4", "255", "Yes", "Yes", "0"),
-            Seq("utf8mb4_general_ci", "utf8mb4", "45", "", "Yes", "1"),
-            Seq("binary", "binary", "63", "Yes", "Yes", "1")))
-    else if (lower.startsWith("show grants")) {
-      // derived from the seeded mysql.user privilege table (initial.rs
-      // parity) — declaratively, so privilege edits via plain DML show up
-      val privNames = Seq("Select" -> "Select_priv", "Insert" -> "Insert_priv",
-        "Update" -> "Update_priv", "Delete" -> "Delete_priv",
-        "Create" -> "Create_priv", "Drop" -> "Drop_priv")
-      val allY = (privNames.map(_._2) :+ "Super_priv")
-        .map(c => col(c) === "Y").reduce(_ && _)
-      val privList = array_join(filter(
-        array(privNames.map { case (n, c) => when(col(c) === "Y", lit(n)) }: _*),
-        x => x.isNotNull), ", ")
-      catalog.read("mysql", "user")
-        .orderBy(col("User"), col("Host"))
-        .select(concat(
-          lit("GRANT "),
-          when(allY, lit("ALL PRIVILEGES")).otherwise(privList),
-          lit(" ON *.* TO '"), col("User"), lit("'@'"), col("Host"), lit("'"),
-          when(col("Grant_priv") === "Y", lit(" WITH GRANT OPTION"))
-            .otherwise(lit(""))).as("Grants for root@%"))
-    }
-    else if (lower.startsWith("show privileges"))
-      frame(Seq("Privilege", "Context", "Comment"),
-        Seq(Seq("Alter", "Tables", "To alter the table"),
-            Seq("Create", "Databases,Tables,Indexes", "To create new databases and tables"),
-            Seq("Delete", "Tables", "To delete existing rows"),
-            Seq("Drop", "Databases,Tables", "To drop databases, tables, and views"),
-            Seq("Insert", "Tables", "To insert data into tables"),
-            Seq("Select", "Tables", "To retrieve rows from table"),
-            Seq("Update", "Tables", "To update existing rows")))
-    else if (lower.startsWith("show table status"))
-      // row counts come from parquet footers (Catalog.rowCount) — zero
-      // Spark jobs for the common case, not O(#tables) count() scans
-      frame(Seq("Name", "Engine", "Version", "Row_format", "Rows", "Comment"),
-        catalog.listTables(currentSchema).filter(likeFilter).map { t =>
-          Seq(t, catalog.meta(currentSchema, t).engine.toUpperCase, "10",
-            "Dynamic", catalog.rowCount(currentSchema, t).toString, "")
-        })
-    else sys.error(s"Unsupported SHOW command: $stmt")
   }
 
   // ---- query path (select.rs / explain.rs; B7/B10/B12) -------------------
 
   private val ExplainAnalyzeR =
-    "(?is)^\\s*explain\\s+analyze\\s+(?:(formatted|verbose)\\s+)?(.+)".r
-  /** Statements EXPLAIN ANALYZE may execute: the relational query path
-    * only. A DML/DDL child would reach spark.sql directly and write
-    * OUTSIDE graft's dispatch — no seq stamping, no commit protocol, no
-    * catalog lock — so it is refused (MySQL 1235), never half-executed.
-    */
-  private val RelationalChildR =
-    "(?is)^\\s*[(]*\\s*(?:select|with|values|table|explain)\\b.*".r
+    "(?is)explain\\s+analyze\\s+(?:(formatted|verbose)\\s+)?(.+)".r
   private val VarRef = "(?i)@@(?:(global|session)\\.)?(\\w+)".r
   private val SelectVarsR = "(?is)select\\s+(@@[\\w.]+(?:\\s*,\\s*@@[\\w.]+)*)\\s*".r
 
@@ -2430,12 +2402,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
   private def sqlQuote(v: String): String =
     "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-  /** SELECT / EXPLAIN / WITH / VALUES — Spark SQL with two MySQL-isms
-    * rewritten first: `@@variable` references and `information_schema`
-    * virtual tables (meta/initial.rs parity, computed on demand from the
-    * catalog — O(#tables) driver work, no data scan).
-    */
-  def query(stmt: String): DataFrame = stmt match {
+  private def explainAnalyze(stmt: String): DataFrame = stmt match {
     case ExplainAnalyzeR(mode, inner) =>
       // reference explain.rs:44 (wired at core/execution.rs:1042):
       // EXPLAIN ANALYZE <stmt> EXECUTES the statement and returns the
@@ -2448,24 +2415,33 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       // metric with its unit (timing → ms, size → bytes humanized), so
       // scan/exchange wall times are readable; FORMATTED additionally
       // prepends Spark's formatted explain of the final adaptive plan.
-      if (!RelationalChildR.matches(inner))
+      // Only a relational child may run: DML/DDL would write OUTSIDE
+      // graft's dispatch — no seq stamping, no commit protocol, no
+      // catalog lock — so it is refused (MySQL 1235), never half-executed
+      val childStmt = Statement.classify(inner)
+      if (childStmt.verb != Verb.Query)
         throw new SqlError(1235, "42000",
           "EXPLAIN ANALYZE only supports relational statements " +
-            "(SELECT/WITH/VALUES/TABLE/EXPLAIN); DML and DDL would " +
+            "(SELECT/WITH/VALUES/TABLE/EXPLAIN/FROM); DML and DDL would " +
             "execute outside the catalog's commit protocol")
-      val child = query(inner.trim)
+      val child = query(childStmt.text)
       child.queryExecution.toRdd.foreach(_ => ())
-      val verbose = mode != null
       val tree = GraftSession.metricsTree(
-        child.queryExecution.executedPlan, verbose = verbose)
-      val rows =
-        if (mode != null && mode.equalsIgnoreCase("formatted"))
-          Seq(
-            Seq("Formatted Plan", child.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)),
-            Seq("Plan with Metrics", tree))
-        else Seq(Seq("Plan with Metrics", tree))
-      frame(Seq("plan_type", "plan"), rows)
+        child.queryExecution.executedPlan, verbose = mode != null)
+      val formatted = Option(mode).filter(_.equalsIgnoreCase("formatted")).map(_ =>
+        Seq("Formatted Plan", child.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)))
+      frame(Seq("plan_type", "plan"),
+        formatted.toSeq :+ Seq("Plan with Metrics", tree))
+    case _ => throw SqlError.syntax(stmt)
+  }
+
+  /** SELECT / EXPLAIN / WITH / VALUES / TABLE / FROM — Spark SQL with two
+    * MySQL-isms rewritten first: `@@variable` references and
+    * `information_schema` virtual tables (meta/initial.rs parity, computed
+    * on demand from the catalog — O(#tables) driver work, no data scan).
+    */
+  def query(stmt: String): DataFrame = stmt match {
     case SelectVarsR(vars) =>
       // pure variable select keeps MySQL column naming: `@@version` etc.
       val names = vars.split(',').map(_.trim)
@@ -2489,7 +2465,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       val ttViews = scala.collection.mutable.Buffer[String]()
       try {
       if (GraftSession.AsOfProbeR.findFirstIn(q).isDefined) {
-        val masked = GraftSession.maskNonSyntax(q)
+        val masked = SqlText.maskNonSyntax(q)
         val ms = GraftSession.TimeTravelR.findAllMatchIn(masked).toSeq
         if (ms.nonEmpty) {
           val out = new StringBuilder
@@ -2565,7 +2541,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
           require(!java.nio.file.Files.exists(java.nio.file.Paths.get(path)),
             s"File '$path' already exists") // MySQL error 1086 semantics
           // one execution: count and write read the same materialization
-          val df = spark.sql(body)
+          val df = relational(body)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
             val n = df.count()
@@ -2578,15 +2554,13 @@ class GraftSession(val spark: SparkSession, warehouse: String,
               .find(_.getFileName.toString.startsWith("part-"))
               .getOrElse(sys.error("export produced no data file"))
             java.nio.file.Files.move(part, java.nio.file.Paths.get(path))
-            java.nio.file.Files.walk(tmp)
-              .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-              .iterator.asScala.foreach(java.nio.file.Files.deleteIfExists(_))
+            deleteDirTree(tmp)
             count(n)
           } finally df.unpersist()
-        case _ => spark.sql(q)
+        case _ => relational(q)
       }
       } finally
-        // spark.sql analyzed (resolved) the plan eagerly above, so the
+        // the plan was analyzed (resolved) eagerly above, so the
         // statement's time-travel views are no longer needed; dropping
         // them here keeps the session catalog from accumulating one
         // view per time-travel query. The try also spans RESOLUTION —
@@ -2594,6 +2568,22 @@ class GraftSession(val spark: SparkSession, warehouse: String,
         // drop the first reference's already-registered view
         ttViews.foreach(v => spark.catalog.dropTempView(v))
   }
+
+  /** Spark's parser on relational text, once, under the planning tracker
+    * (Bridge.parsedSql). A parsed or analyzed plan that would write — an
+    * INSERT or INSERT OVERWRITE DIRECTORY hidden in a WITH or FROM form —
+    * or run any command but EXPLAIN is refused before it can execute:
+    * writes go through graft's handlers and the commit protocol, never
+    * straight to Spark.
+    */
+  private def relational(text: String): DataFrame =
+    Bridge.parsedSql(spark, text) { plan =>
+      if (plan.exists {
+            case _: ExplainCommand => false
+            case _: Command | _: InsertIntoStatement | _: InsertIntoDir => true
+            case _ => false
+          }) throw SqlError.syntax(text)
+    }
 
   private def registerInformationSchema(): Unit = {
     val tables = (for {
@@ -2714,9 +2704,6 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       rows.map(r => Row(r: _*)).asJava,
       StructType(names.map(n => StructField(n, StringType))))
   }
-
-  private def splitTopLevel(s: String, sep: Char): Seq[String] =
-    SqlText.splitTopLevel(s, sep)
 }
 
 object GraftSession {
@@ -2740,51 +2727,6 @@ object GraftSession {
     * between (db, table) pairs and no clash with user temp views.
     */
   private[engine] val ttViewCounter = new java.util.concurrent.atomic.AtomicLong
-
-  /** A same-length copy of a SQL statement with everything that is NOT
-    * syntax blanked out: the bodies of '…'/"…" string literals (backslash
-    * escapes honored) and `…` identifiers become 'x' (delimiters kept, so
-    * a backticked table reference still matches as one token), and line
-    * comments (dash-dash, hash) and block comments become spaces
-    * (comments are whitespace between tokens). Pre-rewrites that must
-    * never fire on data — VERSION/TIMESTAMP AS OF — match against this
-    * mask and splice replacements into the original by position.
-    */
-  private[engine] def maskNonSyntax(s: String): String = {
-    val b = new StringBuilder(s)
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case q @ ('\'' | '"') =>
-          i += 1
-          while (i < s.length && s.charAt(i) != q) {
-            b.setCharAt(i, 'x')
-            if (s.charAt(i) == '\\' && i + 1 < s.length) {
-              b.setCharAt(i + 1, 'x'); i += 1
-            }
-            i += 1
-          }
-          i += 1
-        case '`' =>
-          i += 1
-          while (i < s.length && s.charAt(i) != '`') { b.setCharAt(i, 'x'); i += 1 }
-          i += 1
-        case '-' if i + 1 < s.length && s.charAt(i + 1) == '-' =>
-          while (i < s.length && s.charAt(i) != '\n') { b.setCharAt(i, ' '); i += 1 }
-        case '#' =>
-          while (i < s.length && s.charAt(i) != '\n') { b.setCharAt(i, ' '); i += 1 }
-        case '/' if i + 1 < s.length && s.charAt(i + 1) == '*' =>
-          b.setCharAt(i, ' '); b.setCharAt(i + 1, ' '); i += 2
-          while (i < s.length &&
-                 !(s.charAt(i) == '*' && i + 1 < s.length && s.charAt(i + 1) == '/')) {
-            b.setCharAt(i, ' '); i += 1
-          }
-          if (i < s.length) { b.setCharAt(i, ' '); b.setCharAt(i + 1, ' '); i += 2 }
-        case _ => i += 1
-      }
-    }
-    b.toString
-  }
 
   /** Executed-plan tree with per-node SQLMetrics values — the EXPLAIN
     * ANALYZE rendering. Adaptive wrappers are unwrapped to the plan

@@ -18,4 +18,11 @@ object SqlError {
   def duplicateEntry(key: String, table: String, index: String): SqlError =
     new SqlError(1062, "23000",
       s"Duplicate entry '$key' for key '$table.$index'")
+
+  /** MySQL's 1064 for a statement whose shape its handler does not
+    * accept (or whose leading verb no handler knows).
+    */
+  def syntax(near: String): SqlError =
+    new SqlError(1064, "42000",
+      s"You have an error in your SQL syntax near '${near.take(80)}'")
 }

@@ -1,69 +1,119 @@
 package graft.engine
 
-/** Quote/paren-aware SQL text scanning shared by GraftSession and the
-  * shell — a ';' or ',' or keyword inside a string literal is content,
-  * not syntax. All scanners agree on the same rules: quotes are `'`,
-  * `"`, `` ` ``; a backslash inside a `'`/`"` literal escapes the next
-  * character (Spark/MySQL string semantics); identifier characters are
-  * letters, digits and '_'.
+/** Quote/paren-aware SQL text scanning shared by GraftSession, the wire
+  * server and the shell — a ';' or ',' or keyword inside a string
+  * literal or a comment is content, not syntax. Every scanner reads the
+  * same single pass (`scan`): quotes are `'`, `"`, `` ` ``; a backslash
+  * inside a `'`/`"` literal escapes the next character (Spark/MySQL
+  * string semantics); comments are dash-dash, hash and block comments;
+  * identifier characters are letters, digits and '_'.
   */
 object SqlText {
 
   private def isWordChar(c: Char): Boolean =
     Character.isLetterOrDigit(c) || c == '_'
 
-  /** Split on a separator, ignoring separators nested in parens/quotes. */
-  def splitTopLevel(s: String, sep: Char): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0; var quote: Char = 0; var i = 0
+  /** Executable comments `/*!NNNNN … */` run when NNNNN is at most this:
+    * graft's `version`, 8.0.26.
+    */
+  private val ExecutableCommentMax = 80026
+
+  /** The statement as the engine reads it: line comments (dash-dash,
+    * hash) and block comments become spaces, optimizer hints are kept
+    * (Spark reads them), and an executable comment whose version is at
+    * most ExecutableCommentMax is unwrapped to its body (newer ones stay
+    * comments, as in MySQL). Every removed character becomes a space, so
+    * positions in the result are positions in `s`.
+    */
+  def normalize(s: String): String = scan(s, maskLiterals = false)
+
+  /** `normalize` with executable comments blanked like any other: the
+    * text Spark's parser gets for a relational statement. A MySQL-only
+    * modifier wrapped in one (mysqldump's `SELECT /*!40001 SQL_NO_CACHE */`)
+    * is there for MySQL alone, and Spark's lexer skips it as a comment.
+    */
+  def stripComments(s: String): String = scan(s, maskLiterals = false, unwrap = false)
+
+  /** `normalize`, plus the bodies of '…'/"…" string literals (backslash
+    * escapes honored) and `…` identifiers become 'x' (delimiters kept, so
+    * a backticked table reference still matches as one token).
+    * Pre-rewrites that must never fire on data — VERSION/TIMESTAMP AS
+    * OF — match against this mask and splice replacements into the
+    * original by position.
+    */
+  def maskNonSyntax(s: String): String = scan(s, maskLiterals = true)
+
+  private def scan(s: String, maskLiterals: Boolean, unwrap: Boolean = true): String = {
+    val b = new StringBuilder(s)
+    def blank(from: Int, until: Int): Unit =
+      (from until until).foreach(b.setCharAt(_, ' '))
+    def orEnd(i: Int): Int = if (i < 0) s.length else i
+    def closeOf(open: Int): Int = orEnd(s.indexOf("*/", open + 2))
+    def versionEnd(open: Int): Int = orEnd(s.indexWhere(!_.isDigit, open + 3))
+    var i = 0
+    var inExecutable = false // inside an unwrapped /*! … */ body
     while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        cur += c
-        if (c == '\\' && quote != '`' && i + 1 < s.length) {
-          cur += s.charAt(i + 1); i += 1
-        } else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' | '`'  => quote = c; cur += c
-        case '('               => depth += 1; cur += c
-        case ')'               => depth -= 1; cur += c
-        case x if x == sep && depth == 0 => out += cur.toString; cur.clear()
-        case x                 => cur += x
+      s.charAt(i) match {
+        case q @ ('\'' | '"' | '`') =>
+          i += 1
+          while (i < s.length && s.charAt(i) != q) {
+            if (maskLiterals) b.setCharAt(i, 'x')
+            if (q != '`' && s.charAt(i) == '\\' && i + 1 < s.length) {
+              if (maskLiterals) b.setCharAt(i + 1, 'x')
+              i += 1
+            }
+            i += 1
+          }
+          i += 1
+        case c if c == '#' || s.startsWith("--", i) =>
+          val end = orEnd(s.indexOf('\n', i)); blank(i, end); i = end
+        case '*' if inExecutable && s.startsWith("*/", i) =>
+          blank(i, i + 2); i += 2; inExecutable = false
+        case '/' if s.startsWith("/*+", i) => i = closeOf(i) + 2
+        case '/' if unwrap && s.startsWith("/*!", i) && s.substring(i + 3, versionEnd(i))
+            .toLongOption.forall(_ <= ExecutableCommentMax) =>
+          blank(i, versionEnd(i)); i = versionEnd(i); inExecutable = true
+        case '/' if s.startsWith("/*", i) =>
+          val end = (closeOf(i) + 2) min s.length; blank(i, end); i = end
+        case _ => i += 1
       }
-      i += 1
     }
-    if (cur.nonEmpty) out += cur.toString
+    b.toString
+  }
+
+  /** Split on a separator, ignoring separators nested in parens, quotes
+    * or comments.
+    */
+  def splitTopLevel(s: String, sep: Char): Seq[String] = {
+    val m = maskNonSyntax(s)
+    val out = Seq.newBuilder[String]
+    var depth = 0; var start = 0
+    for (i <- m.indices) m.charAt(i) match {
+      case '('                         => depth += 1
+      case ')'                         => depth -= 1
+      case c if c == sep && depth == 0 => out += s.substring(start, i); start = i + 1
+      case _                           =>
+    }
+    if (start < s.length) out += s.substring(start)
     out.result()
   }
 
   /** First top-level occurrence of a standalone keyword (case-insensitive,
-    * outside quotes/parens, '_' counts as an identifier char); -1 if
-    * absent.
+    * outside quotes/parens/comments, '_' counts as an identifier char);
+    * -1 if absent.
     */
   def topLevelIndexOfWord(s: String, word: String): Int = {
-    var quote: Char = 0; var depth = 0; var i = 0
-    val n = s.length; val wl = word.length
-    while (i < n) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\' && quote != '`' && i + 1 < n) i += 1
-        else if (c == quote) quote = 0
-        i += 1
-      } else c match {
-        case '\'' | '"' | '`' => quote = c; i += 1
-        case '('              => depth += 1; i += 1
-        case ')'              => depth -= 1; i += 1
-        case _ =>
-          if (depth == 0 && i + wl <= n &&
-              s.regionMatches(true, i, word, 0, wl) &&
-              (i == 0 || !isWordChar(s.charAt(i - 1))) &&
-              (i + wl == n || !isWordChar(s.charAt(i + wl))))
-            return i
-          i += 1
-      }
-    }
-    -1
+    val m = maskNonSyntax(s)
+    val wl = word.length
+    var depth = 0
+    m.indices.find(i => m.charAt(i) match {
+      case '(' => depth += 1; false
+      case ')' => depth -= 1; false
+      case _ =>
+        depth == 0 && m.regionMatches(true, i, word, 0, wl) &&
+          (i == 0 || !isWordChar(m.charAt(i - 1))) &&
+          (i + wl == m.length || !isWordChar(m.charAt(i + wl)))
+    }).getOrElse(-1)
   }
 
   /** Index just past the ')' matching the FIRST top-level '(' —
@@ -72,74 +122,31 @@ object SqlText {
     * '(' or it never closes.
     */
   def afterMatchingClose(s: String): Int = {
-    var quote: Char = 0; var depth = 0; var opened = false; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\' && quote != '`' && i + 1 < s.length) i += 1
-        else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '('              => depth += 1; opened = true
-        case ')' =>
-          depth -= 1
-          if (opened && depth == 0) return i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    0
+    val m = maskNonSyntax(s)
+    var depth = 0
+    m.indices.find(i => m.charAt(i) match {
+      case '(' => depth += 1; false
+      case ')' => depth -= 1; depth == 0
+      case _   => false
+    }).fold(0)(_ + 1)
   }
 
-  /** True when the trimmed text ends with a ';' that is outside any
-    * string literal (i.e. the statement is complete).
+  /** True when the text's last syntax character is a ';' outside any
+    * string literal or comment (i.e. the statement is complete).
     */
-  def endsStatement(s: String): Boolean = {
-    val t = s.trim
-    if (!t.endsWith(";")) return false
-    var quote: Char = 0; var i = 0
-    while (i < t.length) {
-      val c = t.charAt(i)
-      if (quote != 0) {
-        if (c == '\\' && quote != '`' && i + 1 < t.length) i += 1
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"' || c == '`') quote = c
-      i += 1
-    }
-    quote == 0
-  }
+  def endsStatement(s: String): Boolean = maskNonSyntax(s).trim.endsWith(";")
 
-  /** Count '?' parameter markers outside string literals. */
-  def countPlaceholders(s: String): Int = {
-    var n = 0; var quote: Char = 0; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\' && quote != '`' && i + 1 < s.length) i += 1
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"' || c == '`') quote = c
-      else if (c == '?') n += 1
-      i += 1
-    }
-    n
-  }
+  /** Count '?' parameter markers outside string literals and comments. */
+  def countPlaceholders(s: String): Int = maskNonSyntax(s).count(_ == '?')
 
-  /** Replace '?' markers outside string literals with `args` in order. */
+  /** Replace '?' markers outside string literals and comments with
+    * `args` in order.
+    */
   def bindPlaceholders(s: String, args: Seq[String]): String = {
+    val m = maskNonSyntax(s)
+    val next = args.iterator
     val out = new StringBuilder
-    var quote: Char = 0; var argIdx = 0; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        out += c
-        if (c == '\\' && quote != '`' && i + 1 < s.length) {
-          out += s.charAt(i + 1); i += 1
-        } else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"' || c == '`') { quote = c; out += c }
-      else if (c == '?') { out ++= args(argIdx); argIdx += 1 }
-      else out += c
-      i += 1
-    }
+    for (i <- s.indices) if (m.charAt(i) == '?') out ++= next.next() else out += s.charAt(i)
     out.toString
   }
 }

@@ -7,9 +7,10 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-import graft.engine.{GraftSession, SqlText}
+import graft.engine.{GraftSession, SqlError, SqlText, Statement, Verb}
 
 /** MySQL wire-protocol front-end over GraftSession — the reference
   * server's client surface (/root/reference/src/mysql/handle.rs:1,
@@ -70,7 +71,7 @@ final class MysqlServer(spark: SparkSession, warehouse: String,
     * PROCESSLIST are part of the real server surface it lacks).
     */
   private case class Conn(socket: Socket, startedAt: Long,
-                          @volatile var db: String = "mysql")
+                          @volatile var session: GraftSession)
   private val conns =
     new java.util.concurrent.ConcurrentHashMap[Int, Conn]
 
@@ -110,12 +111,13 @@ final class MysqlServer(spark: SparkSession, warehouse: String,
     // wait_timeout semantics: a connection idle past the limit is closed
     // (the blocking read throws SocketTimeoutException)
     if (idleTimeoutMs > 0) socket.setSoTimeout(idleTimeoutMs)
-    conns.put(connId, Conn(socket, System.currentTimeMillis()))
     val io = new PacketIO(
       new DataInputStream(socket.getInputStream),
       new BufferedOutputStream(socket.getOutputStream, 1 << 16))
-    var session =
-      new GraftSession(spark.newSession(), warehouse, filePrivRoot)
+    val conn = Conn(socket, System.currentTimeMillis(),
+      new GraftSession(spark.newSession(), warehouse, filePrivRoot))
+    conns.put(connId, conn)
+    def session = conn.session
     // prepared statements of THIS connection (statement.rs StmtContext)
     val stmts = mutable.Map.empty[Int, String]
     val stmtIds = new AtomicInteger(0)
@@ -164,8 +166,8 @@ final class MysqlServer(spark: SparkSession, warehouse: String,
           case 0x0e => io.write(Messages.ok(0)) // COM_PING
           case 0x02 => // COM_INIT_DB
             val db = new String(packet, 1, packet.length - 1, "UTF-8").trim
-            run(io, session, s"use $db", deprecateEof = deprecateEof)
-            Option(conns.get(connId)).foreach(_.db = db)
+            run(io, session, Statement.classify(s"use $db"),
+              deprecateEof = deprecateEof)
           case 0x0c => // COM_PROCESS_KILL
             if (packet.length >= 5) kill(io, leU32(packet, 1).toInt)
             else io.write(Messages.err(1064, "42000", "malformed KILL"))
@@ -173,42 +175,33 @@ final class MysqlServer(spark: SparkSession, warehouse: String,
             // server-scope (they act on the connection registry), so they
             // are answered here, not by the per-connection session.
             // CLIENT_MULTI_STATEMENTS: the payload may hold several
-            // ';'-separated statements (quote-aware split) — each result
-            // but the last carries SERVER_MORE_RESULTS_EXISTS, and an
-            // error aborts the remainder (MySQL multi-statement rules).
+            // ';'-separated statements (quote- and comment-aware split) —
+            // each result but the last carries SERVER_MORE_RESULTS_EXISTS,
+            // and an error aborts the remainder (MySQL multi-statement rules).
             val sql = new String(packet, 1, packet.length - 1, "UTF-8")
-            val statements = SqlText.splitTopLevel(sql, ';')
-              .map(_.trim).filter(_.nonEmpty) match {
-                case Seq() => Seq(sql) // run() answers the empty-query ERR
-                case ss    => ss
-              }
+            val statements = Statement.split(sql) match {
+              case Seq() => Seq(Statement.classify(sql)) // empty-query ERR
+              case ss    => ss
+            }
             var i = 0
             var aborted = false
             while (i < statements.length && !aborted) {
-              val one = statements(i)
+              val st = statements(i)
               val more = i < statements.length - 1
-              one match {
-                case KillR(idStr) =>
+              aborted = !(st.verb match {
+                case Verb.Kill => st.text match {
                   // ids past Int range can't name a live connection; a
                   // parse overflow must answer ERR, not unwind the CALLER
-                  kill(io, idStr.toLongOption
+                  case KillR(id) => kill(io, id.toLongOption
                     .filter(_.isValidInt).map(_.toInt).getOrElse(-1), more)
-                case s if s.equalsIgnoreCase("show processlist") =>
-                  writeProcessList(io, connId, more, deprecateEof)
-                case LocalInfileR(fname) =>
-                  aborted = !runLocalInfile(io, session, one, fname, more)
-                case _ =>
-                  aborted = !run(io, session, one, more = more,
-                    deprecateEof = deprecateEof)
-                  // lift: a malformed `use` (`use` alone — run() already
-                  // answered ERR) must not throw here and tear down the
-                  // whole connection; only track when a target token exists
-                  val toks = one.split("\\s+")
-                  if (toks.headOption.exists(_.equalsIgnoreCase("use")))
-                    toks.lift(1).map(_.stripSuffix(";")).filter(_.nonEmpty)
-                      .foreach(db =>
-                        Option(conns.get(connId)).foreach(_.db = db))
-              }
+                  case _ => writeError(io, SqlError.syntax(st.text)); false
+                }
+                case Verb.ShowProcessList =>
+                  writeProcessList(io, connId, more, deprecateEof); true
+                case Verb.LoadDataLocal => runLocalInfile(io, session, st, more)
+                case _ => run(io, session, st, more = more,
+                  deprecateEof = deprecateEof)
+              })
               i += 1
             }
           case 0x04 => // COM_FIELD_LIST
@@ -252,7 +245,8 @@ final class MysqlServer(spark: SparkSession, warehouse: String,
                 (id, p) => longData.get((id, p)).map(_.toByteArray),
                 stmtTypes.get, (id, ts) => stmtTypes(id) = ts)
               val template = stmts(stmtId)
-              run(io, session, SqlText.bindPlaceholders(template, args),
+              run(io, session,
+                Statement.classify(SqlText.bindPlaceholders(template, args)),
                 binary = true, deprecateEof = deprecateEof)
             } catch { case NonFatal(e) => writeError(io, e) }
           case 0x19 => // COM_STMT_CLOSE — no response by protocol
@@ -291,7 +285,7 @@ final class MysqlServer(spark: SparkSession, warehouse: String,
               stmts.clear()
               stmtTypes.clear()
               longData.clear()
-              session =
+              conn.session =
                 new GraftSession(spark.newSession(), warehouse, filePrivRoot)
               io.write(Messages.ok(0))
             }
@@ -317,13 +311,15 @@ final class MysqlServer(spark: SparkSession, warehouse: String,
     * the handler unwinds (MySQL CONNECTION-kill semantics; a QUERY kill
     * maps to the same thing since results stream incrementally).
     */
-  private def kill(io: PacketIO, targetId: Int, more: Boolean = false): Unit =
+  private def kill(io: PacketIO, targetId: Int, more: Boolean = false): Boolean =
     Option(conns.get(targetId)) match {
       case Some(c) =>
         try c.socket.close() catch { case NonFatal(_) => }
         io.write(Messages.ok(0, moreResults = more))
+        true
       case None =>
         io.write(Messages.err(1094, "HY000", s"Unknown thread id: $targetId"))
+        false
     }
 
   /** SHOW PROCESSLIST from the live registry (MySQL's column set). */
@@ -338,31 +334,19 @@ final class MysqlServer(spark: SparkSession, warehouse: String,
       StructField("Time", LongType, nullable = false),
       StructField("State", StringType), StructField("Info", StringType)))
     val now = System.currentTimeMillis()
-    val rows = conns.entrySet().iterator()
-    io.write(Messages.columnCount(schema.length))
-    schema.fields.foreach(f =>
-      io.write(Messages.columnDef("", "processlist", f.name, f.dataType,
-        nullable = true)))
-    if (!deprecateEof) io.write(Messages.eof())
-    rows.forEachRemaining { e =>
+    import scala.jdk.CollectionConverters._
+    val rows = conns.entrySet().iterator().asScala.map { e =>
       val c = e.getValue
-      io.write(Messages.textRow(org.apache.spark.sql.Row(
-        e.getKey.toLong, "root",
+      Row(e.getKey.toLong, "root",
         s"${c.socket.getInetAddress.getHostAddress}:${c.socket.getPort}",
-        c.db, if (e.getKey == selfId) "Query" else "Sleep",
-        (now - c.startedAt) / 1000, "", null)))
+        c.session.database, if (e.getKey == selfId) "Query" else "Sleep",
+        (now - c.startedAt) / 1000, "", null)
     }
-    io.write(if (deprecateEof) Messages.okEof(moreResults = more)
-             else Messages.eof(moreResults = more))
+    writeResultSet(io, schema, rows.asJava, more = more, deprecateEof = deprecateEof)
   }
 
-  /** Execute one statement and answer with an OK (DDL/DML FinalCount
-    * shape: a single `affected_rows` column) or a text result set.
-    * Returns false when the statement errored (the ERR packet is
-    * written here; a multi-statement batch must then abort).
-    */
   private val LocalInfileR =
-    "(?is)\\s*load\\s+data\\s+local\\s+infile\\s+'([^']+)'.*".r
+    "(?is)load\\s+data\\s+local\\s+infile\\s+'([^']+)'.*".r
 
   /** LOAD DATA LOCAL INFILE wire exchange: answer the statement with a
     * 0xFB request carrying the filename, read the client's content
@@ -376,34 +360,42 @@ final class MysqlServer(spark: SparkSession, warehouse: String,
     * prefix must never commit.
     */
   private def runLocalInfile(io: PacketIO, session: GraftSession,
-                             sql: String, fileName: String,
-                             more: Boolean): Boolean = {
-    io.write(Messages.localInfileRequest(fileName))
-    val content = new java.io.ByteArrayOutputStream()
-    var p = io.read()
-    while (p != null && p.nonEmpty) { content.write(p); p = io.read() }
-    // connection lost BEFORE the empty terminator: abort — a truncated
-    // stream (torn final line included) must never commit as a load
-    if (p == null) return false
-    try {
-      val df = session.loadDataLocal(sql, content.toByteArray)
-      val it = df.toLocalIterator()
-      val affected = if (it.hasNext) it.next().getLong(0) else 0L
-      io.write(Messages.ok(affected, moreResults = more))
-      true
-    } catch { case NonFatal(e) => writeError(io, e); false }
-  }
+                             st: Statement, more: Boolean): Boolean =
+    st.text match {
+      case LocalInfileR(fileName) =>
+        io.write(Messages.localInfileRequest(fileName))
+        val content = new java.io.ByteArrayOutputStream()
+        var p = io.read()
+        while (p != null && p.nonEmpty) { content.write(p); p = io.read() }
+        // connection lost BEFORE the empty terminator: abort — a truncated
+        // stream (torn final line included) must never commit as a load
+        if (p == null) return false
+        try {
+          val df = session.loadDataLocal(st.text, content.toByteArray)
+          val it = df.toLocalIterator()
+          val affected = if (it.hasNext) it.next().getLong(0) else 0L
+          io.write(Messages.ok(affected, moreResults = more))
+          true
+        } catch { case NonFatal(e) => writeError(io, e); false }
+      case _ => writeError(io, SqlError.syntax(st.text)); false
+    }
 
-  private def run(io: PacketIO, session: GraftSession, sql: String,
+  /** Execute one statement and answer with an OK (DDL/DML FinalCount
+    * shape: a single `affected_rows` column) or a text result set.
+    * Returns false when the statement errored (the ERR packet is
+    * written here; a multi-statement batch must then abort).
+    */
+  private def run(io: PacketIO, session: GraftSession, st: Statement,
                   binary: Boolean = false, more: Boolean = false,
                   deprecateEof: Boolean = false): Boolean =
     try {
-      val df = session.sql(sql)
+      val df = session.sql(st)
       if (isFinalCount(df)) {
         val n = df.toLocalIterator()
         val affected = if (n.hasNext) n.next().getLong(0) else 0L
         io.write(Messages.ok(affected, moreResults = more))
-      } else writeResultSet(io, df, binary, more, deprecateEof)
+      } else writeResultSet(io, df.schema, df.toLocalIterator(), binary, more,
+        deprecateEof)
       true
     } catch { case NonFatal(e) => writeError(io, e); false }
 
@@ -416,11 +408,11 @@ final class MysqlServer(spark: SparkSession, warehouse: String,
     f.length == 1 && f(0).metadata.contains(GraftSession.DmlCountTag)
   }
 
-  private def writeResultSet(io: PacketIO, df: DataFrame,
+  private def writeResultSet(io: PacketIO, schema: StructType,
+                             rows: java.util.Iterator[Row],
                              binary: Boolean = false,
                              more: Boolean = false,
                              deprecateEof: Boolean = false): Unit = {
-    val schema = df.schema
     io.write(Messages.columnCount(schema.length))
     schema.fields.foreach { f =>
       io.write(Messages.columnDef("", "", f.name, f.dataType, f.nullable))
@@ -428,7 +420,7 @@ final class MysqlServer(spark: SparkSession, warehouse: String,
     // DEPRECATE_EOF framing: no separator after column definitions, rows
     // terminated by an OK with the EOF header; legacy framing otherwise
     if (!deprecateEof) io.write(Messages.eof())
-    df.toLocalIterator().forEachRemaining(row =>
+    rows.forEachRemaining(row =>
       io.write(if (binary) Messages.binaryRow(row, schema)
                else Messages.textRow(row)))
     // only the TERMINATING packet advertises more results
@@ -442,7 +434,7 @@ final class MysqlServer(spark: SparkSession, warehouse: String,
     e match {
       // typed SQL errors carry their MySQL code/SQLSTATE to the wire
       // (duplicate-entry 1062/23000 etc. — insert.rs:203 parity)
-      case se: graft.engine.SqlError =>
+      case se: SqlError =>
         io.write(Messages.err(se.code, se.sqlState, msg))
       case _ => io.write(Messages.err(1105, "HY000", msg))
     }

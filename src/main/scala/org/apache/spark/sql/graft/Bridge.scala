@@ -1,11 +1,15 @@
 package org.apache.spark.sql.graft
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{ExpressionUtils, Dataset => CDataset, SparkSession => CSparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** Column ⇄ Expression conversions. Spark 4 made these `private[sql]`
   * (`org.apache.spark.sql.classic.ExpressionUtils`), so graft exposes them
@@ -15,6 +19,32 @@ import org.apache.spark.sql.{Column, DataFrame}
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `spark.sql` opened at its seam: the text is parsed once under a
+    * fresh QueryPlanningTracker, and `check` sees the parsed plan and
+    * then the analyzed plan before anything runs. A command executes as
+    * soon as its Dataset is built, and some writes only become commands
+    * during analysis (`INSERT OVERWRITE DIRECTORY` parses to
+    * `InsertIntoDir`), while others fail analysis with Spark's own error
+    * first (an INSERT into a view), so both plans are judged. The Dataset
+    * reuses the QueryExecution and carries the tracker, so every planning
+    * phase is recorded as it is for `spark.sql` (the body of
+    * `Dataset.ofRows`).
+    */
+  def parsedSql(spark: SparkSession, sqlText: String)(
+      check: LogicalPlan => Unit): DataFrame = {
+    val s = spark.asInstanceOf[CSparkSession]
+    s.withActive {
+      val tracker = new QueryPlanningTracker
+      val plan = tracker.measurePhase(QueryPlanningTracker.PARSING)(
+        s.sessionState.sqlParser.parsePlan(sqlText))
+      check(plan)
+      val qe = new QueryExecution(s, plan, tracker)
+      qe.assertAnalyzed()
+      check(qe.analyzed)
+      new CDataset[Row](qe, () => RowEncoder.encoderFor(qe.analyzed.schema))
+    }
+  }
 
   /** A file listing pinned at construction: `refresh()` is a no-op, so
     * `spark.catalog.refreshTable` from a concurrent writer (which calls

@@ -802,4 +802,84 @@ class GraftSessionSpec extends AnyFunSuite {
     g.sql("rollback")
     assert(rows("show warnings").isEmpty)
   }
+
+  test("comment-prefixed DELETE, SHOW TABLES and connector preambles take graft's paths") {
+    g.sql("use test")
+    g.sql("create table cdel (id int, v text, primary key(id))")
+    g.sql("insert into cdel values (1, 'a'), (2, 'b')")
+    // graft's merge-on-read DELETE answers its affected-rows frame
+    val del = g.sql("/* c */ delete from cdel where id = 1")
+    assert(del.schema.head.metadata.contains(GraftSession.DmlCountTag))
+    assert(del.collect().head.getLong(0) == 1L)
+    assert(rows("select id from cdel") == Seq(Seq(2)))
+    // graft's listing: MySQL's column name, no storage-internal tables
+    val tabs = g.sql("/* c */ show tables")
+    assert(tabs.columns.toSeq == Seq("Tables_in_test"))
+    val names = tabs.collect().map(_.getString(0)).toSeq
+    assert(names.contains("cdel") && !names.exists(_.contains("__graft_")), names)
+    // mysqldump / connector preamble: an executable comment runs
+    assert(rows("/*!40101 SET NAMES utf8 */") == Seq(Seq(0L)))
+    assert(rows("/*!40101 SET @old_mode = 'x' */") == Seq(Seq(0L)))
+    assert(rows("select @old_mode") == Seq(Seq("x")))
+    g.sql("drop table cdel")
+  }
+
+  test("a comment-prefixed SHOW WARNINGS reads without clearing the diagnostics area") {
+    g.sql("use test")
+    g.sql("create table cw (id int, primary key(id))")
+    g.sql("begin"); g.sql("insert into cw values (1)"); g.sql("rollback")
+    assert(rows("/* c */ show warnings").size == 1)
+    assert(rows("-- c\nshow warnings").size == 1)
+    g.sql("drop table cw")
+  }
+
+  test("malformed statements of a known verb answer 1064; unknown verbs never reach Spark") {
+    g.sql("use test")
+    g.sql("create table mf (id int, primary key(id))")
+    for (bad <- Seq("insert overwrite table mf select 1", "insert into mf",
+                    "update mf set", "update mf set id", "delete mf", "drop table",
+                    "create table", "create schema", "create view v", "drop view",
+                    "show columns", "show create table", "show commits", "describe",
+                    "optimize", "truncate", "rename table mf", "analyze table",
+                    "load data infile", "prepare p", "execute", "deallocate prepare",
+                    "set", "explain analyze", "show nonsense", "selectx 1",
+                    "cache table mf", "create temporary view tv as select 1",
+                    "create function f as 'x'", "/* only a comment */")) {
+      val e = intercept[graft.engine.SqlError](g.sql(bad))
+      assert(e.code == 1064 && e.sqlState == "42000", s"$bad: ${e.getMessage}")
+    }
+    // server-scope verbs need a connection registry
+    assert(intercept[graft.engine.SqlError](g.sql("/* c */ kill 1")).code == 1235)
+    // a comment inside a known verb is whitespace, not a syntax error
+    assert(rows("insert /* c */ into mf values (2)") == Seq(Seq(1L)))
+    // a relational form hiding a write is refused before it runs
+    for (hidden <- Seq("with s as (select 3 as id) insert into mf select * from s",
+                       "from (select 4 as id) s insert into mf select *"))
+      assert(intercept[graft.engine.SqlError](g.sql(hidden)).code == 1064, hidden)
+    assert(rows("select id from mf") == Seq(Seq(2)))
+    // INSERT OVERWRITE DIRECTORY parses to a plan that only becomes a
+    // command during analysis; the guard reads the analyzed plan
+    val dir = java.nio.file.Files.createTempDirectory("graft-guard")
+    java.nio.file.Files.writeString(dir.resolve("keep.txt"), "keep")
+    for (hidden <- Seq(
+           s"with s as (select 1 as a) insert overwrite local directory '$dir' using csv select * from s",
+           s"from (select 1 as a) s insert overwrite local directory '$dir' using csv select *",
+           s"/* c */ with s as (select 1 as a) insert overwrite directory '$dir' using csv select * from s"))
+      assert(intercept[graft.engine.SqlError](g.sql(hidden)).code == 1064, hidden)
+    assert(dir.toFile.list().toSeq == Seq("keep.txt"))
+    // EXPLAIN stays relational: it describes, it does not execute
+    assert(rows("explain insert into mf values (5)").nonEmpty)
+    assert(rows("select count(*) from mf") == Seq(Seq(1L)))
+    g.sql("drop table mf")
+  }
+
+  test("executable comments inside a SELECT are comments to Spark (mysqldump's SQL_NO_CACHE)") {
+    g.sql("use test")
+    g.sql("create table nc (id int)")
+    g.sql("insert into nc values (1)")
+    assert(rows("SELECT /*!40001 SQL_NO_CACHE */ * FROM `nc`") == Seq(Seq(1)))
+    assert(rows("select /*!99999 nonsense */ id from nc") == Seq(Seq(1)))
+    assert(rows("explain analyze select /*!40001 SQL_NO_CACHE */ * from nc").nonEmpty)
+    g.sql("drop table nc")
+  }
 }

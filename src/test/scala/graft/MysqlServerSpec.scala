@@ -1037,4 +1037,62 @@ class MysqlServerSpec extends AnyFunSuite {
     assert(rs2.rows == Seq(Seq(Some("7"), Some("zeta"), None)))
     c.quit()
   }
+
+  test("secure_file_priv covers SQL on files: no temp view or csv.`path` read past the sandbox") {
+    val c = new Client
+    val secret = java.nio.file.Files.createTempFile("graft-secret", ".csv")
+    java.nio.file.Files.writeString(secret, "top-secret-line\n")
+    assert(c.query("create schema if not exists wiresf").isInstanceOf[Ok])
+    assert(c.initDb("wiresf").isInstanceOf[Ok])
+    val view = c.query(s"create temporary view pw using csv options (path '$secret')")
+    assert(view.isInstanceOf[Err], view)
+    assert(c.query("select * from pw").isInstanceOf[Err])
+    val direct = c.query(s"select * from csv.`$secret`")
+    assert(direct.isInstanceOf[Err], direct)
+    assert(c.query("create table sf (line text)").isInstanceOf[Ok])
+    assert(c.query(s"insert into sf select * from csv.`$secret`").isInstanceOf[Err])
+    assert(c.query(s"load data infile '$secret' into table sf")
+      .asInstanceOf[Err].code == 1290)
+    assert(c.query("select count(*) as n from sf") ==
+      ResultSet(Seq("n"), Seq(Seq(Some("0")))))
+    // no relational form writes a directory either
+    val dir = java.nio.file.Files.createTempDirectory("graft-sandbox")
+    java.nio.file.Files.writeString(dir.resolve("keep.txt"), "keep")
+    for (hidden <- Seq(
+           s"with s as (select 1 as a) insert overwrite local directory '$dir' using csv select * from s",
+           s"from (select 1 as a) s insert overwrite local directory '$dir' using csv select *")) {
+      val r = c.query(hidden)
+      assert(r.isInstanceOf[Err], s"$hidden: $r")
+    }
+    assert(dir.toFile.list().toSeq == Seq("keep.txt"))
+    c.quit()
+  }
+
+  test("server-scope statements behind comments: KILL, PROCESSLIST, LOCAL INFILE, USE") {
+    val c1 = new Client
+    val c2 = new Client
+    val pl = c1.query("/* c */ show processlist").asInstanceOf[ResultSet]
+    assert(pl.rows.map(_.head.get.toLong).contains(c2.connId.toLong))
+    assert(c1.query(s"/* c */ kill ${c2.connId}") == Ok(0))
+    intercept[Exception] { c2.query("select 1 as one") }
+    // PROCESSLIST's db column is the session's schema, however USE was spelled
+    def db(): Option[String] = c1.query("show processlist").asInstanceOf[ResultSet]
+      .rows.find(_.head.contains(c1.connId.toString)).flatMap(_(3))
+    assert(c1.query("create schema if not exists wirecm").isInstanceOf[Ok])
+    assert(c1.query("/* c */ use wirecm").isInstanceOf[Ok])
+    assert(db() == Some("wirecm"))
+    assert(c1.query("use mysql").isInstanceOf[Ok] && db() == Some("mysql"))
+    assert(c1.query("use `wirecm`").isInstanceOf[Ok])
+    assert(db() == Some("wirecm"))
+    // LOAD DATA LOCAL behind a line comment still runs the 0xFB exchange
+    assert(c1.query("create table lc (id int, name char)").isInstanceOf[Ok])
+    val (fname, r) = c1.queryLocalInfile(
+      "-- c\nload data local infile 'lc.tsv' into table lc", "1\ta\n".getBytes("UTF-8"))
+    assert(fname == "lc.tsv" && r == Ok(1))
+    // a ';' inside a comment does not split a multi-statement payload
+    val rs = c1.queryMulti("select 1 as a; /* ; */ select 2 as b")
+    assert(rs == Seq(ResultSet(Seq("a"), Seq(Seq(Some("1")))),
+      ResultSet(Seq("b"), Seq(Seq(Some("2"))))))
+    c1.quit()
+  }
 }

@@ -504,4 +504,93 @@ class UniqueConstraintSpec extends AnyFunSuite {
         s"wire-sized probe lost its broadcast:\n${plans.mkString("\n---\n")}")
     } finally sp.listenerManager.unregister(listener)
   }
+
+  test("no statement form lands a duplicate past UNIQUE: comments, WITH and FROM inserts") {
+    val g = freshSession()
+    g.sql("create table u (id int, email text, unique key uq_email (email))")
+    g.sql("insert into u values (1, 'a@x')")
+    val forms = Seq(
+      "/* c */ insert into u values (2, 'a@x')",
+      "-- c\ninsert into u values (3, 'a@x')",
+      "with s as (select 4 as id, 'a@x' as email) insert into u select * from s",
+      "from (select 5 as id, 'a@x' as email) s insert into u select *")
+    for (f <- forms) {
+      val e = intercept[SqlError](g.sql(f))
+      assert(e.code == 1062 || e.code == 1064, s"$f: ${e.code} ${e.getMessage}")
+    }
+    assert(rows(g, "select count(*), count(distinct email) from u") == Seq(Seq("1", "1")))
+  }
+
+  /** One write verb per case, each with a known outcome against the
+    * seeded table `kv` (PRIMARY KEY id, UNIQUE email): its statement,
+    * with keywords in upper case so a variant can re-case them without
+    * touching identifiers or literals.
+    */
+  private lazy val writeVerbs: Seq[String] = {
+    val f = Files.createTempFile("graft-uq-load", ".tsv")
+    Files.writeString(f, "3\ta@x\n")
+    Seq(
+      "INSERT INTO kv VALUES (3, 'a@x')",
+      "INSERT IGNORE INTO kv VALUES (3, 'a@x'), (4, 'd@x')",
+      "REPLACE INTO kv VALUES (1, 'r@x')",
+      "UPDATE kv SET email = 'a@x' WHERE id = 2",
+      "DELETE FROM kv WHERE id = 2",
+      s"LOAD DATA INFILE '$f' INTO TABLE kv",
+      "TRUNCATE TABLE kv",
+      "ALTER TABLE kv ADD COLUMN note TEXT",
+      "CREATE TABLE kv2 (id INT PRIMARY KEY)",
+      "DROP TABLE kv")
+  }
+
+  test("property: comment, executable-comment, whitespace and case variants of every write verb " +
+       "give the bare statement's outcome and never break a key") {
+    import org.scalacheck.{Gen, Prop}
+    val g = freshSession()
+    // (affected rows or MySQL code, tables, kv's rows) after `stmt` runs
+    // on a freshly seeded kv; any exception but SqlError fails the test
+    def outcome(stmt: String): (Either[Int, Long], Seq[Seq[String]], Seq[Seq[String]]) = {
+      Seq("drop table if exists kv", "drop table if exists kv2",
+        "create table kv (id int primary key, email text, unique key uq (email))",
+        "insert into kv values (1, 'a@x'), (2, 'b@x')").foreach(g.sql)
+      val res =
+        try Right(g.sql(stmt).collect().head.getLong(0))
+        catch { case e: SqlError => Left(e.code) }
+      val tables = rows(g, "show tables")
+      val kv =
+        if (!tables.contains(Seq("kv"))) Nil
+        else rows(g, "select id, email from kv order by id")
+      for (col <- Seq(0, 1)) {
+        val keys = kv.map(_(col))
+        assert(keys.distinct.size == keys.size, s"$stmt broke a key: $kv")
+      }
+      (res, tables, kv)
+    }
+    val bare = writeVerbs.map(v => v -> outcome(v)).toMap
+    // random case on the upper-case keywords only
+    def recase(s: String, seed: Long): String = {
+      val r = new scala.util.Random(seed)
+      "[A-Z]{2,}".r.replaceAllIn(s, m =>
+        m.matched.map(c => if (r.nextBoolean()) c.toLower else c))
+    }
+    val variants: Seq[(String, String => String)] = Seq(
+      "block comment" -> (s => s"/* c */ $s"),
+      "line comment" -> (s => s"-- c\n$s"),
+      "hash comment" -> (s => s"# c\n$s"),
+      "executable comment" -> (s => s"/*!40101 $s */"),
+      "inner comment" -> (s => s.replaceFirst(" ", " /* c */ ")),
+      "whitespace" -> (s => s" \n\t $s ;"))
+    val gen = for {
+      verb <- Gen.oneOf(writeVerbs)
+      (name, variant) <- Gen.oneOf(variants)
+      seed <- Gen.long
+    } yield (verb, name, recase(variant(verb), seed))
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(24),
+      Prop.forAll(gen) { case (verb, name, stmt) =>
+        val got = outcome(stmt)
+        assert(got == bare(verb), s"$name: $stmt\n got $got\n want ${bare(verb)}")
+        true
+      })
+    assert(res.passed, res.status.toString)
+  }
 }
