@@ -2,6 +2,7 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 object Bench {
 
@@ -90,9 +91,14 @@ object Bench {
     // artifact is always a full run; subset runs are for diagnosis.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // A query that throws is a FAILURE, not a timing: it is reported on
+    // stderr with its exception, gets no entry in "queries", is listed
+    // in the contract line's "failed" array, and the bench exits
+    // non-zero — a failed run's wall time must never pass for a result.
+    val failed = Seq.newBuilder[String]
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+      .flatMap { case (name, fn) =>
       def run(): (Double, Long) = {
         // Drop the PREVIOUS run's shuffle files before timing: a single
         // big-SF query's spill can be tens of GB (q80's sf50 ADC:
@@ -112,27 +118,36 @@ object Bench {
         // skipped). toRdd materializes the query's own executedPlan,
         // so the timed work is the work the query claims to do, which
         // is also what the DuckDB baseline's fetchall pays.
-        val rows = try fn(spark, sfDir).queryExecution.toRdd.count()
-          catch { case _: Throwable => -1L }
+        val rows = fn(spark, sfDir).queryExecution.toRdd.count()
         ((System.nanoTime() - t0) / 1e9, rows)
       }
       // progress to stderr (stdout carries only the contract line):
       // at rehearsal scales a pathological query must be attributable
       // without waiting for the final JSON
       System.err.println(s"[bench] $name ...")
-      val (t1, _) = run()
-      System.err.println(f"[bench] $name run1 $t1%.2f s")
-      org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
-      meter.reset()
-      val (t2, rows) = run()
-      org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
-      // snapshot telemetry from run 2 before any extra timing run
-      val (sb, sr) = (meter.bytes.get(), meter.records.get())
-      val best =
-        if (math.min(t1, t2) > 0.5) math.min(math.min(t1, t2), run()._1)
-        else math.min(t1, t2)
-      (name, best, rows, sb, sr)
+      try {
+        val (t1, _) = run()
+        System.err.println(f"[bench] $name run1 $t1%.2f s")
+        org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
+        meter.reset()
+        val (t2, rows) = run()
+        org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
+        // snapshot telemetry from run 2 before any extra timing run
+        val (sb, sr) = (meter.bytes.get(), meter.records.get())
+        val best =
+          if (math.min(t1, t2) > 0.5) math.min(math.min(t1, t2), run()._1)
+          else math.min(t1, t2)
+        Some((name, best, rows, sb, sr))
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $name FAILED: $e")
+        failed += name
+        None
+      }
     }
+    val failedNames = failed.result()
+    val failedField =
+      if (failedNames.isEmpty) ""
+      else failedNames.map(n => "\"" + n + "\"").mkString(""","failed":[""", ",", "]")
     def jmap(f: ((String, Double, Long, Long, Long)) => String): String =
       results.map(r => "\"" + r._1 + "\":" + f(r)).mkString("{", ",", "}")
     // Keep the stdout contract line SHORT: the driver captures only the tail
@@ -143,12 +158,12 @@ object Bench {
     val qs = jmap(r => f"${r._2}%.4f")
     val total = f"${results.map(_._2).sum}%.4f"
     val telemetry =
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","queries":${jmap(_._2.toString)},"output_rows":${jmap(_._3.toString)},"shuffle_bytes":${jmap(_._4.toString)},"shuffle_records":${jmap(_._5.toString)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","queries":${jmap(_._2.toString)},"output_rows":${jmap(_._3.toString)},"shuffle_bytes":${jmap(_._4.toString)},"shuffle_records":${jmap(_._5.toString)}$failedField}"""
     java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_telemetry.json"),
       telemetry.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val contractLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"$failedField}"""
     // Insurance against truncated stdout captures (the r16 round lost
     // its whole round-over-round comparison to one): the contract line
     // ALSO lands in a side file. Additive — stdout is unchanged.
@@ -157,5 +172,6 @@ object Bench {
       contractLine.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(contractLine)
     spark.stop()
+    if (failedNames.nonEmpty) sys.exit(1)
   }
 }

@@ -96,7 +96,7 @@ object BpeTokens {
 
   /** Memoized trained model per (corpus, topW, rounds): the merge list
     * + the staged word-frequency table it was trained from (vocab-sized
-    * — the model table). The Pq.stagedCodebook discipline: a trained
+    * — the model table). The Ann.staged index-memo discipline: a trained
     * tokenizer is a reusable deployment artifact.
     */
   private val memo =

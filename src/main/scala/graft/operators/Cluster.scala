@@ -37,21 +37,11 @@ import graft.functions.GraftFunctions._
   */
 object Cluster {
 
-  private def withSelfDot(df: DataFrame): DataFrame =
-    df.withColumn("selfdot", quantDot(col("qv"), col("qv")).cast("double"))
-
-  private def asCodebook(cents: DataFrame): DataFrame =
-    Ann.codebookOf(
-      cents.withColumn("c_dot", quantDot(col("c_qv"), col("c_qv")).cast("double"))
-        .select(col("c_id"), col("c_qv"), col("c_dot")))
-
   /** One Lloyd round: label every vector with its nearest centroid. The
     * codebook is a one-row broadcast array, so this is scan → project.
     */
   private def assign(corpus: DataFrame, cents: DataFrame): DataFrame =
-    withSelfDot(corpus).crossJoin(asCodebook(cents))
-      .select(col("id"), col("qv"), col("selfdot"),
-        nearestCentroid(col("qv"), col("selfdot"), col("cb")).as("cluster"))
+    Ann.label(corpus, Ann.codebookOf(cents), "cluster")
 
   /** Elementwise integer-exact centroid update: cluster means of the
     * assigned quantized vectors, re-quantized via ROUND. Clusters that
@@ -72,24 +62,13 @@ object Cluster {
       .select(col("cluster").as("c_id"),
         transform(col("pvs"), p => p.getField("v")).as("c_qv"))
 
-  /** `iters` Lloyd rounds from the deterministic seed (the k vectors
-    * with the lowest ids, cluster id = seed id). Returns the final
-    * assignment: (id, qv, selfdot, cluster).
-    *
-    * Each recentered codebook is localCheckpoint'd (k×dim rows — tiny):
-    * round i's centroids embed round i-1's full assignment plan, so
-    * without the cut the corpus would be rescanned O(iters²) times and
-    * the logical plan would nest per round (the §5 iterative-lineage
-    * rule). With it, the whole fit is exactly `iters` corpus scans and
-    * the returned frame's plan is a flat scan → project.
-    */
   /** kmeans-refined IVF codebook: seed centroids from `seedFilter`
     * (a UNIFORM sample — the §5 rehearsal showed prefix sampling
     * collapsing 90% of a replicated corpus into one cell; kmeans
     * refinement then re-balances cells to the data's intrinsic
     * direction families rather than the seed's luck), run `rounds`
-    * Lloyd updates, return (c_id, c_qv) for Ann.ivfAssign's explicit-
-    * codebook overload. Same cost shape as kmeansAssign: `rounds`
+    * Lloyd updates, return (c_id, c_qv) — an `Ann.Kmeans` index level.
+    * Same cost shape as kmeansAssignSeeded: `rounds`
     * zero-exchange corpus scans, k×dim-row centroid frames
     * localCheckpoint'd between rounds.
     */
@@ -118,20 +97,25 @@ object Cluster {
                  qvCol: String = "qv"): DataFrame =
     rows
       .withColumn("_selfdot", quantDot(col(qvCol), col(qvCol)).cast("double"))
-      .crossJoin(asCodebook(codebook.select(col("c_id"), col("c_qv"))))
+      .crossJoin(Ann.codebookOf(codebook))
       .withColumn("cluster",
         nearestCentroid(col(qvCol), col("_selfdot"), col("cb")))
       .drop("cb", "_selfdot")
 
-  def kmeansAssign(corpus: DataFrame, k: Int, iters: Int): DataFrame =
-    kmeansAssignSeeded(corpus, col("id") < k, iters)
-
-  /** kmeansAssign with an arbitrary seed predicate. Production callers
-    * should pass a UNIFORM sample whose size scales with the corpus
-    * (`Ann.centroidCountFor`): a fixed k makes the downstream
-    * in-cluster pairwise work (SemDeDup) quadratic, and a prefix seed
-    * collapses sharded/replicated id spaces (§5 rehearsal, both
-    * measured).
+  /** `iters` Lloyd rounds from the centroids `seedFilter` selects
+    * (cluster id = seed id). Returns the final assignment: (id, qv,
+    * selfdot, cluster). Production callers should pass a UNIFORM sample
+    * whose size scales with the corpus (`Ann.centroidCountFor`): a fixed
+    * k makes the downstream in-cluster pairwise work (SemDeDup)
+    * quadratic, and a prefix seed collapses sharded/replicated id spaces
+    * (§5 rehearsal, both measured).
+    *
+    * Each recentered codebook is localCheckpoint'd (k×dim rows — tiny):
+    * round i's centroids embed round i-1's full assignment plan, so
+    * without the cut the corpus would be rescanned O(iters²) times and
+    * the logical plan would nest per round (the §5 iterative-lineage
+    * rule). With it, the whole fit is exactly `iters` corpus scans and
+    * the returned frame's plan is a flat scan → project.
     */
   def kmeansAssignSeeded(corpus: DataFrame, seedFilter: Column,
                          iters: Int): DataFrame = {
@@ -155,13 +139,6 @@ object Cluster {
     * set is deterministic and SQL-replayable. Returns the kept rows
     * (id, cluster).
     */
-  def semDedup(corpus: DataFrame, k: Int, iters: Int, threshold: Double,
-               stage: Boolean = false): DataFrame =
-    semDedupSeeded(corpus, col("id") < k, iters, threshold, stage)
-
-  /** semDedup with an arbitrary centroid-seed predicate — see
-    * kmeansAssignSeeded for why the seed must scale with the corpus.
-    */
   def semDedupSeeded(corpus: DataFrame, seedFilter: Column, iters: Int,
                      threshold: Double, stage: Boolean = false): DataFrame = {
     // stage=true materializes the assignment ONCE (localCheckpoint —
@@ -184,7 +161,7 @@ object Cluster {
     */
   def semDedupLabels(labels: DataFrame, corpus: DataFrame,
                      threshold: Double, stage: Boolean = false): DataFrame = {
-    val labeled0 = withSelfDot(corpus.select(col("id"), col("qv")))
+    val labeled0 = Ann.withSelfDot(corpus.select(col("id"), col("qv")))
       .join(labels.select(col("id"), col("cluster")), Seq("id"))
     survivors(if (stage) labeled0.localCheckpoint() else labeled0, threshold)
   }

@@ -44,43 +44,21 @@ import graft.functions.GraftFunctions._
   * ulp risk.
   */
 object IvfPq {
+  import Pq.d2
 
-  private def d2(dotAA: Column, dotBB: Column, dotAB: Column): Column =
-    dotAA + dotBB - lit(2L) * dotAB
-
-  /** One staged index per (corpus, dim, m, ks-target): coarse centroid
-    * table + its flattened one-row broadcast form + the residual PQ
-    * codebook — built once, shared by q86 and q87 (and bench repeats),
-    * the Pq.stagedCodebook memo discipline: an index build is a
-    * reusable deployment artifact.
+  /** A staged IVFADC index: the coarse centroid table (cr, c_id, c_vec,
+    * c_self) + its flattened one-row broadcast form, at two levels the
+    * per-coarse-cell fine codebooks (cell1, fb), and the residual PQ
+    * codebook (ranked rows + one-row broadcast form). `kc` counts
+    * coarse centroids, `ks` PQ centroids per subspace.
     */
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Int, Int, Int),
-      Index]()
-
   private[graft] case class Index(coarse: DataFrame, coarseArr: DataFrame,
-                                  kc: Int, pqCbR: DataFrame,
-                                  pqArr: DataFrame, ks: Int,
-                                  dim: Int, m: Int, subDim: Int)
-
-  /** Coarse centroids as ONE sorted-array row: uniform hash-mod sample
-    * (the q34 rule — never a prefix; round 12: idSample, density-
-    * independent — raw id % stride collapsed on sparse id spaces),
-    * kc_target = max(16, ⌊√n⌋) (the
-    * q43 ladder), c_id order. The dense rank `cr` is the ARRAY POSITION
-    * (posexplode below) — no rank window anywhere, so the corpus-scale
-    * "No Partition Defined" lint stays clean without a fake partition
-    * key. Bounded (≈√n entries), staged once.
-    */
-  private def coarseArrayRow(corpus: DataFrame, cStride: Long): DataFrame =
-    corpus.filter(graft.functions.GraftFunctions.idSample(col("id"), cStride))
-      .select(col("id").as("c_id"), col("qv").as("c_vec"),
-        quantDot(col("qv"), col("qv")).as("c_self"))
-      .agg(graft.functions.GraftFunctions.nonEmptySample(
-        sort_array(collect_list(struct(
-          col("c_id"), col("c_vec"), col("c_self")))),
-        "IvfPq.coarseArrayRow").as("ce"))
-      .localCheckpoint()
+                                  kc: Int, fine: Option[DataFrame],
+                                  pqCbR: DataFrame, pqArr: DataFrame,
+                                  ks: Int, dim: Int, m: Int, subDim: Int) {
+    /** The cell key columns: cell rank, or (cell1 rank, cell2 fine id). */
+    def keys: Seq[String] = if (fine.isEmpty) Seq("cell") else Seq("cell1", "cell2")
+  }
 
   /** Per-centroid rows (cr, c_id, c_vec, c_self) — rank = position in
     * the sorted array.
@@ -103,146 +81,66 @@ object IvfPq {
         transform(col("ce"), e => e("c_vec")).as("cvecs"),
         transform(col("ce"), e => e("c_id")).as("cids"))
 
-  /** (id, cell, res): coarse cell rank + residual for every corpus
-    * vector — ONE scan-local projection (coarse argmin via PqCodesE
-    * m=1, residual via zip_with against the broadcast centroid array).
+  /** (c_id, c_vec, c_self) centroid rows of one coarse level. */
+  private def centroidRows(corpus: DataFrame, s: Ann.Seeds): DataFrame =
+    Ann.centroids(corpus, s).select(col("c_id"), col("c_qv").as("c_vec"),
+      quantDot(col("c_qv"), col("c_qv")).as("c_self"))
+
+  /** Build (memoized — one staged index per corpus and description) the
+    * IVFADC index `spec` describes. The coarse centroids collapse to ONE
+    * sorted-array row in c_id order: the dense rank `cr` is the ARRAY
+    * POSITION — no rank window anywhere, so the corpus-scale "No
+    * Partition Defined" lint stays clean without a fake partition key.
+    *
+    * Two levels (round 10 — the 10¹² composition): the √n one-row
+    * coarse broadcast re-meets the 512 MB frontier at n ≈ 10¹² that the
+    * two-level IVF (q70) exists to cross, so cell1 comes from the ∛n
+    * one-row broadcast and cell2 from the FINE codebook of the vector's
+    * own coarse cell: fine seeds are labeled by the SAME coarse pass and
+    * collapsed to one sorted codebook array per coarse cell (≤ c₁ rows,
+    * keyed by cell1 and EQUI-JOINED, never broadcast as a whole).
     */
-  private[graft] def assignResidual(corpus: DataFrame, coarseArr: DataFrame,
-                                    kc: Int, dim: Int): DataFrame =
-    corpus.crossJoin(broadcast(coarseArr))
-      .withColumn("cell", element_at(pqCodes(col("qv"), col("ccbf"), 1, dim, kc), 1))
-      .select(col("id"), col("cell"),
-        zip_with(col("qv"),
-          element_at(col("cvecs"), (col("cell") + 1).cast("int")),
-          (a, b) => a - b).as("res"))
-
-  /** Residual product codebook: m subspaces × (≈ks) modulo-sampled
-    * RESIDUALS (ks is the fixed compression budget — constant at any n,
-    * the q80 contract), dense per-subspace rank by c_id.
-    */
-  private def pqCodebook(assigned: DataFrame, pStride: Long, m: Int,
-                         subDim: Int): DataFrame = {
-    val w = Window.partitionBy(col("sub")).orderBy(col("c_id"))
-    assigned.filter(graft.functions.GraftFunctions.idSample(col("id"), pStride))
-      .select(col("id").as("c_id"),
-        explode(array((0 until m).map { s =>
-          struct(lit(s).as("sub"),
-            slice(col("res"), s * subDim + 1, subDim).as("c_sv"))
-        }: _*)).as("e"))
-      .select(col("c_id"), col("e.sub").as("sub"), col("e.c_sv").as("c_sv"),
-        quantDot(col("e.c_sv"), col("e.c_sv")).as("c_self"))
-      .withColumn("r", row_number().over(w) - 1)
-      .localCheckpoint()
-  }
-
-  private def pqArrOf(pqCbR: DataFrame): DataFrame =
-    pqCbR
-      .agg(sort_array(collect_list(struct(
-        col("sub"), col("r"), col("c_sv"), col("c_self")))).as("pe"))
-      .select(flatten(transform(col("pe"),
-        e => concat(e("c_sv"), array(e("c_self"))))).as("pcbf"))
-
-  private[graft] def index(corpus: DataFrame, n: Long, dim: Int = 64,
-                           m: Int = 8, ksTarget: Int = 16): Index = {
-    val planKey = corpus.queryExecution.analyzed.canonicalized.toString +
-      "@" + System.identityHashCode(corpus.sparkSession)
-    memo.computeIfAbsent((planKey, n, dim, m, ksTarget), _ => {
-      val subDim = dim / m
-      val kcTarget = Ann.centroidCountFor(n)
-      val cStride = math.max(1L, n / kcTarget)
-      val pStride = math.max(1L, n / ksTarget)
-      val ceArr = coarseArrayRow(corpus, cStride)
+  private[graft] def build(spec: Ann.Index): Index = {
+    val c = spec.codes.get
+    require(spec.levels.size == 1 || spec.levels.size == 2,
+      "IVFADC needs one or two coarse levels")
+    Ann.staged(spec.corpus, (spec.levels, c.stride, c.m, c.dim)) {
+      val ceArr = centroidRows(spec.corpus, spec.levels.head)
+        .agg(graft.functions.GraftFunctions.nonEmptySample(
+          sort_array(collect_list(struct(
+            col("c_id"), col("c_vec"), col("c_self")))),
+          "IvfPq.coarseArrayRow").as("ce"))
+        .localCheckpoint()
       val coarse = coarseRowsOf(ceArr)
       val kc = coarse.count().toInt
       val coarseArr = coarseArrOf(ceArr).localCheckpoint()
-      val pqCbR = pqCodebook(assignResidual(corpus, coarseArr, kc, dim),
-        pStride, m, subDim)
-      val ks = pqCbR.filter(col("sub") === 0).count().toInt
-      require(ks > 0, "IvfPq index: PQ codebook sampled 0 rows " +
-        "(idSample stride exceeds the corpus) — refusing to build a " +
-        "degenerate index")
-      Index(coarse, coarseArr, kc, pqCbR, pqArrOf(pqCbR).localCheckpoint(),
-        ks, dim, m, subDim)
-    })
+      val fine = spec.levels.lift(1).map { s =>
+        centroidRows(spec.corpus, s)
+          .crossJoin(broadcast(coarseArr))
+          .select(col("c_id"), col("c_vec"), col("c_self"),
+            element_at(pqCodes(col("c_vec"), col("ccbf"), 1, c.dim, kc), 1)
+              .as("cell1"))
+          .groupBy(col("cell1"))
+          .agg(sort_array(collect_list(struct(
+            col("c_id"), col("c_vec"), col("c_self")))).as("fb"))
+          .localCheckpoint()
+      }
+      val ix = Index(coarse, coarseArr, kc, fine, null, null, 0,
+        c.dim, c.m, c.dim / c.m)
+      val (pqCbR, pqArr, ks) = Pq.staged(Pq.ranked(Pq.codebook(
+        residuals(spec.corpus, ix), c.stride, c.m, ix.subDim, "res")),
+        "IvfPq index")
+      ix.copy(pqCbR = pqCbR, pqArr = pqArr, ks = ks)
+    }
   }
 
-  /** Encode arbitrary rows against a FROZEN index: adds (cell, codes)
-    * as ONE scan-local projection (coarse argmin → residual → PQ codes,
-    * all against the index's one-row broadcast frames), preserving
-    * every input column. Works identically on batch and STREAMING
-    * frames (the codebooks are static broadcast sides of a
-    * stream-static join) — the round-11 live-embedding-index face
-    * (SURVEY.md §2.C19/D37) and the batch q86 path share this exact
-    * code, so live == rebuild is structural.
+  /** The sample-seeded one-level index for a corpus of `n` vectors —
+    * the frozen quantizer of the live index (C19) and q94.
     */
-  private[graft] def encodeRows(rows: DataFrame, ix: Index,
-                                qvCol: String): DataFrame =
-    rows.crossJoin(broadcast(ix.coarseArr))
-      .withColumn("cell",
-        element_at(pqCodes(col(qvCol), col("ccbf"), 1, ix.dim, ix.kc), 1))
-      .withColumn("res",
-        zip_with(col(qvCol),
-          element_at(col("cvecs"), (col("cell") + 1).cast("int")),
-          (a, b) => a - b))
-      .crossJoin(broadcast(ix.pqArr))
-      .withColumn("codes",
-        pqCodes(col("res"), col("pcbf"), ix.m, ix.subDim, ix.ks))
-      .drop("ccbf", "cvecs", "cids", "res", "pcbf")
-
-  /** The encoded corpus (id, cell, codes) of ivfPqTopK, reusable as a
-    * maintained index table (C19 stores exactly this shape per vec).
-    */
-  private[graft] def encodeWith(corpus: DataFrame, ix: Index): DataFrame =
-    encodeRows(corpus, ix, "qv").select(col("id"), col("cell"), col("codes"))
-
-  /** Rebuild an Index from its two STORED codebook tables — the live
-    * deployment path (C19): `coarseRows` in the ix.coarse shape
-    * (cr, c_id, c_vec, c_self), `pqRows` in the ix.pqCbR shape
-    * (c_id, sub, c_sv, c_self, r). A restart reconstructs the exact
-    * frozen quantizer from the catalog, so encodes stay bit-identical
-    * across process lifetimes (LiveIndexSpec pins stored == memoized).
-    */
-  private[graft] def indexFromStored(coarseRows: DataFrame, pqRows: DataFrame,
-                                     dim: Int = 64, m: Int = 8): Index = {
-    val ceArr = coarseRows
-      .agg(sort_array(collect_list(struct(
-        col("c_id"), col("c_vec"), col("c_self")))).as("ce"))
-      .localCheckpoint()
-    val coarse = coarseRowsOf(ceArr)
-    val kc = coarseRows.count().toInt
-    val ks = pqRows.filter(col("sub") === 0).count().toInt
-    require(kc > 0 && ks > 0, "IvfPq.indexFromStored: empty stored " +
-      s"codebook table (kc=$kc ks=$ks) — a rebuilt quantizer would " +
-      "silently degenerate")
-    val pqCbR = pqRows.select(col("c_id"), col("sub"), col("c_sv"),
-      col("c_self"), col("r")).localCheckpoint()
-    Index(coarse, coarseArrOf(ceArr).localCheckpoint(), kc, pqCbR,
-      pqArrOf(pqCbR).localCheckpoint(), ks, dim, m, dim / m)
-  }
-
-  // ---- two-level IVFADC (round 10 — the 10¹² composition) ----------------
-  // q86's coarse quantizer is a √n one-row broadcast, which re-meets the
-  // 512 MB broadcast frontier at n ≈ 10¹² that the two-level IVF (q70)
-  // exists to cross. This composes the ∛n two-stage coarse assign with
-  // the PQ-residual encode: cell = (cell1, cell2), cell1 by PqCodesE
-  // m=1 over the ∛n one-row broadcast (scan-local), cell2 by exact-L2
-  // argmin over the FINE codebook of the vector's own coarse cell — the
-  // fine codebooks are ≤ c₁ rows keyed by cell1 and EQUI-JOINED, never
-  // broadcast as a whole (the q70 discipline), and the argmin itself is
-  // an array_min over a transform of d² structs: scan-local, exact
-  // BIGINT, tie-broken by fine centroid id so DuckDB replays it.
-  // Residuals are taken against the (cell1, cell2) centroid (coarse
-  // centroid when the cell has no fine seed, cell2 = -1), so they
-  // concentrate tighter than q86's — §IV's point applied twice.
-
-  private val memo2 =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, Long, Int, Int, Int), Index2]()
-
-  private[graft] case class Index2(coarse: DataFrame, coarseArr: DataFrame,
-                                   c1: Int, fine: DataFrame,
-                                   pqCbR: DataFrame, pqArr: DataFrame,
-                                   ks: Int, dim: Int, m: Int, subDim: Int)
+  private[graft] def index(corpus: DataFrame, n: Long, dim: Int = 64,
+                           m: Int = 8, ksTarget: Int = 16): Index =
+    build(Ann.index(corpus, n, 1,
+      codes = Some(Ann.codesFor(n, ksTarget, m, dim))))
 
   /** Exact-L2 scored struct array over a fine codebook array `fb`
     * (elements struct(c_id, c_vec, c_self), sorted by c_id): each entry
@@ -254,274 +152,163 @@ object IvfPq {
       d2(selfv, e("c_self"), quantDot(v, e("c_vec"))).as("d2"),
       e("c_id").as("cid"), e("c_vec").as("cv")))
 
-  /** (id, cell1, cell2, res): two-stage cell + residual against the
-    * (cell1, cell2) centroid for every corpus vector. One scan-local
-    * coarse projection + ONE keyed equi-join on cell1 (c₁ fine rows —
-    * broadcastable at any n that fits ∛n·c₂ rows, a keyed shuffle join
-    * past that; either way linear).
+  /** Every input column + the cell key(s) + `res`, the residual v −
+    * centroid(cell(v)). The coarse argmin is the PqCodesE kernel with
+    * m=1, subDim=dim over the one-row broadcast coarse codebook — a pure
+    * projection, zero exchange. At two levels ONE keyed equi-join on
+    * cell1 brings the cell's fine codebook, the fine argmin is an
+    * array_min over d² structs (scan-local, exact BIGINT, tie-broken by
+    * fine centroid id so DuckDB replays it), and the residual is taken
+    * against the (cell1, cell2) centroid — the coarse centroid when the
+    * cell has no fine seed (cell2 = -1) — so residuals concentrate
+    * tighter than one level's: §IV's point applied twice.
     */
-  private[graft] def assignResidual2(corpus: DataFrame, ix: Index2): DataFrame = {
-    import ix.{c1, dim}
-    corpus.crossJoin(broadcast(ix.coarseArr))
-      .withColumn("cell1",
-        element_at(pqCodes(col("qv"), col("ccbf"), 1, dim, c1), 1))
-      .withColumn("selfv", quantDot(col("qv"), col("qv")))
-      .select(col("id"), col("qv"), col("selfv"), col("cell1"),
-        element_at(col("cvecs"), (col("cell1") + 1).cast("int")).as("c_cv"))
-      .join(ix.fine, Seq("cell1"), "left")
-      .withColumn("best",
-        when(col("fb").isNull, lit(null))
-          .otherwise(array_min(fineScored(col("qv"), col("selfv"), col("fb")))))
-      .select(col("id"), col("cell1"),
-        coalesce(col("best.cid"), lit(-1L)).as("cell2"),
-        zip_with(col("qv"), coalesce(col("best.cv"), col("c_cv")),
-          (a, b) => a - b).as("res"))
+  private[graft] def residuals(rows: DataFrame, ix: Index,
+                               qvCol: String = "qv"): DataFrame = {
+    val v = col(qvCol)
+    val coarse = rows.crossJoin(broadcast(ix.coarseArr))
+      .withColumn(ix.keys.head,
+        element_at(pqCodes(v, col("ccbf"), 1, ix.dim, ix.kc), 1))
+      .withColumn("cvec",
+        element_at(col("cvecs"), (col(ix.keys.head) + 1).cast("int")))
+    val located = ix.fine.fold(coarse)(fine => coarse
+      .join(fine, Seq("cell1"), "left")
+      .withColumn("best", when(col("fb").isNull, lit(null))
+        .otherwise(array_min(fineScored(v, quantDot(v, v), col("fb")))))
+      .withColumn("cell2", coalesce(col("best.cid"), lit(-1L)))
+      .withColumn("cvec", coalesce(col("best.cv"), col("cvec"))))
+    located.withColumn("res", zip_with(v, col("cvec"), (a, b) => a - b))
+      .drop("ccbf", "cvecs", "cids", "cvec", "fb", "best")
   }
 
-  private[graft] def index2(corpus: DataFrame, n: Long, dim: Int = 64,
-                            m: Int = 8, ksTarget: Int = 16): Index2 = {
-    val planKey = corpus.queryExecution.analyzed.canonicalized.toString +
-      "@" + System.identityHashCode(corpus.sparkSession)
-    memo2.computeIfAbsent((planKey, n, dim, m, ksTarget), _ => {
-      val subDim = dim / m
-      val c1Target = Ann.coarseCountFor(n)
-      val stride1 = math.max(1L, n / c1Target)
-      val stride2 = math.max(1L, n / (c1Target * c1Target))
-      val pStride = math.max(1L, n / ksTarget)
-      val ceArr = coarseArrayRow(corpus, stride1)
-      val coarse = coarseRowsOf(ceArr)
-      val c1 = coarse.count().toInt
-      val coarseArr = coarseArrOf(ceArr).localCheckpoint()
-      // fine seeds: hash-mod-sampled rows (idSample — density-
-      // independent), labeled by the SAME coarse pass, collapsed to one
-      // sorted codebook array per coarse cell (≤ c₁ rows total — the
-      // q70 shape)
-      val fine = corpus.filter(graft.functions.GraftFunctions.idSample(col("id"), stride2))
-        .crossJoin(broadcast(coarseArr))
-        .select(col("id").as("c_id"), col("qv").as("c_vec"),
-          quantDot(col("qv"), col("qv")).as("c_self"),
-          element_at(pqCodes(col("qv"), col("ccbf"), 1, dim, c1), 1)
-            .as("cell1"))
-        .groupBy(col("cell1"))
-        .agg(sort_array(collect_list(struct(
-          col("c_id"), col("c_vec"), col("c_self")))).as("fb"))
-        .localCheckpoint()
-      val ixPart = Index2(coarse, coarseArr, c1, fine,
-        null, null, 0, dim, m, subDim)
-      val pqCbR = pqCodebook(
-        assignResidual2(corpus, ixPart), pStride, m, subDim)
-      val ks = pqCbR.filter(col("sub") === 0).count().toInt
-      require(ks > 0, "IvfPq 2-level index: PQ codebook sampled 0 rows " +
-        "(idSample stride exceeds the corpus) — refusing to build a " +
-        "degenerate index")
-      ixPart.copy(pqCbR = pqCbR, pqArr = pqArrOf(pqCbR).localCheckpoint(),
-        ks = ks)
-    })
-  }
-
-  /** Two-level IVFADC top-k (q90): the q86 probe with the coarse
-    * quantizer replaced by the two-stage assign. A query probes its
-    * `nprobe1` nearest coarse cells (bounded q·c₁ window frame), within
-    * each its `nprobe2` nearest fine cells (scan-local sorted slice of
-    * the joined fine codebook), builds the per-(q, cell1, cell2)
-    * residual LUT, and ADC runs only in probed (cell1, cell2) cells via
-    * a broadcast hash join on the composite cell key. Exact BIGINT
-    * everywhere; output (q_id, rn, neighbor, dist2) — the q86 shape.
+  /** Encode arbitrary rows against a FROZEN index: adds (cell key(s),
+    * codes) as scan-local projections (coarse argmin → residual → PQ
+    * codes, all against the index's one-row broadcast frames),
+    * preserving every input column. Works identically on batch and
+    * STREAMING frames (the codebooks are static broadcast sides of a
+    * stream-static join) — the round-11 live-embedding-index face
+    * (SURVEY.md §2.C19/D37) and the batch q86 path share this exact
+    * code, so live == rebuild is structural.
     */
-  def ivfPq2TopK(corpus: DataFrame, queries: DataFrame, n: Long,
-                 dim: Int = 64, m: Int = 8, ksTarget: Int = 16,
-                 nprobe1: Int = 4, nprobe2: Int = 4, k: Int = 10,
-                 rerank: Int = 50): DataFrame = {
-    val ix = index2(corpus, n, dim, m, ksTarget)
-    import ix.{c1, ks, subDim}
-
-    val enc = assignResidual2(corpus, ix)
+  private[graft] def encodeRows(rows: DataFrame, ix: Index,
+                                qvCol: String): DataFrame =
+    residuals(rows, ix, qvCol)
       .crossJoin(broadcast(ix.pqArr))
-      .select(col("id"), col("cell1"), col("cell2"),
-        pqCodes(col("res"), col("pcbf"), m, subDim, ks).as("codes"))
+      .withColumn("codes",
+        pqCodes(col("res"), col("cbf"), ix.m, ix.subDim, ix.ks))
+      .drop("res", "cbf", "cid")
 
-    // coarse probes: q × c₁ bounded frame, keep nprobe1 nearest cells
-    val qs = queries.select(col("id").as("q_id"), col("qv").as("q_qv"),
-      quantDot(col("qv"), col("qv")).as("q_self"))
-    val pw = Window.partitionBy(col("q_id")).orderBy(col("cd2"), col("cr"))
-    val coarseProbes = qs.crossJoin(broadcast(ix.coarse))
-      .select(col("q_id"), col("q_qv"), col("q_self"), col("cr"),
-        col("c_vec"),
-        d2(col("q_self"), col("c_self"),
-          quantDot(col("q_qv"), col("c_vec"))).as("cd2"))
-      .withColumn("pr", row_number().over(pw))
-      .filter(col("pr") <= nprobe1)
-      .select(col("q_id"), col("q_qv"), col("q_self"),
-        col("cr").as("cell1"), col("c_vec").as("c_cv"))
+  /** The encoded corpus (id, cell key(s), codes), reusable as a
+    * maintained index table (C19 stores exactly this shape per vec).
+    */
+  private[graft] def encodeWith(corpus: DataFrame, ix: Index): DataFrame =
+    encodeRows(corpus, ix, "qv")
+      .select((col("id") +: ix.keys.map(col) :+ col("codes")): _*)
 
-    // fine probes: per probed coarse cell, the nprobe2 nearest fine
-    // cells by the same scan-local scored-array slice; a cell with no
-    // fine seed probes (cell1, -1) against the coarse centroid
-    val probes = coarseProbes.join(ix.fine, Seq("cell1"), "left")
-      .select(col("q_id"), col("cell1"), col("q_qv"),
-        explode(when(col("fb").isNull,
-          array(struct(lit(-1L).as("cid"), col("c_cv").as("cv"))))
-          .otherwise(transform(
-            slice(array_sort(
-              fineScored(col("q_qv"), col("q_self"), col("fb"))),
-              1, nprobe2),
-            e => struct(e("cid").as("cid"), e("cv").as("cv"))))).as("f"))
-      .select(col("q_id"), col("cell1"), col("f.cid").as("cell2"),
-        zip_with(col("q_qv"), col("f.cv"), (a, b) => a - b).as("rq"))
-
-    // per-(query, cell1, cell2) LUT — bounded: q·nprobe1·nprobe2·m·ks
-    val lut = probes
-      .crossJoin(broadcast(ix.pqCbR))
-      .select(col("q_id"), col("cell1"), col("cell2"), col("sub"), col("r"),
-        d2(quantDot(slice(col("rq"), col("sub") * subDim + 1, lit(subDim)),
-             slice(col("rq"), col("sub") * subDim + 1, lit(subDim))),
-           col("c_self"),
-           quantDot(slice(col("rq"), col("sub") * subDim + 1, lit(subDim)),
-             col("c_sv"))).as("d2q"))
-      .groupBy(col("q_id"), col("cell1"), col("cell2"))
-      .agg(transform(
-        sort_array(collect_list(struct(col("sub"), col("r"), col("d2q")))),
-        e => e("d2q")).as("lut"))
-
-    val adcSum = (0 until m).map { s =>
-      element_at(col("lut"),
-        (lit(s * ks) + element_at(col("codes"), s + 1) + 1).cast("int"))
-    }.reduce(_ + _)
-    val cands = enc.join(broadcast(lut), Seq("cell1", "cell2"))
-      .filter(col("id") =!= col("q_id"))
-      .select(col("q_id"), col("id"), adcSum.as("adc"))
-      .groupBy(col("q_id"))
-      .agg(topKPairs((-col("adc")).cast("double"), col("id"), rerank).as("top"))
-      .select(col("q_id"), explode(col("top.id")).as("id"))
-
-    val cv = corpus.select(col("id"), col("qv"),
-      quantDot(col("qv"), col("qv")).as("self"))
-    cands
-      .join(cv, Seq("id"))
-      .join(broadcast(qs), Seq("q_id"))
-      .select(col("q_id"), col("id"),
-        d2(col("q_self"), col("self"), quantDot(col("q_qv"), col("qv")))
-          .as("dist2"))
-      .groupBy(col("q_id"))
-      .agg(topKPairs((-col("dist2")).cast("double"), col("id"), k).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("int").as("rn"),
-        col("col.id").as("neighbor"),
-        (-col("col.score")).cast("long").as("dist2"))
+  /** Rebuild a one-level Index from its two STORED codebook tables —
+    * the live deployment path (C19): `coarseRows` in the ix.coarse shape
+    * (cr, c_id, c_vec, c_self), `pqRows` in the ix.pqCbR shape
+    * (c_id, sub, c_sv, c_self, r). A restart reconstructs the exact
+    * frozen quantizer from the catalog, so encodes stay bit-identical
+    * across process lifetimes (LiveIndexSpec pins stored == memoized).
+    */
+  private[graft] def indexFromStored(coarseRows: DataFrame, pqRows: DataFrame,
+                                     dim: Int = 64, m: Int = 8): Index = {
+    val ceArr = coarseRows
+      .agg(sort_array(collect_list(struct(
+        col("c_id"), col("c_vec"), col("c_self")))).as("ce"))
+      .localCheckpoint()
+    val kc = coarseRows.count().toInt
+    require(kc > 0, "IvfPq.indexFromStored: empty stored coarse " +
+      "codebook table — a rebuilt quantizer would silently degenerate")
+    val (pqCbR, pqArr, ks) = Pq.staged(pqRows.select(col("c_id"),
+      col("sub"), col("c_sv"), col("c_self"), col("r")).localCheckpoint(),
+      "IvfPq.indexFromStored")
+    Index(coarseRowsOf(ceArr), coarseArrOf(ceArr).localCheckpoint(), kc,
+      None, pqCbR, pqArr, ks, dim, m, dim / m)
   }
 
-  /** Corpus-size threshold above which `ivfPqAutoTopK` routes to the
-    * two-level quantizer. The single-level coarse assign is structurally
-    * O(n·√n) (every vector argmins a ⌊√n⌋-row codebook) vs the
-    * two-level O(n^{4/3}); measured on this box the two-level face is
-    * strictly faster at every decade with real work — 20k vectors
-    * 1.25 vs 1.62 s, 200k 2.84 vs 3.72, 1M 8.3 vs 22.1, 2M 15.4 vs
-    * 46.9 (r15 same-session sf50+sf100 pair) — and the sf50→sf100
-    * single-level wall ratio (2.1–2.3× per 2× data) matches the √2·2
-    * ≈ 2.83 structural bound while the two-level rows sit at the
-    * 2^{4/3} ≈ 2.52 class. Below ~10⁴ vectors both faces are
-    * job-floor-dominated and the branch is noise; 16384 keeps tiny
-    * corpora on the simpler plan. Var so specs can pin either face.
+  /** IVFADC top-k through the index `spec` describes: the corpus is
+    * encoded by ONE scan-local projection per vector (cell key(s) + m
+    * codes) and probed. Output (q_id, rn, neighbor, dist2) — the q80
+    * shape, exact BIGINTs throughout. `nprobe` is the caller's recall
+    * knob (q68's standing rule: the q87/q91 audits are its meter).
     */
-  var twoLevelThreshold: Long = 16384L
-
-  /** The PRODUCTION IVFADC face (round 15): the quantizer shape is a
-    * corpus-size decision, not a user decision — two-level
-    * (`ivfPq2TopK`) at or above `twoLevelThreshold`, single-level below
-    * it. Same exact-BIGINT contract and output shape either way
-    * (q_id, rn, neighbor, dist2); recall stays audited per face (q87
-    * grades the sub-threshold face, q91 the above-threshold one).
-    */
-  def ivfPqAutoTopK(corpus: DataFrame, queries: DataFrame, n: Long,
-                    dim: Int = 64, m: Int = 8, ksTarget: Int = 16,
-                    nprobe: Int = 4, k: Int = 10,
-                    rerank: Int = 50): DataFrame =
-    if (n >= twoLevelThreshold)
-      ivfPq2TopK(corpus, queries, n, dim, m, ksTarget,
-        nprobe1 = nprobe, nprobe2 = nprobe, k = k, rerank = rerank)
-    else
-      ivfPqTopK(corpus, queries, n, dim, m, ksTarget, nprobe, k, rerank)
-
-  /** IVFADC top-k. Output (q_id, rn, neighbor, dist2) — the q80 shape,
-    * exact BIGINTs throughout. `nprobe` is the caller's recall knob
-    * (q68's standing rule: the q87 audit is its meter).
-    */
-  def ivfPqTopK(corpus: DataFrame, queries: DataFrame, n: Long,
-                dim: Int = 64, m: Int = 8, ksTarget: Int = 16,
-                nprobe: Int = 4, k: Int = 10, rerank: Int = 50): DataFrame = {
-    val ix = index(corpus, n, dim, m, ksTarget)
-    // encoded corpus: ONE scan-local projection — cell + m codes
-    probeEncoded(encodeWith(corpus, ix), corpus, queries, ix,
-      nprobe, k, rerank)
+  private[operators] def topK(spec: Ann.Index, queries: DataFrame,
+                              nprobe: Int, k: Int): DataFrame = {
+    val ix = build(spec)
+    probeEncoded(encodeWith(spec.corpus, ix), spec.corpus, queries, ix,
+      nprobe, k, spec.codes.get.rerank)
   }
 
-  /** The probe half of ivfPqTopK over an ALREADY-ENCODED corpus `enc`
-    * (id, cell, codes) — C19 probes its maintained index table through
+  /** The probe half over an ALREADY-ENCODED corpus `enc` (id, cell
+    * key(s), codes) — C19 probes its maintained index table through
     * this without re-encoding anything; `corpus` supplies the raw
     * vectors for the exact re-rank tail only.
+    *
+    * A query probes its `nprobe` nearest coarse cells (a q × kc scored
+    * window frame — bounded) and, at two levels, within each its
+    * `nprobe` nearest fine cells (scan-local sorted slice of the joined
+    * fine codebook; a cell with no fine seed probes (cell1, -1) against
+    * the coarse centroid). The per-(query, probed cell) residual LUT is
+    * q·nprobe·m·ks rows (bounded) and equi-joins the encoded corpus ON
+    * THE CELL KEY — a broadcast HASH join, not a nested loop; ADC is m
+    * O(1) element_at lookups; the only exchange is TopKPairs' partial
+    * top-R, then ≤ q·R candidates join back for the exact re-rank.
     */
   private[graft] def probeEncoded(enc: DataFrame, corpus: DataFrame,
                                   queries: DataFrame, ix: Index,
                                   nprobe: Int, k: Int,
                                   rerank: Int): DataFrame = {
-    import ix.{ks, subDim, m}
-
-    // probes: q × kc scored rows (bounded), keep the nprobe nearest
-    // cells per query; the window is over the bounded probe frame
-    val qs = queries.select(col("id").as("q_id"), col("qv").as("q_qv"),
-      quantDot(col("qv"), col("qv")).as("q_self"))
-    val pw = Window.partitionBy(col("q_id"))
-      .orderBy(col("cd2"), col("cr"))
-    val probes = qs.crossJoin(broadcast(ix.coarse))
-      .select(col("q_id"), col("q_qv"), col("cr"), col("c_vec"),
+    import ix.{keys, ks, subDim, m}
+    val qs = Pq.withSelf(queries, "q_")
+    val pw = Window.partitionBy(col("q_id")).orderBy(col("cd2"), col("cr"))
+    val coarse = qs.crossJoin(broadcast(ix.coarse))
+      .select(col("q_id"), col("q_qv"), col("q_self"), col("cr"),
+        col("c_vec"),
         d2(col("q_self"), col("c_self"),
           quantDot(col("q_qv"), col("c_vec"))).as("cd2"))
       .withColumn("pr", row_number().over(pw))
       .filter(col("pr") <= nprobe)
-      .select(col("q_id"), col("cr").as("cell"),
+    val probes = ix.fine match {
+      case None => coarse.select(col("q_id"), col("cr").as("cell"),
         zip_with(col("q_qv"), col("c_vec"), (a, b) => a - b).as("rq"))
-
+      case Some(fine) => coarse
+        .select(col("q_id"), col("q_qv"), col("q_self"),
+          col("cr").as("cell1"), col("c_vec").as("c_cv"))
+        .join(fine, Seq("cell1"), "left")
+        .select(col("q_id"), col("cell1"), col("q_qv"),
+          explode(when(col("fb").isNull,
+            array(struct(lit(-1L).as("cid"), col("c_cv").as("cv"))))
+            .otherwise(transform(
+              slice(array_sort(
+                fineScored(col("q_qv"), col("q_self"), col("fb"))),
+                1, nprobe),
+              e => struct(e("cid").as("cid"), e("cv").as("cv"))))).as("f"))
+        .select(col("q_id"), col("cell1"), col("f.cid").as("cell2"),
+          zip_with(col("q_qv"), col("f.cv"), (a, b) => a - b).as("rq"))
+    }
     // per-(query, probed cell) LUT: d²(query-residual subvector, pq
-    // centroid) for every (sub, rank) — q·nprobe·m·ks rows, bounded
+    // centroid) for every (sub, rank)
+    val rsv = slice(col("rq"), col("sub") * subDim + 1, lit(subDim))
+    val cellCols = keys.map(col)
     val lut = probes
       .crossJoin(broadcast(ix.pqCbR))
-      .select(col("q_id"), col("cell"), col("sub"), col("r"),
-        d2(quantDot(slice(col("rq"), col("sub") * subDim + 1, lit(subDim)),
-             slice(col("rq"), col("sub") * subDim + 1, lit(subDim))),
-           col("c_self"),
-           quantDot(slice(col("rq"), col("sub") * subDim + 1, lit(subDim)),
-             col("c_sv"))).as("d2q"))
-      .groupBy(col("q_id"), col("cell"))
+      .select((col("q_id") +: cellCols) ++ Seq(col("sub"), col("r"),
+        d2(quantDot(rsv, rsv), col("c_self"), quantDot(rsv, col("c_sv")))
+          .as("d2q")): _*)
+      .groupBy((col("q_id") +: cellCols): _*)
       .agg(transform(
         sort_array(collect_list(struct(col("sub"), col("r"), col("d2q")))),
         e => e("d2q")).as("lut"))
-
     // ADC inside probed cells only: broadcast HASH join on the cell key
     val adcSum = (0 until m).map { s =>
       element_at(col("lut"),
         (lit(s * ks) + element_at(col("codes"), s + 1) + 1).cast("int"))
     }.reduce(_ + _)
-    val cands = enc.join(broadcast(lut), Seq("cell"))
+    val cands = enc.join(broadcast(lut), keys)
       .filter(col("id") =!= col("q_id"))
       .select(col("q_id"), col("id"), adcSum.as("adc"))
-      .groupBy(col("q_id"))
-      .agg(topKPairs((-col("adc")).cast("double"), col("id"), rerank).as("top"))
-      .select(col("q_id"), explode(col("top.id")).as("id"))
-
-    // exact re-rank of ≤ q·R candidates (the q80 tail)
-    val cv = corpus.select(col("id"), col("qv"),
-      quantDot(col("qv"), col("qv")).as("self"))
-    cands
-      .join(cv, Seq("id"))
-      .join(broadcast(qs), Seq("q_id"))
-      .select(col("q_id"), col("id"),
-        d2(col("q_self"), col("self"), quantDot(col("q_qv"), col("qv")))
-          .as("dist2"))
-      .groupBy(col("q_id"))
-      .agg(topKPairs((-col("dist2")).cast("double"), col("id"), k).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("int").as("rn"),
-        col("col.id").as("neighbor"),
-        (-col("col.score")).cast("long").as("dist2"))
+    Pq.rerank(Pq.candidates(cands, rerank), corpus, qs, k)
   }
 }

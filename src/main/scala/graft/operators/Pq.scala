@@ -53,19 +53,21 @@ object Pq {
   private def sub(v: Column, s: Int, subDim: Int): Column =
     slice(v, s * subDim + 1, subDim)
 
-  private def d2(dotAA: Column, dotBB: Column, dotAB: Column): Column =
+  private[operators] def d2(dotAA: Column, dotBB: Column, dotAB: Column): Column =
     dotAA + dotBB - lit(2L) * dotAB
 
   /** Per-subspace codebook from the uniform hash-mod sample (the q34
-    * rule: never a prefix; round 12: idSample — density-independent).
+    * rule: never a prefix; round 12: idSample — density-independent)
+    * of the `vec` column — raw vectors here, residuals for IVFADC.
     * Output (sub, c_id, c_sv, c_self); m·(n/stride) rows —
     * broadcast-sized by construction.
     */
-  def codebook(corpus: DataFrame, stride: Long, m: Int, subDim: Int): DataFrame =
-    corpus.filter(graft.functions.GraftFunctions.idSample(col("id"), stride))
+  private[graft] def codebook(rows: DataFrame, stride: Long, m: Int,
+                              subDim: Int, vec: String = "qv"): DataFrame =
+    rows.filter(graft.functions.GraftFunctions.idSample(col("id"), stride))
       .select(col("id").as("c_id"),
         explode(array((0 until m).map { s =>
-          struct(lit(s).as("sub"), sub(col("qv"), s, subDim).as("c_sv"))
+          struct(lit(s).as("sub"), sub(col(vec), s, subDim).as("c_sv"))
         }: _*)).as("e"))
       .select(col("e.sub").as("sub"), col("c_id"), col("e.c_sv").as("c_sv"),
         quantDot(col("e.c_sv"), col("e.c_sv")).as("c_self"))
@@ -79,20 +81,27 @@ object Pq {
     * Values are unchanged by staging, so the oracle replay is
     * unaffected.
     */
-  private def ranked(cb: DataFrame): DataFrame = {
+  private[operators] def ranked(cb: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("sub")).orderBy(col("c_id"))
     cb.withColumn("r", row_number().over(w) - 1).localCheckpoint()
   }
 
-  /** The ranked codebook flattened to the ONE-ROW broadcast the native
-    * encode kernel reads: `cbf` is the (s·ks + r)·(subDim+1)-offset
-    * layout of [c_sv, c_self] blocks (ExprKernels.pqCodes contract),
-    * `cid` maps (s·ks + r) back to the centroid's vector id (the public
-    * code value). The ks-row window is bounded at any corpus size (ks
-    * is the fixed compression budget).
+  /** A ranked codebook `cbR` staged for the native encode kernel:
+    * (cbR, its ONE-ROW broadcast form, ks). `cbf` is the (s·ks +
+    * r)·(subDim+1)-offset layout of [c_sv, c_self] blocks
+    * (ExprKernels.pqCodes contract), `cid` maps (s·ks + r) back to the
+    * centroid's vector id (the public code value). ks comes from a
+    * bounded driver action over the m·ks rows (stride = n/16 can yield
+    * 16 or 17 centroids; the index arithmetic needs the exact count),
+    * and an empty codebook fails loudly instead of degenerating every
+    * downstream argmin.
     */
-  private[operators] def rankedCbArr(cbR: DataFrame): DataFrame =
-    cbR
+  private[operators] def staged(cbR: DataFrame,
+                                what: String): (DataFrame, DataFrame, Int) = {
+    val ks = cbR.filter(col("sub") === 0).count().toInt
+    require(ks > 0, s"$what: PQ codebook sampled 0 rows (idSample " +
+      "stride exceeds the corpus) — refusing to build a degenerate codebook")
+    val arr = cbR
       .agg(sort_array(collect_list(struct(
         col("sub"), col("r"), col("c_id"), col("c_sv"), col("c_self"))))
         .as("cbe"))
@@ -100,36 +109,7 @@ object Pq {
         flatten(transform(col("cbe"),
           e => concat(e("c_sv"), array(e("c_self"))))).as("cbf"),
         transform(col("cbe"), e => e("c_id")).as("cid"))
-
-  /** Staged-codebook memo. q80 and q81 (and a bench's steady-state
-    * repeats) build the IDENTICAL ranked codebook for the same (corpus,
-    * stride, m, subDim) — a corpus scan + ks-row window + count action
-    * each time, the whole fixed PQ floor at small SF (~0.5 s/query at
-    * sf0.1). An index build is a reusable deployment artifact in
-    * production (the q85 trainModel discipline), so the staged frame is
-    * memoized per (canonicalized corpus plan, session, stride, m,
-    * subDim). Entries are m·ks-row checkpointed frames — bounded; the
-    * canonicalized-plan key means two reads of the same parquet with
-    * the same projection hit, while a different sfDir (different scan
-    * path) misses. Values are unchanged (the memo returns the same
-    * staged rows the per-call build would), so oracles are unaffected.
-    */
-  private val cbMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Int, Int),
-      (DataFrame, DataFrame, Int)]()
-
-  private def stagedCodebook(corpus: DataFrame, stride: Long, m: Int,
-                             subDim: Int): (DataFrame, DataFrame, Int) = {
-    val planKey = corpus.queryExecution.analyzed.canonicalized.toString +
-      "@" + System.identityHashCode(corpus.sparkSession)
-    cbMemo.computeIfAbsent((planKey, stride, m, subDim), _ => {
-      val cbR = ranked(codebook(corpus, stride, m, subDim))
-      val ks = cbR.filter(col("sub") === 0).count().toInt
-      require(ks > 0, "Pq.stagedCodebook: codebook sampled 0 rows " +
-        "(idSample stride exceeds the corpus) — refusing to build a " +
-        "degenerate codebook")
-      (cbR, rankedCbArr(cbR).localCheckpoint(), ks)
-    })
+    (cbR, arr.localCheckpoint(), ks)
   }
 
   /** PQ codes: nearest per-subspace centroid for every corpus vector.
@@ -137,12 +117,11 @@ object Pq {
     * One scan, one native projection (pqCodes kernel), one bounded
     * explode to the long layout; no join rows, no aggregation.
     */
-  def encode(corpus: DataFrame, cb: DataFrame, m: Int, subDim: Int): DataFrame = {
-    val cbR = ranked(cb)
-    val ks = cbR.filter(col("sub") === 0).count().toInt
-    require(ks > 0, "Pq.encode: empty codebook — encoding would degenerate")
+  private[graft] def encode(corpus: DataFrame, cb: DataFrame, m: Int,
+                            subDim: Int): DataFrame = {
+    val (_, cbArr, ks) = staged(ranked(cb), "Pq.encode")
     corpus
-      .crossJoin(broadcast(rankedCbArr(cbR)))
+      .crossJoin(broadcast(cbArr))
       .select(col("id"), col("cid"),
         posexplode(pqCodes(col("qv"), col("cbf"), m, subDim, ks)))
       .select(col("id"), col("pos").cast("int").as("sub"),
@@ -150,18 +129,62 @@ object Pq {
           (col("pos") * ks + col("col") + 1).cast("int")).as("code"))
   }
 
-  /** ADC top-k by squared L2: per-query per-subspace LUT against the
-    * codebook, candidate distances summed from codes, top-`rerank` by
-    * ADC through TopKPairs, exact re-rank of those candidates to top-k.
-    * Output (q_id, rn, neighbor, dist2) — exact BIGINTs throughout.
+  /** (`p`id, `p`qv, `p`self): vectors with their exact BIGINT self-dots. */
+  private[operators] def withSelf(df: DataFrame, p: String = ""): DataFrame =
+    df.select(col("id").as(p + "id"), col("qv").as(p + "qv"),
+      quantDot(col("qv"), col("qv")).as(p + "self"))
+
+  /** Per-query top-`rerank` candidate ids of ADC-scored (q_id, id, adc)
+    * rows through TopKPairs' partial top-R (≤ R rows per query per
+    * partition into the exchange).
     */
-  def adcTopK(corpus: DataFrame, queries: DataFrame, stride: Long,
-              m: Int = 8, subDim: Int = 8, k: Int = 10,
-              rerank: Int = 50): DataFrame = {
-    // ks from the bounded staged codebook (stride = n/16 can yield 16
-    // or 17 centroids; the index arithmetic needs the exact count) — a
-    // bounded driver action over the checkpointed m·ks rows
-    val (cbR, cbArr, ks) = stagedCodebook(corpus, stride, m, subDim)
+  private[operators] def candidates(scored: DataFrame, rerank: Int): DataFrame =
+    scored
+      .groupBy(col("q_id"))
+      .agg(topKPairs((-col("adc")).cast("double"), col("id"), rerank).as("top"))
+      .select(col("q_id"), explode(col("top.id")).as("id"))
+
+  /** The exact re-rank tail every PQ face shares: ≤ q·R (q_id, id)
+    * candidates join back to their raw vectors (the only join back to
+    * vectors) and re-rank by exact d² against the query batch `qs`
+    * (q_id, q_qv, q_self).
+    */
+  private[operators] def rerank(cands: DataFrame, corpus: DataFrame,
+                                qs: DataFrame, k: Int): DataFrame =
+    l2TopK(cands
+      .join(withSelf(corpus), Seq("id"))
+      .join(broadcast(qs), Seq("q_id"))
+      .select(col("q_id"), col("id"),
+        d2(col("q_self"), col("self"), quantDot(col("q_qv"), col("qv")))
+          .as("dist2")), k)
+
+  /** (q_id, id, dist2) → per-query top-k by (dist2 asc, id asc):
+    * (q_id, rn, neighbor, dist2), exact BIGINTs throughout.
+    */
+  private def l2TopK(scored: DataFrame, k: Int): DataFrame =
+    scored
+      .groupBy(col("q_id"))
+      .agg(topKPairs((-col("dist2")).cast("double"), col("id"), k).as("top"))
+      .select(col("q_id"), posexplode(col("top")))
+      .select(col("q_id"), (col("pos") + 1).cast("int").as("rn"),
+        col("col.id").as("neighbor"),
+        (-col("col.score")).cast("long").as("dist2"))
+
+  /** Raw-vector ADC top-k (the index with PQ codes and no coarse level):
+    * per-query per-subspace LUT against the codebook, candidate
+    * distances summed from codes, top-`rerank` by ADC, exact re-rank of
+    * those candidates to top-k. Output (q_id, rn, neighbor, dist2). Kept
+    * apart from IVFADC's probe because its LUT is ONE broadcast row for
+    * the whole query batch — routing it through the per-cell LUT would
+    * change q80/q81's plan; it shares the candidate and re-rank tail.
+    */
+  private[operators] def adcTopK(corpus: DataFrame, queries: DataFrame,
+                                 c: Ann.Codes, k: Int): DataFrame = {
+    import c.m
+    val subDim = c.dim / m
+    val (cbR, cbArr, ks) = Ann.staged(corpus, ("adc", c.stride, m, c.dim)) {
+      staged(ranked(codebook(corpus, c.stride, m, subDim)), "Pq.adcTopK")
+    }
     // LUT: d²(query subvector, centroid) for every (query, sub, rank),
     // flattened to ONE broadcast array ordered by (q_id, sub, r) so
     // lut[(qIdx·m + sub)·ks + r] is an O(1) element_at; qids carries
@@ -200,48 +223,18 @@ object Pq {
         col("lut"), posexplode(col("qids")))
       .select(col("id"), col("pos"), col("col").as("q_id"), adcSum.as("adc"))
       .filter(col("id") =!= col("q_id"))
-      .groupBy(col("q_id"))
-      .agg(topKPairs((-col("adc")).cast("double"), col("id"), rerank).as("top"))
-      .select(col("q_id"), explode(col("top.id")).as("id"))
-    // exact re-rank of ≤ q·R candidates — the only join back to vectors
-    val qv = corpus.select(col("id"), col("qv"),
-      quantDot(col("qv"), col("qv")).as("self"))
-    val qq = queries.select(col("id").as("q_id"), col("qv").as("q_qv"),
-      quantDot(col("qv"), col("qv")).as("q_self"))
-    val exact = cands
-      .join(qv, Seq("id"))
-      .join(broadcast(qq), Seq("q_id"))
-      .select(col("q_id"), col("id"),
-        d2(col("q_self"), col("self"), quantDot(col("q_qv"), col("qv")))
-          .as("dist2"))
-    exact
-      .groupBy(col("q_id"))
-      .agg(topKPairs((-col("dist2")).cast("double"), col("id"), k).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("int").as("rn"),
-        col("col.id").as("neighbor"),
-        (-col("col.score")).cast("long").as("dist2"))
+    rerank(candidates(cands, c.rerank), corpus, withSelf(queries, "q_"), k)
   }
 
-  /** Exact squared-L2 brute-force top-k — the ground truth the PQ path
-    * is recall-audited against (q81): broadcast query batch × one
-    * corpus scan, TopKPairs partial aggregate, all-BIGINT.
+  /** Exact squared-L2 brute-force top-k — the ground truth the PQ faces
+    * are recall-audited against (q81/q87/q91): broadcast query batch ×
+    * one corpus scan, TopKPairs partial aggregate, all-BIGINT.
     */
   def bruteForceL2TopK(corpus: DataFrame, queries: DataFrame,
-                       k: Int = 10): DataFrame = {
-    val c = corpus.select(col("id"), col("qv"),
-      quantDot(col("qv"), col("qv")).as("self"))
-    val q = queries.select(col("id").as("q_id"), col("qv").as("q_qv"),
-      quantDot(col("qv"), col("qv")).as("q_self"))
-    c.join(broadcast(q), col("id") =!= col("q_id"))
+                       k: Int = 10): DataFrame =
+    l2TopK(withSelf(corpus)
+      .join(broadcast(withSelf(queries, "q_")), col("id") =!= col("q_id"))
       .select(col("q_id"), col("id"),
         d2(col("q_self"), col("self"), quantDot(col("q_qv"), col("qv")))
-          .as("dist2"))
-      .groupBy(col("q_id"))
-      .agg(topKPairs((-col("dist2")).cast("double"), col("id"), k).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("int").as("rn"),
-        col("col.id").as("neighbor"),
-        (-col("col.score")).cast("long").as("dist2"))
-  }
+          .as("dist2")), k)
 }

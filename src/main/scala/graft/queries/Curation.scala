@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.Tables.t
 import graft.functions.GraftFunctions._
+import graft.operators.Ann
 
 /** Corpus-curation suite, part 2 (SURVEY.md §2.D20–D24): embedding
   * clustering, semantic dedup, chunk-level (CCNet-style) dedup,
@@ -39,7 +40,7 @@ object Curation {
   private def seedOf(s: org.apache.spark.sql.SparkSession,
                      dir: String): org.apache.spark.sql.Column = {
     val n = t(s, dir, "embeddings").count()
-    val stride = math.max(1L, n / graft.operators.Ann.centroidCountFor(n))
+    val stride = math.max(1L, n / Ann.centroidCountFor(n))
     graft.functions.GraftFunctions.idSample(col("id"), stride)
   }
 
@@ -249,13 +250,12 @@ object Curation {
     (s, dir) => {
       val corpus = qEmb(s, dir)
       val n = t(s, dir, "embeddings").count()
-      // round 16 auto face: below IvfPq.twoLevelThreshold this is the
-      // single-level √n-seed kmeans codebook the CTE replays; above it
-      // (sf10+ ladder) the coarse level is a kmeans-refined ∛n codebook
-      // feeding the two-level probe — O(n^{4/3}) end to end
-      graft.operators.Ann
-        .ivfKmeansAutoTopK(corpus, n, queryFilter = col("vec_id") < 10,
-          rounds = 1, nprobe = 4, k = 10)
+      // round 16 size-routed face: below Ann.twoLevelThreshold this is
+      // the single-level √n-seed kmeans codebook the CTE replays; above
+      // it (sf10+ ladder) the coarse level is a kmeans-refined ∛n
+      // codebook feeding the two-level probe — O(n^{4/3}) end to end
+      Ann.topK(Ann.sized(corpus, n, rounds = 1), corpus.filter(col("id") < 10),
+          nprobe = 4, k = 10)
         .orderBy(col("q_id"), col("rn"))
     },
     Some(kmeansCtes + """,
@@ -297,33 +297,13 @@ object Curation {
     "q69_ann_recall_kmeans",
     (s, dir) => {
       val corpus = qEmb(s, dir)
-      val truth = graft.operators.Ann
-        .bruteForceTopK(corpus, corpus.filter(col("id") < 10), k = 10)
-      val cb = graft.operators.Cluster
-        .kmeansCodebook(corpus, seedOf(s, dir), rounds = 1)
-      val ivfK = graft.operators.Ann
-        .ivfTopKWith(corpus, cb, queryFilter = col("vec_id") < 10,
-          nprobe = 4, k = 10)
-      val perq = truth.select(col("q_id"), col("neighbor"))
-        .join(ivfK.select(col("q_id"), col("neighbor"), lit(1).as("hit")),
-          Seq("q_id", "neighbor"), "left")
-        .groupBy(col("q_id"))
-        .agg(count(lit(1)).as("n_truth_q"),
-          sum(coalesce(col("hit"), lit(0))).as("n_hits_q"))
-      perq
-        .agg(sum(col("n_truth_q")).as("n_truth"),
-          sum(col("n_hits_q")).as("n_hits"),
-          min(col("n_hits_q")).as("min_hits"),
-          max(col("n_truth_q")).as("max_truth"),
-          sort_array(collect_list(col("n_hits_q"))).as("hs"),
-          count(lit(1)).as("nq"))
-        .select(lit("ivf_kmeans").as("method"),
-          col("n_truth"), col("n_hits"),
-          (col("n_hits").cast("double") / col("n_truth")).as("recall"),
-          (col("min_hits").cast("double") / col("max_truth")).as("min_recall"),
-          ((element_at(col("hs"), ((col("nq") + lit(1)) / lit(2)).cast("int"))
-            + element_at(col("hs"), ((col("nq") + lit(2)) / lit(2)).cast("int")))
-            .cast("double") / (lit(2) * col("max_truth"))).as("p50_recall"))
+      val n = t(s, dir, "embeddings").count()
+      val queries = corpus.filter(col("id") < 10)
+      val truth = Ann.bruteForceTopK(corpus, queries, k = 10)
+      val ivfK = Ann.topK(Ann.index(corpus, n, levels = 1, rounds = 1),
+        queries, nprobe = 4, k = 10)
+      Ann.recallAudit(truth.select(col("q_id"), col("neighbor")), ivfK,
+        "ivf_kmeans", perQuery = true)
     },
     Some(kmeansCtes + """,
     probes AS (

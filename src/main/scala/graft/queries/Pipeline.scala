@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.Tables.t
 import graft.functions.GraftFunctions._
+import graft.operators.{Ann, Pq}
 import Q.{dsum, sqlDsum}
 
 /** LLM-training-data pipeline suite (SURVEY.md §2.D): dedup (exact /
@@ -193,10 +194,7 @@ object Pipeline {
       // id-space head, not the data's direction families. The count()
       // is a footer-cheap metadata job.
       val n = t(s, dir, "embeddings").count()
-      val stride = math.max(1L, n / graft.operators.Ann.centroidCountFor(n))
-      graft.operators.Ann
-        .cellBlockedPairs(embs, centroidFilter = graft.functions.GraftFunctions.idSample(col("vec_id"), stride),
-          threshold = 0.4)
+      Ann.blockedPairs(Ann.index(embs, n, levels = 1), threshold = 0.4)
         .orderBy(col("vec_a"), col("vec_b"))
     },
     Some("""WITH q AS (
@@ -233,8 +231,7 @@ object Pipeline {
     (s, dir) => {
       val embs = t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), quantize(col("embedding")).as("qv"))
-      graft.operators.Ann
-        .bruteForceTopK(embs, embs.filter(col("id") < 10), k = 10)
+      Ann.bruteForceTopK(embs, embs.filter(col("id") < 10), k = 10)
         .orderBy(col("q_id"), col("rn"))
     },
     Some("""WITH q AS (
@@ -269,10 +266,8 @@ object Pipeline {
     (s, dir) => {
       val embs = t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), quantize(col("embedding")).as("qv"))
-      val bits = graft.operators.Ann.lshBitsFor(
-        t(s, dir, "embeddings").count())
-      graft.operators.Ann
-        .lshPairs(embs, planes = 64, bands = 4, threshold = 0.3,
+      val bits = Ann.lshBitsFor(t(s, dir, "embeddings").count())
+      Ann.lshPairs(embs, planes = 64, bands = 4, threshold = 0.3,
           bitsPerBand = bits)
         .orderBy(col("vec_a"), col("vec_b"))
     },
@@ -450,13 +445,12 @@ object Pipeline {
       // linearly with n, while k ~ n/const makes the assign pass
       // quadratic — the sf20 decade measured both regimes
       val n = t(s, dir, "embeddings").count()
-      // round 16: the auto face — single-level √n replay below
-      // IvfPq.twoLevelThreshold (every oracle/bench SF; the CTE below
+      // round 16: the size-routed face — single-level √n replay below
+      // Ann.twoLevelThreshold (every oracle/bench SF; the CTE below
       // replays exactly that branch), two-level ∛n routing above it
       // (the sf10–sf100 ladder) so the shipped face never pays the
       // O(n·√n) coarse assign at scale
-      graft.operators.Ann
-        .ivfAutoTopK(embs, n, queryFilter = col("vec_id") < 10,
+      Ann.topK(Ann.sized(embs, n), embs.filter(col("id") < 10),
           nprobe = 4, k = 10)
         .orderBy(col("q_id"), col("rn"))
     },
@@ -516,33 +510,19 @@ object Pipeline {
       val embs = t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), quantize(col("embedding")).as("qv"))
       val n = t(s, dir, "embeddings").count()
-      val truth = graft.operators.Ann
-        .bruteForceTopK(embs, embs.filter(col("id") < 10), k = 10)
-      val lsh = graft.operators.Ann
-        .lshPairs(embs, planes = 64, bands = 4, threshold = 0.3,
-          bitsPerBand = graft.operators.Ann.lshBitsFor(n))
-      val stride = math.max(1L, n / graft.operators.Ann.centroidCountFor(n))
-      val ivf = graft.operators.Ann
-        .ivfTopK(embs, queryFilter = col("vec_id") < 10,
-          centroidFilter = graft.functions.GraftFunctions.idSample(col("vec_id"), stride), nprobe = 4, k = 10)
-
-      val ivfStats = truth.select(col("q_id"), col("neighbor"))
-        .join(ivf.select(col("q_id"), col("neighbor"), lit(1).as("hit")),
-          Seq("q_id", "neighbor"), "left")
-        .agg(count(lit(1)).as("n_truth"),
-          sum(coalesce(col("hit"), lit(0))).as("n_hits"))
-        .select(lit("ivf").as("method"), col("n_truth"), col("n_hits"),
-          (col("n_hits").cast("double") / col("n_truth")).as("recall"))
-      val lshStats = truth.filter(col("cos_sim") >= 0.3)
-        .select(least(col("q_id"), col("neighbor")).as("ka"),
-          greatest(col("q_id"), col("neighbor")).as("kb"))
-        .join(lsh.select(col("vec_a").as("ka"), col("vec_b").as("kb"),
-          lit(1).as("hit")), Seq("ka", "kb"), "left")
-        .agg(count(lit(1)).as("n_truth"),
-          sum(coalesce(col("hit"), lit(0))).as("n_hits"))
-        .select(lit("lsh").as("method"), col("n_truth"), col("n_hits"),
-          (col("n_hits").cast("double") / col("n_truth")).as("recall"))
-      ivfStats.union(lshStats).orderBy(col("method"))
+      val queries = embs.filter(col("id") < 10)
+      val truth = Ann.bruteForceTopK(embs, queries, k = 10)
+      val lsh = Ann.lshPairs(embs, planes = 64, bands = 4, threshold = 0.3,
+        bitsPerBand = Ann.lshBitsFor(n))
+      val ivf = Ann.topK(Ann.index(embs, n, levels = 1), queries,
+        nprobe = 4, k = 10)
+      Ann.recallAudit(truth.select(col("q_id"), col("neighbor")), ivf, "ivf")
+        .union(Ann.recallAudit(
+          truth.filter(col("cos_sim") >= 0.3)
+            .select(least(col("q_id"), col("neighbor")).as("ka"),
+              greatest(col("q_id"), col("neighbor")).as("kb")),
+          lsh.select(col("vec_a").as("ka"), col("vec_b").as("kb")), "lsh"))
+        .orderBy(col("method"))
     },
     Some("""WITH q AS (
       SELECT vec_id,
@@ -972,7 +952,7 @@ object Pipeline {
 
   // ---- D7e: two-level IVF blocked pairs (the 10¹² scale path, oracled) ---
   // q34's single-level index broadcasts a √n-row codebook, which stops
-  // fitting an executor at n ≈ 10¹² (≈512 MB); Ann.twoLevelAssign splits
+  // fitting an executor at n ≈ 10¹² (≈512 MB); a two-level Ann.Index splits
   // the index into ∛n coarse cells (broadcast argmax, zero exchange) and
   // ∛n fine centroids per coarse cell (equi-joined by cell key — linear),
   // for O(n^{4/3}) total work and a ∛n-row broadcast. This query drives
@@ -986,14 +966,7 @@ object Pipeline {
       val embs = t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), quantize(col("embedding")).as("qv"))
       val n = t(s, dir, "embeddings").count()
-      val c1 = graft.operators.Ann.coarseCountFor(n)
-      val stride1 = math.max(1L, n / c1)
-      val stride2 = math.max(1L, n / (c1 * c1))
-      graft.operators.Ann
-        .twoLevelBlockedPairs(embs,
-          coarseFilter = graft.functions.GraftFunctions.idSample(col("vec_id"), stride1),
-          fineFilter = graft.functions.GraftFunctions.idSample(col("vec_id"), stride2),
-          threshold = 0.4)
+      Ann.blockedPairs(Ann.index(embs, n, levels = 2), threshold = 0.4)
         .orderBy(col("vec_a"), col("vec_b"))
     },
     Some("""WITH q AS (
@@ -1042,7 +1015,7 @@ object Pipeline {
     WHERE cos_sim >= 0.4 ORDER BY vec_a, vec_b"""))
 
   // ---- D7e: recall audit of the two-level ANN query path -----------------
-  // q68/q69 grade the single-level paths; this grades Ann.twoLevelTopK —
+  // q68/q69 grade the single-level paths; this grades the two-level index —
   // the designated 10¹²-corpus path — against the same brute-force
   // top-10 ground truth, with the q69 per-query distribution (min/p50):
   // an index meant to replace the single-level one at scale must carry a
@@ -1060,39 +1033,12 @@ object Pipeline {
       val embs = t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), quantize(col("embedding")).as("qv"))
       val n = t(s, dir, "embeddings").count()
-      val c1 = graft.operators.Ann.coarseCountFor(n)
-      val stride1 = math.max(1L, n / c1)
-      val stride2 = math.max(1L, n / (c1 * c1))
-      val truth = graft.operators.Ann
-        .bruteForceTopK(embs, embs.filter(col("id") < 10), k = 10)
-      val tl = graft.operators.Ann.twoLevelTopK(embs,
-        coarseFilter = graft.functions.GraftFunctions.idSample(col("vec_id"), stride1),
-        fineFilter = graft.functions.GraftFunctions.idSample(col("vec_id"), stride2),
-        queryFilter = col("vec_id") < 10,
-        nprobe1 = 4, nprobe2 = 4, k = 10)
-      val perq = truth.select(col("q_id"), col("neighbor"))
-        .join(tl.select(col("q_id"), col("neighbor"), lit(1).as("hit")),
-          Seq("q_id", "neighbor"), "left")
-        .groupBy(col("q_id"))
-        .agg(count(lit(1)).as("n_truth_q"),
-          sum(coalesce(col("hit"), lit(0))).as("n_hits_q"))
-      perq
-        .agg(sum(col("n_truth_q")).as("n_truth"),
-          sum(col("n_hits_q")).as("n_hits"),
-          min(col("n_hits_q")).as("min_hits"),
-          // denominators derived from the data (q69's rule): MAX(n_truth_q)
-          // = k when the corpus has ≥ k+1 vectors, the actual truth size
-          // otherwise — never a hard-coded k constant
-          max(col("n_truth_q")).as("max_truth"),
-          sort_array(collect_list(col("n_hits_q"))).as("hs"),
-          count(lit(1)).as("nq"))
-        .select(lit("ivf2").as("method"),
-          col("n_truth"), col("n_hits"),
-          (col("n_hits").cast("double") / col("n_truth")).as("recall"),
-          (col("min_hits").cast("double") / col("max_truth")).as("min_recall"),
-          ((element_at(col("hs"), ((col("nq") + lit(1)) / lit(2)).cast("int"))
-            + element_at(col("hs"), ((col("nq") + lit(2)) / lit(2)).cast("int")))
-            .cast("double") / (lit(2) * col("max_truth"))).as("p50_recall"))
+      val queries = embs.filter(col("id") < 10)
+      val truth = Ann.bruteForceTopK(embs, queries, k = 10)
+      val tl = Ann.topK(Ann.index(embs, n, levels = 2), queries,
+        nprobe = 4, k = 10)
+      Ann.recallAudit(truth.select(col("q_id"), col("neighbor")), tl, "ivf2",
+        perQuery = true)
     },
     Some("""WITH q AS (
       SELECT vec_id,
@@ -1455,10 +1401,8 @@ object Pipeline {
       val embs = t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), quantize(col("embedding")).as("qv"))
       val n = t(s, dir, "embeddings").count()
-      val stride = math.max(1L, n / 16)
-      graft.operators.Pq
-        .adcTopK(embs, embs.filter(col("id") < 10), stride,
-          m = 8, subDim = 8, k = 10, rerank = 50)
+      Ann.topK(Ann.index(embs, n, levels = 0, codes = Some(Ann.codesFor(n))),
+          embs.filter(col("id") < 10), k = 10)
         .orderBy(col("q_id"), col("rn"))
     },
     Some(pqCtes + """
@@ -1481,18 +1425,12 @@ object Pipeline {
       val embs = t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), quantize(col("embedding")).as("qv"))
       val n = t(s, dir, "embeddings").count()
-      val stride = math.max(1L, n / 16)
       val queries = embs.filter(col("id") < 10)
-      val truth = graft.operators.Pq.bruteForceL2TopK(embs, queries, k = 10)
-      val pq = graft.operators.Pq
-        .adcTopK(embs, queries, stride, m = 8, subDim = 8, k = 10, rerank = 50)
-      truth.select(col("q_id"), col("neighbor"))
-        .join(pq.select(col("q_id"), col("neighbor"), lit(1).as("hit")),
-          Seq("q_id", "neighbor"), "left")
-        .agg(count(lit(1)).as("n_truth"),
-          sum(coalesce(col("hit"), lit(0))).as("n_hits"))
-        .select(lit("pq").as("method"), col("n_truth"), col("n_hits"),
-          (col("n_hits").cast("double") / col("n_truth")).as("recall"))
+      val truth = Pq.bruteForceL2TopK(embs, queries, k = 10)
+      val pq = Ann.topK(
+        Ann.index(embs, n, levels = 0, codes = Some(Ann.codesFor(n))),
+        queries, k = 10)
+      Ann.recallAudit(truth.select(col("q_id"), col("neighbor")), pq, "pq")
     },
     Some(pqCtes + """,
     pqk AS (
@@ -1623,12 +1561,11 @@ object Pipeline {
       val embs = t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), quantize(col("embedding")).as("qv"))
       val n = t(s, dir, "embeddings").count()
-      // the AUTO face: single-level below IvfPq.twoLevelThreshold (the
-      // oracle's sf0.01 replay runs that face), two-level at scale —
-      // the r15 threshold-switched production default
-      graft.operators.IvfPq
-        .ivfPqAutoTopK(embs, embs.filter(col("id") < 10), n,
-          dim = 64, m = 8, ksTarget = 16, nprobe = 4, k = 10, rerank = 50)
+      // the size-routed face: single-level below Ann.twoLevelThreshold
+      // (the oracle's sf0.01 replay runs that face), two-level at scale
+      // — the r15 threshold-switched production default
+      Ann.topK(Ann.sized(embs, n, codes = Some(Ann.codesFor(n))),
+          embs.filter(col("id") < 10), nprobe = 4, k = 10)
         .orderBy(col("q_id"), col("rn"))
     },
     Some(ivfpqCtes + """
@@ -1650,17 +1587,10 @@ object Pipeline {
         .select(col("vec_id").as("id"), quantize(col("embedding")).as("qv"))
       val n = t(s, dir, "embeddings").count()
       val queries = embs.filter(col("id") < 10)
-      val truth = graft.operators.Pq.bruteForceL2TopK(embs, queries, k = 10)
-      val ipq = graft.operators.IvfPq
-        .ivfPqAutoTopK(embs, queries, n,
-          dim = 64, m = 8, ksTarget = 16, nprobe = 4, k = 10, rerank = 50)
-      truth.select(col("q_id"), col("neighbor"))
-        .join(ipq.select(col("q_id"), col("neighbor"), lit(1).as("hit")),
-          Seq("q_id", "neighbor"), "left")
-        .agg(count(lit(1)).as("n_truth"),
-          sum(coalesce(col("hit"), lit(0))).as("n_hits"))
-        .select(lit("ivfpq").as("method"), col("n_truth"), col("n_hits"),
-          (col("n_hits").cast("double") / col("n_truth")).as("recall"))
+      val truth = Pq.bruteForceL2TopK(embs, queries, k = 10)
+      val ipq = Ann.topK(Ann.sized(embs, n, codes = Some(Ann.codesFor(n))),
+        queries, nprobe = 4, k = 10)
+      Ann.recallAudit(truth.select(col("q_id"), col("neighbor")), ipq, "ivfpq")
     },
     Some(ivfpqCtes + """,
     ipqk AS (
@@ -1831,7 +1761,7 @@ object Pipeline {
         JOIN q qq ON qq.vec_id = ca.q_id)"""
 
   // ---- D7h: two-level IVFADC (the full 10¹² composition) ------------------
-  // operators/IvfPq.scala ivfPq2TopK carries the contract: ∛n coarse
+  // operators/IvfPq.scala (two levels) carries the contract: ∛n coarse
   // broadcast + equi-joined per-cell fine codebooks (q70's quantizer)
   // feeding the PQ-residual encode and the probed-cells-only ADC (q86's
   // scorer) — no single broadcast grows past ∛n rows at any corpus size.
@@ -1841,10 +1771,8 @@ object Pipeline {
       val embs = t(s, dir, "embeddings")
         .select(col("vec_id").as("id"), quantize(col("embedding")).as("qv"))
       val n = t(s, dir, "embeddings").count()
-      graft.operators.IvfPq
-        .ivfPq2TopK(embs, embs.filter(col("id") < 10), n,
-          dim = 64, m = 8, ksTarget = 16, nprobe1 = 4, nprobe2 = 4,
-          k = 10, rerank = 50)
+      Ann.topK(Ann.index(embs, n, levels = 2, codes = Some(Ann.codesFor(n))),
+          embs.filter(col("id") < 10), nprobe = 4, k = 10)
         .orderBy(col("q_id"), col("rn"))
     },
     Some(ivfpq2Ctes + """
@@ -1866,23 +1794,16 @@ object Pipeline {
         .select(col("vec_id").as("id"), quantize(col("embedding")).as("qv"))
       val n = t(s, dir, "embeddings").count()
       val queries = embs.filter(col("id") < 10)
-      val truth = graft.operators.Pq.bruteForceL2TopK(embs, queries, k = 10)
-      val ipq2 = graft.operators.IvfPq
-        .ivfPq2TopK(embs, queries, n,
-          dim = 64, m = 8, ksTarget = 16, nprobe1 = 4, nprobe2 = 4,
-          k = 10, rerank = 50)
+      val truth = Pq.bruteForceL2TopK(embs, queries, k = 10)
+      val ipq2 = Ann.topK(
+        Ann.index(embs, n, levels = 2, codes = Some(Ann.codesFor(n))),
+        queries, nprobe = 4, k = 10)
       // the approximate side is k×|queries| ≈ 100 rows at ANY corpus
       // size: pin it broadcast so AQE can't flip the truth-join strategy
       // between runs (r15 telemetry: an 8.46× shuffle-byte swing on
       // byte-identical inputs from exactly this replan)
-      truth.select(col("q_id"), col("neighbor"))
-        .join(broadcast(
-          ipq2.select(col("q_id"), col("neighbor"), lit(1).as("hit"))),
-          Seq("q_id", "neighbor"), "left")
-        .agg(count(lit(1)).as("n_truth"),
-          sum(coalesce(col("hit"), lit(0))).as("n_hits"))
-        .select(lit("ivfpq2").as("method"), col("n_truth"), col("n_hits"),
-          (col("n_hits").cast("double") / col("n_truth")).as("recall"))
+      Ann.recallAudit(truth.select(col("q_id"), col("neighbor")),
+        broadcast(ipq2), "ivfpq2")
     },
     Some(ivfpq2Ctes + """,
     ipqk AS (

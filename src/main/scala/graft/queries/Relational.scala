@@ -920,18 +920,19 @@ object Relational {
       // this plan when the application-side scan passes its 10 GB
       // threshold — explicit here so the plan does not depend on size
       // estimates. The count() sizes the filter (>= true key count
-      // keeps the advertised fpp at every scale).
-      val fo = s.sql("""SELECT o_orderkey FROM orders
-        WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-          AND o_orderdate <  TIMESTAMP '1996-07-01'""")
+      // keeps the advertised fpp at every scale). The date window is
+      // written once: the Bloom key set and the outer query must select
+      // the same orders, or the filter silently drops matching rows.
+      val window = """o_orderdate >= TIMESTAMP '1996-01-01'
+          AND o_orderdate <  TIMESTAMP '1996-07-01'"""
+      val fo = s.sql(s"SELECT o_orderkey FROM orders WHERE $window")
       graft.functions.BloomPrefilter
         .bloomPrefilter(graft.Tables.t(s, dir, "lineitem"),
           col("l_orderkey"), fo, col("o_orderkey"), fo.count())
         .createOrReplaceTempView("lineitem_q65_bloomed")
-      s.sql("""SELECT o_orderpriority, COUNT(*) AS order_count
+      s.sql(s"""SELECT o_orderpriority, COUNT(*) AS order_count
         FROM orders
-        WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-          AND o_orderdate <  TIMESTAMP '1996-07-01'
+        WHERE $window
           AND EXISTS (SELECT 1 FROM lineitem_q65_bloomed
                       WHERE l_orderkey = o_orderkey
                         AND l_shipdate > o_orderdate)

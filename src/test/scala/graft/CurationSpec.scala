@@ -19,9 +19,10 @@ class CurationSpec extends AnyFunSuite {
     .select(col("vec_id").as("id"), quantize(col("embedding")).as("qv"))
 
   test("kmeans round 1 IS the IVF assignment (same kernel, same codebook)") {
-    val km = Cluster.kmeansAssign(emb, k = 8, iters = 1)
+    val km = Cluster.kmeansAssignSeeded(emb, col("id") < 8, iters = 1)
       .select(col("id"), col("cluster"))
-    val ivf = Ann.ivfAssign(emb, centroidFilter = col("vec_id") < 8)
+    val ivf = Ann.assign(Ann.Index(emb, Seq(Ann.Given(emb.filter(col("id") < 8)
+        .select(col("id").as("c_id"), col("qv").as("c_qv"))))))
       .select(col("vec_id").as("id"), col("cell").as("cluster"))
     assert(km.except(ivf).isEmpty && ivf.except(km).isEmpty)
   }
@@ -61,43 +62,45 @@ class CurationSpec extends AnyFunSuite {
 
     val rawCents = corpus.filter(seed)
       .select(col("id").as("c_id"), col("qv").as("c_qv"))
-    val rawAssigned = Ann.ivfAssignWith(corpus, rawCents)
+    def assignWith(cb: org.apache.spark.sql.DataFrame) =
+      Ann.assign(Ann.Index(corpus, Seq(Ann.Given(cb))))
+    val rawAssigned = assignWith(rawCents)
     val cb = Cluster.kmeansCodebook(corpus, seed, rounds = 3)
-    val refAssigned = Ann.ivfAssignWith(corpus, cb)
+    val refAssigned = assignWith(cb)
     // totality: every vector assigned exactly once, before and after
     assert(rawAssigned.count() == 100 && refAssigned.count() == 100)
     val rawP = purity(rawAssigned, rawCents)
     val refP = purity(refAssigned, cb)
     assert(refP > rawP + 0.2, s"purity raw=$rawP refined=$refP")
     // determinism: refinement replays bit-identically
-    val again = Ann.ivfAssignWith(corpus,
-      Cluster.kmeansCodebook(corpus, seed, rounds = 3))
+    val again = assignWith(Cluster.kmeansCodebook(corpus, seed, rounds = 3))
     assert(refAssigned.select("vec_id", "cell")
       .except(again.select("vec_id", "cell")).isEmpty)
   }
 
-  test("ivfTopKWith(raw codebook) == ivfTopK(filter) — explicit path is exact") {
-    val cb = emb.filter(col("id") % 8 === 0)
+  test("Given(raw codebook) == Sampled(filter) — explicit codebook path is exact") {
+    val cb = emb.filter(idSample(col("id"), 8))
       .select(col("id").as("c_id"), col("qv").as("c_qv"))
-    val viaFilter = Ann.ivfTopK(emb, queryFilter = col("vec_id") < 5,
-      centroidFilter = col("vec_id") % 8 === 0, nprobe = 3, k = 5)
-    val viaCodebook = Ann.ivfTopKWith(emb, cb,
-      queryFilter = col("vec_id") < 5, nprobe = 3, k = 5)
+    val queries = emb.filter(col("id") < 5)
+    val viaFilter = Ann.topK(Ann.Index(emb, Seq(Ann.Sampled(stride = 8))),
+      queries, nprobe = 3, k = 5)
+    val viaCodebook = Ann.topK(Ann.Index(emb, Seq(Ann.Given(cb))),
+      queries, nprobe = 3, k = 5)
     assert(viaFilter.except(viaCodebook).isEmpty &&
       viaCodebook.except(viaFilter).isEmpty)
     // and the refined-codebook variant keeps the zero-exchange shape:
     // no Window, no cartesian, no sort-merge join anywhere in the plan
-    val plan = Ann.ivfTopKWith(emb,
-        Cluster.kmeansCodebook(emb, col("id") % 8 === 0, rounds = 1),
-        queryFilter = col("vec_id") < 5, nprobe = 3, k = 5)
+    val plan = Ann.topK(
+        Ann.Index(emb, Seq(Ann.Kmeans(stride = 8, rounds = 1))),
+        queries, nprobe = 3, k = 5)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Window") && !plan.contains("CartesianProduct") &&
-      !plan.contains("SortMergeJoin"), s"ivfTopKWith plan regressed:\n$plan")
+      !plan.contains("SortMergeJoin"), s"kmeans-codebook IVF plan regressed:\n$plan")
   }
 
   test("kmeans assignment is total and unique; clusters come from the seed set") {
     val n = emb.count()
-    val a = Cluster.kmeansAssign(emb, k = 8, iters = 3)
+    val a = Cluster.kmeansAssignSeeded(emb, col("id") < 8, iters = 3)
     assert(a.count() == n)
     assert(a.select("id").distinct().count() == n)
     assert(a.select("cluster").distinct()
@@ -105,7 +108,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("kmeans assignment plan is map-side: no Window, no corpus exchange") {
-    val plan = Cluster.kmeansAssign(emb, k = 8, iters = 2)
+    val plan = Cluster.kmeansAssignSeeded(emb, col("id") < 8, iters = 2)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), s"assignment must be the native argmax:\n$plan")
     assert(!plan.contains("CartesianProduct"), s"never corpus x corpus:\n$plan")
@@ -116,8 +119,10 @@ class CurationSpec extends AnyFunSuite {
 
   test("semDedup: kept+dropped partition the corpus; no near-dup pair survives") {
     val t = 0.4
-    val kept = Cluster.semDedup(emb, k = 8, iters = 2, threshold = t, stage = true)
-    val labeled = Cluster.kmeansAssign(emb, k = 8, iters = 2).localCheckpoint()
+    val kept = Cluster.semDedupSeeded(emb, col("id") < 8, iters = 2,
+      threshold = t, stage = true)
+    val labeled = Cluster.kmeansAssignSeeded(emb, col("id") < 8, iters = 2)
+      .localCheckpoint()
     assert(kept.count() < emb.count())
     // survivor invariant: among kept vectors, no same-cluster pair is
     // >= threshold (if one were, its higher id would have been dropped)

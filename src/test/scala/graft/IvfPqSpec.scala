@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
-import graft.operators.{IvfPq, Pq}
+import graft.operators.{Ann, IvfPq, Pq}
 
 /** D7g IVF-PQ composite / IVFADC (SURVEY.md §2) — q86/q87 gate
   * engine-vs-DuckDB equality; these pin the operator semantics: the
@@ -17,28 +17,32 @@ class IvfPqSpec extends AnyFunSuite {
   private def embs = Tables.t(spark, sfDir, "embeddings")
     .select(col("vec_id").as("id"), quantize(col("embedding")).as("qv"))
 
+  /** The IVFADC index at `levels` coarse levels, sized for n. */
+  private def ivfpq(n: Long, levels: Int, rerank: Int = 50) =
+    Ann.index(embs, n, levels, codes = Some(Ann.codesFor(n).copy(rerank = rerank)))
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int, Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+      r.getLong(3))).toSeq.sorted
+
   test("D7g probe-all + rerank-all degrades to exact brute force") {
     // probing every coarse cell makes every vector an ADC candidate,
     // and rerank >= n re-ranks them all EXACTLY — so the whole
     // composite must equal brute-force L2 row-for-row, whatever the
     // coarse assignment or residual codes did in between (the
-    // twoLevelTopK exhaustive-probe pin, ported to IVFADC)
+    // two-level cosine exhaustive-probe pin, ported to IVFADC)
     val n = embs.count()
     val queries = embs.filter(col("id") < 5)
-    val kc = graft.operators.Ann.centroidCountFor(n).toInt + 2
-    val got = IvfPq.ivfPqTopK(embs, queries, n, dim = 64, m = 8,
-        ksTarget = 16, nprobe = kc, k = 5, rerank = n.toInt)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
-    val bf = Pq.bruteForceL2TopK(embs, queries, k = 5)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
-    assert(got.sortBy(r => (r._1, r._2)).toSeq == bf.sortBy(r => (r._1, r._2)).toSeq)
+    val kc = Ann.centroidCountFor(n).toInt + 2
+    val got = Ann.topK(ivfpq(n, 1, rerank = n.toInt), queries, nprobe = kc, k = 5)
+    assert(rows(got) == rows(Pq.bruteForceL2TopK(embs, queries, k = 5)))
   }
 
   test("D7g default budget returns k rows per query with valid exact distances") {
     val n = embs.count()
     val queries = embs.filter(col("id") < 5)
-    val rows = IvfPq.ivfPqTopK(embs, queries, n, k = 10).collect()
-    val byQ = rows.groupBy(_.getLong(0))
+    val got = Ann.topK(ivfpq(n, 1), queries, k = 10).collect()
+    val byQ = got.groupBy(_.getLong(0))
     assert(byQ.size == 5 && byQ.values.forall(_.length == 10))
     // dist2 column is the EXACT re-ranked distance: non-negative,
     // non-decreasing in rn within each query
@@ -54,14 +58,9 @@ class IvfPqSpec extends AnyFunSuite {
     // D7g pin applied to the two-stage coarse quantizer
     val n = embs.count()
     val queries = embs.filter(col("id") < 5)
-    val c1 = graft.operators.Ann.coarseCountFor(n).toInt + 2
-    val got = IvfPq.ivfPq2TopK(embs, queries, n, dim = 64, m = 8,
-        ksTarget = 16, nprobe1 = c1, nprobe2 = n.toInt, k = 5,
-        rerank = n.toInt)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
-    val bf = Pq.bruteForceL2TopK(embs, queries, k = 5)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
-    assert(got.sortBy(r => (r._1, r._2)).toSeq == bf.sortBy(r => (r._1, r._2)).toSeq)
+    val got = Ann.topK(ivfpq(n, 2, rerank = n.toInt), queries,
+      nprobe = n.toInt, k = 5)
+    assert(rows(got) == rows(Pq.bruteForceL2TopK(embs, queries, k = 5)))
   }
 
   test("D7h a fine seed lands in its own (cell1, cell2) with residual exactly zero") {
@@ -71,20 +70,20 @@ class IvfPqSpec extends AnyFunSuite {
     // FINE centroid — must be exactly zero; pins the two-stage
     // assignment and the residual-source selection in one shot
     val n = embs.count()
-    val ix = IvfPq.index2(embs, n)
-    val seedId = ix.fine.select(explode(col("fb")).as("e"))
+    val ix = IvfPq.build(ivfpq(n, 2))
+    val seedId = ix.fine.get.select(explode(col("fb")).as("e"))
       .select(col("e.c_id").as("c_id")).orderBy(col("c_id"))
       .limit(1).collect()(0).getLong(0)
-    val row0 = IvfPq.assignResidual2(embs.filter(col("id") === seedId), ix)
+    val row0 = IvfPq.residuals(embs.filter(col("id") === seedId), ix)
       .collect()(0)
-    assert(row0.getLong(2) == seedId,
+    assert(row0.getAs[Long]("cell2") == seedId,
       "fine seed must land in its own fine cell")
-    assert(row0.getSeq[Long](3).forall(_ == 0L),
+    assert(row0.getAs[Seq[Long]]("res").forall(_ == 0L),
       "fine seed's residual must be exactly zero")
     // default budget: k rows per query, exact non-decreasing distances
     val queries = embs.filter(col("id") < 5)
-    val rows = IvfPq.ivfPq2TopK(embs, queries, n, k = 10).collect()
-    val byQ = rows.groupBy(_.getLong(0))
+    val got = Ann.topK(ivfpq(n, 2), queries, k = 10).collect()
+    val byQ = got.groupBy(_.getLong(0))
     assert(byQ.size == 5 && byQ.values.forall(_.length == 10))
     byQ.values.foreach { qRows =>
       val ordered = qRows.sortBy(_.getInt(1)).map(_.getLong(3))
@@ -98,46 +97,49 @@ class IvfPqSpec extends AnyFunSuite {
     // exactly 0 — pins both the argmin (d²=0 beats everything) and the
     // residual arithmetic in one shot.
     val n = embs.count()
-    val ix = IvfPq.index(embs, n)
+    val ix = IvfPq.build(ivfpq(n, 1))
     val c0 = ix.coarse.orderBy(col("c_id")).limit(1).collect()
     assert(c0.length == 1, "the coarse codebook must be non-empty")
     val seedId = c0(0).getLong(1)
-    val row0 = IvfPq.assignResidual(embs.filter(col("id") === seedId),
-        ix.coarseArr, ix.kc, 64).collect()(0)
-    assert(row0.getLong(1) == c0(0).getLong(0),
+    val row0 = IvfPq.residuals(embs.filter(col("id") === seedId), ix)
+      .collect()(0)
+    assert(row0.getAs[Long]("cell") == c0(0).getLong(0),
       "centroid vector must land in its own cell")
-    assert(row0.getSeq[Long](2).forall(_ == 0L),
+    assert(row0.getAs[Seq[Long]]("res").forall(_ == 0L),
       "centroid vector's residual must be exactly zero")
     // recall for the composite stays within [0, 1] and the audit shape
     // matches q81's (one row, exact-integer hit counts)
     val queries = embs.filter(col("id") < 5)
     val truth = Pq.bruteForceL2TopK(embs, queries, k = 10)
       .select(col("q_id"), col("neighbor"))
-    val ipq = IvfPq.ivfPqTopK(embs, queries, n, k = 10)
-      .select(col("q_id"), col("neighbor"), lit(1).as("hit"))
-    val audit = truth.join(ipq, Seq("q_id", "neighbor"), "left")
-      .agg(count(lit(1)).as("n_truth"),
-        sum(coalesce(col("hit"), lit(0))).as("n_hits")).collect()(0)
-    assert(audit.getLong(0) == 50L)
-    assert(audit.getLong(1) >= 0L && audit.getLong(1) <= audit.getLong(0))
+    val ipq = Ann.topK(ivfpq(n, 1), queries, k = 10)
+    val audit = Ann.recallAudit(truth, ipq, "ivfpq").collect()(0)
+    assert(audit.getLong(1) == 50L)
+    assert(audit.getLong(2) >= 0L && audit.getLong(2) <= audit.getLong(1))
   }
 
   test("the auto face routes by corpus size: single-level below the threshold, two-level above") {
     val n = embs.count()
     val queries = embs.filter(col("id") < 5)
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int, Long, Long)] =
-      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        r.getLong(3))).toSeq.sorted
-    // sf0.001's corpus is far below the default threshold: auto == single
-    assert(n < IvfPq.twoLevelThreshold)
-    assert(rows(IvfPq.ivfPqAutoTopK(embs, queries, n, k = 5)) ==
-      rows(IvfPq.ivfPqTopK(embs, queries, n, k = 5)))
-    // force the two-level face and pin it bit-identical to ivfPq2TopK
-    val saved = IvfPq.twoLevelThreshold
-    try {
-      IvfPq.twoLevelThreshold = 1L
-      assert(rows(IvfPq.ivfPqAutoTopK(embs, queries, n, k = 5)) ==
-        rows(IvfPq.ivfPq2TopK(embs, queries, n, k = 5)))
-    } finally IvfPq.twoLevelThreshold = saved
+    val codes = Some(Ann.codesFor(n))
+    // sf0.001's corpus is far below the threshold: the size-routed face
+    // is the explicit one-level index, bit for bit
+    assert(n < Ann.twoLevelThreshold)
+    assert(rows(Ann.topK(Ann.sized(embs, n, codes = codes), queries, k = 5)) ==
+      rows(Ann.topK(ivfpq(n, 1), queries, k = 5)))
+    // at and above the threshold the routed description IS the
+    // explicit two-level one, and that face runs bit-identical to a
+    // two-level index spelled out seed by seed
+    val big = Ann.twoLevelThreshold
+    val corpus = embs
+    assert(Ann.sized(corpus, big, codes = Some(Ann.codesFor(big))) ==
+      Ann.index(corpus, big, levels = 2, codes = Some(Ann.codesFor(big))))
+    def sample(stride: Long) = Ann.Given(embs.filter(idSample(col("id"), stride))
+      .select(col("id").as("c_id"), col("qv").as("c_qv")))
+    val c1 = Ann.coarseCountFor(n)
+    val spelled = Ann.Index(embs, Seq(
+      sample(math.max(1L, n / c1)), sample(math.max(1L, n / (c1 * c1)))), codes)
+    assert(rows(Ann.topK(spelled, queries, k = 5)) ==
+      rows(Ann.topK(ivfpq(n, 2), queries, k = 5)))
   }
 }

@@ -306,30 +306,33 @@ class OperatorsSpec extends AnyFunSuite {
     val c1 = Ann.coarseCountFor(n)
     val s1 = math.max(1L, n / c1)
     val s2 = math.max(1L, n / (c1 * c1))
-    val coarseF = col("vec_id") % s1 === 0
-    val fineF = col("vec_id") % s2 === 0
-    val a2 = Ann.twoLevelAssign(embs, coarseF, fineF).cache()
+    def where(pred: org.apache.spark.sql.Column) = Ann.Given(
+      embs.filter(pred).select(col("id").as("c_id"), col("qv").as("c_qv")))
+    val coarseF = where(col("id") % s1 === 0)
+    val two = Ann.Index(embs, Seq(coarseF, where(col("id") % s2 === 0)))
+    val a2 = Ann.assign(two).cache()
     try {
       // partition property: every vector labeled exactly once
       assert(a2.count() == n)
       // the coarse stage is the single-level assignment, bit-for-bit
-      val a1 = graft.operators.Ann.ivfAssign(embs, coarseF)
+      val a1 = Ann.assign(Ann.Index(embs, Seq(coarseF)))
         .select(col("vec_id"), col("cell").as("cell1"))
       assert(a2.select("vec_id", "cell1").except(a1).count() == 0)
       // cell2 = -1 exactly on the coarse cells that hold no fine seed
-      val seeded = a2.filter(fineF).select("cell1").distinct()
+      val fineV = col("vec_id") % s2 === 0
+      val seeded = a2.filter(fineV).select("cell1").distinct()
         .collect().map(_.getLong(0)).toSet
       val bad = a2.filter(
         (col("cell2") === -1L) =!= !col("cell1").isin(seeded.toSeq: _*))
       assert(bad.count() == 0)
       // fine labels are real centroids of the row's own coarse cell
-      val fineCents = a2.filter(fineF)
+      val fineCents = a2.filter(fineV)
         .select(col("cell1"), col("vec_id").as("cell2"))
       assert(a2.filter(col("cell2") =!= -1L).select("cell1", "cell2")
         .except(fineCents).count() == 0)
       // the pair operator == an independently-joined recomputation, and
       // every emitted pair passes the exact-cosine threshold
-      val pairs = Ann.twoLevelBlockedPairs(embs, coarseF, fineF, 0.4)
+      val pairs = Ann.blockedPairs(two, 0.4)
       val manual = a2.as("a").join(a2.as("b"),
           col("a.cell1") === col("b.cell1") &&
             col("a.cell2") === col("b.cell2") &&
@@ -345,7 +348,7 @@ class OperatorsSpec extends AnyFunSuite {
     } finally a2.unpersist()
   }
 
-  test("D7e twoLevelTopK: full probe == brute force; scores exact; k-bounded") {
+  test("D7e two-level topK: full probe == brute force; scores exact; k-bounded") {
     import org.apache.spark.sql.functions._
     import graft.functions.GraftFunctions._
     import graft.operators.Ann
@@ -355,19 +358,20 @@ class OperatorsSpec extends AnyFunSuite {
     val c1 = Ann.coarseCountFor(n)
     val s1 = math.max(1L, n / c1)
     val s2 = math.max(1L, n / (c1 * c1))
-    val coarseF = col("vec_id") % s1 === 0
-    val fineF = col("vec_id") % s2 === 0
-    val qF = col("vec_id") < 5
+    def where(pred: org.apache.spark.sql.Column) = Ann.Given(
+      embs.filter(pred).select(col("id").as("c_id"), col("qv").as("c_qv")))
+    val two = Ann.Index(embs,
+      Seq(where(col("id") % s1 === 0), where(col("id") % s2 === 0)))
+    val queries = embs.filter(col("id") < 5)
     // probing EVERY coarse cell and every fine cell makes the candidate
     // set the whole corpus, so the approximate search must equal the
     // exact baseline row-for-row (same tie-break, same arithmetic)
-    val full = Ann.twoLevelTopK(embs, coarseF, fineF, qF,
-      nprobe1 = n.toInt, nprobe2 = n.toInt, k = 10)
-    val brute = Ann.bruteForceTopK(embs, embs.filter(qF), k = 10)
+    val full = Ann.topK(two, queries, nprobe = n.toInt, k = 10)
+    val brute = Ann.bruteForceTopK(embs, queries, k = 10)
     assert(full.except(brute).count() == 0 && brute.except(full).count() == 0)
     // default probes: per-query ≤ k rows, no self-hits, descending
     // scores, and every reported score is the exact quantized cosine
-    val out = Ann.twoLevelTopK(embs, coarseF, fineF, qF).cache()
+    val out = Ann.topK(two, queries).cache()
     try {
       assert(out.filter(col("q_id") === col("neighbor")).count() == 0)
       assert(out.groupBy("q_id").count().filter(col("count") > 10).count() == 0)
@@ -387,57 +391,67 @@ class OperatorsSpec extends AnyFunSuite {
   test("D7b auto faces route by corpus size: sub-threshold == single-level, above == two-level") {
     import org.apache.spark.sql.functions._
     import graft.functions.GraftFunctions._
-    import graft.operators.{Ann, Cluster, IvfPq}
+    import graft.operators.Ann
     val embs = Tables.t(spark, sfDir, "embeddings")
       .select(col("vec_id").as("id"), quantize(col("embedding")).as("qv"))
     val n = embs.count()
-    val qF = col("vec_id") < 5
-    val prevThresh = IvfPq.twoLevelThreshold
+    val queries = embs.filter(col("id") < 5)
+    val big = Ann.twoLevelThreshold
+    // the routing rule: levels are a function of n alone
+    assert(Ann.levelsFor(big - 1) == 1 && Ann.levelsFor(big) == 2)
+    for (rounds <- Seq(0, 1); codes <- Seq(None, Some(Ann.codesFor(big)))) {
+      assert(Ann.sized(embs, big - 1, rounds, codes) ==
+        Ann.index(embs, big - 1, levels = 1, rounds, codes))
+      assert(Ann.sized(embs, big, rounds, codes) ==
+        Ann.index(embs, big, levels = 2, rounds, codes))
+    }
+    // branch 1: sf0.001's corpus is below the threshold — the routed
+    // face IS the oracled single-level index over its uniform sample,
+    // row for row, for both the sampled and the kmeans-refined codebook
+    assert(n < big)
+    val stride = math.max(1L, n / Ann.centroidCountFor(n))
+    def sample(stride: Long) = Ann.Given(embs.filter(idSample(col("id"), stride))
+      .select(col("id").as("c_id"), col("qv").as("c_qv")))
+    val single = Ann.topK(Ann.Index(embs, Seq(sample(stride))),
+      queries, nprobe = 4, k = 10)
+    val routed = Ann.topK(Ann.sized(embs, n), queries, nprobe = 4, k = 10)
+    assert(routed.except(single).count() == 0 &&
+      single.except(routed).count() == 0)
+    val cb = graft.operators.Cluster.kmeansCodebook(embs,
+      idSample(col("id"), stride), rounds = 1)
+    val singleK = Ann.topK(Ann.Index(embs, Seq(Ann.Given(cb))), queries,
+      nprobe = 4, k = 10)
+    val routedK = Ann.topK(Ann.sized(embs, n, rounds = 1), queries,
+      nprobe = 4, k = 10)
+    assert(routedK.except(singleK).count() == 0 &&
+      singleK.except(routedK).count() == 0)
+    // branch 2: the two-level face the router picks at scale, built
+    // explicitly for this corpus: the sampled index equals the
+    // independently-seeded two-level index row for row
+    val c1 = Ann.coarseCountFor(n)
+    val two = Ann.topK(Ann.Index(embs, Seq(
+        sample(math.max(1L, n / c1)), sample(math.max(1L, n / (c1 * c1))))),
+      queries, nprobe = 4, k = 10)
+    val explicit2 = Ann.topK(Ann.index(embs, n, levels = 2), queries,
+      nprobe = 4, k = 10)
+    assert(explicit2.except(two).count() == 0 &&
+      two.except(explicit2).count() == 0)
+    // the kmeans two-level face: k-bounded, self-free, and scores are
+    // the exact quantized cosine (its coarse codebook is Lloyd-refined,
+    // so there is no independent replay to equal)
+    val twoK = Ann.topK(Ann.index(embs, n, levels = 2, rounds = 1), queries,
+      nprobe = 4, k = 10).cache()
     try {
-      // branch 1: corpus below the threshold — auto IS the oracled
-      // single-level face, row for row
-      IvfPq.twoLevelThreshold = n + 1
-      val stride = math.max(1L, n / Ann.centroidCountFor(n))
-      val single = Ann.ivfTopK(embs, qF,
-        centroidFilter = idSample(col("vec_id"), stride), nprobe = 4, k = 10)
-      val autoLo = Ann.ivfAutoTopK(embs, n, qF, nprobe = 4, k = 10)
-      assert(autoLo.except(single).count() == 0 &&
-        single.except(autoLo).count() == 0)
-      val cb = Cluster.kmeansCodebook(embs,
-        idSample(col("id"), stride), rounds = 1)
-      val singleK = Ann.ivfTopKWith(embs, cb, qF, nprobe = 4, k = 10)
-      val autoKLo = Ann.ivfKmeansAutoTopK(embs, n, qF,
-        rounds = 1, nprobe = 4, k = 10)
-      assert(autoKLo.except(singleK).count() == 0 &&
-        singleK.except(autoKLo).count() == 0)
-      // branch 2: threshold forced below the corpus — auto IS the
-      // two-level probe (and, probing exhaustively, equals brute force)
-      IvfPq.twoLevelThreshold = 1L
-      val c1 = Ann.coarseCountFor(n)
-      val two = Ann.twoLevelTopK(embs,
-        coarseFilter = idSample(col("vec_id"), math.max(1L, n / c1)),
-        fineFilter = idSample(col("vec_id"), math.max(1L, n / (c1 * c1))),
-        qF, nprobe1 = 4, nprobe2 = 4, k = 10)
-      val autoHi = Ann.ivfAutoTopK(embs, n, qF, nprobe = 4, k = 10)
-      assert(autoHi.except(two).count() == 0 &&
-        two.except(autoHi).count() == 0)
-      // the kmeans auto face above threshold: k-bounded, self-free, and
-      // scores are the exact quantized cosine (its coarse codebook is
-      // Lloyd-refined, so there is no independent replay to equal)
-      val autoKHi = Ann.ivfKmeansAutoTopK(embs, n, qF,
-        rounds = 1, nprobe = 4, k = 10).cache()
-      try {
-        assert(autoKHi.filter(col("q_id") === col("neighbor")).count() == 0)
-        assert(autoKHi.groupBy("q_id").count()
-          .filter(col("count") > 10).count() == 0)
-        assert(autoKHi.count() > 0)
-        val qv = embs.select(col("id").as("q_id"), col("qv").as("a"))
-        val nv = embs.select(col("id").as("neighbor"), col("qv").as("b"))
-        assert(autoKHi.join(qv, "q_id").join(nv, "neighbor")
-          .filter(quantCosine(col("a"), col("b")) =!= col("cos_sim"))
-          .count() == 0)
-      } finally autoKHi.unpersist()
-    } finally IvfPq.twoLevelThreshold = prevThresh
+      assert(twoK.filter(col("q_id") === col("neighbor")).count() == 0)
+      assert(twoK.groupBy("q_id").count()
+        .filter(col("count") > 10).count() == 0)
+      assert(twoK.count() > 0)
+      val qv = embs.select(col("id").as("q_id"), col("qv").as("a"))
+      val nv = embs.select(col("id").as("neighbor"), col("qv").as("b"))
+      assert(twoK.join(qv, "q_id").join(nv, "neighbor")
+        .filter(quantCosine(col("a"), col("b")) =!= col("cos_sim"))
+        .count() == 0)
+    } finally twoK.unpersist()
   }
 
   test("E5 GraftExtensions exposes native functions to spark.sql") {

@@ -25,7 +25,7 @@ class PlanLintSpec extends AnyFunSuite {
     *         plan shows no join at all)
     *  - q60: one-row broadcast max-source-mass aggregate
     *  - q61: one-row broadcast top-V vocabulary array
-    *  - q67: one-row broadcast kmeans-refined codebook (ivfTopKWith) —
+    *  - q67: one-row broadcast kmeans-refined codebook (Ann.Kmeans) —
     *         same shape as q43, the codebook just comes from Lloyd
     *         rounds instead of the modulo sample
     *  - q68: the recall audit composes q35's broadcast query batch and
@@ -33,7 +33,7 @@ class PlanLintSpec extends AnyFunSuite {
     *         above; the audit adds only keyed joins on top
     *  - q69: same composition as q68 with the kmeans-refined codebook
     *         (q67's one-row broadcast) in place of the modulo sample
-    *  - q70: one-row broadcast COARSE codebook (twoLevelAssign's first
+    *  - q70: one-row broadcast COARSE codebook (the two-level index's first
     *         stage, as in q34); the fine stage and the pair join are
     *         both cell-key equi-joins
     *  - q71: the recall audit composes q35's broadcast query batch and

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
-import graft.operators.Pq
+import graft.operators.{Ann, Pq}
 
 /** D7f product quantization (SURVEY.md §2) — q80/q81 gate engine-vs-
   * DuckDB equality; these pin the operator semantics: the approximation
@@ -22,8 +22,8 @@ class PqSpec extends AnyFunSuite {
     // itself at d²=0, so ADC distance IS the exact distance and the PQ
     // path must equal brute-force L2 row-for-row
     val queries = embs.filter(col("id") < 5)
-    val pq = Pq.adcTopK(embs, queries, stride = 1L, m = 8, subDim = 8,
-      k = 5, rerank = 20).collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
+    val pq = Ann.topK(Ann.Index(embs, Nil, Some(Ann.Codes(stride = 1L, rerank = 20))),
+      queries, k = 5).collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
     val bf = Pq.bruteForceL2TopK(embs, queries, k = 5)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
     assert(pq.sortBy(r => (r._1, r._2)).toSeq == bf.sortBy(r => (r._1, r._2)).toSeq)

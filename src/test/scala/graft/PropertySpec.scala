@@ -94,7 +94,8 @@ class PropertySpec extends AnyFunSuite {
     check(Prop.forAll(vecGen, Gen.chooseNum(2, 5)) { (vecs, k) =>
       val df = vecs.zipWithIndex
         .map { case (v, i) => (i.toLong, v.toArray) }.toDF("id", "qv")
-      val got = graft.operators.Cluster.kmeansAssign(df, k, iters = 1)
+      val got = graft.operators.Cluster
+        .kmeansAssignSeeded(df, col("id") < k, iters = 1)
         .select("id", "cluster").as[(Long, Long)].collect().toMap
       def cos(a: Seq[Long], b: Seq[Long]): Double = {
         val dot = a.zip(b).map { case (x, y) => x * y }.sum.toDouble
