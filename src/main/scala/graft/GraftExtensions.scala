@@ -8,9 +8,9 @@ import org.apache.spark.sql.SparkSessionExtensions
   * reference gets by registering scalar UDFs with DataFusion's context
   * (/root/reference/src/core/execution.rs:1).
   *
-  * Use: `SparkSession.builder.config("spark.sql.extensions",
-  * "graft.GraftExtensions")` (cluster-wide via spark-defaults) or
-  * `.withExtensions(new GraftExtensions)`.
+  * Use: `spark.sql.extensions=graft.GraftExtensions` on the session's
+  * builder (`LocalSpark.session` sets it; cluster-wide via
+  * spark-defaults) or `.withExtensions(new GraftExtensions)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Generates PLANS.md: the formatted physical plan of each headline
   * query with the scale property it is audited for — the written form of
   * the explain-and-iterate loop (SURVEY.md §5). Run:
@@ -65,13 +63,8 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 4 cores on any machine, so PLANS.md does not depend on the host
+    val spark = LocalSpark.session(4)
     val sb = new StringBuilder
     sb ++= "# PLANS — physical-plan audit of the headline queries\n\n"
     sb ++= s"Generated by `graft.PlanAudit` against `$dir`. Each query is\n"

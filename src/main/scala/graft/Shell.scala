@@ -2,8 +2,6 @@ package graft
 
 import scala.io.StdIn
 
-import org.apache.spark.sql.SparkSession
-
 import graft.engine.GraftSession
 
 /** Interactive SQL shell — the library equivalent of connecting a mysql
@@ -17,15 +15,7 @@ object Shell {
   def main(args: Array[String]): Unit = {
     val warehouse = if (args.length > 0) args(0) else "/tmp/graft-warehouse"
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[*]")
-      .appName("graft-shell")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session(LocalSpark.nproc)
     Tables.registerAll(spark, sfDir)
     val g = new GraftSession(spark, warehouse)
     println(s"graft shell — warehouse: $warehouse, testdata: $sfDir")

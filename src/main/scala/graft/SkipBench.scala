@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** E9 data-skipping scale evidence (dev tool, like Explain/PlanAudit):
   * loads `SPARK_GRAFT_SF_DIR`'s lineitem into a managed table,
   * OPTIMIZE ... SORT BY (l_shipdate), then times a narrow ship-date
@@ -17,14 +15,8 @@ import org.apache.spark.sql.SparkSession
 object SkipBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(LocalSpark.cores(LocalSpark.nproc))
+    val meter = new LocalSpark.Meter(spark)
     val wh = Files.createTempDirectory("graft-skipbench").toString
     val g = new engine.GraftSession(spark, wh)
     g.sql("create schema sb"); g.sql("use sb")
@@ -45,15 +37,15 @@ object SkipBench {
       "where l_shipdate between date '1998-06-01' and date '1998-06-30'"
     var matched = 0L
     def time(): Double = {
-      val t0 = System.nanoTime()
-      matched = g.sql(q).collect()(0).getLong(1)
-      (System.nanoTime() - t0) / 1e9
+      val (rows, seconds, _) = meter.measure(g.sql(q).collect())
+      matched = rows(0).getLong(1)
+      seconds
     }
     def best(): Double = { time(); math.min(time(), time()) }
-    val prunedBefore = org.apache.spark.sql.graft.Skipping.filesPruned.get()
+    def prunedBy(sql: String): Long =
+      meter.measure(g.sql(sql).collect())._3.filesPruned
     val withSkip = best()
-    val pruned =
-      (org.apache.spark.sql.graft.Skipping.filesPruned.get() - prunedBefore) / 3
+    val pruned = prunedBy(q)
     val side = dir.resolve(sources.FileSkipStats.SidecarName)
     val saved = Files.readAllBytes(side)
     Files.delete(side) // no sidecar -> every file scheduled
@@ -70,12 +62,6 @@ object SkipBench {
     val a = lo + (hi - lo) * 40 / 100
     val b = a + (hi - lo) * 2 / 100
     val okeyQ = s"select count(*) as c from li where l_orderkey between $a and $b"
-    def prunedBy(sql: String): Long = {
-      val before = org.apache.spark.sql.graft.Skipping.filesPruned.get()
-      g.sql(sql).collect()
-      org.apache.spark.sql.graft.Skipping.filesPruned.get() - before
-    }
-    val sortDate = prunedBy(q)
     val sortOkey = prunedBy(okeyQ)
 
     // bloom contrast (round 15): an EXACT point probe on the unclustered
@@ -114,7 +100,7 @@ object SkipBench {
       s""""files_pruned_per_run":$pruned,"rows_matched":$matched,""" +
       s""""wall_with_skip_s":${f"$withSkip%.3f"},""" +
       s""""wall_no_skip_s":${f"$noSkip%.3f"},""" +
-      s""""sortby_pruned":{"date":$sortDate,"okey":$sortOkey},""" +
+      s""""sortby_pruned":{"date":$pruned,"okey":$sortOkey},""" +
       s""""bloom_point_pruned":{"absent":$bloomAbsent,"present":$bloomPresent},""" +
       s""""zorder_files":$zTotal,""" +
       s""""zorder_pruned":{"date":$zDate,"okey":$zOkey}}""")

@@ -1293,6 +1293,8 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       "(?:constraint\\s+(?:([`\\w]+)\\s+)?)?unique\\b(.*)").r
   private val DropIndexR =
     "(?is)alter\\s+table\\s+([`\\w.]+)\\s+drop\\s+(?:index|key)\\s+([`\\w]+)\\s*".r
+  private val KeysR =
+    "(?is)alter\\s+table\\s+([`\\w.]+)\\s+(?:disable|enable)\\s+keys\\s*".r
 
   private def alterTable(stmt: String): DataFrame = {
     // a top-level comma means a multi-action ALTER (splitTopLevel is
@@ -1445,6 +1447,13 @@ class GraftSession(val spark: SparkSession, warehouse: String,
           uniques = m.uniques.map(u => u.copy(cols = u.cols.filterNot(_ == stored)))
             .filter(_.cols.nonEmpty)))
       }
+      count(0)
+    // mysqldump brackets each table's INSERTs with these; MySQL answers
+    // OK without effect for an engine that lacks the option, as here
+    case KeysR(name) =>
+      val (db, t) = qualify(name)
+      if (!catalog.tableExists(db, t))
+        throw new SqlError(1146, "42S02", s"Table '$db.$t' doesn't exist")
       count(0)
     case _ => throw SqlError.syntax(stmt)
   }

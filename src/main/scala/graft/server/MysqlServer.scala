@@ -753,15 +753,7 @@ object MysqlServerMain {
       .getOrElse(if (args.length > 0) args(0).toInt else 3307)
     val warehouse = cfg.flatMap(_.dataPath)
       .getOrElse(if (args.length > 1) args(1) else "/tmp/graft-warehouse")
-    val spark = SparkSession.builder()
-      .master("local[*]")
-      .appName("graft-mysql-server")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark.session(graft.LocalSpark.nproc)
     val server = new MysqlServer(spark, warehouse, port,
       bindHost = cfg.map(_.bindHost)).start()
     println(s"graft mysql server listening on port ${server.boundPort}")

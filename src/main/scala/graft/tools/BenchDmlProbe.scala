@@ -1,9 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Decade rehearsal of the UNIQUE/PK write-path probes (round 17,
@@ -21,27 +17,10 @@ import org.apache.spark.sql.functions._
   * Prints one JSON line; paste into BENCH_r17_adjudication.json.
   */
 object BenchDmlProbe {
-  private final class Meter extends SparkListener {
-    val bytes = new AtomicLong
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-    }
-    def reset(): Unit = bytes.set(0)
-  }
-
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/tmp/scale/sf10"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val meter = new Meter
-    spark.sparkContext.addSparkListener(meter)
+    val spark = graft.LocalSpark.session(graft.LocalSpark.cores(32))
+    val meter = new graft.LocalSpark.Meter(spark)
 
     val wh = java.nio.file.Files.createTempDirectory("graft-dmlprobe-wh").toString
     val g = new graft.engine.GraftSession(spark, wh)
@@ -62,14 +41,9 @@ object BenchDmlProbe {
 
     val steps = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Long, Long)]
     def step(name: String, rows: Long)(f: => Unit): Unit = {
-      org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
-      meter.reset()
-      val t0 = System.nanoTime()
-      f
-      val wall = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
-      steps += ((name, wall, meter.bytes.get, rows))
-      System.err.println(f"[dmlprobe] $name%-34s $wall%8.2f s  shuffle=${meter.bytes.get}%12d B")
+      val (_, wall, census) = meter.measure(f)
+      steps += ((name, wall, census.shuffleBytes, rows))
+      System.err.println(f"[dmlprobe] $name%-34s $wall%8.2f s  shuffle=${census.shuffleBytes}%12d B")
     }
 
     // 1. literal branch: ≤256 fresh single-column keys → isin point probe

@@ -882,4 +882,25 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(rows("explain analyze select /*!40001 SQL_NO_CACHE */ * from nc").nonEmpty)
     g.sql("drop table nc")
   }
+
+  test("a mysqldump-shaped script replays: DISABLE/ENABLE KEYS answer OK") {
+    g.sql("use test")
+    g.sql("create table dumped (id int, v text, primary key(id))")
+    val script =
+      """/*!40101 SET NAMES utf8 */;
+        |/*!40000 ALTER TABLE `dumped` DISABLE KEYS */;
+        |INSERT INTO `dumped` VALUES (1,'a'),(2,'b'),(3,'c');
+        |/*!40000 ALTER TABLE `dumped` ENABLE KEYS */;
+        |""".stripMargin
+    for (stmt <- graft.engine.SqlText.splitTopLevel(script, ';').map(_.trim)
+         if stmt.nonEmpty)
+      g.sql(stmt)
+    assert(rows("select id, v from dumped order by id") ==
+      Seq(Seq(1, "a"), Seq(2, "b"), Seq(3, "c")))
+    // the no-op still names a missing table
+    val e = intercept[graft.engine.SqlError](
+      g.sql("/*!40000 ALTER TABLE `no_such` DISABLE KEYS */"))
+    assert(e.code == 1146 && e.sqlState == "42S02", e.getMessage)
+    g.sql("drop table dumped")
+  }
 }

@@ -7,18 +7,11 @@ import org.apache.spark.sql.SparkSession
   */
 object SparkFixture {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-spark-wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
+    // SparkConf reads `spark.*` JVM properties: the specs' Spark-managed
+    // tables land in a fresh directory, never in the checkout
+    sys.props("spark.sql.warehouse.dir") =
+      java.nio.file.Files.createTempDirectory("graft-spark-wh").toString
+    LocalSpark.session(4)
   }
   val sfDir = "/root/testdata/sf0.001"
 }
