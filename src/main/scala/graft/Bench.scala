@@ -1,6 +1,15 @@
 package graft
 import scala.util.control.NonFatal
 
+/** The query bench: one contract line on stdout (each query's best wall
+  * time) and, from each query's second run, its job census in
+  * `bench_telemetry.json`. On the same code and data `jobs`, `stages`,
+  * `tasks`, `shuffle_records`, `files_pruned` and `output_rows` repeat
+  * exactly; `shuffle_bytes` does not — q23, q51 and q75 move by up to
+  * 0.1% between runs (sf0.001, 4 cores). A telemetry diff between two
+  * commits therefore compares `shuffle_records`, `jobs`, `stages` and
+  * `tasks`, and reads `shuffle_bytes` as a magnitude only.
+  */
 object Bench {
 
   def main(args: Array[String]): Unit = {
@@ -33,7 +42,8 @@ object Bench {
     // steady-state run — a few seconds of bench wall time buys a stable
     // cross-round comparison. The job census (jobs, stages, tasks,
     // shuffle volumes, files pruned) is read from run 2; unlike its wall
-    // time, those counts repeat from run to run.
+    // time, its counts repeat from run to run (shuffle bytes only to
+    // within 0.1% — see the object doc).
     // SPARK_GRAFT_ONLY runs a subset — the rehearsal attribution loop
     // (A/B a suspect query across heap/partition configs without paying
     // the full ladder each time). The contract artifact is always a

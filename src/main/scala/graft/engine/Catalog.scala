@@ -4,9 +4,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, filter, lit, shiftleft, shiftright, size}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, count, filter, lit, shiftleft, shiftright, size, sum, when}
 import org.apache.spark.sql.types.{ByteType, DateType, DoubleType, FloatType, IntegerType, LongType, ShortType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 object Catalog {
   /** Hidden per-row commit-sequence column of merge-on-read tables: data
@@ -64,6 +65,24 @@ object Catalog {
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]
   private[engine] def commitVersionFor(key: String): java.util.concurrent.atomic.AtomicLong =
     commitVersions.computeIfAbsent(key, _ => new java.util.concurrent.atomic.AtomicLong(0L))
+
+  /** Rows a row-level write retires (`commitRows`). */
+  sealed trait Retire
+  object Retire {
+    /** Current rows `p` holds TRUE for; FALSE and NULL keep a row. */
+    final case class Where(p: Column) extends Retire
+    /** Current rows whose tuple on the key set `cols` equals a row of
+      * `keys`, null-safe as the merge-on-read mask compares pks.
+      */
+    final case class Keys(cols: Seq[String], keys: DataFrame) extends Retire
+  }
+
+  /** What `commitRows` did: its merge-on-read commit sequence (0 on a
+    * copy-on-write table) and how many current rows it retired — None
+    * when a merge-on-read table tombstoned keys on its pk as given,
+    * without looking them up.
+    */
+  final case class Committed(seq: Long, retired: Option[Long])
 }
 
 /** Warehouse-backed catalog: schema = directory, table = directory with a
@@ -655,14 +674,14 @@ class Catalog(spark: SparkSession, val warehouse: String) {
     }
   }
 
-  /** Serialize a whole multi-step DML statement (merge-on-read UPDATE's
-    * stage → tombstone → append span, MoR DELETE's match → tombstone)
-    * against rewrites and other DML on the same table. Without it two
-    * UPDATEs can both stage from the pre-update snapshot and the earlier
-    * writer's assignment is silently lost (MySQL serializes row
-    * updates). Reuses the long rewrite lock — reentrant, so the nested
-    * append/rewrite/auto-compact calls inside the statement still work —
-    * while plain ingest appends (short lock only) stay concurrent.
+  /** Serialize a whole multi-step DML statement (match, key checks and
+    * `commitRows`) against rewrites and other DML on the same table.
+    * Without it two UPDATEs can both stage from the pre-update snapshot
+    * and the earlier writer's assignment is silently lost (MySQL
+    * serializes row updates). Reuses the long rewrite lock — reentrant,
+    * so the nested commit, rewrite and auto-compaction inside the
+    * statement still work — while plain ingest appends (short lock only)
+    * stay concurrent.
     */
   def withDmlLock[T](db: String, t: String)(f: => T): T = {
     val l = rewriteLockFor(db, t)
@@ -780,7 +799,7 @@ class Catalog(spark: SparkSession, val warehouse: String) {
   /** Allocate the next commit sequence for a table (monotonic, persisted
     * alongside the commit log; single-writer like every other commit).
     */
-  def nextSeq(db: String, t: String): Long = {
+  private def nextSeq(db: String, t: String): Long = {
     val lock = lockFor(db, t)
     lock.lock()
     try nextSeqLocked(db, t) finally lock.unlock()
@@ -814,11 +833,9 @@ class Catalog(spark: SparkSession, val warehouse: String) {
   /** Commit equality-delete tombstones: `pks` must hold exactly the pk
     * columns of rows visible at `seq` allocation time. Masks take effect
     * on the next read through the view — no data file is touched
-    * (the merge-on-read half of DELETE/UPDATE).
+    * (the merge-on-read half of `commitRows`).
     */
-  def appendDeletes(db: String, t: String, pks: DataFrame, seq: Long): Unit = {
-    val m = meta(db, t)
-    require(m.mergeOnRead, s"'$db.$t' is not a merge-on-read table")
+  private def appendDeletes(db: String, t: String, pks: DataFrame, seq: Long): Unit = {
     val out = pks.withColumn(Catalog.SeqCol, lit(seq))
     val lock = lockFor(db, t)
     lock.lock()
@@ -1067,26 +1084,150 @@ class Catalog(spark: SparkSession, val warehouse: String) {
   var autoCompactMinTombstones: Long = 10000L
   var autoCompactRatio: Double = 0.2
 
-  /** Called by DML after committing tombstones; compacts when the policy
-    * triggers. Returns whether a compaction ran. Never invoked from
-    * `rewrite` itself, so compaction cannot re-enter. GraftSession passes
-    * the session's graft_auto_compact_* variables; the defaults serve
-    * direct programmatic callers.
+  /** Run by `commitRows` after every merge-on-read commit; compacts when
+    * the policy triggers. Never invoked from `rewrite` itself, so
+    * compaction cannot re-enter.
     */
-  def maybeAutoCompact(db: String, t: String,
-                       minTombstones: Long = autoCompactMinTombstones,
-                       ratio: Double = autoCompactRatio): Boolean = {
-    val m = meta(db, t)
-    if (!m.mergeOnRead) return false
+  private def maybeAutoCompact(db: String, t: String, minTombstones: Long,
+                               ratio: Double): Unit = {
     val dels = activeTombstoneRows(db, t)
-    val trigger = dels >= minTombstones &&
-      dels >= ratio * footerRowCount(currentVersionDir(db, t))
-    if (trigger) compact(db, t)
-    trigger
+    if (dels >= minTombstones &&
+        dels >= ratio * footerRowCount(currentVersionDir(db, t)))
+      compact(db, t)
   }
 
+  /** The one row-level commit (UPDATE, DELETE, REPLACE and the index
+    * maintainers): retire the current rows `retire` names (any of its
+    * parts matching retires a row) and add `added`, as one write under
+    * the DML lock. With `set` (UPDATE; `retire` is then one `Where`) each
+    * retired row is also added back as its image under `set`, assigned
+    * left to right as MySQL does, and `check` sees those images before
+    * anything is written (the caller's 1062 checks). The victims are
+    * found once, and `retired` counts exactly the rows the write retired.
+    * The storage strategy is chosen here and nowhere else:
+    *  - merge-on-read tables tombstone the victims' pks and append the
+    *    images and `added` at ONE sequence (the tombstones mask only
+    *    strictly older rows, so the added rows survive them), then run
+    *    the auto-compaction check. Keys on the pk are tombstoned as
+    *    given — O(batch), no table read; any other `retire` finds its
+    *    victims in the current rows and pins them once, so the count,
+    *    the tombstones and the images all read one snapshot;
+    *  - every other table first probes for a victim (a scan that stops
+    *    at the first one) and, with none, just appends `added`.
+    *    Otherwise it rewrites the table in ONE pass that drops the rows
+    *    no key matches and no predicate holds TRUE for
+    *    (`!coalesce(p, false)`: a NULL keeps its row) — or, with `set`,
+    *    maps the matched rows in place — plus `added`. The count is
+    *    observed on that same pass, so a non-deterministic predicate
+    *    reports exactly the rows it changed, and a row a concurrent
+    *    append lands after the rewrite's snapshot is carried over as is.
+    * `minTombstones`/`ratio` are the auto-compaction policy
+    * (GraftSession passes the session's graft_auto_compact_* variables).
+    */
+  def commitRows(db: String, t: String, retire: Seq[Catalog.Retire],
+                 added: Option[DataFrame], minTombstones: Long, ratio: Double,
+                 set: Seq[(String, Column)] = Nil,
+                 check: DataFrame => Unit = _ => ()): Catalog.Committed =
+    withDmlLock(db, t) {
+      import Catalog.{Committed, Retire}
+      require(set.isEmpty || (retire match { case Seq(_: Retire.Where) => true; case _ => false }),
+        "an in-place assignment retires by one predicate")
+      freshenStale()
+      val m = meta(db, t)
+      // the key side is renamed apart, so a key frame derived from the
+      // table itself never makes an ambiguous self-join
+      def matching(df: DataFrame, k: Retire.Keys, how: String): DataFrame = {
+        val ks = k.cols.indices.map(i => s"_graft_key$i")
+        val keys = k.keys.select(k.cols.zip(ks).map { case (c, r) => col(s"`$c`").as(r) }: _*)
+        df.join(keys, k.cols.zip(ks).map { case (c, r) => col(s"`$c`") <=> col(r) }
+          .reduce(_ && _), how)
+      }
+      def assign(df: DataFrame, hit: Column): DataFrame = set.foldLeft(df) {
+        case (d, (c, e)) => d.withColumn(c, when(hit, e).otherwise(col(s"`$c`")))
+      }
+      if (m.mergeOnRead) {
+        val pk = m.pk.map(k => col(s"`$k`"))
+        val seq = nextSeq(db, t)
+        def land(victims: Option[DataFrame], more: Option[DataFrame]): Unit =
+          if (victims.nonEmpty || more.nonEmpty) {
+            victims.foreach(appendDeletes(db, t, _, seq))
+            more.foreach(appendRows(db, t, _, Some(seq)))
+            maybeAutoCompact(db, t, minTombstones, ratio)
+          }
+        retire match {
+          case Seq(k: Retire.Keys) if k.cols.toSet == m.pk.toSet =>
+            land(Some(k.keys.select(pk: _*)), added)
+            Committed(seq, None)
+          case Seq() =>
+            land(None, added)
+            Committed(seq, Some(0L))
+          case parts =>
+            val found = parts.map {
+              case Retire.Where(p) => read(db, t).filter(p)
+              case k: Retire.Keys => matching(read(db, t), k, "left_semi")
+            }.map(f => if (set.isEmpty) f.select(pk: _*) else f)
+            val union =
+              if (found.size == 1) found.head else found.reduce(_ unionByName _).distinct()
+            // UPDATE's images append after the tombstone commit has
+            // refreshed the dels table, which would recompute a persisted
+            // plan against the tombstoned view: its victims are staged to
+            // a temp parquet dir; pk-only victims are all read before
+            // that refresh, and a persist pins them
+            val stage = if (set.isEmpty) None else Some(Files.createTempDirectory("graft-dml-stage"))
+            val victims = stage.fold(union.persist(StorageLevel.MEMORY_AND_DISK)) { dir =>
+              union.write.mode("overwrite").parquet(dir.toString)
+              spark.read.parquet(dir.toString)
+            }
+            try {
+              val n = victims.count()
+              val images = if (set.nonEmpty && n > 0) Some(assign(victims, lit(true))) else None
+              images.foreach(check)
+              land(if (n > 0) Some(victims.select(pk: _*)) else None,
+                (images ++ added).reduceOption(_ unionByName _))
+              Committed(seq, Some(n))
+            } finally { victims.unpersist(); stage.foreach(deleteRecursively) }
+        }
+      } else {
+        // a filter drops NULL as it drops FALSE, so the probe and the
+        // check filter by the bare predicate (which the scan can push
+        // down); only the rewrite's marker needs the coalesce
+        val where = retire.collect { case Retire.Where(p) => p }.reduceOption(_ || _)
+        val keys = retire.collect { case k: Retire.Keys => k }
+        val hitP = where.fold(lit(false))(coalesce(_, lit(false)))
+        val any = where.exists(p => !read(db, t).filter(p).isEmpty) ||
+          keys.exists(k => !matching(read(db, t), k, "left_semi").isEmpty)
+        if (!any) {
+          added.foreach(append(db, t, _))
+          Committed(0L, Some(0L))
+        } else {
+          for (p <- where if set.nonEmpty) check(assign(read(db, t).filter(p), lit(true)))
+          var hit = "_graft_hit"
+          while (m.cols.exists(_.name == hit)) hit += "_"
+          val before = org.apache.spark.sql.Observation()
+          val after = org.apache.spark.sql.Observation()
+          rewrite(db, t, {
+            // the predicate lands in its own column, evaluated once per
+            // row against the original values: an assignment never sees
+            // it re-resolved over a column an earlier one changed
+            val marked = read(db, t).withColumn(hit, hitP).observe(before,
+              count(lit(1)).as("rows"), sum(col(hit).cast("long")).as("hits"))
+            val changed =
+              if (set.isEmpty) marked.filter(!col(hit)) else assign(marked, col(hit))
+            val kept = keys.foldLeft(changed.drop(hit))(matching(_, _, "left_anti"))
+              .observe(after, count(lit(1)).as("rows"))
+            added.fold(kept)(kept.unionByName(_))
+          })
+          def observed(o: org.apache.spark.sql.Observation): Row =
+            scala.concurrent.Await.result(o.future, scala.concurrent.duration.Duration(10, "min"))
+          val (in, out) = (observed(before), observed(after))
+          val mapped = if (set.isEmpty || in.isNullAt(1)) 0L else in.getLong(1)
+          Committed(0L, Some(in.getLong(0) - out.getLong(0) + mapped))
+        }
+      }
+    }
+
   /** Copy-on-write rewrite of a table's data (ALTER / TRUNCATE /
-    * compaction; also UPDATE/DELETE on non-merge-on-read tables):
+    * compaction; also `commitRows` on copy-on-write tables):
     * materialize the new contents as version N+1 (no lock held), then —
     * inside the commit critical section — hard-link any files a
     * concurrent append added to version N since the snapshot, swap the
@@ -1322,12 +1463,17 @@ class Catalog(spark: SparkSession, val warehouse: String) {
     bumpCommit(db, t)
   }
 
-  /** Append rows. Merge-on-read tables stamp the hidden seq column with
-    * `seqOpt` (an UPDATE passes its own commit sequence so new row
-    * versions survive their tombstones) or a freshly allocated one.
+  /** Append rows (INSERT, LOAD DATA, ingest). Merge-on-read tables stamp
+    * the hidden seq column with a freshly allocated sequence.
     */
-  def append(db: String, t: String, df: DataFrame,
-             seqOpt: Option[Long] = None): Unit = {
+  def append(db: String, t: String, df: DataFrame): Unit =
+    appendRows(db, t, df, None)
+
+  /** `append` at a given merge-on-read sequence (`commitRows` passes its
+    * own, so the added rows survive the tombstones of the same commit).
+    */
+  private def appendRows(db: String, t: String, df: DataFrame,
+                         seqOpt: Option[Long]): Unit = {
     val m = meta(db, t)
     val lock = lockFor(db, t)
     lock.lock()
@@ -1421,8 +1567,18 @@ class Catalog(spark: SparkSession, val warehouse: String) {
   }
 
   private def refreshRegistered(db: String, t: String, m: TableMeta): Unit = {
+    val name = s"`$db`.`$t`"
     if (m.mergeOnRead) refreshMergeOnRead(db, t)
-    else spark.catalog.refreshTable(s"`$db`.`$t`")
+    else if (m.engine == "memory") {
+      // refreshTable would re-cache the cached plan itself, whose file
+      // index the session's relation cache stops handing out (and so
+      // stops refreshing) once any refresh invalidated it — after a
+      // rewrite that plan still lists the replaced version's files.
+      // Re-cache over a fresh relation instead (lazily, as before).
+      spark.catalog.uncacheTable(name)
+      spark.catalog.refreshTable(name)
+      spark.catalog.cacheTable(name)
+    } else spark.catalog.refreshTable(name)
     refreshCatalogStats(db, t, m)
   }
 

@@ -2,13 +2,14 @@ package graft.engine
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoDir, InsertIntoStatement}
 import org.apache.spark.sql.execution.command.ExplainCommand
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.functions.{array, array_join, coalesce, col, concat, explode, expr, filter, lit, max, max_by, min, min_by, monotonically_increasing_id, not, struct, when}
+import org.apache.spark.sql.functions.{array, array_join, coalesce, col, concat, explode, expr, filter, lit, max, max_by, min, min_by, monotonically_increasing_id, struct, when}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import Catalog.Retire
 import SqlText.{bindPlaceholders, countPlaceholders, splitTopLevel, topLevelIndexOfWord}
 
 /** MySQL-surface SQL session: every command of the reference's
@@ -354,16 +355,8 @@ class GraftSession(val spark: SparkSession, warehouse: String,
   private def replaceBatch(db: String, t: String, m: Catalog#TableMeta,
                            rows: DataFrame): Long = {
     val pkCols = m.pk.map(k => col(s"`$k`"))
-    catalog.withDmlLock(db, t) {
-      catalog.freshenStale()
-      val keys = rows.select(pkCols: _*)
-      val seq = catalog.nextSeq(db, t)
-      catalog.appendDeletes(db, t, keys, seq)
-      catalog.append(db, t,
-        rows.sortWithinPartitions(pkCols: _*), seqOpt = Some(seq))
-      autoCompact(db, t)
-      seq
-    }
+    commit(db, t, Seq(Retire.Keys(m.pk, rows.select(pkCols: _*))),
+      Some(rows.sortWithinPartitions(pkCols: _*))).seq
   }
 
   /** C19/C21 codebook refresh as a ROUTINE (round 14 — the last
@@ -450,11 +443,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
         .select(pkCols: _*)
         .join(snap.select(pkCols: _*), pk, "left_anti")
         .localCheckpoint()
-      if (!orphans.isEmpty) {
-        val seq = catalog.nextSeq(dbI, tI)
-        catalog.appendDeletes(dbI, tI, orphans, seq)
-        own += seq
-      }
+      if (!orphans.isEmpty) own += commit(dbI, tI, Seq(Retire.Keys(pk, orphans))).seq
     }
     // catch-up: drain the stale window until a pass finds it empty
     var pass = 0
@@ -494,11 +483,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
         }
         if (orphans.isEmpty) return 0L
         if (pass >= maxPasses) return orphans.count()
-        catalog.withDmlLock(dbI, tI) {
-          val seq = catalog.nextSeq(dbI, tI)
-          catalog.appendDeletes(dbI, tI, orphans, seq)
-          own += seq
-        }
+        own += commit(dbI, tI, Seq(Retire.Keys(pk, orphans))).seq
         // loop: the next pass re-runs the window scans AND this audit
       }
       else if (pass >= maxPasses) return residual
@@ -561,8 +546,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       catalog.withDmlLock(dbC, tC) {
         val orphans = orphanKeysLocked(dbI, tI, dbC, tC, mI.pk)
         val n = orphans.count()
-        if (n > 0)
-          catalog.appendDeletes(dbI, tI, orphans, catalog.nextSeq(dbI, tI))
+        if (n > 0) commit(dbI, tI, Seq(Retire.Keys(mI.pk, orphans)))
         n
       }
     }
@@ -622,15 +606,6 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       .join(liveDf.as("l"), Seq("h"), "left")
       .filter(col("l.c").isNull || col("l.c") =!= col("r.c"))
       .select(col("h"), col("r.c").as("c")).localCheckpoint()
-    var dfRepairs = 0L
-    catalog.withDmlLock(dbD, tD) {
-      if (!dfExtra.isEmpty) {
-        catalog.appendDeletes(dbD, tD, dfExtra, catalog.nextSeq(dbD, tD))
-        dfRepairs += dfExtra.count()
-      }
-      if (!dfWrong.isEmpty)
-        dfRepairs += { replaceBatch(dbD, tD, mD, dfWrong); dfWrong.count() }
-    }
     // posting table: retire rows the rebuild lacks (dead docs, buckets
     // past the cap), insert rows it has that the live table lacks
     // (buckets a delete brought back under the cap)
@@ -641,18 +616,25 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     val postMissing = postRef
       .join(livePost.select(col("h"), col("doc_b")), pKeys, "left_anti")
       .localCheckpoint()
-    var postRepairs = 0L
-    catalog.withDmlLock(dbP, tP) {
-      if (!postExtra.isEmpty) {
-        catalog.appendDeletes(dbP, tP, postExtra, catalog.nextSeq(dbP, tP))
-        postRepairs += postExtra.count()
-      }
-      if (!postMissing.isEmpty)
-        postRepairs += {
-          replaceBatch(dbP, tP, mP, postMissing); postMissing.count()
-        }
-    }
-    (dfRepairs, postRepairs)
+    (applyKeyedDiff(dbD, tD, mD, dfExtra, dfWrong),
+      applyKeyedDiff(dbP, tP, mP, postExtra, postMissing))
+  }
+
+  /** Apply an index audit's keyed diff in one commit: retire the live
+    * rows the rebuild lacks (`extra`, pk columns) and replace the rows it
+    * disagrees with or misses (`fix`, full rows). Returns the number of
+    * rows retired plus replaced (0: the live index equalled the rebuild).
+    */
+  private def applyKeyedDiff(db: String, t: String, m: Catalog#TableMeta,
+                             extra: DataFrame, fix: DataFrame): Long = {
+    val pkCols = m.pk.map(k => col(s"`$k`"))
+    val (nExtra, nFix) = (extra.count(), fix.count())
+    if (nExtra + nFix > 0)
+      commit(db, t,
+        Seq(Retire.Keys(m.pk, extra.select(pkCols: _*)
+          .unionByName(fix.select(pkCols: _*)))),
+        if (nFix > 0) Some(fix.sortWithinPartitions(pkCols: _*)) else None)
+    nExtra + nFix
   }
 
   /** LIVE maintenance of the containment dedup index (round 10 — the
@@ -836,26 +818,15 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     val delM = spark.read.parquet(delDir)
     // df application is a REPLACE of the staged hashes with their staged
     // new totals — replaying it lands the identical state
-    catalog.withDmlLock(dbD, tD) {
-      catalog.freshenStale()
-      val seq = catalog.nextSeq(dbD, tD)
-      catalog.appendDeletes(dbD, tD, dfUpM.select(col("h")), seq)
-      catalog.append(dbD, tD, dfUpM, seqOpt = Some(seq))
-      autoCompact(dbD, tD)
-    }
+    commit(dbD, tD, Seq(Retire.Keys(Seq("h"), dfUpM.select(col("h")))),
+      Some(dfUpM))
     afterDfCommit()
     // posting application tombstones retire-keys AND insert-keys (the
     // latter are no-ops on first application, and make the replay a
     // replace instead of a duplicate-insert), then appends the inserts
-    catalog.withDmlLock(dbP, tP) {
-      catalog.freshenStale()
-      val seq = catalog.nextSeq(dbP, tP)
-      val delKeys = delM.select(col("h"), col("doc_b"))
-        .unionAll(insM.select(col("h"), col("doc_b")))
-      catalog.appendDeletes(dbP, tP, delKeys, seq)
-      catalog.append(dbP, tP, insM, seqOpt = Some(seq))
-      autoCompact(dbP, tP)
-    }
+    val delKeys = delM.select(col("h"), col("doc_b"))
+      .unionAll(insM.select(col("h"), col("doc_b")))
+    commit(dbP, tP, Seq(Retire.Keys(Seq("h", "doc_b"), delKeys)), Some(insM))
     afterPostingCommit()
     commitAppliedBatch(checkpoint, batchId)
     // keep THIS batch's staged record (torn-marker redelivery insurance);
@@ -937,13 +908,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     val upM = spark.read.parquet(upDir)
     // application is a REPLACE of the staged fingerprints with their
     // staged ABSOLUTE totals — replaying lands the identical state
-    catalog.withDmlLock(db, t) {
-      catalog.freshenStale()
-      val seq = catalog.nextSeq(db, t)
-      catalog.appendDeletes(db, t, upM.select(col("w")), seq)
-      catalog.append(db, t, upM, seqOpt = Some(seq))
-      autoCompact(db, t)
-    }
+    commit(db, t, Seq(Retire.Keys(Seq("w"), upM.select(col("w")))), Some(upM))
     afterCommit()
     commitAppliedBatch(checkpoint, batchId)
     reapAppliedTxnDirs(checkpoint, batchId)
@@ -986,16 +951,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       .join(live.as("l"), Seq("w"), "left")
       .filter(col("l.c").isNull || col("l.c") =!= col("r.c"))
       .select(col("w"), col("r.c").as("c")).localCheckpoint()
-    var repairs = 0L
-    catalog.withDmlLock(db, t) {
-      if (!extra.isEmpty) {
-        catalog.appendDeletes(db, t, extra, catalog.nextSeq(db, t))
-        repairs += extra.count()
-      }
-      if (!wrong.isEmpty)
-        repairs += { replaceBatch(db, t, m, wrong); wrong.count() }
-    }
-    repairs
+    applyKeyedDiff(db, t, m, extra, wrong)
   }
 
   // ---- schemas (create_db.rs / drop_schema.rs / set_default_schema.rs) ---
@@ -1845,9 +1801,9 @@ class GraftSession(val spark: SparkSession, warehouse: String,
 
   /** REPLACE INTO on a PK table: upsert by key. Within the batch the
     * LAST row for a key wins (MySQL processes rows in order); existing
-    * rows under the batch's keys are removed — tombstoned on
-    * merge-on-read tables (O(batch), the sled put-overwrite shape), or
-    * anti-joined out in one copy-on-write rewrite otherwise.
+    * rows under the batch's keys are retired and the batch added in one
+    * `commitRows` (tombstones on merge-on-read tables, O(batch) — the
+    * sled put-overwrite shape; one rewrite otherwise).
     *
     * Batch-internal winner order is defined for VALUES sources (staged
     * single-partition, so monotonically_increasing_id IS the row order)
@@ -1883,20 +1839,10 @@ class GraftSession(val spark: SparkSession, warehouse: String,
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val nKeys = deduped.count()
-        val existing = catalog.read(db, t)
-        val keys = deduped.select(pkCols: _*)
-        val nReplaced = existing.join(hintBatchKeys(keys, nKeys), m.pk, "left_semi").count()
-        val sorted = deduped.sortWithinPartitions(pkCols: _*)
-        if (m.mergeOnRead) {
-          val seq = catalog.nextSeq(db, t)
-          if (nReplaced > 0) catalog.appendDeletes(db, t, keys, seq)
-          catalog.append(db, t, sorted, seqOpt = Some(seq))
-          autoCompact(db, t)
-        } else if (nReplaced > 0) {
-          catalog.rewrite(db, t,
-            existing.join(hintBatchKeys(keys, nKeys), m.pk, "left_anti")
-              .unionByName(sorted))
-        } else catalog.append(db, t, sorted)
+        val keys = hintBatchKeys(deduped.select(pkCols: _*), nKeys)
+        val nReplaced = catalog.read(db, t).join(keys, m.pk, "left_semi").count()
+        commit(db, t, if (nReplaced > 0) Seq(Retire.Keys(m.pk, keys)) else Nil,
+          Some(deduped.sortWithinPartitions(pkCols: _*)))
         // MySQL affected-rows: every row inserts (rows) and every delete
         // event adds one — a table collision per key (nReplaced) plus
         // each batch-internal duplicate displacing the prior row
@@ -1927,66 +1873,28 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val nKeys = deduped.count()
-      val existing = catalog.read(db, t)
-      def batchKeys(kname: String, kcols: Seq[String]) =
-        keyedRows(deduped, kname, kcols)
-          .select(kcols.map(k => col(s"`$k`")): _*).distinct()
+      val retire = sets.map { case (kname, kcols) =>
+        Retire.Keys(kcols, hintBatchKeys(keyedRows(deduped, kname, kcols)
+          .select(kcols.map(k => col(s"`$k`")): _*).distinct(), nKeys))
+      }
       val sortCols = (if (m.pk.nonEmpty) m.pk else m.uniques.head.cols)
         .map(k => col(s"`$k`"))
-      if (m.mergeOnRead) {
-        // harvest the pks of every displaced existing row (collisions on
-        // any key set), tombstone them, append the batch at one sequence
-        val victimPks = sets.map { case (kname, kcols) =>
-          keyedRows(existing, kname, kcols)
-            .join(hintBatchKeys(batchKeys(kname, kcols), nKeys), kcols,
-              "left_semi")
-            .select(m.pk.map(k => col(s"`$k`")): _*)
-        }.reduce(_ unionByName _).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val nReplaced = victimPks.count()
-          val seq = catalog.nextSeq(db, t)
-          if (nReplaced > 0) catalog.appendDeletes(db, t, victimPks, seq)
-          catalog.append(db, t, deduped.sortWithinPartitions(sortCols: _*),
-            seqOpt = Some(seq))
-          autoCompact(db, t)
-          count(rows + (rows - nKeys) + nReplaced)
-        } finally victimPks.unpersist()
-      } else {
-        val sorted = deduped.sortWithinPartitions(sortCols: _*)
-        // cheap no-conflict probe first (one broadcast semi head(1) per
-        // key set): the common REPLACE-as-INSERT case stays O(batch)
-        // like replaceByPk — the two full-table counts below only run
-        // when a rewrite (itself O(table)) is happening anyway
-        val anyConflict = sets.exists { case (kname, kcols) =>
-          keyedRows(existing, kname, kcols)
-            .join(hintBatchKeys(batchKeys(kname, kcols), nKeys), kcols,
-              "left_semi")
-            .head(1).nonEmpty
-        }
-        if (!anyConflict) {
-          catalog.append(db, t, sorted)
-          count(rows + (rows - nKeys))
-        } else {
-          var remaining = existing
-          for ((kname, kcols) <- sets)
-            remaining = remaining.join(
-              hintBatchKeys(batchKeys(kname, kcols), nKeys), kcols,
-              "left_anti")
-          val nExisting = existing.count()
-          val kept = remaining
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val nReplaced = nExisting - kept.count()
-            catalog.rewrite(db, t, kept.unionByName(sorted))
-            count(rows + (rows - nKeys) + nReplaced)
-          } finally kept.unpersist()
-        }
-      }
+      // displaced rows: the existing rows that collide on any key set,
+      // found and counted once by the commit
+      val nReplaced = commit(db, t, retire,
+        Some(deduped.sortWithinPartitions(sortCols: _*))).retired.get
+      count(rows + (rows - nKeys) + nReplaced)
     } finally deduped.unpersist()
   }
 
   private val UpdateHeadR = "(?is)update\\s+([`\\w.]+)\\s+set\\s+(.+)".r
+  /** UPDATE: one `commitRows` that retires the rows WHERE holds TRUE for
+    * and adds each back as its image under the assignments — O(matched)
+    * tombstones on merge-on-read tables (update.rs rewrites per key in
+    * sled; this is the columnar equivalent of that point-write shape),
+    * one in-place rewrite otherwise. Key-column assignments are checked
+    * for 1062 before anything commits.
+    */
   private def update(stmt: String): DataFrame = stmt match {
     case UpdateHeadR(name, rest) =>
       val (db, t) = qualify(name)
@@ -1998,95 +1906,22 @@ class GraftSession(val spark: SparkSession, warehouse: String,
         if (wherePos < 0) (rest, null)
         else (rest.substring(0, wherePos), rest.substring(wherePos + 5))
       val cond = if (whereOpt == null) lit(true) else expr(whereOpt)
+      // an unknown column fails before anything is read
       val assignments = splitTopLevel(sets, ',').map(_.split("=", 2) match {
-        case Array(c, e) => clean(c.trim) -> e.trim
+        case Array(c0, e) =>
+          val c = clean(c0.trim)
+          c -> expr(e.trim).cast(m.cols.find(_.name == c)
+            .getOrElse(sys.error(s"Unknown column '$c'")).sparkDdl)
         case _ => throw SqlError.syntax(stmt)
       })
-      if (m.mergeOnRead) updateMergeOnRead(db, t, m, cond, assignments)
-      else catalog.withDmlLock(db, t) {
-        // the DML lock (reentrant — rewrite() re-takes it) spans the
-        // key-duplicate check AND the rewrite: a concurrent INSERT's own
-        // locked check-then-append must not land a key this UPDATE is
-        // about to occupy between its check and its commit
-        catalog.freshenStale()
-        // key sets from the under-lock meta (see writeRows' strict arm)
-        val ml = lockedMeta(db, t, m)
-        // Evaluate WHERE exactly once against the ORIGINAL row (MySQL
-        // semantics): a later assignment must not see the condition
-        // re-resolved against columns an earlier assignment just changed.
-        // Marker column name is made collision-free against user columns.
-        var marker = "_graft_upd"
-        while (m.cols.exists(_.name == marker)) marker += "_"
-        var df = catalog.read(db, t).withColumn(marker, cond)
-        val affected = df.filter(col(s"`$marker`")).count()
-        for ((c, e) <- assignments) {
-          val ddl = m.cols.find(_.name == c)
-            .getOrElse(sys.error(s"Unknown column '$c'")).sparkDdl
-          df = df.withColumn(c,
-            when(col(s"`$marker`"), expr(e).cast(ddl)).otherwise(col(s"`$c`")))
-        }
-        val updated = df.drop(marker)
-        // an UPDATE that writes into a key column must not create a
-        // duplicate (update.rs rewrites per-index key in the reference):
-        // one keyed count over the would-be table per TOUCHED key set
-        val touched = assignments.map(_._1).toSet
-        for ((kname, kcols) <- keySets(ml) if kcols.exists(touched);
-             row <- firstDupKey(updated, kname, kcols))
-          throwDup(t, kname, kcols, row)
-        catalog.rewrite(db, t, updated)
-        count(affected)
-      }
-    case _ => throw SqlError.syntax(stmt)
-  }
-
-  /** Merge-on-read UPDATE: tombstone the matched rows' OLD pks, append
-    * the new row versions at the same commit sequence (so the tombstones
-    * mask exactly the old copies), and never touch the rest of the
-    * table — an UPDATE of k rows writes O(k), not O(table)
-    * (update.rs rewrites per-key in sled; this is the columnar
-    * equivalent of that point-write shape).
-    */
-  private def updateMergeOnRead(db: String, t: String, m: catalog.TableMeta,
-                                cond: org.apache.spark.sql.Column,
-                                assignments: Seq[(String, String)]): DataFrame =
-    // the DML lock spans the whole stage → tombstone → append statement:
-    // two concurrent UPDATEs must not both stage from the pre-update
-    // snapshot (lost update — the later commit would silently drop the
-    // earlier one's assignment)
-    catalog.withDmlLock(db, t) {
-    // a concurrent writer may have committed between statement entry and
-    // lock acquisition — stage from the freshest state, under the lock
-    catalog.freshenStale()
-    val seq = catalog.nextSeq(db, t)
-    // matched rows pin to the CURRENT merged view by staging to a temp
-    // parquet dir: the count, tombstone write, and new-version write all
-    // read one materialized snapshot that NO catalog refresh can
-    // invalidate, and the snapshot is deterministically deleted when the
-    // statement finishes. (persist is not enough — the tombstone commit
-    // refreshes the dels table, and Spark auto-refreshes the base path
-    // on the data append; either invalidation would recompute a
-    // persisted plan against the tombstoned view and lose the new row
-    // versions. localCheckpoint pins too, but its blocks free only on a
-    // later GC — a busy server would accumulate one snapshot per
-    // UPDATE.)
-    val stage = java.nio.file.Files.createTempDirectory("graft-upd-stage")
-    try {
-      catalog.read(db, t).filter(cond).write
-        .mode("overwrite").parquet(stage.toString)
-      val matched = spark.read.parquet(stage.toString)
-      val affected = matched.count()
-      if (affected > 0) {
-        var upd = matched
-        for ((c, e) <- assignments) {
-          val ddl = m.cols.find(_.name == c)
-            .getOrElse(sys.error(s"Unknown column '$c'")).sparkDdl
-          upd = upd.withColumn(c, expr(e).cast(ddl))
-        }
-        // key-column updates must not create duplicates — within the
-        // updated rows or against the UNMATCHED remainder of the table
-        // (checked before any tombstone lands, so a 1062 leaves the
-        // table untouched)
-        val touched = assignments.map(_._1).toSet
+      val touched = assignments.map(_._1).toSet
+      // key-column updates must not create duplicates — within the
+      // updated rows or against the UNMATCHED remainder of the table.
+      // The check runs inside the commit's DML lock, so a concurrent
+      // INSERT cannot land a key this UPDATE is about to occupy between
+      // the check and the write; key sets come from the under-lock meta
+      // (see writeRows' strict arm)
+      def checkKeys(upd: DataFrame): Unit = {
         val checkSets = keySets(lockedMeta(db, t, m)).filter(_._2.exists(touched))
         if (checkSets.nonEmpty) {
           val rest = catalog.read(db, t).filter(!coalesce(cond, lit(false)))
@@ -2100,55 +1935,31 @@ class GraftSession(val spark: SparkSession, warehouse: String,
             for (row <- dup) throwDup(t, kname, kcols, row)
           }
         }
-        // tombstones first, refreshed immediately: a concurrent reader
-        // sees the rows briefly deleted, never duplicated (the data
-        // append auto-refreshes the base path the instant its files
-        // land, so a deferred dels refresh WOULD expose old+new rows)
-        catalog.appendDeletes(db, t,
-          matched.select(m.pk.map(k => col(s"`$k`")): _*), seq)
-        catalog.append(db, t, upd, seqOpt = Some(seq))
-        autoCompact(db, t)
       }
-      count(affected)
-    } finally deleteDirTree(stage)
-    }
+      // WHERE is evaluated against the ORIGINAL rows (MySQL semantics: a
+      // later assignment never re-resolves the condition)
+      count(commit(db, t, Seq(Retire.Where(cond)), set = assignments,
+        check = checkKeys).retired.get)
+    case _ => throw SqlError.syntax(stmt)
+  }
 
   private val DeleteR =
     "(?is)delete\\s+from\\s+([`\\w.]+)(?:\\s+where\\s+(.+))?".r
   private def delete(stmt: String): DataFrame = stmt match {
     case DeleteR(name, whereOpt) =>
       val (db, t) = qualify(name)
-      val m = catalog.meta(db, t)
-      val df = catalog.read(db, t)
       if (whereOpt == null) {
         // full-table delete: the rewrite (empty v+1) also retires any
         // accumulated tombstones, cheaper than tombstoning every row
+        val df = catalog.read(db, t)
         val n = df.count()
         catalog.rewrite(db, t, df.limit(0))
         count(n)
-      } else if (m.mergeOnRead) {
-        // merge-on-read DELETE: write pk tombstones only — O(matched),
-        // not O(table) (delete.rs point-deletes sled keys; same shape).
-        // DML lock spans match → tombstone, like updateMergeOnRead.
-        catalog.withDmlLock(db, t) {
-          catalog.freshenStale()
-          val seq = catalog.nextSeq(db, t)
-          val matched = df.filter(expr(whereOpt))
-            .select(m.pk.map(k => col(s"`$k`")): _*)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val affected = matched.count()
-            if (affected > 0) {
-              catalog.appendDeletes(db, t, matched, seq)
-              autoCompact(db, t)
-            }
-            count(affected)
-          } finally matched.unpersist()
-        }
       } else {
-        val affected = df.filter(expr(whereOpt)).count()
-        catalog.rewrite(db, t, df.filter(not(expr(whereOpt))))
-        count(affected)
+        // delete.rs point-deletes sled keys; here the matched rows retire
+        // in one commit (pk tombstones, O(matched), or one rewrite),
+        // which finds and counts them once
+        count(commit(db, t, Seq(Retire.Where(expr(whereOpt)))).retired.get)
       }
     case _ => throw SqlError.syntax(stmt)
   }
@@ -2164,18 +1975,21 @@ class GraftSession(val spark: SparkSession, warehouse: String,
   private val SetUserR = "(?is)set\\s+@(\\w+)\\s*:?=\\s*(.+)".r
   private val SetR =
     "(?is)set\\s+(global\\s+|session\\s+)?@?@?([\\w.]+)\\s*=\\s*(.+)".r
-  /** Merge-on-read auto-compaction after a tombstone-writing DML, with
-    * the policy read from the graft_auto_compact_* system variables
-    * (SET for this session, SET GLOBAL durably for the warehouse) —
-    * SURVEY §5's tombstone-bytes-vs-reread knob, production default ON.
+  /** `Catalog.commitRows` under this session's auto-compaction policy,
+    * read from the graft_auto_compact_* system variables (SET for this
+    * session, SET GLOBAL durably for the warehouse) — SURVEY §5's
+    * tombstone-bytes-vs-reread knob, production default ON.
     */
-  private def autoCompact(db: String, t: String): Unit = {
-    val minT = variables.get("graft_auto_compact_min_tombstones")
-      .flatMap(_.toLongOption).getOrElse(catalog.autoCompactMinTombstones)
-    val ratio = variables.get("graft_auto_compact_ratio")
-      .flatMap(_.toDoubleOption).getOrElse(catalog.autoCompactRatio)
-    catalog.maybeAutoCompact(db, t, minT, ratio)
-  }
+  private def commit(db: String, t: String, retire: Seq[Catalog.Retire],
+                     added: Option[DataFrame] = None,
+                     set: Seq[(String, Column)] = Nil,
+                     check: DataFrame => Unit = _ => ()): Catalog.Committed =
+    catalog.commitRows(db, t, retire, added,
+      variables.get("graft_auto_compact_min_tombstones")
+        .flatMap(_.toLongOption).getOrElse(catalog.autoCompactMinTombstones),
+      variables.get("graft_auto_compact_ratio")
+        .flatMap(_.toDoubleOption).getOrElse(catalog.autoCompactRatio),
+      set, check)
 
   private def setVariable(stmt: String): DataFrame = stmt match {
     case SetUserR(name, value) =>

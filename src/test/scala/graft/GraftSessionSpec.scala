@@ -903,4 +903,97 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(e.code == 1146 && e.sqlState == "42S02", e.getMessage)
     g.sql("drop table dumped")
   }
+
+  test("regression: DELETE keeps rows whose predicate is NULL on every engine and layout") {
+    val gs = new GraftSession(spark.newSession(),
+      Files.createTempDirectory("graft-wh-dnull").toString)
+    gs.sql("create schema dnull")
+    gs.sql("use dnull")
+    def rs(sql: String) = gs.sql(sql).collect().toSeq.map(_.toSeq)
+    val layouts =
+      (for (engine <- Seq("sled", "parquet", "csv", "memory");
+            (kind, cols) <- Seq("pk" -> "id int primary key, v int",
+                                "nokey" -> "id int, v int"))
+       yield s"${engine}_$kind" -> s"($cols) engine=$engine") :+
+        ("partitioned" -> "(id int, v int, site varchar(4)) partition by (site)")
+    for ((name, ddl) <- layouts) {
+      gs.sql(s"create table $name $ddl")
+      val values =
+        if (name == "partitioned") "(1,5,'a'),(2,NULL,'a'),(3,7,'b')"
+        else "(1,5),(2,NULL),(3,7)"
+      gs.sql(s"insert into $name values $values")
+      assert(rs(s"delete from $name where v = 5") == Seq(Seq(1L)), name)
+      assert(rs(s"select id from $name order by id") == Seq(Seq(2), Seq(3)), name)
+      assert(rs(s"delete from $name where v > 100") == Seq(Seq(0L)), name)
+      assert(rs(s"select count(*) from $name") == Seq(Seq(2L)), name)
+    }
+    // a NULL in a UNIQUE column is not a match either
+    gs.sql("create table uq (id int primary key, u varchar(4), unique key (u)) engine=sled")
+    gs.sql("insert into uq values (1,'e'),(2,NULL),(3,'f')")
+    assert(rs("delete from uq where u = 'e'") == Seq(Seq(1L)))
+    assert(rs("select id from uq order by id") == Seq(Seq(2), Seq(3)))
+  }
+
+  test("regression: REPLACE on a csv table whose key is not its first column keeps its columns") {
+    val gs = new GraftSession(spark.newSession(),
+      Files.createTempDirectory("graft-wh-csvkey").toString)
+    gs.sql("create schema ck")
+    gs.sql("use ck")
+    def rs(sql: String) = gs.sql(sql).collect().toSeq.map(_.toSeq)
+    for (key <- Seq("primary key (id)", "unique key (id)")) {
+      gs.sql("drop table if exists kv")
+      gs.sql(s"create table kv (v varchar(4), id int, $key) engine=csv")
+      gs.sql("insert into kv values ('a', 1), ('b', 2)")
+      assert(rs("replace into kv values ('z', 1)") == Seq(Seq(2L)), key)
+      assert(rs("select v, id from kv order by id") == Seq(Seq("z", 1), Seq("b", 2)), key)
+    }
+  }
+
+  test("a non-deterministic WHERE reports exactly the rows UPDATE and DELETE changed") {
+    val gs = new GraftSession(spark.newSession(),
+      Files.createTempDirectory("graft-wh-rand").toString)
+    gs.sql("create schema rnd")
+    gs.sql("use rnd")
+    def rs(sql: String) = gs.sql(sql).collect().toSeq.map(_.toSeq)
+    val values = (1 to 20).map(i => s"($i, 0)").mkString(", ")
+    for ((name, ddl) <- Seq(
+           "k_parquet" -> "(id int primary key, v int) engine=parquet",
+           "k_sled" -> "(id int primary key, v int) engine=sled",
+           "nokey" -> "(id int, v int)")) {
+      gs.sql(s"create table $name $ddl")
+      gs.sql(s"insert into $name values $values")
+      val n = rs(s"update $name set v = 1 where rand() < 0.5").head.head
+      assert(rs(s"select count(*), sum(v) from $name") == Seq(Seq(20L, n)), name)
+      val d = rs(s"delete from $name where rand() < 0.5").head.head.asInstanceOf[Long]
+      assert(rs(s"select count(*) from $name") == Seq(Seq(20L - d)), name)
+    }
+    assert(rs("update nokey set v = 7 where id <= 5").head.head ==
+      rs("select count(*) from nokey where id <= 5").head.head)
+  }
+
+  test("UPDATE on a keyless table loses no row a concurrent INSERT lands") {
+    val wh = Files.createTempDirectory("graft-wh-updrace").toString
+    val gs = new GraftSession(spark.newSession(), wh)
+    gs.sql("create schema race")
+    gs.sql("use race")
+    gs.sql("create table nokey (id int, a int, b int) engine=sled")
+    gs.sql("insert into nokey values " + (1 to 10).map(i => s"($i, 0, 0)").mkString(", "))
+    val writer = new GraftSession(spark.newSession(), wh)
+    writer.sql("use race")
+    val inserts = new Thread(() =>
+      (100 until 124).foreach(i => writer.sql(s"insert into nokey values ($i, 0, 0)")))
+    inserts.start()
+    val updates = (1 to 4).map(_ => gs.sql("update nokey set a = a + 1, b = b + 1")
+      .collect().head.getLong(0))
+    inserts.join()
+    val rows = gs.sql("select id, a, b from nokey").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq
+    // every acknowledged insert is there exactly once, no row is half
+    // updated, and the rows present from the start saw every UPDATE
+    assert(rows.map(_._1).sorted == ((1 to 10) ++ (100 until 124)), rows)
+    assert(rows.forall { case (_, a, b) => a == b }, rows)
+    assert(rows.filter(_._1 <= 10).forall(_._2 == 4), rows)
+    // each UPDATE reported the rows it changed
+    assert(updates.sum == rows.map(_._2.toLong).sum, (updates, rows))
+  }
 }
