@@ -3,14 +3,17 @@ package graft.engine
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoDir, InsertIntoStatement}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.parser.ParseException
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, Command, DeleteFromTable, InsertIntoDir, InsertIntoStatement, LogicalPlan, UpdateTable}
 import org.apache.spark.sql.execution.command.ExplainCommand
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.functions.{array, array_join, coalesce, col, concat, explode, expr, filter, lit, max, max_by, min, min_by, monotonically_increasing_id, struct, when}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import Catalog.Retire
-import SqlText.{bindPlaceholders, countPlaceholders, splitTopLevel, topLevelIndexOfWord}
+import SqlText.{bindPlaceholders, countPlaceholders}
 
 /** MySQL-surface SQL session: every command of the reference's
   * `execute_impl` dispatcher (/root/reference/src/execute_impl/mod.rs:1)
@@ -95,9 +98,12 @@ class GraftSession(val spark: SparkSession, warehouse: String,
   def sql(statement: String): DataFrame = sql(Statement.classify(statement))
 
   /** Dispatch on the statement's kind (Statement.classify). Each handler
-    * parses its arguments from the comment-free text and answers 1064 for
-    * a shape it does not accept; only `Query` text reaches Spark's
-    * parser, through the write guard in `relational`.
+    * reads its arguments from the comment-free text with one `SqlReader`,
+    * which answers 1064 at the position of a shape it does not accept.
+    * UPDATE and DELETE are read by Spark's own parser instead (`dmlPlan`:
+    * the plan's target, assignments and condition, never executed), and
+    * `Query` text is planned by Spark through the write guard in
+    * `relational`.
     */
   def sql(st: Statement): DataFrame = {
     import Verb._
@@ -108,27 +114,29 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     // read-committed across connections: pick up any other session's
     // commits before resolving this statement (no-op when none landed)
     catalog.freshenStale()
+    // the reader past the verb's keywords, for the MySQL-only forms
+    lazy val (r, kw) = { val r = new SqlReader(stmt); (r, r.verb(st.verb)) }
     st.verb match {
-      case CreateSchema  => createSchema(stmt)
-      case DropSchema    => dropSchema(stmt)
-      case CreateTable   => createTable(stmt)
-      case CreateView    => createView(stmt)
-      case DropView      => dropView(stmt)
-      case DropTable     => dropTable(stmt)
-      case AlterTable    => alterTable(stmt)
-      case RenameTable   => renameTable(stmt)
-      case Insert        => dirty(insert(stmt))
-      case LoadData | LoadDataLocal => dirty(loadData(stmt))
+      case CreateSchema  => createSchema(r)
+      case DropSchema    => dropSchema(r)
+      case CreateTable   => createTable(r)
+      case CreateView    => createView(r, orReplace = kw.contains("replace"))
+      case DropView      => dropView(r)
+      case DropTable     => dropTable(r)
+      case AlterTable    => alterTable(r)
+      case RenameTable   => renameTable(r)
+      case Insert        => dirty(insert(r, kw))
+      case LoadData | LoadDataLocal => dirty(loadData(GraftSession.parseLoad(stmt)))
       case Update        => dirty(update(stmt))
       case Delete        => dirty(delete(stmt))
-      case Truncate      => dirty(truncate(stmt))
-      case Optimize      => optimizeTable(stmt)
-      case Analyze       => analyzeTable(stmt)
-      case Use           => use(stmt)
-      case SetVariable   => setVariable(stmt)
-      case Prepare       => prepare(stmt)
-      case Execute       => executePrepared(stmt)
-      case Deallocate    => deallocate(stmt)
+      case Truncate      => dirty(truncate(r))
+      case Optimize      => optimizeTable(r)
+      case Analyze       => analyzeTable(r, stmt)
+      case Use           => use(r)
+      case SetVariable   => setVariable(r)
+      case Prepare       => prepare(r)
+      case Execute       => executePrepared(r)
+      case Deallocate    => deallocate(r)
       // autocommit engine: ROLLBACK answers OK but cannot undo anything —
       // if writes landed since the last transaction verb, surface MySQL's
       // nontransactional-table warning 1196 instead of silently lying
@@ -144,15 +152,13 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       case Transaction   => txDirty = false; count(0)
       case Noop          => count(0)
       case Query         => query(stmt)
-      case ExplainAnalyze => explainAnalyze(stmt)
+      case ExplainAnalyze => explainAnalyze(r)
       case Kill | ShowProcessList => throw new SqlError(1235, "42000",
         s"'$stmt' acts on server connections; send it over the wire server")
       case Unknown       => throw SqlError.syntax(stmt)
-      case _             => show(st)
+      case _             => show(st.verb, r, kw)
     }
   }
-
-  private val AnalyzeR = "(?is)analyze\\s+table\\s+([`\\w.]+)(.*)".r
 
   /** ANALYZE TABLE passes through to Spark (CBO/broadcast statistics)
     * and then backfills the E9 data-skipping sidecar for any current-
@@ -160,30 +166,23 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     * landed files get file pruning from the same statement that has
     * always refreshed stats.
     */
-  private def analyzeTable(stmt: String): DataFrame = stmt match {
-    case AnalyzeR(name, tail) =>
-      // MySQL's bare `ANALYZE TABLE t` — Spark's parser wants the COMPUTE
-      // STATISTICS clause; supply it for the bare (reference-syntax) form.
-      // "Bare" = nothing after the table name (a substring test would
-      // misfire on a table NAMED compute_something)
-      val out = spark.sql(if (tail.trim.isEmpty) s"$stmt COMPUTE STATISTICS" else stmt)
-      try {
-        val (db, t) = qualify(clean(name))
-        catalog.backfillStats(db, t)
-        catalog.refreshNdv(db, t) // arms CBO range estimation (ndv)
-      }
-      catch { case scala.util.control.NonFatal(_) => () } // temp views etc.
-      out
-    case _ => throw SqlError.syntax(stmt)
+  private def analyzeTable(r: SqlReader, stmt: String): DataFrame = {
+    val (db, t) = table(r)
+    // MySQL's bare `ANALYZE TABLE t` — Spark's parser wants the COMPUTE
+    // STATISTICS clause; supply it when nothing follows the name
+    val out = spark.sql(if (r.atEnd) s"$stmt COMPUTE STATISTICS" else stmt)
+    try {
+      catalog.backfillStats(db, t)
+      catalog.refreshNdv(db, t) // arms CBO range estimation (ndv)
+    }
+    catch { case scala.util.control.NonFatal(_) => () } // temp views etc.
+    out
   }
 
   /** Mark the session write-dirty AFTER a DML statement succeeds (a
     * failed INSERT leaves nothing for ROLLBACK to warn about).
     */
   private def dirty(df: DataFrame): DataFrame = { txDirty = true; df }
-
-  private val OptimizeR =
-    "(?is)optimize\\s+(?:table\\s+)?([`\\w.]+)(?:\\s+(sort|zorder)\\s+by\\s*\\(([^)]*)\\))?\\s*".r
 
   /** OPTIMIZE TABLE: compact a merge-on-read table — fold accumulated
     * tombstones into a fresh data version (MySQL's OPTIMIZE TABLE
@@ -195,90 +194,90 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     * (Catalog.compactSorted/compactZOrdered scaladoc has the layout
     * trades vs pk buckets).
     */
-  private def optimizeTable(stmt: String): DataFrame = stmt match {
-    case OptimizeR(name, kind, sortCols) =>
-      val (db, t) = qualify(name)
-      val msg =
-        if (kind != null) {
-          val cols = sortCols.split(",").map(c => clean(c.trim))
-            .filter(_.nonEmpty).toSeq
-          if (kind.equalsIgnoreCase("zorder"))
-            catalog.compactZOrdered(db, t, cols)
-          else catalog.compactSorted(db, t, cols)
-          "OK"
-        }
-        else if (catalog.meta(db, t).mergeOnRead) { catalog.compact(db, t); "OK" }
-        else "Table does not support optimize, doing nothing"
-      frame(Seq("Table", "Op", "Msg_type", "Msg_text"),
-        Seq(Seq(s"$db.$t", "optimize", "status", msg)))
-    case _ => throw SqlError.syntax(stmt)
+  private def optimizeTable(r: SqlReader): DataFrame = {
+    r.optional("table")
+    val (db, t) = table(r)
+    val kind = r.oneOf("sort", "zorder")
+    val cols = kind.map { _ => r.keyword("by"); r.list(r.ident()) }
+    r.end()
+    val msg = (kind, cols) match {
+      case (Some("zorder"), Some(cs)) => catalog.compactZOrdered(db, t, cs); "OK"
+      case (Some(_), Some(cs))        => catalog.compactSorted(db, t, cs); "OK"
+      case _ if catalog.meta(db, t).mergeOnRead => catalog.compact(db, t); "OK"
+      case _ => "Table does not support optimize, doing nothing"
+    }
+    frame(Seq("Table", "Op", "Msg_type", "Msg_text"),
+      Seq(Seq(s"$db.$t", "optimize", "status", msg)))
   }
 
-  private val TruncateR = "(?is)truncate\\s+(?:table\\s+)?([`\\w.]+)".r
-  private def truncate(stmt: String): DataFrame = stmt match {
-    case TruncateR(name) =>
-      val (db, t) = qualify(name)
-      val df = catalog.read(db, t)
-      val n = df.count()
-      catalog.rewrite(db, t, df.limit(0))
-      count(n)
-    case _ => throw SqlError.syntax(stmt)
+  private def truncate(r: SqlReader): DataFrame = {
+    r.optional("table")
+    val (db, t) = table(r)
+    r.end()
+    emptyTable(db, t)
   }
 
-  private val RenameR =
-    "(?is)rename\\s+table\\s+([`\\w.]+)\\s+to\\s+([`\\w.]+)".r
-  private def renameTable(stmt: String): DataFrame = stmt match {
-    case RenameR(from, to) =>
-      val (db1, t1) = qualify(from); val (db2, t2) = qualify(to)
-      catalog.rename(db1, t1, db2, t2); count(0)
-    case _ => throw SqlError.syntax(stmt)
+  /** TRUNCATE and an unconditional DELETE: one rewrite to an empty
+    * version, which also retires any accumulated tombstones.
+    */
+  private def emptyTable(db: String, t: String): DataFrame = {
+    val df = catalog.read(db, t)
+    val n = df.count()
+    catalog.rewrite(db, t, df.limit(0))
+    count(n)
+  }
+
+  private def renameTable(r: SqlReader): DataFrame = {
+    val (db1, t1) = table(r)
+    r.keyword("to")
+    val (db2, t2) = table(r)
+    r.end()
+    catalog.rename(db1, t1, db2, t2); count(0)
   }
 
   // ---- prepared statements (com_stmt_prepare.rs) -------------------------
 
   private val preparedStmts = scala.collection.mutable.Map.empty[String, String]
 
-  private val PrepareR = "(?is)prepare\\s+(\\w+)\\s+from\\s+(.+)".r
-  private def prepare(stmt: String): DataFrame = stmt match {
-    case PrepareR(name, body) =>
-      val sqlText = unquote(body.trim)
-      preparedStmts(name.toLowerCase) = sqlText
-      // reference counts the ? parameter markers at prepare time
-      count(countPlaceholders(sqlText))
-    case _ => throw SqlError.syntax(stmt)
+  private def prepare(r: SqlReader): DataFrame = {
+    val name = r.ident()
+    r.keyword("from")
+    val sqlText = unquote(r.rest(nonEmpty = true))
+    preparedStmts(name.toLowerCase) = sqlText
+    // reference counts the ? parameter markers at prepare time
+    count(countPlaceholders(sqlText))
   }
 
-  private val ExecuteR = "(?is)execute\\s+(\\w+)(?:\\s+using\\s+(.+))?".r
-  private def executePrepared(stmt: String): DataFrame = stmt match {
-    case ExecuteR(name, usingOpt) =>
-      val template = preparedStmts.getOrElse(name.toLowerCase,
-        sys.error(s"Unknown prepared statement handler ($name) given to EXECUTE"))
-      val args: Seq[String] =
-        if (usingOpt == null) Seq.empty
-        else splitTopLevel(usingOpt, ',').map(_.trim).map { a =>
-          if (a.startsWith("@") && !a.startsWith("@@"))
-            userVars.getOrElse(a.drop(1).toLowerCase,
-              sys.error(s"Undefined user variable $a"))
-          else a
-        }
-      require(args.length == countPlaceholders(template),
-        s"Incorrect arguments to EXECUTE: expected ${countPlaceholders(template)}, got ${args.length}")
-      sql(bindPlaceholders(template, args))
-    case _ => throw SqlError.syntax(stmt)
+  private def executePrepared(r: SqlReader): DataFrame = {
+    val name = r.ident()
+    val args: Seq[String] =
+      if (!r.optional("using")) Seq.empty
+      else r.items(r.raw()).map { a =>
+        if (a.startsWith("@") && !a.startsWith("@@"))
+          userVars.getOrElse(a.drop(1).toLowerCase,
+            sys.error(s"Undefined user variable $a"))
+        else a
+      }
+    r.end()
+    val template = preparedStmts.getOrElse(name.toLowerCase,
+      sys.error(s"Unknown prepared statement handler ($name) given to EXECUTE"))
+    require(args.length == countPlaceholders(template),
+      s"Incorrect arguments to EXECUTE: expected ${countPlaceholders(template)}, got ${args.length}")
+    sql(bindPlaceholders(template, args))
   }
 
-  private val DeallocateR = "(?is)deallocate\\s+prepare\\s+(\\w+)".r
-  private def deallocate(stmt: String): DataFrame = stmt match {
-    case DeallocateR(name) =>
-      preparedStmts.remove(name.toLowerCase); count(0)
-    case _ => throw SqlError.syntax(stmt)
+  private def deallocate(r: SqlReader): DataFrame = {
+    r.keyword("prepare")
+    val name = r.ident()
+    r.end()
+    preparedStmts.remove(name.toLowerCase); count(0)
   }
 
   /** COM_FIELD_LIST parity (com_field_list.rs): the table's column
     * definitions, same shape as SHOW COLUMNS.
     */
   def fieldList(table: String): DataFrame =
-    show(Statement(Verb.ShowColumns, s"show columns from $table"))
+    show(Verb.ShowColumns, new SqlReader(s"from $table"), "show columns")
 
   /** Continuous ingestion: append a stream into a catalog table's storage
     * (checkpointed parquet sink writing straight into the table's data
@@ -292,7 +291,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     */
   def ingest(stream: DataFrame, table: String,
              checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val (db, t) = qualify(table)
+    val (db, t) = tableOf(table)
     val m = catalog.meta(db, t)
     require(m.format == "parquet", s"ingest requires a parquet-backed table, got ${m.engine}")
     val aligned = stream.select(m.cols.map(c =>
@@ -318,7 +317,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     */
   def ingestUpsert(stream: DataFrame, table: String, checkpoint: String,
                    orderCol: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val (db, t) = qualify(table)
+    val (db, t) = tableOf(table)
     val m = catalog.meta(db, t)
     require(m.mergeOnRead,
       s"ingestUpsert requires a merge-on-read (PK'd parquet) table; '$table' is not")
@@ -404,8 +403,8 @@ class GraftSession(val spark: SparkSession, warehouse: String,
   def refreshIndex(indexTable: String, corpusTable: String,
                    train: DataFrame => (DataFrame => DataFrame),
                    maxPasses: Int = 8): Long = {
-    val (dbI, tI) = qualify(indexTable)
-    val (dbC, tC) = qualify(corpusTable)
+    val (dbI, tI) = tableOf(indexTable)
+    val (dbC, tC) = tableOf(corpusTable)
     val mI = catalog.meta(dbI, tI)
     val mC = catalog.meta(dbC, tC)
     require(mI.mergeOnRead,
@@ -534,8 +533,8 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     * call, not a per-batch step.
     */
   def auditIndexOrphans(indexTable: String, corpusTable: String): Long = {
-    val (dbI, tI) = qualify(indexTable)
-    val (dbC, tC) = qualify(corpusTable)
+    val (dbI, tI) = tableOf(indexTable)
+    val (dbC, tC) = tableOf(corpusTable)
     val mI = catalog.meta(dbI, tI)
     val mC = catalog.meta(dbC, tC)
     require(mI.mergeOnRead && mC.mergeOnRead,
@@ -574,9 +573,9 @@ class GraftSession(val spark: SparkSession, warehouse: String,
                             corpusTable: String, idCol: String = "doc_id",
                             textCol: String = "text", shingleK: Int = 5,
                             dfCap: Int = 32): (Long, Long) = {
-    val (dbD, tD) = qualify(dfTable)
-    val (dbP, tP) = qualify(postingTable)
-    val (dbC, tC) = qualify(corpusTable)
+    val (dbD, tD) = tableOf(dfTable)
+    val (dbP, tP) = tableOf(postingTable)
+    val (dbC, tC) = tableOf(corpusTable)
     val mD = catalog.meta(dbD, tD)
     val mP = catalog.meta(dbP, tP)
     require(mD.mergeOnRead && mP.mergeOnRead,
@@ -686,8 +685,8 @@ class GraftSession(val spark: SparkSession, warehouse: String,
                                textCol: String = "text",
                                shingleK: Int = 5, dfCap: Int = 32)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val (dbD, tD) = qualify(dfTable)
-    val (dbP, tP) = qualify(postingTable)
+    val (dbD, tD) = tableOf(dfTable)
+    val (dbP, tP) = tableOf(postingTable)
     require(catalog.meta(dbD, tD).mergeOnRead,
       s"maintainContainmentIndex requires a merge-on-read df table; '$dfTable' is not")
     require(catalog.meta(dbP, tP).mergeOnRead,
@@ -857,7 +856,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
                                checkpoint: String, textCol: String = "text",
                                minTokens: Int = 15)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val (db, t) = qualify(fpTable)
+    val (db, t) = tableOf(fpTable)
     require(catalog.meta(db, t).mergeOnRead,
       s"maintainFingerprintIndex requires a merge-on-read fp table; '$fpTable' is not")
     stream.writeStream
@@ -931,8 +930,8 @@ class GraftSession(val spark: SparkSession, warehouse: String,
   def auditFingerprintIndex(fpTable: String, corpusTable: String,
                             textCol: String = "text",
                             minTokens: Int = 15): Long = {
-    val (db, t) = qualify(fpTable)
-    val (dbC, tC) = qualify(corpusTable)
+    val (db, t) = tableOf(fpTable)
+    val (dbC, tC) = tableOf(corpusTable)
     val m = catalog.meta(db, t)
     require(m.mergeOnRead,
       "auditFingerprintIndex requires a merge-on-read fp table")
@@ -956,25 +955,23 @@ class GraftSession(val spark: SparkSession, warehouse: String,
 
   // ---- schemas (create_db.rs / drop_schema.rs / set_default_schema.rs) ---
 
-  private val CreateSchemaR =
-    "(?is)create\\s+(?:schema|database)\\s+(if\\s+not\\s+exists\\s+)?([`\\w]+)".r
-  private def createSchema(stmt: String): DataFrame = stmt match {
-    case CreateSchemaR(ine, name) =>
-      catalog.createSchema(clean(name), ifNotExists = ine != null); count(1)
-    case _ => throw SqlError.syntax(stmt)
+  private def createSchema(r: SqlReader): DataFrame = {
+    val ine = r.optional("if not exists")
+    val db = r.schema()
+    r.end()
+    catalog.createSchema(db, ifNotExists = ine); count(1)
   }
 
-  private val DropSchemaR =
-    "(?is)drop\\s+(?:schema|database)\\s+(if\\s+exists\\s+)?([`\\w]+)".r
-  private def dropSchema(stmt: String): DataFrame = stmt match {
-    case DropSchemaR(ie, name) =>
-      catalog.dropSchema(clean(name), ifExists = ie != null); count(1)
-    case _ => throw SqlError.syntax(stmt)
+  private def dropSchema(r: SqlReader): DataFrame = {
+    val ie = r.optional("if exists")
+    val db = r.schema()
+    r.end()
+    catalog.dropSchema(db, ifExists = ie); count(1)
   }
 
-  private def use(stmt: String): DataFrame = {
-    val db = clean(stmt.drop(4).trim)
-    require(catalog.schemaExists(db), s"Unknown database '$db'")
+  private def use(r: SqlReader): DataFrame = {
+    val db = existingSchema(r.schema())
+    r.end()
     currentSchema = db
     spark.catalog.setCurrentDatabase(db)
     count(1)
@@ -982,42 +979,17 @@ class GraftSession(val spark: SparkSession, warehouse: String,
 
   // ---- tables (create_table.rs / drop_table.rs / add|drop_column.rs) -----
 
-  private val CreateTableR =
-    "(?is)create\\s+table\\s+(if\\s+not\\s+exists\\s+)?([`\\w.]+)\\s*\\((.*)\\)\\s*".r
-  private val EngineR = "(?is)engine\\s*=\\s*(\\w+)".r
-  private val PartitionByR = "(?is)partition(?:ed)?\\s+by\\s*\\(([^)]*)\\)".r
-
-  /** Split a CREATE TABLE at its ENGINE/PARTITION tail. The keywords are
-    * only meaningful AFTER the column list's closing paren — a table
-    * legally NAMED `engine` or `partition` (neither is reserved in
-    * MySQL) must not cut the statement at the name position.
-    */
-  private def splitCreateTail(stmt: String): (String, String) = {
-    // quote-aware matching-close scan: a ')' inside a quoted DEFAULT or
-    // COMMENT must not end the column list
-    val searchFrom = SqlText.afterMatchingClose(stmt)
-    val tail = stmt.substring(searchFrom)
-    val cut = Seq(
-      SqlText.topLevelIndexOfWord(tail, "partition"),
-      SqlText.topLevelIndexOfWord(tail, "partitioned"),
-      SqlText.topLevelIndexOfWord(tail, "engine")).filter(_ >= 0)
-    if (cut.isEmpty) (stmt, "")
-    else (stmt.take(searchFrom + cut.min), stmt.drop(searchFrom + cut.min))
-  }
-  private val CtasR =
-    "(?is)create\\s+table\\s+(if\\s+not\\s+exists\\s+)?([`\\w.]+)\\s+as\\s+(select\\b.*|with\\b.*)".r
-
   /** CREATE TABLE … AS SELECT: schema inferred from the (Spark-planned)
     * query, data written distributed — the select never lands on the
     * driver.
     */
-  private def createTableAs(ine: String, name: String, select: String): DataFrame = {
-    val (db, t) = qualify(name)
+  private def createTableAs(ine: Boolean, db: String, t: String,
+                            select: String): DataFrame = {
     val src = query(select)
     val cols = src.schema.fields.map(f =>
       catalog.Col(f.name, mysqlTypeOf(f.dataType.sql), f.dataType.sql)).toSeq
     catalog.createTable(catalog.TableMeta(db, t, cols, Seq.empty, "parquet"),
-      ifNotExists = ine != null)
+      ifNotExists = ine)
     val staged = src.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = staged.count()
@@ -1044,139 +1016,125 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       case other       => other.toLowerCase
     }
 
-  private def createTable(stmt: String): DataFrame = stmt match {
-    case CtasR(ine, name, select) => createTableAs(ine, name, select)
-    case _ => val (head, tail) = splitCreateTail(stmt); createTableFrom(head, tail)
-  }
-
-  private def createTableFrom(head: String, tail: String): DataFrame = head match {
-    case CreateTableR(ine, name, body) =>
-      val (db, t) = qualify(name)
-      val engine = EngineR.findFirstMatchIn(tail).map(_.group(1)).orNull
-      // PARTITION BY (sled key-prefix scoping parity): Hive-style
-      // directory partitioning through the catalog — predicates on the
-      // partition key prune directories before the scan
-      val partCols = PartitionByR.findFirstMatchIn(tail)
-        .map(_.group(1).split(',').map(c => clean(c.trim)).toSeq)
-        .getOrElse(Seq.empty)
-      var pk = Seq.empty[String]
-      var pkDecls = 0
-      val cols = Seq.newBuilder[catalog.Col]
-      // (explicit name option, columns): explicitness decides 1061 vs
-      // the _2-style auto-disambiguation below
-      val uniqs = Seq.newBuilder[(Option[String], Seq[String])]
-      splitTopLevel(body, ',').map(_.trim).filter(_.nonEmpty).foreach { d =>
-        val dl = d.toLowerCase
-        if (dl.startsWith("primary key")) {
-          pk = d.substring(d.indexOf('(') + 1, d.lastIndexOf(')'))
-            .split(',').map(c => clean(c.trim)).toSeq
-          pkDecls += 1
-        } else if (dl.startsWith("unique ") || dl.startsWith("unique(")) {
-          // UNIQUE [KEY|INDEX] [name] (cols) — the reference's level-2
-          // index (meta_util.rs), enforced on write with 1062
-          uniqs += parseUniqueTail(d.substring("unique".length))
-        } else if (dl.startsWith("constraint ")) {
-          // CONSTRAINT [name] UNIQUE (cols) / CONSTRAINT [name] PRIMARY
-          // KEY (cols); other constraint kinds (FK/CHECK) are
-          // parsed-and-ignored (the reference catalogs only Unique)
-          val mu = "(?is)constraint\\s+(?:([`\\w]+)\\s+)?unique\\b(.*)".r
-            .findFirstMatchIn(d)
-          val mp = "(?is)constraint\\s+(?:[`\\w]+\\s+)?primary\\s+key\\b.*".r
-            .findFirstMatchIn(d)
-          mu.foreach { mm =>
-            // MySQL names the index after index_name when given; the
-            // CONSTRAINT symbol applies only without one (same rule as
-            // the ALTER ADD UNIQUE arm)
-            val (idxOpt, ucols) = parseUniqueTail(mm.group(2))
-            uniqs += ((idxOpt.orElse(Option(mm.group(1)).map(clean)), ucols))
-          }
-          mp.foreach { _ =>
-            pk = d.substring(d.indexOf('(') + 1, d.lastIndexOf(')'))
-              .split(',').map(c => clean(c.trim)).toSeq
-            pkDecls += 1
-          }
-        } else if (dl.startsWith("key ") || dl.startsWith("index ")) {
-          // plain secondary indexes: parquet min-max stats make these
-          // implicit on the read side, and they constrain nothing
-        } else {
-          val parts = d.split("\\s+", 2)
-          val cname = clean(parts(0))
-          val rest = if (parts.length > 1) parts(1) else "text"
-          val mysqlType = rest.split("\\s+")(0)
-          // attribute sniffs over the MASKED tail: the words inside a
-          // quoted COMMENT/DEFAULT are data, not column attributes
-          val restMasked = SqlText.maskNonSyntax(rest).toLowerCase
-          // independent sniffs: `a int primary key unique` catalogs BOTH
-          // (MySQL keeps the pk AND a unique key named after the column)
-          if (restMasked.contains("primary key")) { pk = pk :+ cname; pkDecls += 1 }
-          if ("\\bunique\\b".r.findFirstIn(restMasked).isDefined)
-            uniqs += ((None, Seq(cname)))
-          cols += catalog.Col(cname, mysqlType, sparkDdl(mysqlType))
-        }
-      }
-      // MySQL key naming: explicit duplicates are 1061 (same as the
-      // ALTER arm — a re-applied migration must fail, not stack a
-      // renamed index); DEFAULTED names disambiguate col, col_2, …
-      val allCols = cols.result()
-      // MySQL 1060: duplicate column declarations (CI identifiers) —
-      // a two-same-name meta would misalign positional INSERTs and
-      // throw ambiguous-reference errors far from the cause. MySQL
-      // names the SECOND occurrence.
-      locally {
-        val seen = scala.collection.mutable.Set[String]()
-        for (cc <- allCols)
-          if (!seen.add(cc.name.toLowerCase))
-            throw new SqlError(1060, "42S21",
-              s"Duplicate column name '${cc.name}'")
-      }
-      // MySQL 1068: at most one PRIMARY KEY declaration (inline column
-      // attributes count — composite pks must use the table-level form)
-      if (pkDecls > 1)
-        throw new SqlError(1068, "42000", "Multiple primary key defined")
-      // Key-column canonicalization at CREATE time — failing on first
-      // INSERT deep in the sorted write path is the wrong place to
-      // learn the CREATE was bad (canonKeyCols: CI stored spellings,
-      // 1072 unknowns, 1060 in-key duplicates)
-      pk = canonKeyCols(pk, allCols)
-      val seenNames = scala.collection.mutable.Buffer[String]()
-      val uniques = uniqs.result().map { case (explicitOpt, ucols0) =>
-        val ucols = canonKeyCols(ucols0, allCols)
-        val n = explicitOpt match {
-          case Some(e) =>
-            if (e.equalsIgnoreCase("primary") ||
-                seenNames.exists(_.equalsIgnoreCase(e)))
-              throw new SqlError(1061, "42000", s"Duplicate key name '$e'")
-            e
-          case None => uniqueIndexName(ucols.head, seenNames)
-        }
-        seenNames += n
-        catalog.UniqueKey(n, ucols)
-      }
-      catalog.createTable(
-        catalog.TableMeta(db, t, allCols, pk,
-          if (engine != null) engine.toLowerCase else "parquet",
-          partitionCols = partCols, uniques = uniques),
-        ifNotExists = ine != null)
-      count(1)
-    case _ => throw SqlError.syntax(head)
-  }
-
-  /** Parse the tail of a UNIQUE constraint declaration — everything after
-    * the UNIQUE keyword: `[KEY|INDEX] [name] (c1, c2, …)`. Returns the
-    * EXPLICIT index name (None when only keywords precede the column
-    * list) and the columns; shared by CREATE TABLE and ALTER ADD UNIQUE.
+  /** CREATE TABLE [IF NOT EXISTS] t (…) [options] or CREATE TABLE t AS
+    * SELECT|WITH …. The element list holds column definitions and
+    * PRIMARY KEY, UNIQUE, CONSTRAINT, KEY/INDEX declarations; after it
+    * come ENGINE=e, PARTITION[ED] BY (cols) and other MySQL table options,
+    * which are read and ignored.
     */
-  private def parseUniqueTail(tail: String): (Option[String], Seq[String]) = {
-    val open = tail.indexOf('(')
-    require(open >= 0 && tail.lastIndexOf(')') > open,
-      s"Malformed UNIQUE constraint near '${tail.trim.take(40)}'")
-    val ucols = splitTopLevel(tail.substring(open + 1, tail.lastIndexOf(')')), ',')
-      .map(c => clean(c.trim)).filter(_.nonEmpty)
-    require(ucols.nonEmpty, "UNIQUE constraint lists no columns")
-    val nameToks = tail.substring(0, open).trim.split("\\s+")
-      .filter(_.nonEmpty)
-      .filterNot(w => w.equalsIgnoreCase("key") || w.equalsIgnoreCase("index"))
-    (nameToks.lastOption.map(clean), ucols)
+  private def createTable(r: SqlReader): DataFrame = {
+    val ine = r.optional("if not exists")
+    val (db, t) = table(r)
+    if (r.optional("as")) {
+      if (r.peek != "select" && r.peek != "with") r.fail()
+      return createTableAs(ine, db, t, r.rest())
+    }
+    var pk = Seq.empty[String]
+    var pkDecls = 0
+    def primaryKey(): Unit = { pk = r.list(r.ident()); pkDecls += 1; r.raw() }
+    val cols = Seq.newBuilder[catalog.Col]
+    // (explicit name option, columns): explicitness decides 1061 vs
+    // the _2-style auto-disambiguation below
+    val uniqs = Seq.newBuilder[(Option[String], Seq[String])]
+    r.list {
+      if (r.optional("primary key")) primaryKey()
+      // UNIQUE [KEY|INDEX] [name] (cols) — the reference's level-2 index
+      // (meta_util.rs), enforced on write with 1062
+      else if (r.optional("unique")) uniqs += uniqueKey(r, None)
+      else if (r.optional("constraint")) {
+        // CONSTRAINT [symbol] UNIQUE … / PRIMARY KEY …; other kinds
+        // (FOREIGN KEY, CHECK) are read and ignored (the reference
+        // catalogs only keys)
+        val sym = if (Set("unique", "primary", "foreign", "check")(r.peek)) None
+                  else Some(r.ident())
+        if (r.optional("unique")) uniqs += uniqueKey(r, sym)
+        else if (r.optional("primary key")) primaryKey()
+        else r.raw()
+      }
+      // plain secondary indexes: parquet min-max stats make these
+      // implicit on the read side, and they constrain nothing
+      else if (r.oneOf("key", "index").isDefined) r.raw()
+      else {
+        val cname = r.ident()
+        val mysqlType = if (r.peek == "," || r.peek == ")") "text" else r.columnType()
+        // attribute words come from tokens, so the words inside a quoted
+        // COMMENT/DEFAULT are data, not column attributes; independent
+        // sniffs: `a int primary key unique` catalogs BOTH (MySQL keeps
+        // the pk AND a unique key named after the column)
+        val attrs = SqlReader.words(r.raw())
+        if (attrs.containsSlice(Seq("primary", "key"))) { pk = pk :+ cname; pkDecls += 1 }
+        if (attrs.contains("unique")) uniqs += ((None, Seq(cname)))
+        cols += catalog.Col(cname, mysqlType, sparkDdl(mysqlType))
+      }
+    }
+    var engine = "parquet"
+    // PARTITION BY (sled key-prefix scoping parity): Hive-style
+    // directory partitioning through the catalog — predicates on the
+    // partition key prune directories before the scan
+    var partCols = Seq.empty[String]
+    while (!r.atEnd) {
+      if (r.optional("engine", "=")) engine = r.ident().toLowerCase
+      else if (r.optional("partition by") || r.optional("partitioned by"))
+        partCols = r.list(r.ident())
+      else r.token()
+    }
+    // MySQL key naming: explicit duplicates are 1061 (same as the
+    // ALTER arm — a re-applied migration must fail, not stack a
+    // renamed index); DEFAULTED names disambiguate col, col_2, …
+    val allCols = cols.result()
+    // MySQL 1060: duplicate column declarations (CI identifiers) —
+    // a two-same-name meta would misalign positional INSERTs and
+    // throw ambiguous-reference errors far from the cause. MySQL
+    // names the SECOND occurrence.
+    locally {
+      val seen = scala.collection.mutable.Set[String]()
+      for (cc <- allCols)
+        if (!seen.add(cc.name.toLowerCase))
+          throw new SqlError(1060, "42S21",
+            s"Duplicate column name '${cc.name}'")
+    }
+    // MySQL 1068: at most one PRIMARY KEY declaration (inline column
+    // attributes count — composite pks must use the table-level form)
+    if (pkDecls > 1)
+      throw new SqlError(1068, "42000", "Multiple primary key defined")
+    // Key-column canonicalization at CREATE time — failing on first
+    // INSERT deep in the sorted write path is the wrong place to
+    // learn the CREATE was bad (canonKeyCols: CI stored spellings,
+    // 1072 unknowns, 1060 in-key duplicates)
+    pk = canonKeyCols(pk, allCols)
+    val seenNames = scala.collection.mutable.Buffer[String]()
+    val uniques = uniqs.result().map { case (explicitOpt, ucols0) =>
+      val ucols = canonKeyCols(ucols0, allCols)
+      val n = explicitOpt match {
+        case Some(e) =>
+          if (e.equalsIgnoreCase("primary") ||
+              seenNames.exists(_.equalsIgnoreCase(e)))
+            throw new SqlError(1061, "42000", s"Duplicate key name '$e'")
+          e
+        case None => uniqueIndexName(ucols.head, seenNames)
+      }
+      seenNames += n
+      catalog.UniqueKey(n, ucols)
+    }
+    catalog.createTable(
+      catalog.TableMeta(db, t, allCols, pk, engine,
+        partitionCols = partCols, uniques = uniques),
+      ifNotExists = ine)
+    count(1)
+  }
+
+  /** The rest of a UNIQUE declaration after the UNIQUE keyword:
+    * `[KEY|INDEX] [name] (c1, c2, …)` and any index options. Returns the
+    * index name — the explicit one, else the CONSTRAINT symbol `sym`
+    * (MySQL names the index after index_name when given) — and the
+    * columns; shared by CREATE TABLE and ALTER ADD UNIQUE.
+    */
+  private def uniqueKey(r: SqlReader, sym: Option[String]): (Option[String], Seq[String]) = {
+    r.oneOf("key", "index")
+    val name = if (r.peek == "(") None else Some(r.ident())
+    val cols = r.list(r.ident())
+    r.raw()
+    (name.orElse(sym), cols)
   }
 
   /** Resolve a listed key-column set to its STORED spellings
@@ -1187,16 +1145,26 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     */
   private def canonKeyCols(listed: Seq[String],
                            cols: Seq[Catalog#Col]): Seq[String] = {
-    val stored = listed.map(k =>
-      cols.find(_.name.equalsIgnoreCase(k)).map(_.name)
-        .getOrElse(throw new SqlError(1072, "42000",
-          s"Key column '$k' doesn't exist in table")))
+    val stored = listed.map(k => column(cols, k, new SqlError(1072, "42000",
+      s"Key column '$k' doesn't exist in table")).name)
     val seen = scala.collection.mutable.Set[String]()
     for (k <- stored)
       if (!seen.add(k.toLowerCase))
         throw new SqlError(1060, "42S21", s"Duplicate column name '$k'")
     stored
   }
+
+  /** A named column as the table stores it. MySQL column names are
+    * case-insensitive, and every handler resolves them through here;
+    * `missing` is the error for a name the table lacks.
+    */
+  private def column(cols: Seq[Catalog#Col], name: String,
+                     missing: => SqlError): Catalog#Col =
+    cols.find(_.name.equalsIgnoreCase(name)).getOrElse(throw missing)
+
+  /** `column` for a statement's field list: MySQL's 1054. */
+  private def fieldColumn(cols: Seq[Catalog#Col], name: String): Catalog#Col =
+    column(cols, name, new SqlError(1054, "42S22", s"Unknown column '$name' in 'field list'"))
 
   /** MySQL index auto-naming: `base`, then base_2, base_3, … skipping
     * PRIMARY and `existing` CASE-INSENSITIVELY (index identifiers are
@@ -1212,212 +1180,201 @@ class GraftSession(val spark: SparkSession, warehouse: String,
   }
 
   // ---- CREATE VIEW / DROP VIEW (durable SQL-text views, B-surface §8) ----
-  private val CreateViewR =
-    "(?is)create\\s+(or\\s+replace\\s+)?view\\s+([`\\w.]+)\\s+as\\s+(.+)".r
-  private def createView(stmt: String): DataFrame = stmt match {
-    case CreateViewR(orRep, name, select) =>
-      val (db, v) = qualify(name)
-      catalog.createView(db, v, select.trim, orReplace = orRep != null)
-      count(0)
-    case _ => throw SqlError.syntax(stmt)
+  private def createView(r: SqlReader, orReplace: Boolean): DataFrame = {
+    val (db, v) = table(r)
+    r.keyword("as")
+    catalog.createView(db, v, r.rest(nonEmpty = true), orReplace = orReplace)
+    count(0)
   }
 
-  private val DropViewR =
-    "(?is)drop\\s+view\\s+(if\\s+exists\\s+)?([`\\w.]+)".r
-  private def dropView(stmt: String): DataFrame = stmt match {
-    case DropViewR(ie, name) =>
-      val (db, v) = qualify(name)
-      catalog.dropView(db, v, ifExists = ie != null)
-      count(0)
-    case _ => throw SqlError.syntax(stmt)
+  private def dropView(r: SqlReader): DataFrame = {
+    val ie = r.optional("if exists")
+    val (db, v) = table(r)
+    r.end()
+    catalog.dropView(db, v, ifExists = ie)
+    count(0)
   }
 
-  private val DropTableR = "(?is)drop\\s+table\\s+(if\\s+exists\\s+)?([`\\w.]+)".r
-  private def dropTable(stmt: String): DataFrame = stmt match {
-    case DropTableR(ie, name) =>
-      val (db, t) = qualify(name)
-      catalog.dropTable(db, t, ifExists = ie != null); count(1)
-    case _ => throw SqlError.syntax(stmt)
+  private def dropTable(r: SqlReader): DataFrame = {
+    val ie = r.optional("if exists")
+    val (db, t) = table(r)
+    r.end()
+    catalog.dropTable(db, t, ifExists = ie); count(1)
   }
 
-  private val AddColR =
-    "(?is)alter\\s+table\\s+([`\\w.]+)\\s+add\\s+(?:column\\s+)?([`\\w]+)\\s+([\\w(),]+)(.*)".r
-  private val DropColR =
-    "(?is)alter\\s+table\\s+([`\\w.]+)\\s+drop\\s+(?:column\\s+)?([`\\w]+)\\s*".r
-  private val AddUniqueR =
-    ("(?is)alter\\s+table\\s+([`\\w.]+)\\s+add\\s+" +
-      "(?:constraint\\s+(?:([`\\w]+)\\s+)?)?unique\\b(.*)").r
-  private val DropIndexR =
-    "(?is)alter\\s+table\\s+([`\\w.]+)\\s+drop\\s+(?:index|key)\\s+([`\\w]+)\\s*".r
-  private val KeysR =
-    "(?is)alter\\s+table\\s+([`\\w.]+)\\s+(?:disable|enable)\\s+keys\\s*".r
-
-  private def alterTable(stmt: String): DataFrame = {
-    // a top-level comma means a multi-action ALTER (splitTopLevel is
-    // quote- and paren-aware, so decimal(10,2) and quoted COMMENTs
-    // don't trip it) — refuse loudly instead of silently applying only
-    // the first action
-    if (splitTopLevel(stmt, ',').lengthCompare(1) > 0)
-      throw new SqlError(1064, "42000",
-        "Multi-action ALTER TABLE is not supported; issue one action per statement")
-    alterTableOne(stmt)
-  }
-
-  private def alterTableOne(stmt: String): DataFrame = stmt match {
-    // UNIQUE forms must dispatch before ADD/DROP COLUMN: `add unique key
-    // uq (a)` would otherwise parse as a column named `unique`
-    case AddUniqueR(name, cName, tail) =>
-      val (db, t) = qualify(name)
-      // the same tail parser CREATE TABLE uses — `unique key(email)` and
-      // `unique(email)` default the name to the first column, never to
-      // the KEY/INDEX keyword
-      val (idxOpt, ucols) = parseUniqueTail(tail)
-      // MySQL names the index after index_name when given; the
-      // CONSTRAINT symbol only applies when no index name is present
-      val explicit = idxOpt.orElse(Option(cName).map(clean))
-      // meta is (re)read INSIDE the lock: two concurrent ADD UNIQUEs
-      // must not lose each other's key (pure lost-update on a
-      // meta-only mutation), and the 1062 data check must see every
-      // commit that preceded the lock
-      catalog.withDmlLock(db, t) {
-        catalog.freshenStale()
-        val m = catalog.meta(db, t)
-        val stored = canonKeyCols(ucols, m.cols)
-        val uname = explicit match {
-          case Some(n) =>
-            // an explicitly named duplicate is MySQL's 1061, not a
-            // silent rename (a re-applied migration must fail, not
-            // stack a redundant index)
-            if (n.equalsIgnoreCase("primary") ||
-                m.uniques.exists(_.name.equalsIgnoreCase(n)))
-              throw new SqlError(1061, "42000", s"Duplicate key name '$n'")
-            n
-          case None => uniqueIndexName(stored.head, m.uniques.map(_.name))
-        }
-        for (row <- firstDupKey(catalog.read(db, t), uname, stored))
-          throwDup(t, uname, stored, row)
-        catalog.replaceMeta(m.copy(
-          uniques = m.uniques :+ catalog.UniqueKey(uname, stored)))
-      }
-      count(0)
-    case DropIndexR(name, idxName) =>
-      val (db, t) = qualify(name)
-      val n = clean(idxName)
-      if (n.equalsIgnoreCase("PRIMARY"))
-        sys.error("Cannot DROP 'PRIMARY'; use a table rebuild to change the primary key")
-      catalog.withDmlLock(db, t) {
-        // fresh meta inside the lock — a concurrently added key must
-        // survive this drop, and MySQL index names are case-insensitive
-        val m = catalog.meta(db, t)
-        if (!m.uniques.exists(_.name.equalsIgnoreCase(n)))
-          throw new SqlError(1091, "42000",
-            s"Can't DROP '$n'; check that column/key exists")
-        catalog.replaceMeta(m.copy(
-          uniques = m.uniques.filterNot(_.name.equalsIgnoreCase(n))))
-      }
-      count(0)
-    case AddColR(name, cname, ctype, attrs) =>
-      val (db, t) = qualify(name)
-      val c = clean(cname)
-      if (c.toLowerCase.startsWith("_graft_"))
-        sys.error(s"Column name '$c' is reserved " +
-          "(names beginning with _graft_ are internal)")
+  /** ALTER TABLE t with one action: ADD [CONSTRAINT [sym]] UNIQUE …, ADD
+    * [COLUMN] c type …, DROP INDEX|KEY name, DROP [COLUMN] c, or
+    * DISABLE|ENABLE KEYS. The statement must end after the action, so a
+    * multi-action ALTER is refused (1064) instead of silently applying
+    * only its first action.
+    */
+  private def alterTable(r: SqlReader): DataFrame = {
+    val (db, t) = table(r)
+    // UNIQUE forms come before ADD COLUMN: `add unique key uq (a)` must
+    // not read as a column named `unique`
+    val constraint = r.optional("add", "constraint")
+    if (constraint || r.optional("add", "unique")) {
+      val sym = if (constraint && r.peek != "unique") Some(r.ident()) else None
+      if (constraint) r.keyword("unique")
+      val (name, cols) = uniqueKey(r, sym)
+      r.end(); addUnique(db, t, name, cols)
+    } else if (r.optional("add")) {
+      r.optional("column")
+      val c = r.ident()
+      val ctype = r.columnType()
       // inline UNIQUE column attribute (MySQL creates a unique index
-      // named after the column), detected over the MASKED attribute
-      // tail — a COMMENT 'unique note id' must not grow a phantom
-      // index. The new column is all-NULL, so the constraint holds
-      // vacuously at birth: cataloged, no data check.
-      val wantUnique = "(?i)\\bunique\\b".r
-        .findFirstIn(SqlText.maskNonSyntax(attrs)).isDefined
-      val ddl = sparkDdl(ctype)
-      // an existing column name is MySQL's 1060 — Spark's withColumn
-      // would otherwise silently REPLACE the column (nulling its data)
-      // and the meta would grow a duplicate entry. CASE-INSENSITIVE
-      // like MySQL column identifiers (and like Spark's own default
-      // withColumn resolution, so 'V' really would clobber 'v').
-      def dup1060(m: Catalog#TableMeta): Unit =
-        if (m.cols.exists(_.name.equalsIgnoreCase(c)))
-          throw new SqlError(1060, "42S21", s"Duplicate column name '$c'")
-      dup1060(catalog.meta(db, t)) // fast fail before taking the lock
-      // the whole check → rewrite → meta swap runs under the (reentrant)
-      // DML lock, like DROP COLUMN: the losing racer of two same-name
-      // ADDs must fail the re-check BEFORE its withColumn-replacement
-      // rewrite nulls the winner's just-added column data, and a
-      // concurrent ADD UNIQUE landing first must survive the meta swap
-      catalog.withDmlLock(db, t) {
-        catalog.freshenStale()
-        val fresh = catalog.meta(db, t)
-        dup1060(fresh)
-        catalog.rewrite(db, t,
-          catalog.read(db, t).withColumn(c, lit(null).cast(ddl)))
-        val uniq =
-          if (wantUnique)
-            Seq(catalog.UniqueKey(
-              uniqueIndexName(c, fresh.uniques.map(_.name)), Seq(c)))
-          else Nil
-        catalog.replaceMeta(fresh.copy(
-          cols = fresh.cols :+ catalog.Col(c, ctype, ddl),
-          uniques = fresh.uniques ++ uniq))
-      }
-      count(0)
-    case DropColR(name, cname) =>
-      val (db, t) = qualify(name)
-      val c = clean(cname)
-      // the (reentrant) DML lock spans meta read → check → rewrite →
-      // meta swap: a concurrent INSERT validating against the
-      // still-wider key must not land between the narrowed-key check
-      // and the narrowed meta, and a concurrent DDL's meta commit must
-      // not be clobbered by a stale pre-lock snapshot
-      catalog.withDmlLock(db, t) {
-        catalog.freshenStale()
-        val m = catalog.meta(db, t)
-        require(!m.partitionCols.exists(_.equalsIgnoreCase(c)),
-          s"Cannot drop partition column '$c'")
-        // resolve the STORED name case-insensitively (MySQL column
-        // identifiers are CI; Spark's drop() resolves CI too, so every
-        // meta filter below must use the canonical spelling)
-        val stored = m.cols.find(_.name.equalsIgnoreCase(c)).map(_.name)
-          .getOrElse(throw new SqlError(1091, "42000",
-            s"Can't DROP '$c'; check that column/key exists"))
-        if (m.cols.lengthCompare(1) == 0)
-          throw new SqlError(1090, "42000",
-            "You can't delete all columns with ALTER TABLE; use DROP TABLE instead")
-        val dropped = catalog.read(db, t).drop(stored)
-        // the column leaves the PRIMARY KEY and every UNIQUE index too
-        // (MySQL drops it from each index; an index emptied this way is
-        // dropped) — but a NARROWED surviving index must still hold
-        // unique data, or MySQL fails the ALTER with 1062; checked
-        // against the would-be table BEFORE anything rewrites
-        val narrowedSets =
-          (if (m.pk.contains(stored) && m.pk.exists(_ != stored))
-            Seq("PRIMARY" -> m.pk.filterNot(_ == stored)) else Nil) ++
-          m.uniques.filter(u => u.cols.contains(stored) && u.cols.exists(_ != stored))
-            .map(u => u.name -> u.cols.filterNot(_ == stored))
-        for ((kname, kcols) <- narrowedSets;
-             row <- firstDupKey(dropped, kname, kcols))
-          throwDup(t, kname, kcols, row)
-        catalog.rewrite(db, t, dropped)
-        // a pk emptied this way turns the table copy-on-write
-        catalog.replaceMeta(m.copy(cols = m.cols.filterNot(_.name == stored),
-          pk = m.pk.filterNot(_ == stored),
-          uniques = m.uniques.map(u => u.copy(cols = u.cols.filterNot(_ == stored)))
-            .filter(_.cols.nonEmpty)))
-      }
-      count(0)
-    // mysqldump brackets each table's INSERTs with these; MySQL answers
-    // OK without effect for an engine that lacks the option, as here
-    case KeysR(name) =>
-      val (db, t) = qualify(name)
+      // named after the column), read from tokens — a COMMENT 'unique
+      // note id' must not grow a phantom index
+      val unique = SqlReader.words(r.raw()).contains("unique")
+      r.end(); addColumn(db, t, c, ctype, unique)
+    } else if (r.oneOf("drop index", "drop key").isDefined) {
+      val n = r.ident()
+      r.end(); dropIndex(db, t, n)
+    } else if (r.optional("drop")) {
+      r.optional("column")
+      val c = r.ident()
+      r.end(); dropColumn(db, t, c)
+    } else {
+      // mysqldump brackets each table's INSERTs with these; MySQL answers
+      // OK without effect for an engine that lacks the option, as here
+      if (r.oneOf("disable keys", "enable keys").isEmpty) r.fail()
+      r.end()
       if (!catalog.tableExists(db, t))
         throw new SqlError(1146, "42S02", s"Table '$db.$t' doesn't exist")
       count(0)
-    case _ => throw SqlError.syntax(stmt)
+    }
+  }
+
+  private def addUnique(db: String, t: String, explicit: Option[String],
+                        ucols: Seq[String]): DataFrame = {
+    // meta is (re)read INSIDE the lock: two concurrent ADD UNIQUEs
+    // must not lose each other's key (pure lost-update on a
+    // meta-only mutation), and the 1062 data check must see every
+    // commit that preceded the lock
+    catalog.withDmlLock(db, t) {
+      catalog.freshenStale()
+      val m = catalog.meta(db, t)
+      val stored = canonKeyCols(ucols, m.cols)
+      val uname = explicit match {
+        case Some(n) =>
+          // an explicitly named duplicate is MySQL's 1061, not a
+          // silent rename (a re-applied migration must fail, not
+          // stack a redundant index)
+          if (n.equalsIgnoreCase("primary") ||
+              m.uniques.exists(_.name.equalsIgnoreCase(n)))
+            throw new SqlError(1061, "42000", s"Duplicate key name '$n'")
+          n
+        case None => uniqueIndexName(stored.head, m.uniques.map(_.name))
+      }
+      for (row <- firstDupKey(catalog.read(db, t), uname, stored))
+        throwDup(t, uname, stored, row)
+      catalog.replaceMeta(m.copy(
+        uniques = m.uniques :+ catalog.UniqueKey(uname, stored)))
+    }
+    count(0)
+  }
+
+  private def dropIndex(db: String, t: String, n: String): DataFrame = {
+    if (n.equalsIgnoreCase("PRIMARY"))
+      sys.error("Cannot DROP 'PRIMARY'; use a table rebuild to change the primary key")
+    catalog.withDmlLock(db, t) {
+      // fresh meta inside the lock — a concurrently added key must
+      // survive this drop, and MySQL index names are case-insensitive
+      val m = catalog.meta(db, t)
+      if (!m.uniques.exists(_.name.equalsIgnoreCase(n)))
+        throw new SqlError(1091, "42000",
+          s"Can't DROP '$n'; check that column/key exists")
+      catalog.replaceMeta(m.copy(
+        uniques = m.uniques.filterNot(_.name.equalsIgnoreCase(n))))
+    }
+    count(0)
+  }
+
+  /** ADD COLUMN: the new column is all-NULL, so an inline UNIQUE holds
+    * vacuously at birth: cataloged, no data check.
+    */
+  private def addColumn(db: String, t: String, c: String, ctype: String,
+                        wantUnique: Boolean): DataFrame = {
+    if (c.toLowerCase.startsWith("_graft_"))
+      sys.error(s"Column name '$c' is reserved " +
+        "(names beginning with _graft_ are internal)")
+    val ddl = sparkDdl(ctype)
+    // an existing column name is MySQL's 1060 — Spark's withColumn
+    // would otherwise silently REPLACE the column (nulling its data)
+    // and the meta would grow a duplicate entry. CASE-INSENSITIVE
+    // like MySQL column identifiers (and like Spark's own default
+    // withColumn resolution, so 'V' really would clobber 'v').
+    def dup1060(m: Catalog#TableMeta): Unit =
+      if (m.cols.exists(_.name.equalsIgnoreCase(c)))
+        throw new SqlError(1060, "42S21", s"Duplicate column name '$c'")
+    dup1060(catalog.meta(db, t)) // fast fail before taking the lock
+    // the whole check → rewrite → meta swap runs under the (reentrant)
+    // DML lock, like DROP COLUMN: the losing racer of two same-name
+    // ADDs must fail the re-check BEFORE its withColumn-replacement
+    // rewrite nulls the winner's just-added column data, and a
+    // concurrent ADD UNIQUE landing first must survive the meta swap
+    catalog.withDmlLock(db, t) {
+      catalog.freshenStale()
+      val fresh = catalog.meta(db, t)
+      dup1060(fresh)
+      catalog.rewrite(db, t,
+        catalog.read(db, t).withColumn(c, lit(null).cast(ddl)))
+      val uniq =
+        if (wantUnique)
+          Seq(catalog.UniqueKey(
+            uniqueIndexName(c, fresh.uniques.map(_.name)), Seq(c)))
+        else Nil
+      catalog.replaceMeta(fresh.copy(
+        cols = fresh.cols :+ catalog.Col(c, ctype, ddl),
+        uniques = fresh.uniques ++ uniq))
+    }
+    count(0)
+  }
+
+  private def dropColumn(db: String, t: String, c: String): DataFrame = {
+    // the (reentrant) DML lock spans meta read → check → rewrite →
+    // meta swap: a concurrent INSERT validating against the
+    // still-wider key must not land between the narrowed-key check
+    // and the narrowed meta, and a concurrent DDL's meta commit must
+    // not be clobbered by a stale pre-lock snapshot
+    catalog.withDmlLock(db, t) {
+      catalog.freshenStale()
+      val m = catalog.meta(db, t)
+      require(!m.partitionCols.exists(_.equalsIgnoreCase(c)),
+        s"Cannot drop partition column '$c'")
+      // resolve the STORED name case-insensitively (MySQL column
+      // identifiers are CI; Spark's drop() resolves CI too, so every
+      // meta filter below must use the canonical spelling)
+      val stored = column(m.cols, c, new SqlError(1091, "42000",
+        s"Can't DROP '$c'; check that column/key exists")).name
+      if (m.cols.lengthCompare(1) == 0)
+        throw new SqlError(1090, "42000",
+          "You can't delete all columns with ALTER TABLE; use DROP TABLE instead")
+      val dropped = catalog.read(db, t).drop(stored)
+      // the column leaves the PRIMARY KEY and every UNIQUE index too
+      // (MySQL drops it from each index; an index emptied this way is
+      // dropped) — but a NARROWED surviving index must still hold
+      // unique data, or MySQL fails the ALTER with 1062; checked
+      // against the would-be table BEFORE anything rewrites
+      val narrowedSets =
+        (if (m.pk.contains(stored) && m.pk.exists(_ != stored))
+          Seq("PRIMARY" -> m.pk.filterNot(_ == stored)) else Nil) ++
+        m.uniques.filter(u => u.cols.contains(stored) && u.cols.exists(_ != stored))
+          .map(u => u.name -> u.cols.filterNot(_ == stored))
+      for ((kname, kcols) <- narrowedSets;
+           row <- firstDupKey(dropped, kname, kcols))
+        throwDup(t, kname, kcols, row)
+      catalog.rewrite(db, t, dropped)
+      // a pk emptied this way turns the table copy-on-write
+      catalog.replaceMeta(m.copy(cols = m.cols.filterNot(_.name == stored),
+        pk = m.pk.filterNot(_ == stored),
+        uniques = m.uniques.map(u => u.copy(cols = u.cols.filterNot(_ == stored)))
+          .filter(_.cols.nonEmpty)))
+    }
+    count(0)
   }
 
   // ---- DML (insert.rs / update.rs / delete.rs) ---------------------------
-
-  private val InsertR =
-    "(?is)(insert\\s+ignore|insert|replace)\\s+into\\s+([`\\w.]+)\\s*(\\([^)]*\\))?\\s*(values\\b.*|select\\b.*|with\\b.*)".r
 
   /** INSERT … VALUES / INSERT … SELECT / REPLACE INTO. The source rows
     * are parsed and planned by Spark (`VALUES` is an inline table; a
@@ -1436,35 +1393,31 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     * and the write run under the statement-scope DML lock: two racing
     * INSERTs must not both pass the check and commit the same key.
     */
-  private def insert(stmt: String): DataFrame = stmt match {
-    case InsertR(verb, name, colsOpt, source) =>
-      val replace = verb.equalsIgnoreCase("replace")
-      val ignore = verb.toLowerCase.endsWith("ignore")
-      val (db, t) = qualify(name)
-      val m = catalog.meta(db, t)
-      val src =
-        if (source.toLowerCase.startsWith("values"))
-          relational(s"SELECT * FROM ${source}")
-        else query(source)
-      val targetCols: Seq[catalog.Col] =
-        if (colsOpt == null) m.cols
-        else colsOpt.stripPrefix("(").stripSuffix(")")
-          .split(',').map(c => m.cols.find(_.name == clean(c.trim))
-            .getOrElse(sys.error(s"Unknown column '${c.trim}'"))).toSeq
-      require(src.columns.length == targetCols.length,
-        s"Column count doesn't match value count (${src.columns.length} vs ${targetCols.length})")
-      val positioned = src.toDF(targetCols.map(_.name): _*)
-      val aligned = positioned.select(m.cols.map { c =>
-        (if (targetCols.exists(_.name == c.name)) col(s"`${c.name}`")
-         else lit(null)).cast(c.sparkDdl).as(c.name)
-      }: _*)
-      // one execution of the source plan: the count and the write read
-      // the same materialization (an INSERT…SELECT over a big source
-      // must not scan it twice, and a non-deterministic source must not
-      // report a different count than it wrote)
-      writeRows(db, t, m, aligned,
-        if (replace) "replace" else if (ignore) "ignore" else "strict")
-    case _ => throw SqlError.syntax(stmt)
+  private def insert(r: SqlReader, kw: String): DataFrame = {
+    val mode = if (kw == "replace") "replace" else if (r.optional("ignore")) "ignore" else "strict"
+    r.keyword("into")
+    val (db, t) = table(r)
+    val listed = if (r.peek == "(") Some(r.list(r.ident())) else None
+    if (!Set("values", "select", "with")(r.peek)) r.fail()
+    val source = r.rest()
+    val m = catalog.meta(db, t)
+    val src =
+      if (source.toLowerCase.startsWith("values"))
+        relational(s"SELECT * FROM ${source}")
+      else query(source)
+    val targetCols = listed.fold(m.cols.map(_.name))(_.map(fieldColumn(m.cols, _).name))
+    require(src.columns.length == targetCols.length,
+      s"Column count doesn't match value count (${src.columns.length} vs ${targetCols.length})")
+    val positioned = src.toDF(targetCols: _*)
+    val aligned = positioned.select(m.cols.map { c =>
+      (if (targetCols.contains(c.name)) col(s"`${c.name}`")
+       else lit(null)).cast(c.sparkDdl).as(c.name)
+    }: _*)
+    // one execution of the source plan: the count and the write read
+    // the same materialization (an INSERT…SELECT over a big source
+    // must not scan it twice, and a non-deterministic source must not
+    // report a different count than it wrote)
+    writeRows(db, t, m, aligned, mode)
   }
 
   /** Land a batch of aligned rows under the table's key semantics:
@@ -1597,156 +1550,66 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     for (row <- existDup) throwDup(t, kname, kcols, row)
   }
 
-  private val LoadDataR =
-    ("(?is)load\\s+data\\s+(?:local\\s+)?infile\\s+'([^']+)'\\s*" +
-      "(replace|ignore)?\\s*into\\s+table\\s+([`\\w.]+)(.*)").r
-
   /** LOAD DATA [LOCAL] INFILE — the MySQL bulk-ingest surface, mapped
     * onto a distributed CSV scan (the file is read by executors with the
     * target schema, never row-by-row through the driver the way
-    * mysqld's parser does). Supports CHARACTER SET (utf8 family),
-    * FIELDS TERMINATED/ENCLOSED/ESCAPED BY, LINES TERMINATED BY,
-    * IGNORE n LINES, a plain column list, a SET col = expr tail, and the
-    * REPLACE/IGNORE duplicate-key modes of INSERT (strict 1062
-    * otherwise). The tail is parsed clause by clause and anything
-    * unrecognized is a 1149 syntax error — a column list or SET clause
-    * must never silently no-op into a misload.
+    * mysqld's parser does). `GraftSession.parseLoad` reads the
+    * statement; column names resolve case-insensitively (1054 for an
+    * unknown one), and the load keeps the REPLACE/IGNORE duplicate-key
+    * modes of INSERT (strict 1062 otherwise).
     */
-  private def loadData(stmt: String,
-                       spool: Option[java.nio.file.Path] = None): DataFrame =
-    stmt match {
-    case LoadDataR(path0, modeOpt, name, tail0) =>
-      // LOCAL INFILE content arrives from the wire client as a spool
-      // file: secure_file_priv gates SERVER filesystem access and does
-      // not apply (MySQL semantics — the client read its own file)
-      val path = spool.map(_.toString).getOrElse(path0)
-      if (spool.isEmpty) checkFileAccess(path)
-      val (db, t) = qualify(name)
-      val m = catalog.meta(db, t)
+  private def loadData(load: GraftSession.Load,
+                       spool: Option[java.nio.file.Path] = None): DataFrame = {
+    // LOCAL INFILE content arrives from the wire client as a spool
+    // file: secure_file_priv gates SERVER filesystem access and does
+    // not apply (MySQL semantics — the client read its own file)
+    val path = spool.map(_.toString).getOrElse(load.file)
+    if (spool.isEmpty) checkFileAccess(path)
+    val (db, t) = inSchema(load.table)
+    val m = catalog.meta(db, t)
+    val readCols = load.cols.fold[Seq[Catalog#Col]](m.cols)(_.map(fieldColumn(m.cols, _)))
+    val setMap = load.sets.map { case (c, e) => fieldColumn(m.cols, c).name -> e }.toMap
 
-      var rest = tail0.trim
-      def eat(re: scala.util.matching.Regex): Option[List[String]] =
-        re.findPrefixMatchOf(rest).map { mm =>
-          rest = rest.substring(mm.end).trim; mm.subgroups }
-      // MySQL string-literal escapes inside TERMINATED/ENCLOSED BY
-      def unescape(s: String): String = {
-        val b = new StringBuilder; var i = 0
-        while (i < s.length) {
-          val c = s.charAt(i)
-          if (c == '\\' && i + 1 < s.length) {
-            s.charAt(i + 1) match {
-              case 't'  => b += '\t'; case 'n' => b += '\n'
-              case 'r'  => b += '\r'
-              case o    => b += o
-            }
-            i += 2
-          } else { b += c; i += 1 }
-        }
-        b.toString
-      }
-      def bad(what: String): Nothing =
-        throw new SqlError(1149, "42000",
-          s"LOAD DATA: unsupported syntax near '$what'")
-
-      eat("(?is)^character\\s+set\\s+(\\w+)".r).foreach { g =>
-        val cs = g.head.toLowerCase
-        // the distributed reader is UTF-8; other charsets would misread
-        if (cs != "utf8" && cs != "utf8mb4" && cs != "binary")
-          bad(s"CHARACTER SET $cs")
-      }
-      var sep = "\t"; var quote = "\""; var escape = "\\" // MySQL defaults
-      eat("(?is)^fields|^columns".r).foreach { _ =>
-        eat("(?is)^terminated\\s+by\\s+'([^']*)'".r)
-          .foreach(g => sep = unescape(g.head))
-        eat("(?is)^(?:optionally\\s+)?enclosed\\s+by\\s+'([^']*)'".r)
-          .foreach(g => quote = unescape(g.head))
-        eat("(?is)^escaped\\s+by\\s+'([^']*)'".r)
-          .foreach(g => escape = unescape(g.head))
-      }
-      eat("(?is)^lines".r).foreach { _ =>
-        eat("(?is)^starting\\s+by\\s+'([^']*)'".r)
-          .foreach(g => if (g.head.nonEmpty) bad("LINES STARTING BY"))
-        eat("(?is)^terminated\\s+by\\s+'([^']*)'".r).foreach { g =>
-          val lt = unescape(g.head)
-          if (lt != "\n" && lt != "\r\n") bad(s"LINES TERMINATED BY '${g.head}'")
-        }
-      }
-      val skip = eat("(?is)^ignore\\s+(\\d+)\\s+(?:lines|rows)".r)
-        .map(_.head.toInt).getOrElse(0)
-      val colList: Seq[String] = eat("(?s)^\\(([^)]*)\\)".r) match {
-        case Some(g) =>
-          val names = splitTopLevel(g.head, ',').map(c => clean(c.trim))
-          names.foreach { c =>
-            if (c.startsWith("@"))
-              bad(s"$c (user-variable capture; use SET col = expr)")
-            if (!m.cols.exists(_.name == c))
-              sys.error(s"Unknown column '$c' in 'field list'")
-          }
-          names
-        case None => m.cols.map(_.name)
-      }
-      val setExprs: Seq[(String, String)] = eat("(?is)^set\\s+(.+)$".r) match {
-        case Some(g) =>
-          splitTopLevel(g.head, ',').map { a =>
-            a.split("=", 2) match {
-              case Array(c, e) =>
-                val cn = clean(c.trim)
-                if (!m.cols.exists(_.name == cn))
-                  sys.error(s"Unknown column '$cn' in 'field list'")
-                cn -> e.trim
-              case _ => bad(s"SET $a")
-            }
-          }
-        case None => Seq.empty
-      }
-      if (rest.nonEmpty) bad(rest.take(60))
-      val setMap = setExprs.toMap
-
-      // Distributed read: executors parse the file with the listed
-      // columns' types; only clause parsing happens on the driver.
-      // IGNORE n LINES drops the first n records the CSV parser actually
-      // produced — re-splitting the raw text ourselves would tear quoted
-      // (ENCLOSED BY) fields that contain embedded newlines. Record order
-      // within one file is split byte order, so the global zipWithIndex
-      // index IS the record number (costs one extra pass; only on skip>0).
-      val readCols = colList.map(c => m.cols.find(_.name == c).get)
-      val reader = spark.read
-        .option("sep", sep).option("quote", quote).option("escape", escape)
-        .option("multiLine", skip > 0)
-        .schema(org.apache.spark.sql.types.StructType(readCols.map(c =>
-          org.apache.spark.sql.types.StructField(c.name,
-            org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-              .parseDataType(c.sparkDdl)))))
-      val parsed = reader.csv(path)
-      val src =
-        if (skip == 0) parsed
-        else spark.createDataFrame(
-          parsed.rdd.zipWithIndex().filter(_._2 >= skip).map(_._1),
-          parsed.schema)
-      val aligned = src.select(m.cols.map { c =>
-        (setMap.get(c.name) match {
-          case Some(e)                          => expr(e) // may read input cols
-          case None if colList.contains(c.name) => col(s"`${c.name}`")
-          case None                             => lit(null)
-        }).cast(c.sparkDdl).as(c.name)
-      }: _*)
-      val mode = if (modeOpt == null) "strict" else modeOpt.toLowerCase
-      writeRows(db, t, m, aligned, mode)
-    case _ => throw SqlError.syntax(stmt)
+    // Distributed read: executors parse the file with the listed
+    // columns' types; only clause parsing happens on the driver.
+    // IGNORE n LINES drops the first n records the CSV parser actually
+    // produced — re-splitting the raw text ourselves would tear quoted
+    // (ENCLOSED BY) fields that contain embedded newlines. Record order
+    // within one file is split byte order, so the global zipWithIndex
+    // index IS the record number (costs one extra pass; only on skip>0).
+    val reader = spark.read
+      .option("sep", load.sep).option("quote", load.quote)
+      .option("escape", load.escape)
+      .option("multiLine", load.skip > 0)
+      .schema(readCols.map(c => s"`${c.name}` ${c.sparkDdl}").mkString(", "))
+    val parsed = reader.csv(path)
+    val src =
+      if (load.skip == 0) parsed
+      else spark.createDataFrame(
+        parsed.rdd.zipWithIndex().filter(_._2 >= load.skip).map(_._1),
+        parsed.schema)
+    val aligned = src.select(m.cols.map { c =>
+      (setMap.get(c.name) match {
+        case Some(e)                          => expr(e) // may read input cols
+        case None if readCols.exists(_.name == c.name) => col(s"`${c.name}`")
+        case None                             => lit(null)
+      }).cast(c.sparkDdl).as(c.name)
+    }: _*)
+    writeRows(db, t, m, aligned, load.mode)
   }
 
   /** LOAD DATA LOCAL INFILE with the file content delivered by the wire
     * client (the 0xFB request/stream exchange — MysqlServer drives the
-    * packets, this executes the load). The content is spooled to a
-    * server temp file so the SAME distributed CSV reader and clause
-    * parsing as server-side INFILE apply; the append is eager, so the
-    * spool is deleted before returning.
+    * packets from the same `parseLoad`, this executes the load). The
+    * content is spooled to a server temp file so the SAME distributed
+    * CSV reader applies; the append is eager, so the spool is deleted
+    * before returning.
     */
-  def loadDataLocal(stmt: String, content: Array[Byte]): DataFrame = {
+  def loadDataLocal(load: GraftSession.Load, content: Array[Byte]): DataFrame = {
     val tmp = java.nio.file.Files.createTempFile("graft-local-infile", ".dat")
     try {
       java.nio.file.Files.write(tmp, content)
-      dirty(loadData(stmt, spool = Some(tmp)))
+      dirty(loadData(load, spool = Some(tmp)))
     } finally java.nio.file.Files.deleteIfExists(tmp)
   }
 
@@ -1887,7 +1750,37 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     } finally deduped.unpersist()
   }
 
-  private val UpdateHeadR = "(?is)update\\s+([`\\w.]+)\\s+set\\s+(.+)".r
+  /** UPDATE and DELETE as Spark's own parser reads them: the target
+    * table, the SET assignments (column, value) and the WHERE condition
+    * (None without one), as Columns. The plan is only read, never run.
+    * A target with an alias, or any form Spark parses but MySQL's
+    * single-table UPDATE/DELETE lacks, is a 1064.
+    */
+  private def dmlPlan(stmt: String): ((String, String), Seq[(String, Column)], Option[Column]) = {
+    val plan = try spark.sessionState.sqlParser.parsePlan(stmt) catch {
+      case e: ParseException =>
+        // Spark reports the failing line and column; 1064 names the text there
+        val at = stmt.split('\n').take(e.start.line.getOrElse(1) - 1).map(_.length + 1).sum +
+          e.start.startPosition.getOrElse(0)
+        throw SqlError.syntax(stmt.substring(at min stmt.length))
+    }
+    def target(p: LogicalPlan): (String, String) = p match {
+      case UnresolvedRelation(parts, _, _) if parts.length <= 2 => inSchema(SqlReader.name(parts))
+      case _ => throw SqlError.syntax(stmt)
+    }
+    plan match {
+      case UpdateTable(rel, assignments, cond) =>
+        (target(rel), assignments.map {
+          case Assignment(a: UnresolvedAttribute, e) => a.name -> Bridge.column(e)
+          case _ => throw SqlError.syntax(stmt)
+        }, cond.map(Bridge.column))
+      // no WHERE parses to a TRUE condition: every row goes
+      case DeleteFromTable(rel, cond) =>
+        (target(rel), Nil, if (cond == Literal.TrueLiteral) None else Some(Bridge.column(cond)))
+      case _ => throw SqlError.syntax(stmt)
+    }
+  }
+
   /** UPDATE: one `commitRows` that retires the rows WHERE holds TRUE for
     * and adds each back as its image under the assignments — O(matched)
     * tombstones on merge-on-read tables (update.rs rewrites per key in
@@ -1895,73 +1788,54 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     * one in-place rewrite otherwise. Key-column assignments are checked
     * for 1062 before anything commits.
     */
-  private def update(stmt: String): DataFrame = stmt match {
-    case UpdateHeadR(name, rest) =>
-      val (db, t) = qualify(name)
-      val m = catalog.meta(db, t)
-      // quote-aware WHERE search: a 'where' inside a SET string literal
-      // must not split the statement
-      val wherePos = topLevelIndexOfWord(rest, "where")
-      val (sets, whereOpt) =
-        if (wherePos < 0) (rest, null)
-        else (rest.substring(0, wherePos), rest.substring(wherePos + 5))
-      val cond = if (whereOpt == null) lit(true) else expr(whereOpt)
-      // an unknown column fails before anything is read
-      val assignments = splitTopLevel(sets, ',').map(_.split("=", 2) match {
-        case Array(c0, e) =>
-          val c = clean(c0.trim)
-          c -> expr(e.trim).cast(m.cols.find(_.name == c)
-            .getOrElse(sys.error(s"Unknown column '$c'")).sparkDdl)
-        case _ => throw SqlError.syntax(stmt)
-      })
-      val touched = assignments.map(_._1).toSet
-      // key-column updates must not create duplicates — within the
-      // updated rows or against the UNMATCHED remainder of the table.
-      // The check runs inside the commit's DML lock, so a concurrent
-      // INSERT cannot land a key this UPDATE is about to occupy between
-      // the check and the write; key sets come from the under-lock meta
-      // (see writeRows' strict arm)
-      def checkKeys(upd: DataFrame): Unit = {
-        val checkSets = keySets(lockedMeta(db, t, m)).filter(_._2.exists(touched))
-        if (checkSets.nonEmpty) {
-          val rest = catalog.read(db, t).filter(!coalesce(cond, lit(false)))
-          for ((kname, kcols) <- checkSets) {
-            val kc = kcols.map(k => col(s"`$k`"))
-            val dup = firstDupKey(upd, kname, kcols).orElse(
-              keyedRows(upd, kname, kcols)
-                .join(keyedRows(rest, kname, kcols).select(kc: _*),
-                  kcols, "left_semi")
-                .select(kc: _*).head(1).headOption)
-            for (row <- dup) throwDup(t, kname, kcols, row)
-          }
+  private def update(stmt: String): DataFrame = {
+    val ((db, t), sets, where) = dmlPlan(stmt)
+    val m = catalog.meta(db, t)
+    val cond = where.getOrElse(lit(true))
+    // an unknown column fails before anything is read; each assignment
+    // commits under the column's stored spelling
+    val assignments = sets.map { case (c, e) =>
+      val stored = fieldColumn(m.cols, c)
+      stored.name -> e.cast(stored.sparkDdl)
+    }
+    val touched = assignments.map(_._1).toSet
+    // key-column updates must not create duplicates — within the
+    // updated rows or against the UNMATCHED remainder of the table.
+    // The check runs inside the commit's DML lock, so a concurrent
+    // INSERT cannot land a key this UPDATE is about to occupy between
+    // the check and the write; key sets come from the under-lock meta
+    // (see writeRows' strict arm)
+    def checkKeys(upd: DataFrame): Unit = {
+      val checkSets = keySets(lockedMeta(db, t, m)).filter(_._2.exists(touched))
+      if (checkSets.nonEmpty) {
+        val rest = catalog.read(db, t).filter(!coalesce(cond, lit(false)))
+        for ((kname, kcols) <- checkSets) {
+          val kc = kcols.map(k => col(s"`$k`"))
+          val dup = firstDupKey(upd, kname, kcols).orElse(
+            keyedRows(upd, kname, kcols)
+              .join(keyedRows(rest, kname, kcols).select(kc: _*),
+                kcols, "left_semi")
+              .select(kc: _*).head(1).headOption)
+          for (row <- dup) throwDup(t, kname, kcols, row)
         }
       }
-      // WHERE is evaluated against the ORIGINAL rows (MySQL semantics: a
-      // later assignment never re-resolves the condition)
-      count(commit(db, t, Seq(Retire.Where(cond)), set = assignments,
-        check = checkKeys).retired.get)
-    case _ => throw SqlError.syntax(stmt)
+    }
+    // WHERE is evaluated against the ORIGINAL rows (MySQL semantics: a
+    // later assignment never re-resolves the condition)
+    count(commit(db, t, Seq(Retire.Where(cond)), set = assignments,
+      check = checkKeys).retired.get)
   }
 
-  private val DeleteR =
-    "(?is)delete\\s+from\\s+([`\\w.]+)(?:\\s+where\\s+(.+))?".r
-  private def delete(stmt: String): DataFrame = stmt match {
-    case DeleteR(name, whereOpt) =>
-      val (db, t) = qualify(name)
-      if (whereOpt == null) {
-        // full-table delete: the rewrite (empty v+1) also retires any
-        // accumulated tombstones, cheaper than tombstoning every row
-        val df = catalog.read(db, t)
-        val n = df.count()
-        catalog.rewrite(db, t, df.limit(0))
-        count(n)
-      } else {
-        // delete.rs point-deletes sled keys; here the matched rows retire
-        // in one commit (pk tombstones, O(matched), or one rewrite),
-        // which finds and counts them once
-        count(commit(db, t, Seq(Retire.Where(expr(whereOpt)))).retired.get)
-      }
-    case _ => throw SqlError.syntax(stmt)
+  private def delete(stmt: String): DataFrame = {
+    val ((db, t), _, where) = dmlPlan(stmt)
+    // full-table delete: the rewrite is cheaper than tombstoning every row
+    if (where.isEmpty) emptyTable(db, t)
+    else {
+      // delete.rs point-deletes sled keys; here the matched rows retire
+      // in one commit (pk tombstones, O(matched), or one rewrite),
+      // which finds and counts them once
+      count(commit(db, t, Seq(Retire.Where(where.get))).retired.get)
+    }
   }
 
   // ---- variables (set_variable.rs / variable/system.rs + user_defined.rs)
@@ -1972,9 +1846,6 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     */
   private val userVars = scala.collection.mutable.Map.empty[String, String]
 
-  private val SetUserR = "(?is)set\\s+@(\\w+)\\s*:?=\\s*(.+)".r
-  private val SetR =
-    "(?is)set\\s+(global\\s+|session\\s+)?@?@?([\\w.]+)\\s*=\\s*(.+)".r
   /** `Catalog.commitRows` under this session's auto-compaction policy,
     * read from the graft_auto_compact_* system variables (SET for this
     * session, SET GLOBAL durably for the warehouse) — SURVEY §5's
@@ -1991,95 +1862,115 @@ class GraftSession(val spark: SparkSession, warehouse: String,
         .flatMap(_.toDoubleOption).getOrElse(catalog.autoCompactRatio),
       set, check)
 
-  private def setVariable(stmt: String): DataFrame = stmt match {
-    case SetUserR(name, value) =>
-      userVars(name.toLowerCase) = value.trim; count(0)
-    case SetR(scope, name, value) =>
-      val lower = name.toLowerCase
-      // both spellings reach GLOBAL scope: SET GLOBAL x and SET @@global.x
-      val global = (scope != null && scope.trim.equalsIgnoreCase("global")) ||
-        lower.startsWith("global.")
-      val n = lower.stripPrefix("global.").stripPrefix("session.")
-      // the file-access gate must not be loosenable over SQL (MySQL
-      // makes it settable only at server start)
-      if (n == "secure_file_priv")
-        throw new SqlError(1238, "HY000",
-          "Variable 'secure_file_priv' is a read only variable")
-      // retention knob for VERSION AS OF time travel: applied to the
-      // catalog immediately (rewrite GC reads it at commit time)
-      if (n == "graft_retain_versions") {
-        val v = unquote(value.trim).toIntOption.getOrElse(
-          throw new SqlError(1232, "42000",
-            "Incorrect argument type to variable 'graft_retain_versions'"))
-        if (v < 1) throw new SqlError(1231, "42000",
-          "graft_retain_versions must be >= 1 (the in-flight snapshot grace)")
-        catalog.retainVersions = v
-      }
-      variables.set(n, unquote(value.trim), global = global)
-      count(0)
-    case _ => throw SqlError.syntax(stmt)
+  /** SET @user [:]= value, or SET [GLOBAL|SESSION] [@@]name = value
+    * (the name may carry a `global.`/`session.` prefix). The value is the
+    * raw rest of the statement.
+    */
+  private def setVariable(r: SqlReader): DataFrame = {
+    val scope = r.oneOf("global", "session")
+    if (scope.isEmpty && r.optional("@") && !r.optional("@")) {
+      val name = r.ident()
+      if (!r.optional(":", "=")) r.keyword("=")
+      userVars(name.toLowerCase) = r.rest(nonEmpty = true); return count(0)
+    }
+    if (scope.nonEmpty) { r.optional("@"); r.optional("@") }
+    var lower = r.ident().toLowerCase
+    while (r.optional(".")) lower += "." + r.ident().toLowerCase
+    r.keyword("=")
+    val value = r.rest(nonEmpty = true)
+    // both spellings reach GLOBAL scope: SET GLOBAL x and SET @@global.x
+    val global = scope.contains("global") || lower.startsWith("global.")
+    val n = lower.stripPrefix("global.").stripPrefix("session.")
+    // the file-access gate must not be loosenable over SQL (MySQL
+    // makes it settable only at server start)
+    if (n == "secure_file_priv")
+      throw new SqlError(1238, "HY000",
+        "Variable 'secure_file_priv' is a read only variable")
+    // retention knob for VERSION AS OF time travel: applied to the
+    // catalog immediately (rewrite GC reads it at commit time)
+    if (n == "graft_retain_versions") {
+      val v = unquote(value).toIntOption.getOrElse(
+        throw new SqlError(1232, "42000",
+          "Incorrect argument type to variable 'graft_retain_versions'"))
+      if (v < 1) throw new SqlError(1231, "42000",
+        "graft_retain_versions must be >= 1 (the in-flight snapshot grace)")
+      catalog.retainVersions = v
+    }
+    variables.set(n, unquote(value), global = global)
+    count(0)
   }
 
-  /** Quote-aware `@name` → value substitution (single @, not @@). */
+  /** `@name` → its value outside literals and comments (single @, not
+    * @@), over the mask of SqlText's scan.
+    */
   private def substituteUserVars(s: String): String = {
     if (userVars.isEmpty || !s.contains("@")) return s
+    val m = SqlText.maskNonSyntax(s)
     val out = new StringBuilder
-    var quote: Char = 0; var i = 0
+    var i = 0
     while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { out += c; if (c == quote) quote = 0; i += 1 }
-      else if (c == '\'' || c == '"' || c == '`') { quote = c; out += c; i += 1 }
-      else if (c == '@' && i + 1 < s.length && s.charAt(i + 1) != '@' &&
-               (i == 0 || s.charAt(i - 1) != '@')) {
-        val end = (i + 1 to s.length).find(j =>
-          j == s.length || !Character.isLetterOrDigit(s.charAt(j)) && s.charAt(j) != '_').get
-        val name = s.substring(i + 1, end).toLowerCase
-        userVars.get(name) match {
-          case Some(v) => out ++= v
-          case None    => out ++= s.substring(i, end)
-        }
-        i = end
-      } else { out += c; i += 1 }
+      var end = i + 1
+      if (m(i) == '@' && !m.startsWith("@@", i) && (i == 0 || m(i - 1) != '@')) {
+        while (end < s.length && (s(end).isLetterOrDigit || s(end) == '_')) end += 1
+        out ++= userVars.getOrElse(s.substring(i + 1, end).toLowerCase, s.substring(i, end))
+      } else out += s(i)
+      i = end
     }
     out.toString
   }
 
   // ---- SHOW surface (show_*.rs) ------------------------------------------
 
-  /** The table a SHOW … FROM|FOR <t>, SHOW CREATE TABLE|VIEW <t> or
-    * DESCRIBE <t> names.
+  /** SHOW … and DESCRIBE, read past their keywords `kw`: the table a form
+    * names (SHOW COLUMNS|INDEX FROM t [FROM|IN db], DESCRIBE t, SHOW
+    * CREATE TABLE|VIEW t, SHOW COMMITS FOR t) or the database it lists
+    * (SHOW [FULL] TABLES and SHOW TABLE STATUS [FROM|IN db]; an unknown
+    * one is 1049), then LIKE 'pattern' or WHERE expr (LIMIT [offset,] n
+    * for WARNINGS and ERRORS).
     */
-  private val ShowTableR =
-    "(?is)(?:.*?\\s(?:from|for|table|view)|desc(?:ribe)?)\\s+([`\\w.]+).*".r
-
-  private def show(st: Statement): DataFrame = {
+  private def show(verb: Verb, r: SqlReader, kw: String): DataFrame = {
     import Verb._
-    val stmt = st.text
-    val like = "(?i)\\blike\\s+'([^']*)'".r.findFirstMatchIn(stmt).map(_.group(1))
+    def in(): Option[String] =
+      if (r.oneOf("from", "in").isDefined) Some(existingSchema(r.schema())) else None
+    val (db, t) = verb match {
+      case ShowColumns | ShowIndex =>
+        if (!kw.startsWith("desc") && r.oneOf("from", "in").isEmpty) r.fail()
+        val (named, t) = r.table()
+        (in().orElse(named).getOrElse(currentSchema), t)
+      case ShowCommits => r.keyword("for"); table(r)
+      case ShowCreateTable | ShowCreateView => table(r)
+      case ShowTables | ShowFullTables | ShowTableStatus =>
+        (in().getOrElse(currentSchema), "")
+      case _ => (currentSchema, "")
+    }
+    val diagnostics = verb == ShowWarnings || verb == ShowErrors
+    val limit = if (!diagnostics || !r.optional("limit")) None else {
+      val n = r.number().toInt
+      Some(if (r.optional(",")) (n, r.number().toInt) else (0, n))
+    }
+    val like = if (!diagnostics && r.optional("like")) Some(r.string()) else None
+    // WHERE filters the answer's rows: a Spark predicate over its columns
+    val where = if (diagnostics || like.nonEmpty || !r.optional("where")) None
+      else Some(r.rest(nonEmpty = true))
+    // SHOW GRANTS FOR user: the answer lists every seeded account anyway
+    if (verb == ShowGrants && r.optional("for")) r.rest()
+    r.end()
     def likeFilter(s: String): Boolean = like.forall { p =>
       Pattern.compile("(?i)^" + Pattern.quote(p).replace("%", "\\E.*\\Q")
         .replace("_", "\\E.\\Q") + "$").matcher(s).matches()
     }
-    lazy val (db, t) = stmt match {
-      case ShowTableR(name) => qualify(name)
-      case _ => throw SqlError.syntax(stmt)
-    }
 
-    st.verb match {
+    val out = verb match {
       case ShowDatabases =>
         frame(Seq("Database"), catalog.listSchemas().filter(likeFilter).map(Seq(_)))
-      case ShowFullTables =>
-        // MySQL's SHOW FULL TABLES distinguishes views via Table_type
-        frame(Seq(s"Tables_in_$currentSchema", "Table_type"),
-          (catalog.listTables(currentSchema).map(_ -> "BASE TABLE") ++
-            catalog.listViews(currentSchema).map(_ -> "VIEW"))
-            .filter(x => likeFilter(x._1)).sortBy(_._1)
-            .map { case (n, ty) => Seq(n, ty) })
-      case ShowTables =>
-        // views list alongside tables, as in MySQL
-        frame(Seq(s"Tables_in_$currentSchema"),
-          (catalog.listTables(currentSchema) ++ catalog.listViews(currentSchema))
-            .sorted.filter(likeFilter).map(Seq(_)))
+      case ShowTables | ShowFullTables =>
+        // views list alongside tables, as in MySQL; SHOW FULL TABLES
+        // tells them apart by Table_type
+        val full = verb == ShowFullTables
+        frame(s"Tables_in_$db" +: (if (full) Seq("Table_type") else Nil),
+          (catalog.listTables(db).map(Seq(_, "BASE TABLE")) ++
+            catalog.listViews(db).map(Seq(_, "VIEW")))
+            .filter(x => likeFilter(x.head)).sortBy(_.head).map(_.take(if (full) 2 else 1)))
       case ShowColumns =>
         val m = catalog.meta(db, t)
         frame(Seq("Field", "Type", "Null", "Key", "Default", "Extra"),
@@ -2100,7 +1991,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
           })
       // MySQL answers SHOW CREATE TABLE on a view with the view shape
       case ShowCreateView | ShowCreateTable
-          if st.verb == ShowCreateView || catalog.viewExists(db, t) =>
+          if verb == ShowCreateView || catalog.viewExists(db, t) =>
         frame(Seq("View", "Create View", "character_set_client",
           "collation_connection"),
           Seq(Seq(t, s"CREATE VIEW `$t` AS ${catalog.viewSql(db, t)}",
@@ -2178,32 +2069,25 @@ class GraftSession(val spark: SparkSession, warehouse: String,
         // row counts come from parquet footers (Catalog.rowCount) — zero
         // Spark jobs for the common case, not O(#tables) count() scans
         frame(Seq("Name", "Engine", "Version", "Row_format", "Rows", "Comment"),
-          catalog.listTables(currentSchema).filter(likeFilter).map { t =>
-            Seq(t, catalog.meta(currentSchema, t).engine.toUpperCase, "10",
-              "Dynamic", catalog.rowCount(currentSchema, t).toString, "")
+          catalog.listTables(db).filter(likeFilter).map { t =>
+            Seq(t, catalog.meta(db, t).engine.toUpperCase, "10",
+              "Dynamic", catalog.rowCount(db, t).toString, "")
           })
       case ShowWarnings =>
         // connectors emit SHOW WARNINGS LIMIT [offset,] count — honor it
-        val lim =
-          "(?i)^show\\s+warnings(?:\\s+limit\\s+(\\d+)(?:\\s*,\\s*(\\d+))?)?\\s*$".r
-        val rows = stmt match {
-          case lim(null, _)     => pendingWarnings.toSeq
-          case lim(n, null)     => pendingWarnings.toSeq.take(n.toInt)
-          case lim(off, cnt)    => pendingWarnings.toSeq.slice(
-            off.toInt, off.toInt + cnt.toInt)
-          case _ => throw SqlError.syntax(stmt)
+        val rows = limit.fold(pendingWarnings.toSeq) { case (off, n) =>
+          pendingWarnings.toSeq.slice(off, off + n)
         }
         frame(Seq("Level", "Code", "Message"),
           rows.map { case (l, c, m) => Seq(l, c.toString, m) })
-      case ShowErrors => frame(Seq("Level", "Code", "Message"), Seq.empty)
-      case _ => throw SqlError.syntax(stmt)
+      // SHOW ERRORS: an error is answered to its statement, not kept
+      case _ => frame(Seq("Level", "Code", "Message"), Seq.empty)
     }
+    where.fold(out)(out.where)
   }
 
   // ---- query path (select.rs / explain.rs; B7/B10/B12) -------------------
 
-  private val ExplainAnalyzeR =
-    "(?is)explain\\s+analyze\\s+(?:(formatted|verbose)\\s+)?(.+)".r
   private val VarRef = "(?i)@@(?:(global|session)\\.)?(\\w+)".r
   private val SelectVarsR = "(?is)select\\s+(@@[\\w.]+(?:\\s*,\\s*@@[\\w.]+)*)\\s*".r
 
@@ -2225,38 +2109,38 @@ class GraftSession(val spark: SparkSession, warehouse: String,
   private def sqlQuote(v: String): String =
     "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-  private def explainAnalyze(stmt: String): DataFrame = stmt match {
-    case ExplainAnalyzeR(mode, inner) =>
-      // reference explain.rs:44 (wired at core/execution.rs:1042):
-      // EXPLAIN ANALYZE <stmt> EXECUTES the statement and returns the
-      // plan annotated with runtime metrics (DataFusion's "Plan with
-      // Metrics" result shape). Spark SQL doesn't parse the ANALYZE
-      // flag, so route the child through this session's own query path,
-      // execute it distributed (rows discarded at the executors — never
-      // collected to the driver), and render the FINAL adaptive physical
-      // plan with each node's SQLMetrics values. VERBOSE renders each
-      // metric with its unit (timing → ms, size → bytes humanized), so
-      // scan/exchange wall times are readable; FORMATTED additionally
-      // prepends Spark's formatted explain of the final adaptive plan.
-      // Only a relational child may run: DML/DDL would write OUTSIDE
-      // graft's dispatch — no seq stamping, no commit protocol, no
-      // catalog lock — so it is refused (MySQL 1235), never half-executed
-      val childStmt = Statement.classify(inner)
-      if (childStmt.verb != Verb.Query)
-        throw new SqlError(1235, "42000",
-          "EXPLAIN ANALYZE only supports relational statements " +
-            "(SELECT/WITH/VALUES/TABLE/EXPLAIN/FROM); DML and DDL would " +
-            "execute outside the catalog's commit protocol")
-      val child = query(childStmt.text)
-      child.queryExecution.toRdd.foreach(_ => ())
-      val tree = GraftSession.metricsTree(
-        child.queryExecution.executedPlan, verbose = mode != null)
-      val formatted = Option(mode).filter(_.equalsIgnoreCase("formatted")).map(_ =>
-        Seq("Formatted Plan", child.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)))
-      frame(Seq("plan_type", "plan"),
-        formatted.toSeq :+ Seq("Plan with Metrics", tree))
-    case _ => throw SqlError.syntax(stmt)
+  private def explainAnalyze(r: SqlReader): DataFrame = {
+    val mode = r.oneOf("formatted", "verbose")
+    val inner = r.rest(nonEmpty = true)
+    // reference explain.rs:44 (wired at core/execution.rs:1042):
+    // EXPLAIN ANALYZE <stmt> EXECUTES the statement and returns the
+    // plan annotated with runtime metrics (DataFusion's "Plan with
+    // Metrics" result shape). Spark SQL doesn't parse the ANALYZE
+    // flag, so route the child through this session's own query path,
+    // execute it distributed (rows discarded at the executors — never
+    // collected to the driver), and render the FINAL adaptive physical
+    // plan with each node's SQLMetrics values. VERBOSE renders each
+    // metric with its unit (timing → ms, size → bytes humanized), so
+    // scan/exchange wall times are readable; FORMATTED additionally
+    // prepends Spark's formatted explain of the final adaptive plan.
+    // Only a relational child may run: DML/DDL would write OUTSIDE
+    // graft's dispatch — no seq stamping, no commit protocol, no
+    // catalog lock — so it is refused (MySQL 1235), never half-executed
+    val childStmt = Statement.classify(inner)
+    if (childStmt.verb != Verb.Query)
+      throw new SqlError(1235, "42000",
+        "EXPLAIN ANALYZE only supports relational statements " +
+          "(SELECT/WITH/VALUES/TABLE/EXPLAIN/FROM); DML and DDL would " +
+          "execute outside the catalog's commit protocol")
+    val child = query(childStmt.text)
+    child.queryExecution.toRdd.foreach(_ => ())
+    val tree = GraftSession.metricsTree(
+      child.queryExecution.executedPlan, verbose = mode.isDefined)
+    val formatted = mode.filter(_ == "formatted").map(_ =>
+      Seq("Formatted Plan", child.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)))
+    frame(Seq("plan_type", "plan"),
+      formatted.toSeq :+ Seq("Plan with Metrics", tree))
   }
 
   /** SELECT / EXPLAIN / WITH / VALUES / TABLE / FROM — Spark SQL with two
@@ -2298,7 +2182,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
             val ident = q.substring(mm.start(1), mm.end(1))
             val kind = mm.group(2).toLowerCase
             val spec = q.substring(mm.start(3), mm.end(3))
-            val (db, t) = qualify(ident)
+            val (db, t) = tableOf(ident)
             val v =
               if (kind == "version") {
                 if (!spec.forall(_.isDigit)) throw new SqlError(1064,
@@ -2356,10 +2240,13 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       // export twin of LOAD DATA INFILE: strip the clause, run the
       // query, write one csv file distributed (coalesce(1) matches
       // MySQL's single-file contract; drop it for sharded exports)
-      val outfileR =
-        "(?is)(.*?)\\s+into\\s+outfile\\s+'([^']+)'(?:\\s+fields\\s+terminated\\s+by\\s+'([^']+)')?\\s*$".r
-      q match {
-        case outfileR(body, path, sepOpt) =>
+      val r = new SqlReader(q)
+      r.seek("into outfile") match {
+        case Some(at) =>
+          val path = r.string()
+          val sep = if (r.optional("fields terminated by")) r.string() else "\t"
+          r.end()
+          val body = q.substring(0, at)
           checkFileAccess(path) // secure_file_priv gate (error 1290)
           require(!java.nio.file.Files.exists(java.nio.file.Paths.get(path)),
             s"File '$path' already exists") // MySQL error 1086 semantics
@@ -2370,7 +2257,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
             val n = df.count()
             val tmp = java.nio.file.Files.createTempDirectory("graft-outfile")
             df.coalesce(1).write.mode("overwrite")
-              .option("sep", if (sepOpt == null) "\t" else sepOpt)
+              .option("sep", sep)
               .csv(tmp.toString)
             import scala.jdk.CollectionConverters._
             val part = java.nio.file.Files.list(tmp).iterator.asScala
@@ -2380,7 +2267,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
             deleteDirTree(tmp)
             count(n)
           } finally df.unpersist()
-        case _ => relational(q)
+        case None => relational(q)
       }
       } finally
         // the plan was analyzed (resolved) eagerly above, so the
@@ -2466,18 +2353,30 @@ class GraftSession(val spark: SparkSession, warehouse: String,
 
   // ---- helpers -----------------------------------------------------------
 
-  private def clean(s: String): String = s.trim.stripPrefix("`").stripSuffix("`")
-
   private def unquote(s: String): String =
     if ((s.startsWith("'") && s.endsWith("'")) ||
         (s.startsWith("\"") && s.endsWith("\""))) s.substring(1, s.length - 1)
     else s
 
-  private def qualify(name: String): (String, String) = {
-    val parts = clean(name).split('.')
-    if (parts.length == 2) (clean(parts(0)), clean(parts(1)))
-    else (currentSchema, clean(name))
+  /** A table name, in the current schema when it names none. */
+  private def inSchema(name: (Option[String], String)): (String, String) =
+    (name._1.getOrElse(currentSchema), name._2)
+
+  /** The table name the reader reads next, `inSchema`. */
+  private def table(r: SqlReader): (String, String) = inSchema(r.table())
+
+  /** `table` over a whole string (the Scala API's table arguments). */
+  private def tableOf(name: String): (String, String) = {
+    val r = new SqlReader(name)
+    val n = table(r)
+    r.end()
+    n
   }
+
+  /** A database the statement names, which must exist (MySQL's 1049). */
+  private def existingSchema(db: String): String =
+    if (catalog.schemaExists(db)) db
+    else throw new SqlError(1049, "42000", s"Unknown database '$db'")
 
   /** MySQL column type → Spark DDL type. `ARRAY<elem>` is a graft
     * extension past the MySQL surface (MySQL has no array columns): the
@@ -2532,6 +2431,72 @@ class GraftSession(val spark: SparkSession, warehouse: String,
 object GraftSession {
   /** Column-metadata key marking a frame as a graft DML/DDL FinalCount. */
   val DmlCountTag = "graft_dml_count"
+
+  /** One LOAD DATA statement, read: the file, the duplicate-key mode
+    * (strict, replace or ignore), the table (database when named), the
+    * CSV options, the lines to skip, the listed columns (None: all, in
+    * table order) and the SET assignments (column, expression text).
+    */
+  final case class Load(file: String, mode: String, table: (Option[String], String),
+                        sep: String, quote: String, escape: String, skip: Long,
+                        cols: Option[Seq[String]], sets: Seq[(String, String)])
+
+  /** Read LOAD DATA [LOCAL] INFILE 'file' [REPLACE|IGNORE] INTO TABLE t,
+    * then its clauses in MySQL's order: CHARACTER SET (utf8 family),
+    * FIELDS|COLUMNS [TERMINATED BY] [[OPTIONALLY] ENCLOSED BY] [ESCAPED
+    * BY], LINES [STARTING BY ''] [TERMINATED BY '\n'|'\r\n'], IGNORE n
+    * LINES|ROWS, a column list, SET col = expr, …. A clause the
+    * distributed reader cannot honour, and anything unrecognized, is
+    * 1149 — a column list or SET clause must never silently no-op into a
+    * misload. The wire server reads the file name of LOCAL INFILE here
+    * before it asks the client for the content.
+    */
+  def parseLoad(text: String): Load = {
+    val r = new SqlReader(text)
+    if (!r.optional("load data local infile")) r.keyword("load data infile")
+    val file = r.string()
+    val mode = r.oneOf("replace", "ignore").getOrElse("strict")
+    r.keyword("into table")
+    val table = r.table()
+    val c = new SqlReader(r.rest(), 1149)
+    // MySQL string-literal escapes inside TERMINATED/ENCLOSED BY
+    def str(): String = {
+      val b = new StringBuilder
+      val it = c.string().iterator
+      for (ch <- it) b += (if (ch != '\\' || !it.hasNext) ch else it.next() match {
+        case 't' => '\t'; case 'n' => '\n'; case 'r' => '\r'; case o => o })
+      b.toString
+    }
+    // a value the distributed reader cannot honour fails where it starts
+    def honoured[A](read: => A)(ok: A => Boolean): Unit = {
+      val at = c.mark
+      if (!ok(read)) c.fail(at)
+    }
+    // the distributed reader is UTF-8; other charsets would misread
+    if (c.optional("character set"))
+      honoured(c.token())(Set("utf8", "utf8mb4", "binary"))
+    var sep = "\t"; var quote = "\""; var escape = "\\" // MySQL defaults
+    if (c.oneOf("fields", "columns").isDefined) {
+      if (c.optional("terminated by")) sep = str()
+      c.optional("optionally")
+      if (c.optional("enclosed by")) quote = str()
+      if (c.optional("escaped by")) escape = str()
+    }
+    if (c.optional("lines")) {
+      if (c.optional("starting by")) honoured(str())(_.isEmpty)
+      if (c.optional("terminated by")) honoured(str())(Set("\n", "\r\n"))
+    }
+    val skip = if (!c.optional("ignore")) 0L else {
+      val n = c.number()
+      if (c.oneOf("lines", "rows").isEmpty) c.fail()
+      n
+    }
+    val cols = if (c.peek == "(") Some(c.list(c.ident())) else None
+    val sets = if (!c.optional("set")) Nil
+      else c.items { val col = c.ident(); c.keyword("="); col -> c.raw() }
+    c.end()
+    Load(file, mode, table, sep, quote, escape, skip, cols, sets)
+  }
 
   /** Cheap pre-probe before the masking pass runs at all. */
   private[engine] val AsOfProbeR = "(?i)(version|timestamp)\\s+as\\s+of".r

@@ -20,9 +20,10 @@ object SqlError {
       s"Duplicate entry '$key' for key '$table.$index'")
 
   /** MySQL's 1064 for a statement whose shape its handler does not
-    * accept (or whose leading verb no handler knows).
+    * accept (or whose leading verb no handler knows); `near` is the text
+    * from the failing position. LOAD DATA's clauses answer 1149.
     */
-  def syntax(near: String): SqlError =
-    new SqlError(1064, "42000",
+  def syntax(near: String, code: Int = 1064): SqlError =
+    new SqlError(code, "42000",
       s"You have an error in your SQL syntax near '${near.take(80)}'")
 }

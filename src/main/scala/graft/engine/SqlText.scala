@@ -5,13 +5,10 @@ package graft.engine
   * literal or a comment is content, not syntax. Every scanner reads the
   * same single pass (`scan`): quotes are `'`, `"`, `` ` ``; a backslash
   * inside a `'`/`"` literal escapes the next character (Spark/MySQL
-  * string semantics); comments are dash-dash, hash and block comments;
-  * identifier characters are letters, digits and '_'.
+  * string semantics); comments are dash-dash, hash and block comments.
+  * `SqlReader` reads statement arguments in tokens over the same mask.
   */
 object SqlText {
-
-  private def isWordChar(c: Char): Boolean =
-    Character.isLetterOrDigit(c) || c == '_'
 
   /** Executable comments `/*!NNNNN … */` run when NNNNN is at most this:
     * graft's `version`, 8.0.26.
@@ -96,39 +93,6 @@ object SqlText {
     }
     if (start < s.length) out += s.substring(start)
     out.result()
-  }
-
-  /** First top-level occurrence of a standalone keyword (case-insensitive,
-    * outside quotes/parens/comments, '_' counts as an identifier char);
-    * -1 if absent.
-    */
-  def topLevelIndexOfWord(s: String, word: String): Int = {
-    val m = maskNonSyntax(s)
-    val wl = word.length
-    var depth = 0
-    m.indices.find(i => m.charAt(i) match {
-      case '(' => depth += 1; false
-      case ')' => depth -= 1; false
-      case _ =>
-        depth == 0 && m.regionMatches(true, i, word, 0, wl) &&
-          (i == 0 || !isWordChar(m.charAt(i - 1))) &&
-          (i + wl == m.length || !isWordChar(m.charAt(i + wl)))
-    }).getOrElse(-1)
-  }
-
-  /** Index just past the ')' matching the FIRST top-level '(' —
-    * quote-aware, so a paren inside a string literal (a quoted DEFAULT,
-    * a COMMENT) never closes the group. 0 when there is no top-level
-    * '(' or it never closes.
-    */
-  def afterMatchingClose(s: String): Int = {
-    val m = maskNonSyntax(s)
-    var depth = 0
-    m.indices.find(i => m.charAt(i) match {
-      case '(' => depth += 1; false
-      case ')' => depth -= 1; depth == 0
-      case _   => false
-    }).fold(0)(_ + 1)
   }
 
   /** True when the text's last syntax character is a ';' outside any

@@ -2,11 +2,12 @@ package graft.engine
 
 /** What the MySQL front end does with a statement. Each kind lists the
   * leading keywords that select it; `Statement.classify` takes the
-  * longest listed prefix of the statement's comment-free words. `Query`
-  * text goes to Spark's parser with every comment but hints blanked,
-  * executable ones too (`SqlText.stripComments`); every other kind has a
-  * graft handler, and a kind with no keywords (`Unknown`) is a syntax
-  * error.
+  * longest listed prefix of the statement's comment-free tokens
+  * (`SqlReader`'s, so `use`db`` and `set@a=1` start with their verb).
+  * `Query` text goes to Spark's parser with every comment but hints
+  * blanked, executable ones too (`SqlText.stripComments`); every other
+  * kind has a graft handler, and a kind with no keywords (`Unknown`) is
+  * a syntax error.
   */
 sealed abstract class Verb(val keywords: String*)
 
@@ -82,19 +83,19 @@ object Verb {
 
 /** One statement, classified once: its kind and its comment-free text
   * (`SqlText.normalize`, or `SqlText.stripComments` for the relational
-  * text Spark parses), with no trailing ';'. Every handler's argument
-  * regexes run on `text`.
+  * text Spark parses), with no trailing ';'. Every handler reads its
+  * arguments from `text` with one `SqlReader`, past the verb's keywords;
+  * UPDATE and DELETE text goes to Spark's own parser instead, whose plan
+  * gives the target, assignments and condition (`GraftSession.dmlPlan`).
   */
 final case class Statement(verb: Verb, text: String)
 
 object Statement {
   def classify(sql: String): Statement = {
     val text = clean(SqlText.normalize(sql))
-    val words =
-      if (text.startsWith("(")) Seq("(")
-      else text.split("\\s+", 5).take(4).toSeq
-        .map(_.takeWhile(c => Character.isLetterOrDigit(c) || c == '_').toLowerCase)
-    val verb = (words.length to 1 by -1).iterator
+    val r = new SqlReader(text)
+    val words = Seq.fill(4)(r.token())
+    val verb = (4 to 1 by -1).iterator
       .flatMap(n => Verb.byKeywords.get(words.take(n).mkString(" ")))
       .nextOption().getOrElse(Verb.Unknown)
     val relational = verb == Verb.Query || verb == Verb.ExplainAnalyze

@@ -345,9 +345,6 @@ final class MysqlServer(spark: SparkSession, warehouse: String,
     writeResultSet(io, schema, rows.asJava, more = more, deprecateEof = deprecateEof)
   }
 
-  private val LocalInfileR =
-    "(?is)load\\s+data\\s+local\\s+infile\\s+'([^']+)'.*".r
-
   /** LOAD DATA LOCAL INFILE wire exchange: answer the statement with a
     * 0xFB request carrying the filename, read the client's content
     * packets until the empty terminator, execute the load over the
@@ -357,28 +354,30 @@ final class MysqlServer(spark: SparkSession, warehouse: String,
     * that cannot open its file sends the empty packet immediately and
     * gets an OK for the 0-row load. A connection lost mid-stream (null
     * read before the terminator) aborts WITHOUT executing — a truncated
-    * prefix must never commit.
+    * prefix must never commit. The statement is read once, by
+    * `GraftSession.parseLoad`, before the request: a malformed one is
+    * answered with its error and no file is asked for.
     */
   private def runLocalInfile(io: PacketIO, session: GraftSession,
-                             st: Statement, more: Boolean): Boolean =
-    st.text match {
-      case LocalInfileR(fileName) =>
-        io.write(Messages.localInfileRequest(fileName))
-        val content = new java.io.ByteArrayOutputStream()
-        var p = io.read()
-        while (p != null && p.nonEmpty) { content.write(p); p = io.read() }
-        // connection lost BEFORE the empty terminator: abort — a truncated
-        // stream (torn final line included) must never commit as a load
-        if (p == null) return false
-        try {
-          val df = session.loadDataLocal(st.text, content.toByteArray)
-          val it = df.toLocalIterator()
-          val affected = if (it.hasNext) it.next().getLong(0) else 0L
-          io.write(Messages.ok(affected, moreResults = more))
-          true
-        } catch { case NonFatal(e) => writeError(io, e); false }
-      case _ => writeError(io, SqlError.syntax(st.text)); false
-    }
+                             st: Statement, more: Boolean): Boolean = {
+    val load =
+      try GraftSession.parseLoad(st.text)
+      catch { case NonFatal(e) => writeError(io, e); return false }
+    io.write(Messages.localInfileRequest(load.file))
+    val content = new java.io.ByteArrayOutputStream()
+    var p = io.read()
+    while (p != null && p.nonEmpty) { content.write(p); p = io.read() }
+    // connection lost BEFORE the empty terminator: abort — a truncated
+    // stream (torn final line included) must never commit as a load
+    if (p == null) return false
+    try {
+      val df = session.loadDataLocal(load, content.toByteArray)
+      val it = df.toLocalIterator()
+      val affected = if (it.hasNext) it.next().getLong(0) else 0L
+      io.write(Messages.ok(affected, moreResults = more))
+      true
+    } catch { case NonFatal(e) => writeError(io, e); false }
+  }
 
   /** Execute one statement and answer with an OK (DDL/DML FinalCount
     * shape: a single `affected_rows` column) or a text result set.
@@ -691,18 +690,15 @@ object ServerConfig {
             case ("server", "engines") =>
               require(raw.startsWith("[") && raw.endsWith("]"),
                 s"expected an array for 'engines', got: $raw")
-              // tokenize quoted strings FIRST (a comma inside quotes is
-              // part of the name, not a separator), then require the
-              // whole inner to be exactly quoted elements joined by
-              // single commas — missing ([..."a" "b"...]) or extra
-              // ([,,"a"]) separators can't parse silently
+              // quoted elements joined by single commas: a comma inside
+              // quotes is part of the name, and missing ([..."a" "b"...])
+              // or extra ([,,"a"]) separators can't parse silently
               val inner = raw.substring(1, raw.length - 1).trim
-              val tok = "\"([^\"]*)\"".r
-              val names = tok.findAllMatchIn(inner).map(_.group(1)).toSeq
-              val shape = ("""\s*"[^"]*"(\s*,\s*"[^"]*")*\s*""").r
-              require(inner.isEmpty || shape.matches(inner),
+              val elems = if (inner.isEmpty) Nil else SqlText.splitTopLevel(inner, ',').map(_.trim)
+              require(!inner.endsWith(",") && elems.forall(e => e.length >= 2 &&
+                  e.head == '"' && e.last == '"' && !e.init.tail.contains('"')),
                 s"malformed 'engines' array: $raw")
-              cfg = cfg.copy(engines = names)
+              cfg = cfg.copy(engines = elems.map(e => e.substring(1, e.length - 1)))
             case ("server", "log_file") =>
               cfg = cfg.copy(logFile = Some(str(raw)))
             case ("schema", "engine") =>

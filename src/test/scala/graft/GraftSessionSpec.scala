@@ -428,13 +428,20 @@ class GraftSessionSpec extends AnyFunSuite {
 
   test("regression: ALTER TABLE ADD COLUMN with decimal(p,s)") {
     g.sql("use test")
-    g.sql("create table decc (id int)")
-    g.sql("insert into decc values (1)")
-    g.sql("alter table decc add column amt decimal(10,2)")
-    g.sql("update decc set amt = 12.34 where id = 1")
-    assert(rows("select amt from decc").head.head.toString == "12.34")
-    val cols = rows("show columns from decc").map(r => (r.head, r(1)))
-    assert(cols == Seq(("id", "int"), ("amt", "decimal(10,2)")))
+    for ((t, ty) <- Seq("decc" -> "decimal(10,2)", "decc_sp" -> "decimal(10, 2)")) {
+      g.sql(s"create table $t (id int)")
+      g.sql(s"insert into $t values (1)")
+      g.sql(s"alter table $t add column amt $ty")
+      g.sql(s"update $t set amt = 12.34 where id = 1")
+      assert(rows(s"select amt from $t").head.head.toString == "12.34")
+      val cols = rows(s"show columns from $t").map(r => (r.head, r(1)))
+      assert(cols == Seq(("id", "int"), ("amt", "decimal(10,2)")))
+    }
+    // the spaced form in CREATE TABLE as well
+    g.sql("create table decc_ct (id int, amt decimal(10, 2))")
+    g.sql("insert into decc_ct values (1, 12.34)")
+    assert(rows("select amt from decc_ct").head.head.toString == "12.34")
+    assert(rows("show columns from decc_ct").map(_(1)) == Seq("int", "decimal(10,2)"))
   }
 
   test("regression: underscore identifiers containing keywords parse correctly") {
@@ -468,14 +475,18 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("regression: quoted parens and casing in SQL text scanning") {
-    import graft.engine.SqlText
     // a ')' inside a string literal must not close the column list
-    assert(SqlText.afterMatchingClose("create table t (a int, b char) engine=csv")
-      == "create table t (a int, b char)".length)
-    val tricky = "create table t (a varchar(5) default ')') engine=csv"
-    assert(SqlText.afterMatchingClose(tricky)
-      == "create table t (a varchar(5) default ')')".length)
-    assert(SqlText.afterMatchingClose("select 1") == 0)
+    g.sql("use test")
+    for ((ddl, cols) <- Seq(
+           "create table qparen (a int, b char) engine=csv" -> Seq("a", "b"),
+           "create table qparen (a varchar(5) default ')') engine=csv" -> Seq("a"))) {
+      g.sql(ddl)
+      assert(rows("show columns from qparen").map(_.head) == cols, ddl)
+      assert(rows("show create table qparen").head(1).toString.endsWith("ENGINE=CSV"), ddl)
+      g.sql("drop table qparen")
+    }
+    // no column list at all
+    assert(intercept[graft.engine.SqlError](g.sql("create table qparen")).code == 1064)
     // uppercase scope prefixes resolve their scope (net_buffer_length
     // is untouched by other tests in this shared-session suite)
     g.sql("set session net_buffer_length = 42")
@@ -995,5 +1006,122 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(rows.filter(_._1 <= 10).forall(_._2 == 4), rows)
     // each UPDATE reported the rows it changed
     assert(updates.sum == rows.map(_._2.toLong).sum, (updates, rows))
+  }
+
+  test("SHOW honours FROM|IN db; an unknown database is 1049") {
+    g.sql("create schema sha")
+    g.sql("create schema shb")
+    g.sql("create table sha.ta (id int, v int, primary key (id))")
+    g.sql("create table shb.ta (id int, w int, u int, unique key uq (u))")
+    g.sql("create table shb.tb (x int)")
+    g.sql("use sha")
+    assert(rows("show tables from shb") == Seq(Seq("ta"), Seq("tb")))
+    val full = g.sql("show full tables in shb")
+    assert(full.columns.head == "Tables_in_shb")
+    assert(full.collect().map(_.toSeq).toSeq ==
+      Seq(Seq("ta", "BASE TABLE"), Seq("tb", "BASE TABLE")))
+    assert(rows("show table status from shb like 't%'").map(_.head) == Seq("ta", "tb"))
+    // `ta` exists in both schemas: the named one answers
+    assert(rows("show columns from ta from shb").map(_.head) == Seq("id", "w", "u"))
+    assert(rows("show full columns in ta in shb").map(_.head) == Seq("id", "w", "u"))
+    assert(rows("show index from ta in shb") == Seq(Seq("ta", "0", "uq", "1", "u", "BTREE")))
+    assert(rows("show keys from ta") == Seq(Seq("ta", "0", "PRIMARY", "1", "id", "BTREE")))
+    assert(rows("show tables") == Seq(Seq("ta")))
+    // WHERE filters over the answer's columns (a connector's form)
+    assert(rows("show tables in shb where Tables_in_shb <> 'ta'") == Seq(Seq("tb")))
+    assert(rows("show variables where Variable_name = 'version'").map(_.head) == Seq("version"))
+    for (bad <- Seq("show tables from nodb", "show full tables in nodb",
+                    "show table status from nodb", "show columns from ta from nodb",
+                    "show index from ta in nodb")) {
+      val e = intercept[graft.engine.SqlError](g.sql(bad))
+      assert(e.code == 1049 && e.getMessage == "Unknown database 'nodb'", bad)
+    }
+  }
+
+  test("column names resolve case-insensitively in INSERT, UPDATE and LOAD DATA; an unknown one is 1054") {
+    g.sql("use test")
+    g.sql("create table cit (id int, v int, primary key (id))")
+    assert(rows("insert into cit (ID, V) values (1, 2)") == Seq(Seq(1L)))
+    assert(rows("update cit set V = 3") == Seq(Seq(1L)))
+    assert(rows("select id, v from cit") == Seq(Seq(1, 3)))
+    // the write lands under the stored spelling, so the key still holds
+    assert(intercept[graft.engine.SqlError](
+      g.sql("insert into cit (Id, v) values (1, 9)")).code == 1062)
+    assert(rows("update cit set ID = 7, V = 1") == Seq(Seq(1L)))
+    val f = Files.createTempFile("graft-cit", ".csv")
+    Files.writeString(f, "2,20\n")
+    assert(rows(s"load data infile '$f' into table cit fields terminated by ',' (Id, V) " +
+      "set V = V * 2") == Seq(Seq(1L)))
+    assert(rows("select id, v from cit order by id") == Seq(Seq(2, 40), Seq(7, 1)))
+    for (bad <- Seq("insert into cit (id, Nope) values (1, 2)", "update cit set Nope = 1",
+                    s"load data infile '$f' into table cit fields terminated by ',' (id, Nope)",
+                    s"load data infile '$f' into table cit fields terminated by ',' set Nope = 1")) {
+      val e = intercept[graft.engine.SqlError](g.sql(bad))
+      assert(e.code == 1054 && e.sqlState == "42S22" &&
+        e.getMessage == "Unknown column 'Nope' in 'field list'", s"$bad: ${e.getMessage}")
+    }
+  }
+
+  test("identifier forms × verb: each form answers as the bare name; unstorable names are 1103") {
+    g.sql("create schema idf")
+    g.sql("use idf")
+    val f = Files.createTempFile("graft-idf", ".tsv")
+    Files.writeString(f, "5\t50\n6\t60\n")
+    // %t / %t2: the table reference in the form under test; {c}: a column
+    val script = Seq(
+      "create table %t (id int, v int, w int, primary key (id))",
+      "insert into %t ({id}, {v}) values (1, 10), (2, 20)",
+      "insert into %t ({id}, {v}) values (1, 99)",
+      "insert into %t ({id}, nope) values (9, 9)",
+      "replace into %t ({id}, {v}, {w}) values (2, 21, 0), (3, 30, 0)",
+      "update %t set {v} = {v} + 1 where {id} = 1",
+      "delete from %t where {id} = 3",
+      s"load data infile '$f' into table %t ({id}, {v})",
+      "alter table %t add column x int",
+      "alter table %t add unique key uq ({v})",
+      "alter table %t drop column {w}",
+      "show columns from %t",
+      "show index from %t",
+      "show create table %t",
+      "select * from %t order by id",
+      "optimize table %t",
+      "analyze table %t",
+      "truncate table %t",
+      "select count(*) from %t",
+      "rename table %t to %t2",
+      "drop table %t2")
+    def run(name: String, ref: String => String, cols: String => String): Seq[Any] =
+      script.map { s =>
+        val sql = Seq("id", "v", "w").foldLeft(
+          s.replace("%t2", ref(name + "2")).replace("%t", ref(name)))((q, c) =>
+          q.replace(s"{$c}", cols(c)))
+        try g.sql(sql).collect().toSeq.map(_.toSeq.map {
+          case `name` => "T"
+          case v: String => v.replace(s"idf.$name", "idf.T").replace(s"`$name`", "`T`")
+          case v => v
+        })
+        catch {
+          case e: graft.engine.SqlError => s"error ${e.code}"
+          case e: Exception => s"error ${e.getClass.getSimpleName}"
+        }
+      }
+    val bare = run("idt", identity, identity)
+    val forms: Seq[(String, String, String => String, String => String)] = Seq(
+      ("backticked", "idt", n => s"`$n`", identity),
+      ("db.t", "idt", n => s"idf.$n", identity),
+      ("`db`.`t`", "idt", n => s"`idf`.`$n`", identity),
+      ("`db`.t", "idt", n => s"`idf`.$n", identity),
+      ("reserved word", "select", n => s"`$n`", identity),
+      ("mixed-case columns", "idt", identity, _.toUpperCase))
+    for ((form, name, ref, cols) <- forms)
+      assert(run(name, ref, cols) == bare, form)
+    for (bad <- Seq("`a b`", "`a.b`"); s <- script if !s.startsWith("select")) {
+      val sql = s.replace("%t2", bad).replace("%t", bad).replaceAll("\\{(\\w+)\\}", "$1")
+      val e = intercept[graft.engine.SqlError](g.sql(sql))
+      assert(e.code == 1103, s"$sql: ${e.getMessage}")
+    }
+    assert(bare(2) == "error 1062" && bare(3) == "error 1054", bare)
+    assert(bare(14) == Seq(Seq(1, 11, null), Seq(2, 21, null), Seq(5, 50, null),
+      Seq(6, 60, null)), bare)
   }
 }
