@@ -8,7 +8,9 @@ import scala.util.control.NonFatal
   * exactly; `shuffle_bytes` does not — q23, q51 and q75 move by up to
   * 0.1% between runs (sf0.001, 4 cores). A telemetry diff between two
   * commits therefore compares `shuffle_records`, `jobs`, `stages` and
-  * `tasks`, and reads `shuffle_bytes` as a magnitude only.
+  * `tasks`, and reads `shuffle_bytes` as a magnitude only. `compiles`
+  * (run 2's generated classes the compile cache missed) is 0 wherever
+  * run 1 already compiled the query's shapes.
   */
 object Bench {
 
@@ -112,7 +114,7 @@ object Bench {
       s""""output_rows":${jmap(_._3)},"shuffle_bytes":${jmap(_._4.shuffleBytes)},""" +
       s""""shuffle_records":${jmap(_._4.shuffleRecords)},"jobs":${jmap(_._4.jobs)},""" +
       s""""stages":${jmap(_._4.stages)},"tasks":${jmap(_._4.tasks)},""" +
-      s""""files_pruned":${jmap(_._4.filesPruned)}$failedField}"""
+      s""""files_pruned":${jmap(_._4.filesPruned)},"compiles":${jmap(_._4.compiles)}$failedField}"""
     java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_telemetry.json"),
       telemetry.getBytes(java.nio.charset.StandardCharsets.UTF_8))

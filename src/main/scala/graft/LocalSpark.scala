@@ -63,15 +63,17 @@ object LocalSpark {
     * Jobs and stages are near-deterministic per query (AQE may add a
     * stage), so unlike the wall clock they compare across runs and
     * rounds. Shuffle-write records repeat exactly; shuffle-write bytes
-    * can move by a few bytes from run to run.
+    * can move by a few bytes from run to run. `compiles` counts Janino
+    * compilations, i.e. generated classes the JVM-wide compile cache
+    * did not hold: 0 for a statement shape this JVM has compiled before.
     */
   final case class Census(jobs: Long, stages: Long, tasks: Long,
                           shuffleBytes: Long, shuffleRecords: Long,
-                          filesPruned: Long)
+                          filesPruned: Long, compiles: Long = 0L)
 
   /** Counts every job, stage and task of `spark`'s context (it registers
-    * itself there), plus the files data skipping pruned, for the block
-    * passed to `measure`.
+    * itself there), plus the files data skipping pruned and the
+    * generated classes compiled, for the block passed to `measure`.
     */
   final class Meter(spark: SparkSession) extends SparkListener {
     private val jobs, stages, tasks, bytes, records = new AtomicLong
@@ -101,12 +103,20 @@ object LocalSpark {
       org.apache.spark.graft.ListenerBridge.drain(sc)
       Seq(jobs, stages, tasks, bytes, records).foreach(_.set(0))
       val pruned0 = org.apache.spark.sql.graft.Skipping.filesPruned.get()
+      val compiles0 = compileCount
       val t0 = System.nanoTime()
       val value = f
       val seconds = (System.nanoTime() - t0) / 1e9
       org.apache.spark.graft.ListenerBridge.drain(sc)
       (value, seconds, Census(jobs.get, stages.get, tasks.get, bytes.get,
-        records.get, org.apache.spark.sql.graft.Skipping.filesPruned.get() - pruned0))
+        records.get, org.apache.spark.sql.graft.Skipping.filesPruned.get() - pruned0,
+        compileCount - compiles0))
     }
+
+    /** Janino compilations so far in this JVM (Spark's own codegen
+      * metric; it counts every compile-cache miss, on any thread).
+      */
+    private def compileCount: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
   }
 }

@@ -374,20 +374,17 @@ class Catalog(spark: SparkSession, val warehouse: String) {
   /** Row count with NO Spark job for parquet tables: summed straight from
     * the parquet footers of the current committed version — the columnar
     * equivalent of the reference reading sled's row counter for SHOW
-    * TABLE STATUS. CSV falls back to a count job.
+    * TABLE STATUS. CSV, and a merge-on-read table with active
+    * tombstones, fall back to one count job over the table as read: a
+    * tombstone does not always mask a live row (a pk REPLACE tombstones
+    * every key of its batch, also keys that had no row), so footers
+    * minus tombstones can undercount.
     */
   def rowCount(db: String, t: String): Long = {
     val m = meta(db, t)
-    if (m.format != "parquet") read(db, t).count()
-    else {
-      // every ACTIVE tombstone masks exactly one older row (pk-unique +
-      // the DML discipline writes a tombstone only for a row that was
-      // visible), so live rows = data footers − active delete footers
-      // (retired tombstones are no-ops awaiting GC)
-      val data = footerRowCount(currentVersionDir(db, t))
-      if (m.mergeOnRead) data - activeTombstoneRows(db, t)
-      else data
-    }
+    if (m.format != "parquet" || (m.mergeOnRead && activeTombstoneRows(db, t) > 0))
+      read(db, t).count()
+    else footerRowCount(currentVersionDir(db, t))
   }
 
   private def activeTombstoneRows(db: String, t: String): Long = {

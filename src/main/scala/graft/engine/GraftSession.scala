@@ -164,19 +164,24 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     * and then backfills the E9 data-skipping sidecar for any current-
     * version files it does not cover — pre-E9 warehouses and externally
     * landed files get file pruning from the same statement that has
-    * always refreshed stats.
+    * always refreshed stats. A merge-on-read table is registered as a
+    * view, which Spark's command refuses; graft's backfill and ndv
+    * refresh are its whole statistics. The answer is MySQL's ANALYZE
+    * result set (Table/Op/Msg_type/Msg_text).
     */
   private def analyzeTable(r: SqlReader, stmt: String): DataFrame = {
     val (db, t) = table(r)
-    // MySQL's bare `ANALYZE TABLE t` — Spark's parser wants the COMPUTE
-    // STATISTICS clause; supply it when nothing follows the name
-    val out = spark.sql(if (r.atEnd) s"$stmt COMPUTE STATISTICS" else stmt)
+    if (!(catalog.tableExists(db, t) && catalog.meta(db, t).mergeOnRead))
+      // MySQL's bare `ANALYZE TABLE t` — Spark's parser wants the COMPUTE
+      // STATISTICS clause; supply it when nothing follows the name
+      spark.sql(if (r.atEnd) s"$stmt COMPUTE STATISTICS" else stmt)
     try {
       catalog.backfillStats(db, t)
       catalog.refreshNdv(db, t) // arms CBO range estimation (ndv)
     }
     catch { case scala.util.control.NonFatal(_) => () } // temp views etc.
-    out
+    frame(Seq("Table", "Op", "Msg_type", "Msg_text"),
+      Seq(Seq(s"$db.$t", "analyze", "status", "OK")))
   }
 
   /** Mark the session write-dirty AFTER a DML statement succeeds (a

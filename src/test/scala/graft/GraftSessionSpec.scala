@@ -1124,4 +1124,25 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(bare(14) == Seq(Seq(1, 11, null), Seq(2, 21, null), Seq(5, 50, null),
       Seq(6, 60, null)), bare)
   }
+
+  test("ANALYZE TABLE on a merge-on-read table answers MySQL's result set for every name form") {
+    g.sql("create schema idfa")
+    g.sql("use idfa")
+    for (name <- Seq("ida", "select")) {
+      g.sql(s"create table `$name` (id int, v int, primary key (id))")
+      g.sql(s"insert into `$name` values (1, 10), (2, 20), (3, 20)")
+      assert(g.catalog.meta("idfa", name).mergeOnRead)
+    }
+    for (ref <- Seq("ida", "`ida`", "idfa.ida", "`idfa`.`ida`", "`idfa`.ida",
+                    "`select`", "idfa.`select`")) {
+      val name = if (ref.contains("select")) "select" else "ida"
+      assert(rows(s"analyze table $ref") ==
+        Seq(Seq(s"idfa.$name", "analyze", "status", "OK")), ref)
+    }
+    // graft's ndv refresh ran: the relation under the merge view carries
+    // the distinct count Spark's own command would have refused to take
+    val st = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier("ida__graft_base", Some("idfa"))).stats
+    assert(st.flatMap(_.colStats.get("v")).flatMap(_.distinctCount).contains(BigInt(2)), st)
+  }
 }

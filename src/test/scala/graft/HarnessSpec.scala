@@ -66,6 +66,30 @@ class HarnessSpec extends AnyFunSuite {
     assert(c.filesPruned > 0 && c.filesPruned == indexes.map(_.lastPruned).sum, c)
   }
 
+  test("a lookup or month range that differs only in its constant compiles nothing") {
+    val g = new GraftSession(spark.newSession(),
+      Files.createTempDirectory("graft-compiles-wh").toString)
+    g.sql("create schema compdb"); g.sql("use compdb")
+    g.sql("create table keyed (k bigint, d date, ts timestamp, p decimal(15,2), " +
+      "primary key (k)) engine=sled")
+    g.sql("insert into keyed values " + (0 until 400).map { i =>
+      s"($i, date'1995-01-01' + $i, timestamp'1995-01-01 00:00:00' + interval $i day, $i.25)"
+    }.mkString(", "))
+    def lookup(k: Long) = g.sql(s"select * from keyed where k = $k")
+    def month(m: Int) = g.sql("select count(*), sum(p) from keyed where " +
+      f"d >= date'1995-$m%02d-01' and d < date'1995-${m + 1}%02d-01' " +
+      f"and ts >= timestamp'1995-$m%02d-01 00:00:00'")
+    def run(df: org.apache.spark.sql.DataFrame) = meter.measure(df.collect().toSeq)
+    assert(run(lookup(7))._1.map(_.getLong(0)) == Seq(7L))
+    val (rows, _, c) = run(lookup(311))
+    assert(rows.map(_.getLong(0)) == Seq(311L))
+    assert(c.compiles == 0L, c)
+    assert(run(month(2))._1.head.getLong(0) == 28L)
+    val (agg, _, cm) = run(month(3))
+    assert(agg.head.getLong(0) == 31L)
+    assert(cm.compiles == 0L, cm)
+  }
+
   test("one session factory and one SparkListener across main and test sources") {
     def sources(root: String): Seq[Path] =
       scala.util.Using.resource(Files.walk(Paths.get(root)))(

@@ -105,6 +105,22 @@ class MergeOnReadSpec extends AnyFunSuite {
     assert(status.getString(4) == "3", s"rows column: $status")
   }
 
+  test("row count after a REPLACE that tombstones an absent key equals count(*)") {
+    val (g, _) = freshSession()
+    val meter = new LocalSpark.Meter(g.spark)
+    g.sql("create table rp (id int, v int, primary key(id))")
+    g.sql("insert into rp values (1, 10), (2, 2)")
+    // no tombstones yet: the footer sum, no job
+    val (n0, _, c0) = meter.measure(g.catalog.rowCount("mor", "rp"))
+    assert(n0 == 2L && c0.jobs == 0L, c0)
+    // the batch tombstones keys 2 and 3; only key 2 had a row
+    g.sql("replace into rp values (2, 20), (3, 30)")
+    assert(g.catalog.rowCount("mor", "rp") == 3L)
+    assert(rows(g, "select count(*) from rp") == Seq(Seq("3")))
+    val status = g.sql("show table status").collect().find(_.getString(0) == "rp").get
+    assert(status.getString(4) == "3", s"rows column: $status")
+  }
+
   test("OPTIMIZE TABLE folds tombstones into a fresh version; non-MoR tables decline") {
     val (g, wh) = freshSession()
     g.sql("create table o (id int, v varchar(10), primary key(id))")
