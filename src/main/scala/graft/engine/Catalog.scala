@@ -193,13 +193,31 @@ class Catalog(spark: SparkSession, val warehouse: String) {
   private def baseName(t: String): String = t + "__graft_base"
   private def delsName(t: String): String = t + "__graft_dels"
 
+  /** A schema name `db`, and a table or view name `t` in it, as the
+    * warehouse spells them: a name that differs from a stored one only in
+    * case is that name, the way Spark's session catalog matches names.
+    * A name nothing matches comes back as given. Every statement resolves
+    * its names through here, so a handler's existence test and Spark's
+    * resolution always agree, and a CREATE of a name that differs from an
+    * existing one only in case is a duplicate.
+    */
+  def spelled(db: String, t: String): (String, String) = {
+    def in(dir: Path, name: String): String =
+      if (Files.exists(dir.resolve(name)) || !Files.isDirectory(dir)) name
+      else scala.util.Using.resource(Files.list(dir))(_.iterator.asScala
+        .map(_.getFileName.toString).find(_.equalsIgnoreCase(name))).getOrElse(name)
+    val d = in(Paths.get(warehouse), db)
+    (d, if (t.isEmpty) t else in(dbPath(d), t))
+  }
+
   // ---- schemas -----------------------------------------------------------
 
   def schemaExists(db: String): Boolean = Files.isDirectory(dbPath(db))
 
   def createSchema(db: String, ifNotExists: Boolean = false): Unit = {
     if (schemaExists(db)) {
-      if (!ifNotExists) sys.error(s"Can't create database '$db'; database exists")
+      if (!ifNotExists)
+        throw new SqlError(1007, "HY000", s"Can't create database '$db'; database exists")
     } else {
       Files.createDirectories(dbPath(db))
       spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
@@ -302,10 +320,10 @@ class Catalog(spark: SparkSession, val warehouse: String) {
       sys.error(s"Column name '${c.name}' is reserved " +
         "(names beginning with _graft_ are internal)")
     }
-    if (viewExists(m.db, m.table))
-      sys.error(s"Table '${m.table}' already exists")
+    def exists = new SqlError(1050, "42S01", s"Table '${m.table}' already exists")
+    if (viewExists(m.db, m.table)) throw exists
     if (tableExists(m.db, m.table)) {
-      if (!ifNotExists) sys.error(s"Table '${m.table}' already exists")
+      if (!ifNotExists) throw exists
       return
     }
     // versioned from birth: v1 is the (empty) initial commit
@@ -1023,7 +1041,7 @@ class Catalog(spark: SparkSession, val warehouse: String) {
     * shuffle parallelism at test scale; at 100 TB size it so one bucket
     * is one executor-core's worth (O(10^4)).
     */
-  var compactionBuckets: Int = 32
+  private val compactionBuckets = 32
 
   /** Smallest per-file row count that earns a `_graft_bloom` entry at
     * commit time (ANALYZE TABLE ignores it): min/max already covers tiny
@@ -1076,14 +1094,11 @@ class Catalog(spark: SparkSession, val warehouse: String) {
     * absolute floor (don't churn small tables) and a fraction of the
     * data rows (the merge anti-join's broadcast side must stay small —
     * this bound is what keeps the read path shuffle-free at any scale).
-    * Checked from parquet footers only — no Spark job.
-    */
-  var autoCompactMinTombstones: Long = 10000L
-  var autoCompactRatio: Double = 0.2
-
-  /** Run by `commitRows` after every merge-on-read commit; compacts when
-    * the policy triggers. Never invoked from `rewrite` itself, so
-    * compaction cannot re-enter.
+    * Checked from parquet footers only — no Spark job. Run by
+    * `commitRows` after every merge-on-read commit that writes
+    * tombstones (an append alone only adds rows, so it cannot cross the
+    * policy); never invoked from `rewrite` itself, so compaction cannot
+    * re-enter.
     */
   private def maybeAutoCompact(db: String, t: String, minTombstones: Long,
                                ratio: Double): Unit = {
@@ -1104,11 +1119,12 @@ class Catalog(spark: SparkSession, val warehouse: String) {
     * The storage strategy is chosen here and nowhere else:
     *  - merge-on-read tables tombstone the victims' pks and append the
     *    images and `added` at ONE sequence (the tombstones mask only
-    *    strictly older rows, so the added rows survive them), then run
-    *    the auto-compaction check. Keys on the pk are tombstoned as
-    *    given — O(batch), no table read; any other `retire` finds its
-    *    victims in the current rows and pins them once, so the count,
-    *    the tombstones and the images all read one snapshot;
+    *    strictly older rows, so the added rows survive them), then, if
+    *    it wrote tombstones, run the auto-compaction check. Keys on the
+    *    pk are tombstoned as given — O(batch), no table read; any other
+    *    `retire` finds its victims in the current rows and pins them
+    *    once, so the count, the tombstones and the images all read one
+    *    snapshot;
     *  - every other table first probes for a victim (a scan that stops
     *    at the first one) and, with none, just appends `added`.
     *    Otherwise it rewrites the table in ONE pass that drops the rows
@@ -1145,12 +1161,11 @@ class Catalog(spark: SparkSession, val warehouse: String) {
       if (m.mergeOnRead) {
         val pk = m.pk.map(k => col(s"`$k`"))
         val seq = nextSeq(db, t)
-        def land(victims: Option[DataFrame], more: Option[DataFrame]): Unit =
-          if (victims.nonEmpty || more.nonEmpty) {
-            victims.foreach(appendDeletes(db, t, _, seq))
-            more.foreach(appendRows(db, t, _, Some(seq)))
-            maybeAutoCompact(db, t, minTombstones, ratio)
-          }
+        def land(victims: Option[DataFrame], more: Option[DataFrame]): Unit = {
+          victims.foreach(appendDeletes(db, t, _, seq))
+          more.foreach(appendRows(db, t, _, Some(seq)))
+          if (victims.nonEmpty) maybeAutoCompact(db, t, minTombstones, ratio)
+        }
         retire match {
           case Seq(k: Retire.Keys) if k.cols.toSet == m.pk.toSet =>
             land(Some(k.keys.select(pk: _*)), added)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.parser.ParseException
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, Command, DeleteFromTable, InsertIntoDir, InsertIntoStatement, LogicalPlan, UpdateTable}
 import org.apache.spark.sql.execution.command.ExplainCommand
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.functions.{array, array_join, coalesce, col, concat, explode, expr, filter, lit, max, max_by, min, min_by, monotonically_increasing_id, struct, when}
+import org.apache.spark.sql.functions.{array, array_join, coalesce, col, concat, explode, expr, filter, lit, max_by, min_by, monotonically_increasing_id, struct, when}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import Catalog.Retire
@@ -326,7 +326,6 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     val m = catalog.meta(db, t)
     require(m.mergeOnRead,
       s"ingestUpsert requires a merge-on-read (PK'd parquet) table; '$table' is not")
-    val pkCols = m.pk.map(k => col(s"`$k`"))
     val aligned = stream.select(
       m.cols.map(c => col(s"`${c.name}`").cast(c.sparkDdl).as(c.name)) :+
         col(s"`$orderCol`").as("_graft_ord"): _*)
@@ -334,14 +333,9 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
-        val deduped = batch.toDF()
-          .groupBy(pkCols: _*)
-          .agg(max_by(struct(m.cols.map(c => col(s"`${c.name}`")): _*),
-            col("_graft_ord")).as("_r"))
-          .select(m.cols.map(c => col(s"_r.`${c.name}`").as(c.name)): _*)
-        replaceBatch(db, t, m, deduped)
-        }
+        if (!batch.isEmpty)
+          replaceBatch(db, t, m, keepOne(batch.toDF(), "PRIMARY", m.pk,
+            col("_graft_ord"), last = true).drop("_graft_ord"))
         ()
       }
       .start()
@@ -962,14 +956,14 @@ class GraftSession(val spark: SparkSession, warehouse: String,
 
   private def createSchema(r: SqlReader): DataFrame = {
     val ine = r.optional("if not exists")
-    val db = r.schema()
+    val db = schemaName(r.schema())
     r.end()
     catalog.createSchema(db, ifNotExists = ine); count(1)
   }
 
   private def dropSchema(r: SqlReader): DataFrame = {
     val ie = r.optional("if exists")
-    val db = r.schema()
+    val db = schemaName(r.schema())
     r.end()
     catalog.dropSchema(db, ifExists = ie); count(1)
   }
@@ -995,12 +989,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       catalog.Col(f.name, mysqlTypeOf(f.dataType.sql), f.dataType.sql)).toSeq
     catalog.createTable(catalog.TableMeta(db, t, cols, Seq.empty, "parquet"),
       ifNotExists = ine)
-    val staged = src.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = staged.count()
-      catalog.append(db, t, staged)
-      count(n)
-    } finally staged.unpersist()
+    writeRows(db, t, src, GraftSession.OnDuplicate.Error)
   }
 
   /** Spark DDL type → MySQL-surface type name (CTAS, SHOW COLUMNS). */
@@ -1389,17 +1378,18 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     * parquet row-group min/max statistics give sled-style point-lookup
     * pruning (store/engine/sled.rs:1 semantics) without any KV store.
     *
-    * PK tables enforce MySQL duplicate-entry semantics (insert.rs:203
-    * checks every index key before writing): INSERT of a key that exists
-    * — in the table or twice in the batch — answers error 1062 and
-    * writes nothing; REPLACE INTO (sqlparser's Insert{overwrite} —
-    * sled's put overwrites per key) upserts, counting MySQL-style
-    * (deleted + inserted, so a replaced row counts 2). Both the check
-    * and the write run under the statement-scope DML lock: two racing
-    * INSERTs must not both pass the check and commit the same key.
+    * Keyed tables meet their keys in `writeRows` (insert.rs:203 checks
+    * every index key before writing): INSERT of a key that exists — in
+    * the table or twice in the batch — answers error 1062 and writes
+    * nothing, INSERT IGNORE skips it, and REPLACE INTO (sqlparser's
+    * Insert{overwrite} — sled's put overwrites per key) displaces the
+    * rows holding it. The check and the write run under the DML lock:
+    * two racing INSERTs must not both pass the check and commit the
+    * same key.
     */
   private def insert(r: SqlReader, kw: String): DataFrame = {
-    val mode = if (kw == "replace") "replace" else if (r.optional("ignore")) "ignore" else "strict"
+    import GraftSession.OnDuplicate._
+    val onDup = if (kw == "replace") Replace else if (r.optional("ignore")) Ignore else Error
     r.keyword("into")
     val (db, t) = table(r)
     val listed = if (r.peek == "(") Some(r.list(r.ident())) else None
@@ -1418,51 +1408,82 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       (if (targetCols.contains(c.name)) col(s"`${c.name}`")
        else lit(null)).cast(c.sparkDdl).as(c.name)
     }: _*)
-    // one execution of the source plan: the count and the write read
-    // the same materialization (an INSERT…SELECT over a big source
-    // must not scan it twice, and a non-deterministic source must not
-    // report a different count than it wrote)
-    writeRows(db, t, m, aligned, mode)
+    writeRows(db, t, aligned, onDup)
   }
 
-  /** Land a batch of aligned rows under the table's key semantics:
-    * `strict` = duplicate keys answer 1062 (plain INSERT), `replace` =
-    * upsert, `ignore` = conflicts skip. Shared by INSERT/REPLACE/
-    * INSERT IGNORE and LOAD DATA INFILE.
+  /** Land a batch of aligned rows under the table's keys (INSERT,
+    * INSERT IGNORE, REPLACE, LOAD DATA and CREATE TABLE … AS SELECT):
+    * one conflict step per enforced key set, PRIMARY first, then one
+    * `commit`. The batch is staged once, so the count and the write read
+    * one materialization (an INSERT … SELECT over a big source scans it
+    * once, and a non-deterministic source reports what it wrote). The
+    * key sets come from the meta read under the DML lock: a key that a
+    * concurrent ALTER … ADD UNIQUE committed first is enforced, and a
+    * concurrent DROP fails the statement.
+    *
+    * Per key set, in the batch's row order: `Error` answers 1062 for a
+    * key twice in the batch or already in the table and writes nothing;
+    * `Ignore` keeps the first batch row per key and drops the rows whose
+    * key the table holds; `Replace` keeps the last and retires the table
+    * rows that hold a kept key. Each set resolves on its own, which
+    * matches MySQL's row-at-a-time loop on every batch in which no row's
+    * fate on one set frees or takes another set's key for a later row
+    * (KeyedWriteSpec's model states the filter). MySQL's affected rows:
+    * the rows landed, and for REPLACE also one per displaced row — each
+    * batch row a later one displaced and each table row retired.
+    *
+    * Row order is the order of a VALUES list (it stages single-partition,
+    * so monotonically_increasing_id is that order), and partition order
+    * for an unordered multi-partition SELECT — as undefined as MySQL's
+    * own order for one (its docs say to ORDER BY when the winner
+    * matters). The batch is not coalesced to one partition to force an
+    * order: that would funnel a big INSERT … SELECT through one task.
+    * The rows land sorted within each file by the PRIMARY key, else the
+    * first UNIQUE key, so parquet min/max statistics prune point lookups
+    * (store/engine/sled.rs:1 semantics without a KV store).
     */
-  private def writeRows(db: String, t: String, m: catalog.TableMeta,
-                        aligned: DataFrame, mode: String): DataFrame = {
-      // one execution of the source plan: the count and the write read
-      // the same materialization
-      val staged = aligned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val rows = staged.count()
-        if ((m.pk.isEmpty && m.uniques.isEmpty) || rows == 0) {
-          // no key ⇒ no conflicts possible; REPLACE/IGNORE degrade to
-          // INSERT (MySQL semantics on keyless tables)
-          catalog.append(db, t, staged)
-          count(rows)
-        } else if (mode == "replace") replaceInto(db, t, m, staged, rows)
-        else if (mode == "ignore") insertIgnore(db, t, m, staged)
-        else catalog.withDmlLock(db, t) {
-          catalog.freshenStale()
-          // re-read meta UNDER the lock: a concurrent ALTER … ADD UNIQUE
-          // that committed between statement entry and lock acquisition
-          // must be enforced by this insert (the pre-lock snapshot m
-          // cannot see it; the DDL arms already re-read inside the lock)
-          val ml = lockedMeta(db, t, m)
-          val existing = catalog.read(db, t)
-          for ((kname, kcols) <- keySets(ml))
-            checkNoConflict(t, kname, kcols, staged, rows, existing)
-          val sortKeys =
-            if (ml.pk.nonEmpty) ml.pk
-            else ml.uniques.headOption.map(_.cols).getOrElse(Nil)
-          catalog.append(db, t,
-            if (sortKeys.isEmpty) staged
-            else staged.sortWithinPartitions(sortKeys.map(k => col(s"`$k`")): _*))
-          count(rows)
-        }
-      } finally staged.unpersist()
+  private def writeRows(db: String, t: String, aligned: DataFrame,
+                        onDup: GraftSession.OnDuplicate): DataFrame = {
+    import GraftSession.OnDuplicate._
+    val staged = aligned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val rows = staged.count()
+      catalog.withDmlLock(db, t) {
+        catalog.freshenStale()
+        val m = catalog.meta(db, t)
+        val sets = if (rows == 0) Nil else keySets(m)
+        val existing = catalog.read(db, t)
+        val kept =
+          if (onDup == Error) { checkKeys(t, sets, staged, Some(rows), existing); staged }
+          else if (sets.isEmpty) staged
+          else sets.foldLeft(staged.withColumn("_graft_ord", monotonically_increasing_id())) {
+            case (df, (kname, kcols)) =>
+              val one = keepOne(df, kname, kcols, col("_graft_ord"), last = onDup == Replace)
+              if (onDup == Replace) one
+              else one.join(keyedRows(existing, kname, kcols).select(keyCols(kcols): _*).distinct(),
+                kcols, "left_anti")
+          }.drop("_graft_ord").persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val landed = if (kept eq staged) rows else kept.count()
+          val retire = if (onDup != Replace) Nil else sets.map { case (kname, kcols) =>
+            Retire.Keys(kcols, hintBatchKeys(
+              keyedRows(kept, kname, kcols).select(keyCols(kcols): _*), landed))
+          }
+          // the lone primary key of a merge-on-read table is tombstoned
+          // as given, without counting the rows it displaces: count them
+          // here, and retire nothing when there are none
+          val counted =
+            if (m.uniques.isEmpty && retire.nonEmpty)
+              Some(existing.join(retire.head.keys, m.pk, "left_semi").count())
+            else None
+          val sorted = kept.sortWithinPartitions(sets.take(1).flatMap(s => keyCols(s._2)): _*)
+          val done = commit(db, t, if (counted.contains(0L)) Nil else retire,
+            Some(sorted).filter(_ => landed > 0))
+          count(if (onDup == Replace) rows + (rows - landed) + counted.orElse(done.retired).get
+                else landed)
+        } finally if (!(kept eq staged)) kept.unpersist()
+      }
+    } finally staged.unpersist()
   }
 
   /** Broadcast the batch-key side of a duplicate/REPLACE probe only when
@@ -1482,23 +1503,14 @@ class GraftSession(val spark: SparkSession, warehouse: String,
   private def hintBatchKeys(keys: DataFrame, batchRows: Long): DataFrame =
     if (batchRows <= dmlBroadcastKeyLimit) keys.hint("broadcast") else keys
 
-  /** Freshest meta for a table while its DML lock is held — the DML
-    * arms validate key sets against this, not the pre-lock snapshot, so
-    * an ALTER … ADD UNIQUE committing between statement entry and lock
-    * acquisition is enforced. Falls back to the snapshot if the re-read
-    * fails (a concurrent DROP surfaces at the commit instead).
-    */
-  private def lockedMeta(db: String, t: String,
-                         snapshot: catalog.TableMeta): catalog.TableMeta =
-    try catalog.meta(db, t)
-    catch { case scala.util.control.NonFatal(_) => snapshot }
-
   /** The table's enforced key sets, PRIMARY first — the reference's
     * level-1/level-2 index list (meta_util.rs get_table_index_list).
     */
   private def keySets(m: catalog.TableMeta): Seq[(String, Seq[String])] =
     (if (m.pk.nonEmpty) Seq("PRIMARY" -> m.pk) else Nil) ++
       m.uniques.map(u => u.name -> u.cols)
+
+  private def keyCols(kcols: Seq[String]): Seq[Column] = kcols.map(k => col(s"`$k`"))
 
   /** Rows of a batch that participate in a key set's uniqueness check:
     * everything for PRIMARY; for a UNIQUE (non-PK) set, rows with any
@@ -1507,8 +1519,24 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     */
   private def keyedRows(df: DataFrame, kname: String,
                         kcols: Seq[String]): DataFrame =
-    if (kname == "PRIMARY") df
-    else df.filter(kcols.map(k => col(s"`$k`").isNotNull).reduce(_ && _))
+    if (kname == "PRIMARY") df else df.filter(noNullKey(kcols))
+
+  private def noNullKey(kcols: Seq[String]): Column =
+    keyCols(kcols).map(_.isNotNull).reduce(_ && _)
+
+  /** One row of `df` per key of a key set: the one with the least `ord`
+    * (`last` false) or the greatest, exactly one even when `ord` ties.
+    * The rows a UNIQUE set exempts (keyedRows) all stay.
+    */
+  private def keepOne(df: DataFrame, kname: String, kcols: Seq[String],
+                      ord: Column, last: Boolean): DataFrame = {
+    val row = struct(df.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
+    val one = keyedRows(df, kname, kcols).groupBy(keyCols(kcols): _*)
+      .agg((if (last) max_by(row, ord) else min_by(row, ord)).as("_graft_row"))
+      .select("_graft_row.*")
+    if (kname == "PRIMARY") one
+    else one.unionByName(df.filter(!noNullKey(kcols)))
+  }
 
   /** First duplicated key tuple of `df` on one key set (NULL-keyed rows
     * exempt for UNIQUE sets via keyedRows), or None. The ONE keyed-count
@@ -1518,7 +1546,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     */
   private def firstDupKey(df: DataFrame, kname: String,
                           kcols: Seq[String]): Option[Row] = {
-    val kc = kcols.map(k => col(s"`$k`"))
+    val kc = keyCols(kcols)
     keyedRows(df, kname, kcols).groupBy(kc: _*)
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("_graft_cnt"))
       .filter(col("_graft_cnt") > 1)
@@ -1530,30 +1558,34 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     throw SqlError.duplicateEntry(
       kcols.indices.map(row.get(_)).mkString("-"), t, kname)
 
-  /** The strict-INSERT duplicate probe for one key set: a within-batch
-    * duplicate or a collision with the existing table answers 1062
-    * (insert.rs:197-217). Small single-column batches push their literal
-    * keys into the scan (min/max- and bloom-pruned); big batches
-    * broadcast-semi-join so the table never shuffles.
+  /** MySQL's 1062 (insert.rs:197-217) unless, on every key set of
+    * `sets`, the keys of `batch` are distinct and no row of `against`
+    * holds one: strict INSERT's batch against the table, UPDATE's images
+    * against the rows it leaves alone. A single-column batch of at most
+    * 256 rows (`batchRows`) pushes its literal keys into the scan (min/
+    * max- and bloom-pruned); a bigger one semi-joins, broadcasting the
+    * batch keys as `hintBatchKeys` allows, so the table never shuffles.
+    * UPDATE does not know its batch size (None) and leaves the join to
+    * the planner.
     */
-  private def checkNoConflict(t: String, kname: String, kcols: Seq[String],
-                              staged: DataFrame, rows: Long,
-                              existing: DataFrame): Unit = {
-    val kc = kcols.map(k => col(s"`$k`"))
-    val keyed = keyedRows(staged, kname, kcols)
-    val existDup = firstDupKey(staged, kname, kcols).orElse {
-      val conflicts =
-        if (rows <= 256 && kcols.lengthCompare(1) == 0) {
-          val keys = keyed.select(kc.head).distinct().collect()
-            .map(_.get(0)).filter(_ != null)
-          if (keys.isEmpty) existing.limit(0)
-          else existing.filter(col(s"`${kcols.head}`").isin(keys.toIndexedSeq: _*))
-        } else keyedRows(existing, kname, kcols).join(
-          hintBatchKeys(keyed.select(kc: _*), rows), kcols, "left_semi")
-      conflicts.select(kc: _*).head(1).headOption
+  private def checkKeys(t: String, sets: Seq[(String, Seq[String])], batch: DataFrame,
+                        batchRows: Option[Long], against: DataFrame): Unit =
+    for ((kname, kcols) <- sets) {
+      val kc = keyCols(kcols)
+      val keys = keyedRows(batch, kname, kcols).select(kc: _*)
+      val taken = firstDupKey(batch, kname, kcols).orElse {
+        val hits = batchRows match {
+          case Some(n) if n <= 256 && kcols.lengthCompare(1) == 0 =>
+            val ks = keys.distinct().collect().map(_.get(0)).filter(_ != null)
+            if (ks.isEmpty) against.limit(0)
+            else against.filter(kc.head.isin(ks.toIndexedSeq: _*))
+          case _ => keyedRows(against, kname, kcols)
+            .join(batchRows.fold(keys)(hintBatchKeys(keys, _)), kcols, "left_semi")
+        }
+        hits.select(kc: _*).head(1).headOption
+      }
+      for (row <- taken) throwDup(t, kname, kcols, row)
     }
-    for (row <- existDup) throwDup(t, kname, kcols, row)
-  }
 
   /** LOAD DATA [LOCAL] INFILE — the MySQL bulk-ingest surface, mapped
     * onto a distributed CSV scan (the file is read by executors with the
@@ -1600,7 +1632,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
         case None                             => lit(null)
       }).cast(c.sparkDdl).as(c.name)
     }: _*)
-    writeRows(db, t, m, aligned, load.mode)
+    writeRows(db, t, aligned, load.onDup)
   }
 
   /** LOAD DATA LOCAL INFILE with the file content delivered by the wire
@@ -1616,143 +1648,6 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       java.nio.file.Files.write(tmp, content)
       dirty(loadData(load, spool = Some(tmp)))
     } finally java.nio.file.Files.deleteIfExists(tmp)
-  }
-
-  /** INSERT IGNORE on a PK table: rows whose key already exists — in
-    * the table or earlier in the batch (FIRST row wins, MySQL order) —
-    * are silently skipped; affected-rows counts only what landed.
-    */
-  /** INSERT IGNORE: conflicting rows skip instead of erroring — against
-    * the existing table and within the batch (first row per key wins,
-    * MySQL's row order), across the PRIMARY key and every UNIQUE set.
-    * Each key set resolves independently; the sequential cross-key
-    * cascade MySQL's row-at-a-time loop can produce (a row skipped on
-    * one key freeing another key's slot for a later row) is not
-    * reproducible distributed without serializing the batch — per-key
-    * keep-first matches MySQL in all non-cascading batches.
-    */
-  private def insertIgnore(db: String, t: String, m: catalog.TableMeta,
-                           staged: DataFrame): DataFrame =
-    catalog.withDmlLock(db, t) {
-      catalog.freshenStale()
-      // key sets from the under-lock meta (see writeRows' strict arm)
-      val ml = lockedMeta(db, t, m)
-      val existing = catalog.read(db, t)
-      var kept = staged.withColumn("_graft_ord", monotonically_increasing_id())
-      for ((kname, kcols) <- keySets(ml)) {
-        val kc = kcols.map(k => col(s"`$k`"))
-        // keep the FIRST batch row per key; NULL-keyed rows are exempt
-        // from a UNIQUE set (they join to nothing → coalesce passes them)
-        val firstOrd = keyedRows(kept, kname, kcols).groupBy(kc: _*)
-          .agg(min(col("_graft_ord")).as("_graft_keep"))
-        kept = kept.join(firstOrd, kcols, "left")
-          .filter(coalesce(col("_graft_ord") === col("_graft_keep"), lit(true)))
-          .drop("_graft_keep")
-          .join(keyedRows(existing, kname, kcols).select(kc: _*).distinct(),
-            kcols, "left_anti")
-      }
-      val fresh = kept.select(m.cols.map(c => col(s"`${c.name}`")): _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val landed = fresh.count()
-        if (landed > 0) {
-          val sortKeys =
-            if (ml.pk.nonEmpty) ml.pk
-            else ml.uniques.headOption.map(_.cols).getOrElse(Nil)
-          catalog.append(db, t,
-            if (sortKeys.isEmpty) fresh
-            else fresh.sortWithinPartitions(sortKeys.map(k => col(s"`$k`")): _*))
-        }
-        count(landed)
-      } finally fresh.unpersist()
-    }
-
-  /** REPLACE INTO on a PK table: upsert by key. Within the batch the
-    * LAST row for a key wins (MySQL processes rows in order); existing
-    * rows under the batch's keys are retired and the batch added in one
-    * `commitRows` (tombstones on merge-on-read tables, O(batch) — the
-    * sled put-overwrite shape; one rewrite otherwise).
-    *
-    * Batch-internal winner order is defined for VALUES sources (staged
-    * single-partition, so monotonically_increasing_id IS the row order)
-    * and for any SELECT source with a deterministic order. For an
-    * UNORDERED multi-partition SELECT the winner follows partition
-    * order — which is fine, because MySQL's own row order for an
-    * unordered SELECT is equally undefined (its docs say to use ORDER
-    * BY when the replacement winner matters). We deliberately do NOT
-    * coalesce(1) the batch to force one: that would funnel an
-    * arbitrarily large INSERT...SELECT through a single task.
-    */
-  private def replaceInto(db: String, t: String, m: catalog.TableMeta,
-                          staged: DataFrame, rows: Long): DataFrame =
-    catalog.withDmlLock(db, t) {
-      catalog.freshenStale()
-      // dispatch + enforce on the under-lock meta (see writeRows' strict
-      // arm): a unique key added concurrently must displace collisions
-      val ml = lockedMeta(db, t, m)
-      if (ml.uniques.nonEmpty) replaceMultiKey(db, t, ml, staged, rows)
-      else replaceByPk(db, t, ml, staged, rows)
-    }
-
-  private def replaceByPk(db: String, t: String, m: catalog.TableMeta,
-                          staged: DataFrame, rows: Long): DataFrame = {
-      val pkCols = m.pk.map(k => col(s"`$k`"))
-      // keep-last within the batch: VALUES plans stage single-partition,
-      // so monotonically_increasing_id is the row order
-      val ordered = staged.withColumn("_graft_ord", monotonically_increasing_id())
-      val deduped = ordered.groupBy(pkCols: _*)
-        .agg(max_by(struct(m.cols.map(c => col(s"`${c.name}`")): _*),
-          col("_graft_ord")).as("_r"))
-        .select(m.cols.map(c => col(s"_r.`${c.name}`").as(c.name)): _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val nKeys = deduped.count()
-        val keys = hintBatchKeys(deduped.select(pkCols: _*), nKeys)
-        val nReplaced = catalog.read(db, t).join(keys, m.pk, "left_semi").count()
-        commit(db, t, if (nReplaced > 0) Seq(Retire.Keys(m.pk, keys)) else Nil,
-          Some(deduped.sortWithinPartitions(pkCols: _*)))
-        // MySQL affected-rows: every row inserts (rows) and every delete
-        // event adds one — a table collision per key (nReplaced) plus
-        // each batch-internal duplicate displacing the prior row
-        count(rows + (rows - nKeys) + nReplaced)
-      } finally deduped.unpersist()
-    }
-
-  /** REPLACE INTO on a table with UNIQUE (non-PK) keys: a new row
-    * displaces every existing row it collides with on ANY enforced key
-    * set (MySQL REPLACE deletes all conflicting rows across all unique
-    * indexes, then inserts). Within the batch the LAST row per key wins,
-    * resolved per key set independently — see insertIgnore's cascade
-    * caveat. NULL-keyed rows never collide on a UNIQUE set.
-    */
-  private def replaceMultiKey(db: String, t: String, m: catalog.TableMeta,
-                              staged: DataFrame, rows: Long): DataFrame = {
-    val sets = keySets(m)
-    var ordered = staged.withColumn("_graft_ord", monotonically_increasing_id())
-    for ((kname, kcols) <- sets) {
-      val kc = kcols.map(k => col(s"`$k`"))
-      val lastOrd = keyedRows(ordered, kname, kcols).groupBy(kc: _*)
-        .agg(max(col("_graft_ord")).as("_graft_keep"))
-      ordered = ordered.join(lastOrd, kcols, "left")
-        .filter(coalesce(col("_graft_ord") === col("_graft_keep"), lit(true)))
-        .drop("_graft_keep")
-    }
-    val deduped = ordered.select(m.cols.map(c => col(s"`${c.name}`")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nKeys = deduped.count()
-      val retire = sets.map { case (kname, kcols) =>
-        Retire.Keys(kcols, hintBatchKeys(keyedRows(deduped, kname, kcols)
-          .select(kcols.map(k => col(s"`$k`")): _*).distinct(), nKeys))
-      }
-      val sortCols = (if (m.pk.nonEmpty) m.pk else m.uniques.head.cols)
-        .map(k => col(s"`$k`"))
-      // displaced rows: the existing rows that collide on any key set,
-      // found and counted once by the commit
-      val nReplaced = commit(db, t, retire,
-        Some(deduped.sortWithinPartitions(sortCols: _*))).retired.get
-      count(rows + (rows - nKeys) + nReplaced)
-    } finally deduped.unpersist()
   }
 
   /** UPDATE and DELETE as Spark's own parser reads them: the target
@@ -1808,27 +1703,16 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     // updated rows or against the UNMATCHED remainder of the table.
     // The check runs inside the commit's DML lock, so a concurrent
     // INSERT cannot land a key this UPDATE is about to occupy between
-    // the check and the write; key sets come from the under-lock meta
-    // (see writeRows' strict arm)
-    def checkKeys(upd: DataFrame): Unit = {
-      val checkSets = keySets(lockedMeta(db, t, m)).filter(_._2.exists(touched))
-      if (checkSets.nonEmpty) {
-        val rest = catalog.read(db, t).filter(!coalesce(cond, lit(false)))
-        for ((kname, kcols) <- checkSets) {
-          val kc = kcols.map(k => col(s"`$k`"))
-          val dup = firstDupKey(upd, kname, kcols).orElse(
-            keyedRows(upd, kname, kcols)
-              .join(keyedRows(rest, kname, kcols).select(kc: _*),
-                kcols, "left_semi")
-              .select(kc: _*).head(1).headOption)
-          for (row <- dup) throwDup(t, kname, kcols, row)
-        }
-      }
+    // the check and the write, and it reads the key sets there
+    def checkImages(images: DataFrame): Unit = {
+      val sets = keySets(catalog.meta(db, t)).filter(_._2.exists(touched))
+      if (sets.nonEmpty)
+        checkKeys(t, sets, images, None, catalog.read(db, t).filter(!coalesce(cond, lit(false))))
     }
     // WHERE is evaluated against the ORIGINAL rows (MySQL semantics: a
     // later assignment never re-resolves the condition)
     count(commit(db, t, Seq(Retire.Where(cond)), set = assignments,
-      check = checkKeys).retired.get)
+      check = checkImages).retired.get)
   }
 
   private def delete(stmt: String): DataFrame = {
@@ -1853,18 +1737,17 @@ class GraftSession(val spark: SparkSession, warehouse: String,
 
   /** `Catalog.commitRows` under this session's auto-compaction policy,
     * read from the graft_auto_compact_* system variables (SET for this
-    * session, SET GLOBAL durably for the warehouse) — SURVEY §5's
-    * tombstone-bytes-vs-reread knob, production default ON.
+    * session, SET GLOBAL durably for the warehouse; `setVariable` admits
+    * only numbers) — SURVEY §5's tombstone-bytes-vs-reread knob,
+    * production default ON.
     */
   private def commit(db: String, t: String, retire: Seq[Catalog.Retire],
                      added: Option[DataFrame] = None,
                      set: Seq[(String, Column)] = Nil,
                      check: DataFrame => Unit = _ => ()): Catalog.Committed =
     catalog.commitRows(db, t, retire, added,
-      variables.get("graft_auto_compact_min_tombstones")
-        .flatMap(_.toLongOption).getOrElse(catalog.autoCompactMinTombstones),
-      variables.get("graft_auto_compact_ratio")
-        .flatMap(_.toDoubleOption).getOrElse(catalog.autoCompactRatio),
+      variables.get("graft_auto_compact_min_tombstones").get.toLong,
+      variables.get("graft_auto_compact_ratio").get.toDouble,
       set, check)
 
   /** SET @user [:]= value, or SET [GLOBAL|SESSION] [@@]name = value
@@ -1891,16 +1774,16 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     if (n == "secure_file_priv")
       throw new SqlError(1238, "HY000",
         "Variable 'secure_file_priv' is a read only variable")
+    // graft's numeric knobs take a number (1232) no less than their
+    // least value (1231)
+    for ((parse, least, why) <- GraftSession.NumericVariables.get(n)) {
+      val v = parse(unquote(value)).filterNot(_.isNaN).getOrElse(
+        throw new SqlError(1232, "42000", s"Incorrect argument type to variable '$n'"))
+      if (v < least) throw new SqlError(1231, "42000", s"$n must be >= ${least.toLong}$why")
+    }
     // retention knob for VERSION AS OF time travel: applied to the
     // catalog immediately (rewrite GC reads it at commit time)
-    if (n == "graft_retain_versions") {
-      val v = unquote(value).toIntOption.getOrElse(
-        throw new SqlError(1232, "42000",
-          "Incorrect argument type to variable 'graft_retain_versions'"))
-      if (v < 1) throw new SqlError(1231, "42000",
-        "graft_retain_versions must be >= 1 (the in-flight snapshot grace)")
-      catalog.retainVersions = v
-    }
+    if (n == "graft_retain_versions") catalog.retainVersions = unquote(value).toInt
     variables.set(n, unquote(value), global = global)
     count(0)
   }
@@ -1924,6 +1807,24 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     out.toString
   }
 
+  /** `q` with every match of `r` replaced by `f`'s text. `r` runs over
+    * `SqlText.maskNonSyntax(q)`, so nothing inside a string literal, a
+    * backticked name or a comment ever matches; `f` reads group i of the
+    * match from the original text (null for a group that took no part).
+    * `query` applies each of its MySQL rewrites through here.
+    */
+  private def rewriteSyntax(q: String, r: scala.util.matching.Regex)(
+      f: (Int => String) => String): String = {
+    val out = new StringBuilder
+    var pos = 0
+    for (m <- r.findAllMatchIn(SqlText.maskNonSyntax(q))) {
+      out ++= q.substring(pos, m.start)
+      out ++= f(i => if (m.start(i) < 0) null else q.substring(m.start(i), m.end(i)))
+      pos = m.end
+    }
+    (out ++= q.substring(pos)).toString
+  }
+
   // ---- SHOW surface (show_*.rs) ------------------------------------------
 
   /** SHOW … and DESCRIBE, read past their keywords `kw`: the table a form
@@ -1941,7 +1842,7 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       case ShowColumns | ShowIndex =>
         if (!kw.startsWith("desc") && r.oneOf("from", "in").isEmpty) r.fail()
         val (named, t) = r.table()
-        (in().orElse(named).getOrElse(currentSchema), t)
+        inSchema((in().orElse(named), t))
       case ShowCommits => r.keyword("for"); table(r)
       case ShowCreateTable | ShowCreateView => table(r)
       case ShowTables | ShowFullTables | ShowTableStatus =>
@@ -2094,6 +1995,10 @@ class GraftSession(val spark: SparkSession, warehouse: String,
   // ---- query path (select.rs / explain.rs; B7/B10/B12) -------------------
 
   private val VarRef = "(?i)@@(?:(global|session)\\.)?(\\w+)".r
+  private val ConnectionInfoR = "(?i)\\b(database|version|current_user|user)\\(\\)".r
+  private val InformationSchemaR =
+    "(?i)information_schema\\.(tables|columns|schemata|statistics|table_constraints|key_column_usage|views)".r
+  private val GlobalVariablesR = "(?i)performance_schema\\.global_variables".r
   private val SelectVarsR = "(?is)select\\s+(@@[\\w.]+(?:\\s*,\\s*@@[\\w.]+)*)\\s*".r
 
   /** Resolve a @@var reference honoring its scope prefix: `@@global.x`
@@ -2101,10 +2006,9 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     * MySQL semantics); `@@x` and `@@session.x` read the merged view
     * (session values initialize from globals on connect).
     */
-  private def varRefValue(m: scala.util.matching.Regex.Match): Option[String] =
-    if (m.group(1) != null && m.group(1).equalsIgnoreCase("global"))
-      variables.getGlobal(m.group(2))
-    else variables.get(m.group(2))
+  private def varRefValue(scope: String, name: String): Option[String] =
+    if (scope != null && scope.equalsIgnoreCase("global")) variables.getGlobal(name)
+    else variables.get(name)
 
   /** Inline a runtime string as a valid SQL literal: \ and ' escaped
     * (Spark's default string-literal mode interprets backslash escapes),
@@ -2158,88 +2062,66 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       // pure variable select keeps MySQL column naming: `@@version` etc.
       val names = vars.split(',').map(_.trim)
       val row = Row(names.map(n =>
-        varRefValue(VarRef.findFirstMatchIn(n).get).orNull): _*)
+        VarRef.findFirstMatchIn(n).flatMap(m => varRefValue(m.group(1), m.group(2))).orNull): _*)
       spark.createDataFrame(java.util.List.of(row),
         StructType(names.map(n => StructField(n, StringType))))
     case _ =>
-      var q = stmt
-      // time travel (B17 made user-addressable): `FROM t VERSION AS OF n`
-      // / `FROM t TIMESTAMP AS OF '<ts>'` resolve the retained rewrite
-      // generation through a statement-scoped temp view — Spark SQL has
-      // no syntax slot for it, so the reference-style pre-rewrite used
-      // for information_schema applies. Resolution errors (unknown/
-      // reaped version, pre-manifest merge-on-read history) surface
-      // here, before any execution. Matching runs over a MASKED copy of
-      // the statement (string literals, backticked identifier bodies,
-      // and comments blanked) so the phrase inside data or a quoted name
-      // is never rewritten; each view gets a session-unique counter name
-      // and is dropped after the statement resolves.
+      // Every rewrite below matches syntax only (rewriteSyntax), so the
+      // same words inside data, a quoted name or a comment are left as
+      // written. Time travel (B17 made user-addressable): `FROM t VERSION
+      // AS OF n` / `FROM t TIMESTAMP AS OF '<ts>'` resolve the retained
+      // rewrite generation through a statement-scoped temp view — Spark
+      // SQL has no syntax slot for it. Resolution errors (unknown/reaped
+      // version, pre-manifest merge-on-read history) surface here, before
+      // any execution; each view gets a session-unique counter name and
+      // is dropped after the statement resolves.
       val ttViews = scala.collection.mutable.Buffer[String]()
       try {
-      if (GraftSession.AsOfProbeR.findFirstIn(q).isDefined) {
-        val masked = SqlText.maskNonSyntax(q)
-        val ms = GraftSession.TimeTravelR.findAllMatchIn(masked).toSeq
-        if (ms.nonEmpty) {
-          val out = new StringBuilder
-          var pos = 0
-          for (mm <- ms) {
-            out ++= q.substring(pos, mm.start)
-            val ident = q.substring(mm.start(1), mm.end(1))
-            val kind = mm.group(2).toLowerCase
-            val spec = q.substring(mm.start(3), mm.end(3))
-            val (db, t) = tableOf(ident)
-            val v =
-              if (kind == "version") {
-                if (!spec.forall(_.isDigit)) throw new SqlError(1064,
-                  "42000", s"VERSION AS OF expects a version number, got $spec")
-                spec.toInt
-              } else {
-                if (!(spec.startsWith("'") || spec.startsWith("\"")))
-                  throw new SqlError(1064, "42000",
-                    s"TIMESTAMP AS OF expects a quoted timestamp, got $spec")
-                catalog.versionAt(db, t, unquote(spec))
-              }
-            val view =
-              s"graft_tt_${GraftSession.ttViewCounter.incrementAndGet()}"
-            catalog.readVersion(db, t, v).createOrReplaceTempView(view)
-            ttViews += view
-            out ++= s"`$view`"
-            pos = mm.end
-          }
-          out ++= q.substring(pos)
-          q = out.toString
+      var q = stmt
+      if (GraftSession.AsOfProbeR.findFirstIn(q).isDefined)
+        q = rewriteSyntax(q, GraftSession.TimeTravelR) { g =>
+          val (db, t) = tableOf(g(1))
+          val spec = g(3)
+          val v =
+            if (g(2).equalsIgnoreCase("version")) {
+              if (!spec.forall(_.isDigit)) throw new SqlError(1064,
+                "42000", s"VERSION AS OF expects a version number, got $spec")
+              spec.toInt
+            } else {
+              if (!(spec.startsWith("'") || spec.startsWith("\""))) throw new SqlError(1064,
+                "42000", s"TIMESTAMP AS OF expects a quoted timestamp, got $spec")
+              catalog.versionAt(db, t, unquote(spec))
+            }
+          val view = s"graft_tt_${GraftSession.ttViewCounter.incrementAndGet()}"
+          catalog.readVersion(db, t, v).createOrReplaceTempView(view)
+          ttViews += view
+          s"`$view`"
         }
+      var infoSchema = false
+      q = rewriteSyntax(q, InformationSchemaR) { g =>
+        infoSchema = true
+        s"information_schema_${g(1)}"
       }
-      if (q.toLowerCase.contains("information_schema.")) {
-        registerInformationSchema()
-        q = q.replaceAll(
-          "(?i)information_schema\\.(tables|columns|schemata|statistics|table_constraints|key_column_usage|views)",
-          "information_schema_$1")
-      }
-      if (q.toLowerCase.contains("performance_schema.global_variables")) {
+      if (infoSchema) registerInformationSchema()
+      q = rewriteSyntax(q, GlobalVariablesR) { _ =>
         // globalsOnly: a SESSION override must not surface here (MySQL
         // reports the global value regardless of session scope)
         frame(Seq("variable_name", "variable_value"),
           variables.globalsOnly.map(v => Seq(v._1, v._2)))
           .createOrReplaceTempView("performance_schema_global_variables")
-        q = q.replaceAll("(?i)performance_schema\\.global_variables",
-          "performance_schema_global_variables")
+        "performance_schema_global_variables"
       }
-      // quoteReplacement: variable values containing '$'/'\' must be
-      // inlined literally, not treated as regex replacement templates.
       // sqlQuote: a SET value containing ' or \ must inline as a valid
       // string literal, not malformed SQL (or worse, injected SQL into
       // the rest of the statement) — same escaping as the wire server's
-      // binary-parameter quote().
-      import java.util.regex.Matcher
-      q = VarRef.replaceAllIn(q, m =>
-        Matcher.quoteReplacement(sqlQuote(varRefValue(m).getOrElse(""))))
+      // binary-parameter quote()
+      q = rewriteSyntax(q, VarRef)(g => sqlQuote(varRefValue(g(1), g(2)).getOrElse("")))
       // MySQL connection-info functions (clients issue these on connect)
-      q = q.replaceAll("(?i)\\bdatabase\\(\\)",
-          Matcher.quoteReplacement(sqlQuote(currentSchema)))
-        .replaceAll("(?i)\\bversion\\(\\)",
-          Matcher.quoteReplacement(sqlQuote(variables.get("version").getOrElse(""))))
-        .replaceAll("(?i)\\b(?:current_user|user)\\(\\)", "'root@%'")
+      q = rewriteSyntax(q, ConnectionInfoR)(g => g(1).toLowerCase match {
+        case "database" => sqlQuote(currentSchema)
+        case "version" => sqlQuote(variables.get("version").getOrElse(""))
+        case _ => "'root@%'"
+      })
       q = substituteUserVars(q)
       // SELECT … INTO OUTFILE 'path' [FIELDS TERMINATED BY 'x'] — the
       // export twin of LOAD DATA INFILE: strip the clause, run the
@@ -2363,9 +2245,11 @@ class GraftSession(val spark: SparkSession, warehouse: String,
         (s.startsWith("\"") && s.endsWith("\""))) s.substring(1, s.length - 1)
     else s
 
-  /** A table name, in the current schema when it names none. */
+  /** A table name, in the current schema when it names none, as the
+    * warehouse spells it (`Catalog.spelled`).
+    */
   private def inSchema(name: (Option[String], String)): (String, String) =
-    (name._1.getOrElse(currentSchema), name._2)
+    catalog.spelled(name._1.getOrElse(currentSchema), name._2)
 
   /** The table name the reader reads next, `inSchema`. */
   private def table(r: SqlReader): (String, String) = inSchema(r.table())
@@ -2378,10 +2262,15 @@ class GraftSession(val spark: SparkSession, warehouse: String,
     n
   }
 
+  /** A database name as the warehouse spells it (`Catalog.spelled`). */
+  private def schemaName(db: String): String = catalog.spelled(db, "")._1
+
   /** A database the statement names, which must exist (MySQL's 1049). */
-  private def existingSchema(db: String): String =
-    if (catalog.schemaExists(db)) db
+  private def existingSchema(db: String): String = {
+    val stored = schemaName(db)
+    if (catalog.schemaExists(stored)) stored
     else throw new SqlError(1049, "42000", s"Unknown database '$db'")
+  }
 
   /** MySQL column type → Spark DDL type. `ARRAY<elem>` is a graft
     * extension past the MySQL surface (MySQL has no array columns): the
@@ -2437,12 +2326,35 @@ object GraftSession {
   /** Column-metadata key marking a frame as a graft DML/DDL FinalCount. */
   val DmlCountTag = "graft_dml_count"
 
-  /** One LOAD DATA statement, read: the file, the duplicate-key mode
-    * (strict, replace or ignore), the table (database when named), the
-    * CSV options, the lines to skip, the listed columns (None: all, in
-    * table order) and the SET assignments (column, expression text).
+  /** graft's numeric system variables: how each parses, its least
+    * value, and why that is the least.
     */
-  final case class Load(file: String, mode: String, table: (Option[String], String),
+  private val NumericVariables: Map[String, (String => Option[Double], Double, String)] = Map(
+    "graft_retain_versions" ->
+      (((s: String) => s.toIntOption.map(_.toDouble), 1.0, " (the in-flight snapshot grace)")),
+    "graft_auto_compact_min_tombstones" ->
+      (((s: String) => s.toLongOption.map(_.toDouble), 0.0, "")),
+    "graft_auto_compact_ratio" -> (((s: String) => s.toDoubleOption, 0.0, "")))
+
+  /** What a keyed write does with a row whose key is already taken, by
+    * the table or by an earlier row of its batch: INSERT answers 1062
+    * (`Error`), INSERT IGNORE skips the row (`Ignore`) and REPLACE
+    * displaces the rows holding the key (`Replace`). LOAD DATA takes the
+    * same three.
+    */
+  sealed trait OnDuplicate
+  object OnDuplicate {
+    case object Error extends OnDuplicate
+    case object Ignore extends OnDuplicate
+    case object Replace extends OnDuplicate
+  }
+
+  /** One LOAD DATA statement, read: the file, the duplicate-key mode,
+    * the table (database when named), the CSV options, the lines to
+    * skip, the listed columns (None: all, in table order) and the SET
+    * assignments (column, expression text).
+    */
+  final case class Load(file: String, onDup: OnDuplicate, table: (Option[String], String),
                         sep: String, quote: String, escape: String, skip: Long,
                         cols: Option[Seq[String]], sets: Seq[(String, String)])
 
@@ -2460,7 +2372,10 @@ object GraftSession {
     val r = new SqlReader(text)
     if (!r.optional("load data local infile")) r.keyword("load data infile")
     val file = r.string()
-    val mode = r.oneOf("replace", "ignore").getOrElse("strict")
+    val onDup = r.oneOf("replace", "ignore").fold[OnDuplicate](OnDuplicate.Error) {
+      case "replace" => OnDuplicate.Replace
+      case _ => OnDuplicate.Ignore
+    }
     r.keyword("into table")
     val table = r.table()
     val c = new SqlReader(r.rest(), 1149)
@@ -2500,7 +2415,7 @@ object GraftSession {
     val sets = if (!c.optional("set")) Nil
       else c.items { val col = c.ident(); c.keyword("="); col -> c.raw() }
     c.end()
-    Load(file, mode, table, sep, quote, escape, skip, cols, sets)
+    Load(file, onDup, table, sep, quote, escape, skip, cols, sets)
   }
 
   /** Cheap pre-probe before the masking pass runs at all. */

@@ -1145,4 +1145,57 @@ class GraftSessionSpec extends AnyFunSuite {
       org.apache.spark.sql.catalyst.TableIdentifier("ida__graft_base", Some("idfa"))).stats
     assert(st.flatMap(_.colStats.get("v")).flatMap(_.distinctCount).contains(BigInt(2)), st)
   }
+
+  test("table and schema names resolve to their stored spelling ignoring case") {
+    val g = new GraftSession(spark.newSession(), Files.createTempDirectory("graft-wh-case").toString)
+    def rows(sql: String): Seq[Seq[Any]] = g.sql(sql).collect().toSeq.map(_.toSeq)
+    def code(sql: String): Int = intercept[graft.engine.SqlError](g.sql(sql)).code
+    g.sql("create schema cs")
+    g.sql("use cs")
+    g.sql("create table ida (id int, v int, primary key (id))")
+    assert(g.catalog.meta("cs", "ida").mergeOnRead)
+    assert(rows("insert into IDA values (1, 10), (2, 20)") == Seq(Seq(2L)))
+    g.sql("update Ida set v = 11 where id = 1")
+    assert(rows("analyze table IDA") == Seq(Seq("cs.ida", "analyze", "status", "OK")))
+    assert(rows("show columns from IDA").map(_.head) == Seq("id", "v"))
+    assert(rows("select id, v from IDA order by id") == Seq(Seq(1, 11), Seq(2, 20)))
+    g.sql("use CS")
+    assert(g.database == "cs")
+    assert(rows("replace into CS.IDA values (2, 21)") == Seq(Seq(2L)))
+    assert(rows("select v from cs.ida order by id") == Seq(Seq(11), Seq(21)))
+    // a name that differs from an existing one only in case is that name
+    assert(code("create table IDA (id int)") == 1050)
+    assert(code("create schema CS") == 1007)
+    g.sql("create table if not exists IDA (id int)")
+    assert(g.catalog.listTables("cs") == Seq("ida"))
+    g.sql("drop table IDA")
+    g.sql("drop schema CS")
+    assert(!g.catalog.schemaExists("cs"))
+  }
+
+  test("query rewrites leave string literals and backticked names as written") {
+    for (text <- Seq("database()", "version()", "user()", "current_user()", "@@version",
+                     "@@global.version", "information_schema.tables",
+                     "performance_schema.global_variables", "t version as of 1")) {
+      val df = g.sql(s"select '$text' as `$text`")
+      assert(df.columns.toSeq == Seq(text) && rows(s"select '$text' as `$text`") == Seq(Seq(text)), text)
+    }
+    // and still rewrite the same words as syntax
+    assert(rows("select database() is not null, user(), @@version = version()") ==
+      Seq(Seq(true, "root@%", true)))
+    assert(rows("select count(*) > 0 from information_schema.schemata").head.head == true)
+  }
+
+  test("graft's numeric variables answer 1232 for a non-number and 1231 below their least value") {
+    def code(sql: String): Int = intercept[graft.engine.SqlError](g.sql(sql)).code
+    assert(code("set graft_auto_compact_ratio = 'abc'") == 1232)
+    assert(code("set graft_auto_compact_min_tombstones = 1.5") == 1232)
+    assert(code("set graft_auto_compact_ratio = -0.5") == 1231)
+    assert(code("set graft_auto_compact_min_tombstones = -1") == 1231)
+    assert(code("set graft_retain_versions = 'x'") == 1232)
+    assert(code("set graft_retain_versions = 0") == 1231)
+    g.sql("set graft_auto_compact_ratio = 0.5")
+    assert(rows("select @@graft_auto_compact_ratio") == Seq(Seq("0.5")))
+    g.sql("set graft_auto_compact_ratio = 0.2")
+  }
 }

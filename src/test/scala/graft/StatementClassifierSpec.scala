@@ -248,10 +248,10 @@ class StatementClassifierSpec extends AnyFunSuite {
     assert(GraftSession.parseLoad("load data local infile 'f.tsv' replace into table db.t " +
       "character set utf8mb4 fields terminated by ',' optionally enclosed by '\"' " +
       "lines terminated by '\\r\\n' ignore 1 rows (a, `B`) set c = a + 1, d = concat(a, ',')") ==
-      GraftSession.Load("f.tsv", "replace", (Some("db"), "t"), ",", "\"", "\\", 1, Some(Seq("a", "B")),
+      GraftSession.Load("f.tsv", GraftSession.OnDuplicate.Replace, (Some("db"), "t"), ",", "\"", "\\", 1, Some(Seq("a", "B")),
         Seq("c" -> "a + 1", "d" -> "concat(a, ',')")))
     assert(GraftSession.parseLoad("load data infile 'f' into table t") ==
-      GraftSession.Load("f", "strict", (None, "t"), "\t", "\"", "\\", 0, None, Nil))
+      GraftSession.Load("f", GraftSession.OnDuplicate.Error, (None, "t"), "\t", "\"", "\\", 0, None, Nil))
   }
 
   test("a malformed statement fails at its position: 1064, LOAD DATA clauses 1149, names 1103/1102") {
@@ -275,7 +275,8 @@ class StatementClassifierSpec extends AnyFunSuite {
   }
 
   test("the front end holds no per-verb grammar: its only regexes are the query rewrites and KILL") {
-    val allowed = Set("VarRef", "SelectVarsR", "AsOfProbeR", "TimeTravelR", "KillR")
+    val allowed = Set("VarRef", "ConnectionInfoR", "InformationSchemaR", "GlobalVariablesR",
+      "SelectVarsR", "AsOfProbeR", "TimeTravelR", "KillR")
     val owners = for {
       f <- Seq("src/main/scala/graft/engine/GraftSession.scala",
                "src/main/scala/graft/server/MysqlServer.scala")
