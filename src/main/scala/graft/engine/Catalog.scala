@@ -310,7 +310,10 @@ class Catalog(spark: SparkSession, val warehouse: String) {
     finally sc.setCurrentDatabase(prev)
   }
 
-  def createTable(m: TableMeta, ifNotExists: Boolean = false): Unit = {
+  /** Creates the table; false when IF NOT EXISTS found it already there
+    * and nothing was created.
+    */
+  def createTable(m: TableMeta, ifNotExists: Boolean = false): Boolean = {
     require(schemaExists(m.db), s"Unknown database '${m.db}'")
     // `_graft_*` names are internal machinery (_graft_seq hidden MoR
     // sequence, _graft_z transient ZORDER key): a user column with one
@@ -324,7 +327,7 @@ class Catalog(spark: SparkSession, val warehouse: String) {
     if (viewExists(m.db, m.table)) throw exists
     if (tableExists(m.db, m.table)) {
       if (!ifNotExists) throw exists
-      return
+      return false
     }
     // versioned from birth: v1 is the (empty) initial commit
     Files.createDirectories(tablePath(m.db, m.table).resolve("versions").resolve("v1"))
@@ -332,6 +335,7 @@ class Catalog(spark: SparkSession, val warehouse: String) {
     logCommit(m.db, m.table, 1, "create")
     writeMeta(m)
     register(m)
+    true
   }
 
   def dropTable(db: String, t: String, ifExists: Boolean = false): Unit = {

@@ -981,15 +981,26 @@ class GraftSession(val spark: SparkSession, warehouse: String,
   /** CREATE TABLE … AS SELECT: schema inferred from the (Spark-planned)
     * query, data written distributed — the select never lands on the
     * driver.
+    * IF NOT EXISTS on an existing table inserts nothing (MySQL 5.5.6 and
+    * later) and leaves Note 1050.
     */
   private def createTableAs(ine: Boolean, db: String, t: String,
                             select: String): DataFrame = {
     val src = query(select)
     val cols = src.schema.fields.map(f =>
       catalog.Col(f.name, mysqlTypeOf(f.dataType.sql), f.dataType.sql)).toSeq
-    catalog.createTable(catalog.TableMeta(db, t, cols, Seq.empty, "parquet"),
-      ifNotExists = ine)
-    writeRows(db, t, src, GraftSession.OnDuplicate.Error)
+    if (created(catalog.TableMeta(db, t, cols, Seq.empty, "parquet"), ine))
+      writeRows(db, t, src, GraftSession.OnDuplicate.Error)
+    else count(0)
+  }
+
+  /** `Catalog.createTable`, plus MySQL's Note 1050 when IF NOT EXISTS
+    * found the table and nothing was created.
+    */
+  private def created(m: catalog.TableMeta, ifNotExists: Boolean): Boolean = {
+    val made = catalog.createTable(m, ifNotExists)
+    if (!made) pendingWarnings += (("Note", 1050, s"Table '${m.table}' already exists"))
+    made
   }
 
   /** Spark DDL type → MySQL-surface type name (CTAS, SHOW COLUMNS). */
@@ -1110,10 +1121,8 @@ class GraftSession(val spark: SparkSession, warehouse: String,
       seenNames += n
       catalog.UniqueKey(n, ucols)
     }
-    catalog.createTable(
-      catalog.TableMeta(db, t, allCols, pk, engine,
-        partitionCols = partCols, uniques = uniques),
-      ifNotExists = ine)
+    created(catalog.TableMeta(db, t, allCols, pk, engine,
+      partitionCols = partCols, uniques = uniques), ine)
     count(1)
   }
 

@@ -8,6 +8,7 @@ import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.StructType
 
 import graft.engine.{GraftSession, SqlError, SqlText, Statement, Verb}
@@ -26,9 +27,16 @@ import graft.engine.{GraftSession, SqlError, SqlText, Statement, Verb}
   * protocol front-end is control-plane work; all data-plane computation
   * stays inside Spark jobs.
   *
-  * Result streaming: rows are serialized from `toLocalIterator()`, which
-  * pulls ONE partition at a time to the driver — the server never
-  * materializes a full result set in memory. (A wire server is the one
+  * Result streaming: every answer the server reads from Spark — result
+  * sets, FinalCount frames, COM_FIELD_LIST, the LOAD DATA LOCAL count
+  * and the mysql.user lookup — comes through one drain, `Bridge.rows`.
+  * It runs one Spark job per result partition, in partition order, as
+  * the socket asks for rows, so the server holds one partition at a
+  * time and never a whole result set. Each job's task function is a
+  * named class and each row is converted by one interpreted converter
+  * built per statement, so a point lookup pays no closure cleaning and
+  * no generated row decoder; an answer Spark already holds in memory (a
+  * count frame, a SHOW) is sent without a job. (A wire server is the one
   * legitimate place rows must cross the driver: the socket is here. At
   * cluster scale you'd bound result sizes with LIMIT, as every MySQL
   * front-end to an OLAP engine does.)
@@ -208,7 +216,7 @@ final class MysqlServer(spark: SparkSession, warehouse: String,
             val table = new String(packet, 1, packet.length - 1, "UTF-8")
               .takeWhile(_ != '\u0000').trim
             try {
-              session.fieldList(table).toLocalIterator().forEachRemaining { row =>
+              Bridge.rows(session.fieldList(table)).forEachRemaining { row =>
                 io.write(Messages.columnDef("", table,
                   row.getString(0), fieldType(row.getString(1)),
                   nullable = true))
@@ -371,10 +379,8 @@ final class MysqlServer(spark: SparkSession, warehouse: String,
     // stream (torn final line included) must never commit as a load
     if (p == null) return false
     try {
-      val df = session.loadDataLocal(load, content.toByteArray)
-      val it = df.toLocalIterator()
-      val affected = if (it.hasNext) it.next().getLong(0) else 0L
-      io.write(Messages.ok(affected, moreResults = more))
+      io.write(Messages.ok(affected(session.loadDataLocal(load, content.toByteArray)),
+        moreResults = more))
       true
     } catch { case NonFatal(e) => writeError(io, e); false }
   }
@@ -389,14 +395,16 @@ final class MysqlServer(spark: SparkSession, warehouse: String,
                   deprecateEof: Boolean = false): Boolean =
     try {
       val df = session.sql(st)
-      if (isFinalCount(df)) {
-        val n = df.toLocalIterator()
-        val affected = if (n.hasNext) n.next().getLong(0) else 0L
-        io.write(Messages.ok(affected, moreResults = more))
-      } else writeResultSet(io, df.schema, df.toLocalIterator(), binary, more,
-        deprecateEof)
+      if (isFinalCount(df)) io.write(Messages.ok(affected(df), moreResults = more))
+      else writeResultSet(io, df.schema, Bridge.rows(df), binary, more, deprecateEof)
       true
     } catch { case NonFatal(e) => writeError(io, e); false }
+
+  /** The affected-rows count a FinalCount frame carries (0 when empty). */
+  private def affected(df: DataFrame): Long = {
+    val n = Bridge.rows(df)
+    if (n.hasNext) n.next().getLong(0) else 0L
+  }
 
   /** DDL/DML statements come back as the reference's FinalCount frame,
     * identified by GraftSession's column-metadata tag — NOT by shape, so
@@ -458,8 +466,8 @@ final class MysqlServer(spark: SparkSession, warehouse: String,
     * mysql_native_password storage format; empty/NULL means a
     * passwordless account, which accepts only an EMPTY response (a
     * client that sent a scramble typed a password the account lacks).
-    * The collect() is a bounded privilege-table point lookup on the
-    * control plane (rows = number of accounts), not a data-plane scan.
+    * The lookup is a bounded privilege-table read on the control plane
+    * (rows = number of accounts), not a data-plane scan.
     */
   private def authenticate(session: GraftSession, user: String,
                            response: Array[Byte]): Boolean = {
@@ -467,8 +475,9 @@ final class MysqlServer(spark: SparkSession, warehouse: String,
       try {
         val users = session.catalog.read("mysql", "user")
         val hasCol = users.schema.fieldNames.contains("authentication_string")
-        users.filter(org.apache.spark.sql.functions.col("User") === user)
-          .collect().headOption.map { r =>
+        val found = Bridge.rows(
+          users.filter(org.apache.spark.sql.functions.col("User") === user))
+        Option.when(found.hasNext)(found.next()).map { r =>
             if (!hasCol) "" // warehouse seeded before the column existed
             else {
               val i = r.fieldIndex("authentication_string")

@@ -1,12 +1,15 @@
 package org.apache.spark.sql.graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow, QueryPlanningTracker}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{ExpressionUtils, Dataset => CDataset, SparkSession => CSparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{CommandResultExec, LocalTableScanExec, QueryExecution, SQLExecution}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -102,6 +105,55 @@ object Bridge {
         lr.copy(relation = fs.copy(location = idx)(spark))
     }
     CDataset.ofRows(spark, frozen)
+  }
+
+  /** The rows of `df`, fetched one partition at a time: the wire server's
+    * one drain. It keeps what `Dataset.toLocalIterator` promises (each
+    * partition is one job, run in index order when the iterator reaches
+    * it, so the caller holds one partition at a time; the statement is
+    * one SQL execution under the action name listeners already know) and
+    * drops the fixed cost that action pays per statement:
+    *  - the task function is `FetchPartition`, a named class. Spark's
+    *    ClosureCleaner returns at once for a class that is not a lambda,
+    *    where the lambdas that `RDD.toLocalIterator` and
+    *    `SparkContext.runJob` wrap around it make it read and parse
+    *    `RDD.class` and `SparkContext.class` on every job;
+    *  - rows become external `Row`s through one interpreted
+    *    `CatalystTypeConverters` converter for the schema, built once
+    *    per call: no encoder is resolved and no projection generated;
+    *  - a plan that is a `LocalTableScanExec` (a count frame, a SHOW
+    *    answer) already holds its rows in memory and answers from
+    *    `executeCollect()` with no job, as does the result of a Spark
+    *    command (EXPLAIN), whose own drain never ran one.
+    * The plan is executed inside the SQL execution, as the action does,
+    * so AQE's shuffle stages run there; the result partitions are
+    * fetched after it, as the action's are.
+    */
+  def rows(df: DataFrame): java.util.Iterator[Row] = {
+    val qe = df.queryExecution
+    val action = "toLocalIterator"
+    SQLExecution.withNewExecutionId(qe, Some(action))(QueryExecution.withInternalError(
+        s"""The "$action" action failed.""") {
+      val plan = qe.executedPlan
+      plan.resetMetrics()
+      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+      val internal: Iterator[InternalRow] = plan match {
+        case local @ (_: LocalTableScanExec | _: CommandResultExec) =>
+          local.executeCollect().iterator
+        case _ =>
+          val rdd = plan.execute()
+          Iterator.range(0, rdd.getNumPartitions).flatMap(p =>
+            rdd.sparkContext.runJob(rdd, FetchPartition, Seq(p)).head)
+      }
+      internal.map(r => toRow(r).asInstanceOf[Row]).asJava
+    })
+  }
+
+  /** One partition's rows, copied out of the operators' reused buffers. */
+  private object FetchPartition
+      extends ((TaskContext, Iterator[InternalRow]) => Array[InternalRow]) with Serializable {
+    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[InternalRow] =
+      rows.map(_.copy()).toArray
   }
 
   /** Bucket id a bucketed-writer file name encodes (Spark's own parser —

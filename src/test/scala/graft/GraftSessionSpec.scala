@@ -835,6 +835,19 @@ class GraftSessionSpec extends AnyFunSuite {
     g.sql("drop table cdel")
   }
 
+  test("CREATE TABLE IF NOT EXISTS on an existing table: AS SELECT inserts nothing; Note 1050") {
+    g.sql("use test")
+    g.sql("create table ctas_ine as select 1 as a")
+    val r = g.sql("create table if not exists ctas_ine as select 2 as a union all select 3")
+    assert(r.collect().map(_.getLong(0)).toSeq == Seq(0L))
+    assert(rows("show warnings") == Seq(Seq("Note", "1050", "Table 'ctas_ine' already exists")))
+    assert(rows("select a from ctas_ine") == Seq(Seq(1)))
+    // the column-list form leaves the same note
+    g.sql("create table if not exists ctas_ine (b int)")
+    assert(rows("show warnings") == Seq(Seq("Note", "1050", "Table 'ctas_ine' already exists")))
+    g.sql("drop table ctas_ine")
+  }
+
   test("a comment-prefixed SHOW WARNINGS reads without clearing the diagnostics area") {
     g.sql("use test")
     g.sql("create table cw (id int, primary key(id))")

@@ -2,10 +2,15 @@ package graft
 
 import java.io.{BufferedOutputStream, ByteArrayOutputStream, DataInputStream}
 import java.net.Socket
+import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.server.MysqlServer
+import graft.engine.GraftSession
+import graft.server.{Messages, MysqlServer}
 
 /** Drives graft's MySQL wire-protocol server through a REAL socket with a
   * minimal protocol client: handshake → auth switch → commands —
@@ -173,10 +178,12 @@ class MysqlServerSpec extends AnyFunSuite {
       // DEPRECATE_EOF: rows follow the defs directly, no separator
       if (!deprecateEof) assert(isEof(read()), "EOF after column definitions")
       val rows = Seq.newBuilder[Seq[Option[String]]]
+      val raw = Vector.newBuilder[Array[Byte]]
       var p = read()
       while (!isEof(p)) {
         if ((p(0) & 0xff) == 0xff && p.length >= 9)
           fail(s"error mid-result: ${parseErr(p)}")
+        raw += p
         val cells = Seq.newBuilder[Option[String]]
         var off = 0
         (0 until nCols.toInt).foreach { _ =>
@@ -194,6 +201,7 @@ class MysqlServerSpec extends AnyFunSuite {
       lastStatus =
         if (p.length >= 5) (p(3) & 0xff) | ((p(4) & 0xff) << 8) else 0
       lastTermOkEof = p.length >= 7 // OK-with-EOF-header vs 5-byte EOF
+      lastRawRows = raw.result()
       ResultSet(columns, rows.result())
     }
 
@@ -208,10 +216,12 @@ class MysqlServerSpec extends AnyFunSuite {
       val defs = (0 until n).map(_ => colDef(read()))
       if (!deprecateEof) assert(isEof(read()), "EOF after column definitions")
       val rows = Seq.newBuilder[Seq[Option[String]]]
+      val raw = Vector.newBuilder[Array[Byte]]
       var p = read()
       while (!isEof(p)) {
         if ((p(0) & 0xff) == 0xff && p.length >= 9)
           fail(s"error mid-result: ${parseErr(p)}")
+        raw += p
         assert((p(0) & 0xff) == 0x00, "binary row header")
         val bitmapLen = (n + 7 + 2) / 8
         val bitmap = p.slice(1, 1 + bitmapLen)
@@ -256,6 +266,7 @@ class MysqlServerSpec extends AnyFunSuite {
       lastStatus =
         if (p.length >= 5) (p(3) & 0xff) | ((p(4) & 0xff) << 8) else 0
       lastTermOkEof = p.length >= 7
+      lastRawRows = raw.result()
       ResultSet(defs.map(_._1), rows.result())
     }
 
@@ -263,6 +274,9 @@ class MysqlServerSpec extends AnyFunSuite {
       * SERVER_MORE_RESULTS_EXISTS (multi-statement chaining).
       */
     var lastStatus: Int = 0
+
+    /** The row packets of the last result set, as they came off the wire. */
+    var lastRawRows: Vector[Array[Byte]] = Vector.empty
 
     /** Whether the last result-set terminator was the OK-with-EOF-header
       * form (CLIENT_DEPRECATE_EOF) rather than a bare 5-byte EOF.
@@ -1094,5 +1108,148 @@ class MysqlServerSpec extends AnyFunSuite {
     assert(rs == Seq(ResultSet(Seq("a"), Seq(Seq(Some("1")))),
       ResultSet(Seq("b"), Seq(Seq(Some("2"))))))
     c1.quit()
+  }
+
+  // ---- the result drain ---------------------------------------------------
+
+  private lazy val meter = new LocalSpark.Meter(spark)
+
+  /** A session of its own over the server's warehouse: it reads what
+    * the wire clients wrote, and drains in-process.
+    */
+  private def inProcess(db: String): GraftSession = {
+    val g = new GraftSession(spark.newSession(), warehouse)
+    g.sql(s"use $db")
+    g
+  }
+
+  /** 60 fixed-seed rows over every scalar type the wire encodes, with the
+    * float edge values (NaN, ±inf, −0.0) and a NULL in every column,
+    * as an inline VALUES table with its column list.
+    */
+  private def parityValues: String = {
+    val rnd = new scala.util.Random(20261019)
+    val words = Seq("héllo", "日本語", "Ελληνικά", "straße", "emoji 🚀", "plain")
+    val floats = Seq("NaN", "Infinity", "-Infinity", "-0.0")
+    def digits(n: Int) = (1 to n).map(_ => rnd.nextInt(10)).mkString
+    def hex(n: Int) = (1 to n).map(_ => f"${rnd.nextInt(256)}%02X").mkString
+    val rows = (0 until 60).map { i =>
+      val cells = Seq(
+        s"${rnd.nextInt()}",
+        s"${rnd.nextLong()}L",
+        s"cast(${rnd.nextInt(65536) - 32768} as smallint)",
+        s"cast(${rnd.nextInt(256) - 128} as tinyint)",
+        s"cast('${if (i < 4) floats(i) else rnd.nextFloat() * 1e6f - 5e5f}' as float)",
+        s"cast('${if (i < 4) floats(3 - i) else rnd.nextDouble() * 1e12 - 5e11}' as double)",
+        s"cast('-${digits(9)}.${digits(2)}' as decimal(15,2))",
+        s"cast('${digits(20)}.${digits(18)}' as decimal(38,18))",
+        s"'${words(rnd.nextInt(words.size))} $i'",
+        s"${rnd.nextBoolean()}",
+        s"date'${java.time.LocalDate.ofEpochDay(rnd.nextInt(40000) - 10000)}'",
+        s"timestamp'${java.time.LocalDateTime.ofEpochSecond(rnd.nextInt(2000000000).toLong,
+          rnd.nextInt(1000000) * 1000, java.time.ZoneOffset.UTC)
+          .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS"))}'",
+        s"X'${hex(1 + rnd.nextInt(8))}'")
+      // column c is NULL on row i when (i + c) % 7 == 0
+      val withNulls = cells.zipWithIndex.map { case (v, c) => if ((i + c) % 7 == 0) "null" else v }
+      (s"$i" +: withNulls).mkString("(", ", ", ")")
+    }
+    rows.mkString(", ") +
+      " as v(id, i32, i64, i16, i8, f32, f64, dec15, dec38, s, b, d, ts, bin)"
+  }
+
+  test("result rows on the wire are byte-equal to Spark's own decoder's, text and binary, every type") {
+    val c = new Client
+    assert(c.query("create schema if not exists wparity").isInstanceOf[Ok])
+    assert(c.initDb("wparity").isInstanceOf[Ok])
+    assert(c.query(s"create table t as select * from values $parityValues").isInstanceOf[Ok])
+    val g = inProcess("wparity")
+    for (sql <- Seq("select * from t order by id",
+                    "select id, array(i32, i16) as arr, map(id, s) as m, " +
+                      "named_struct('f', f64, 'd', d, 'x', dec38) as st from t order by id")) {
+      val df = g.sql(sql)
+      val expected = df.toLocalIterator().asScala.toVector
+      assert(expected.size == 60)
+      val text = c.query(sql).asInstanceOf[ResultSet]
+      assert(text.rows.size == 60)
+      assert(c.lastRawRows.map(_.toSeq) == expected.map(r => Messages.textRow(r).toSeq), sql)
+      val (sid, _) = c.prepare(sql)
+      assert(c.execute(sid, Seq.empty).asInstanceOf[ResultSet].rows.size == 60)
+      assert(c.lastRawRows.map(_.toSeq) ==
+        expected.map(r => Messages.binaryRow(r, df.schema).toSeq), sql)
+      c.closeStmt(sid)
+    }
+    c.quit()
+  }
+
+  test("results stream every row in partition order; an empty multi-partition result is an empty set") {
+    val c = new Client
+    val desc = c.query("select id from range(0, 200000, 1, 8) order by id desc")
+      .asInstanceOf[ResultSet]
+    assert(desc.rows.size == 200000)
+    assert(desc.rows.iterator.map(_.head.get.toLong).sameElements(199999L to 0L by -1))
+    // no exchange: eight scan partitions, one job each, rows in index order
+    val (asc, _, census) = meter.measure(c.query("select id from range(0, 80000, 1, 8)"))
+    assert(census.jobs == 8, census)
+    assert(asc.asInstanceOf[ResultSet].rows.iterator.map(_.head.get.toLong)
+      .sameElements(0L until 80000L))
+    val (empty, _, emptyCensus) =
+      meter.measure(c.query("select id from range(0, 100, 1, 8) where id < 0"))
+    assert(empty == ResultSet(Seq("id"), Seq.empty) && emptyCensus.jobs == 8, emptyCensus)
+    val (sid, _) = c.prepare("select id from range(0, 100, 1, 8) where id < 0")
+    assert(c.execute(sid, Seq.empty) == ResultSet(Seq("id"), Seq.empty))
+    c.quit()
+  }
+
+  test("a PK lookup drains in 1/1/1 jobs/stages/tasks and a month aggregate in 2/2/5, as Spark's drain does") {
+    val c = new Client
+    assert(c.query("create schema if not exists wcensus").isInstanceOf[Ok])
+    assert(c.initDb("wcensus").isInstanceOf[Ok])
+    assert(c.query("create table orders (o_orderkey bigint, o_totalprice decimal(15,2), " +
+      "o_orderdate date, o_comment varchar(79), PRIMARY KEY(o_orderkey)) engine=sled").isInstanceOf[Ok])
+    assert(c.query("insert into orders select id, cast(id % 100000 as decimal(15,2)) / 100, " +
+      "date_add(date'1992-01-01', cast(id * 7919 % 2405 as int)), concat('c', id) " +
+      "from range(0, 40000, 1, 4)") == Ok(40000))
+    val g = inProcess("wcensus")
+    def census(r: => Any) = { val c = meter.measure(r)._3; (c.jobs, c.stages, c.tasks) }
+    for ((sql, want) <- Seq(
+           "select * from orders where o_orderkey = 7919" -> (1L, 1L, 1L),
+           ("select count(*), sum(o_totalprice) from orders where o_orderdate >= date'1995-03-01' " +
+             "and o_orderdate < date'1995-04-01'") -> (2L, 2L, 5L))) {
+      c.query(sql) // first run: the shape's generated code compiles
+      val wire = census(c.query(sql).asInstanceOf[ResultSet])
+      val spark = census(g.sql(sql).toLocalIterator().asScala.toList)
+      assert(wire == want && spark == want, s"$sql: wire $wire, toLocalIterator $spark")
+    }
+    val lookup = c.query("select o_orderkey, o_totalprice from orders where o_orderkey = 7919")
+    assert(lookup == ResultSet(Seq("o_orderkey", "o_totalprice"), Seq(Seq(Some("7919"), Some("79.19")))))
+    c.quit()
+  }
+
+  test("an answer Spark holds in memory drains with no job: a count frame, a SHOW, an EXPLAIN") {
+    val g = new GraftSession(spark.newSession(), warehouse)
+    g.sql("create schema if not exists wlocal")
+    g.sql("use wlocal")
+    g.sql("create table t (a int)")
+    // (statement, its first cell, the jobs Spark's own drain runs for it)
+    for ((df, first, sparkJobs) <- Seq[(org.apache.spark.sql.DataFrame, Any => Boolean, Long)](
+           (g.sql("insert into t values (1), (2)"), _ == 2L, 1L),
+           (g.sql("show tables"), _ == "t", 1L),
+           (g.sql("explain select a from t"), _.toString.contains("Physical Plan"), 0L))) {
+      val (rows, _, c) = meter.measure(Bridge.rows(df).asScala.toList)
+      assert(rows.size == 1 && first(rows.head.get(0)) && c.jobs == 0, (rows, c))
+      val (sparkRows, _, sc) = meter.measure(df.toLocalIterator().asScala.toList)
+      assert(sparkRows == rows && sc.jobs == sparkJobs, sc)
+    }
+  }
+
+  test("the wire server reads Spark through the one drain: no other drain under graft/server") {
+    val dir = Paths.get("src/main/scala/graft/server")
+    val hits = for {
+      f <- scala.util.Using.resource(Files.list(dir))(_.iterator.asScala.toList)
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("toLocalIterator") || line.contains(".collect()")
+    } yield s"${f.getFileName}:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits)
   }
 }
